@@ -3,33 +3,40 @@
 per-stage wall-clock instrumentation), plus what the reference lacks:
 partition-grained checkpoint/resume, lineage, and build metrics.
 
+Input contract (checked on the driver before any job): conv_id is a
+string, turn_idx is integral (tinyint/smallint/int/bigint), neither is
+null. doc_stats keeps the source turn_idx type.
+
 Stages (each records a manifest row; resume skips rows marked done):
 
   plan        seeded sample -> PartitionPlan, persisted verbatim
-              into the manifest (lineage: the exact shuffle plan; the
-              doc-id plan — splitters + offsets — rides this record
-              too)
+              into the manifest together with the doc-id plan
+              (splitters + offsets, computed first by one bounded job
+              over the key columns) — the lineage of both shuffles
   pairs       FUSED id-assignment + run packing + doc-stats emission:
               one exchange moves the corpus text from the scan into
               run packing, ids assigned from the persisted id plan
               inside the same Arrow pass (identical ids to
               assign_doc_ids — differential-tested); the pass also
               emits packed per-doc (conv_id, turn_idx, dl) rows under
-              pairs/wave=-1, so no second full-corpus tokenize pass
-              exists. Runs staged to <out>/pairs partitioned by wave —
-              the double-buffer analog (Suffix_Array.hpp:33-34) and
-              the resume anchor
-  docs        unpack pairs/wave=-1 into the doc_stats artifact — a
-              cheap narrow job overlapped with the waves (N and avgdl
-              are already exact from the pairs observation)
+              pairs/wave=-1, and an Observation on the write yields N
+              and avgdl (corpus_stats.json). Runs staged to <out>/pairs
+              partitioned by wave — the double-buffer analog
+              (Suffix_Array.hpp:33-34) and the resume anchor
   wave=K      range shuffle + sort + assemble for part_ids in wave K,
-              written to <out>/postings/wave=K; independent, idempotent,
-              individually checkpointed Spark jobs
+              written to <out>/postings/wave=K, one wave at a time
+  docs        unpack pairs/wave=-1 into the doc_stats table — a cheap
+              narrow job run on a pool thread behind the waves
   hot_merge   salted-partial stitch -> <out>/postings/wave=9999
+  dictionary  narrow (term, part_id, df, cf, tlen) side index
 
 Every wave is verified by a read-back checksum (xxhash64 aggregate) —
 the spirit of the reference's is_sorted() validation hook
 (Suffix_Array.cpp:512-536) applied to the persisted artifact.
+
+Resume fails closed: it reuses the plan record's id plan,
+corpus_stats.json and pairs/wave=-1 instead of recomputing them, and
+refuses a manifest that lacks any of them (see _resume_id_plan).
 """
 
 from __future__ import annotations
@@ -42,19 +49,24 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from capsbm25.config import BuildConfig
-from capsbm25.docids import assign_doc_ids
+from capsbm25.docids import IdPlan, compute_id_plan
 from capsbm25.partition import PartitionPlan, plan_from_sample
 from capsbm25.catalog import arrow_collect, write_table
 from capsbm25.postings import (
+    POSTINGS_SCHEMA,
     assemble_postings,
     extract_pairs,
     extract_runs,
     merge_hot_partials,
 )
+
+# accepted turn_idx types -> the numpy dtype doc_stats is unpacked to
+_TURN_IDX_NP = {"tinyint": "int8", "smallint": "int16", "int": "int32",
+                "bigint": "int64"}
 
 
 @dataclass
@@ -71,9 +83,9 @@ class Manifest:
 
     def __init__(self, out_dir: str):
         self.path = os.path.join(out_dir, "build_manifest.jsonl")
-        # appends can come from concurrent stage threads (waves, the
-        # async doc_stats write) — serialize them so two records can't
-        # interleave bytes within one line
+        # appends can come from concurrent stage threads (the deferred
+        # wave checksums, the doc_stats unpack) — serialize them so two
+        # records can't interleave bytes within one line
         self._lock = threading.Lock()
 
     def records(self) -> list[dict]:
@@ -130,7 +142,6 @@ class Manifest:
         return rec
 
 
-
 def _checksum(df: DataFrame) -> tuple[int, int]:
     cols = [F.col(c) for c in ("term", "df", "cf")]
     row = df.agg(
@@ -140,17 +151,64 @@ def _checksum(df: DataFrame) -> tuple[int, int]:
     return int(row["h"]), int(row["n"])
 
 
+def _check_input_schema(transcripts: DataFrame) -> str:
+    """The key-column half of the input contract, checked off the schema
+    (no job); nulls are counted by the id-plan scan. Returns turn_idx's
+    type, which doc_stats keeps."""
+    types = {f.name: f.dataType.simpleString()
+             for f in transcripts.schema.fields}
+    conv = types.get("conv_id", "missing")
+    if conv != "string":
+        raise ValueError(
+            f"conv_id must be string, got {conv}; cast it first: "
+            "transcripts.withColumn('conv_id', F.col('conv_id')"
+            ".cast('string'))")
+    turn = types.get("turn_idx", "missing")
+    if turn not in _TURN_IDX_NP:
+        raise ValueError(
+            f"turn_idx must be tinyint/smallint/int/bigint, got {turn}; "
+            "cast it first: transcripts.withColumn('turn_idx', "
+            "F.col('turn_idx').cast('long'))")
+    return turn
+
+
+def _resume_id_plan(man: Manifest, out_dir: str) -> IdPlan | None:
+    """Fail-closed resume: the plan record's persisted id plan (None when
+    the plan stage is not done yet). A resumed build reads the id plan,
+    corpus_stats.json and pairs/wave=-1 instead of recomputing them, so
+    a manifest whose done stages lack any of them — written before the
+    fused doc-stats layout, or damaged — is refused outright."""
+    plan_rec, pairs_rec = man.done("plan"), man.done("pairs")
+    id_plan = (IdPlan.from_json(plan_rec["id_plan"])
+               if plan_rec and plan_rec.get("id_plan") else None)
+    why = None
+    if (plan_rec or pairs_rec) and id_plan is None:
+        why = "the plan record carries no id_plan"
+    elif pairs_rec and not os.path.exists(
+            os.path.join(out_dir, "corpus_stats.json")):
+        why = "pairs is done but corpus_stats.json is missing"
+    elif pairs_rec and id_plan.n_rows and not os.path.isdir(
+            os.path.join(out_dir, "pairs", "wave=-1")):
+        why = "pairs is done but pairs/wave=-1 is missing"
+    if why:
+        raise RuntimeError(
+            f"cannot resume {out_dir}: {why} (pre-fused layout — rebuild "
+            "with resume=False)")
+    return id_plan
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
     cfg: BuildConfig | None = None,
     resume: bool = False,
-    stop_after_wave: int | None = None,
 ) -> BuildResult:
-    """Build the full index under out_dir. stop_after_wave is a fault-
-    injection hook for the kill-and-resume test."""
+    """Build the full index under out_dir. resume=True skips the stages
+    the manifest records as done, or refuses with a RuntimeError when
+    their outputs cannot be reused (see _resume_id_plan)."""
     cfg = cfg or BuildConfig()
+    turn_ddl = _check_input_schema(transcripts)
     from capsbm25.session import configure_session
 
     # engine-owned session tunings (listing threshold, concurrent
@@ -163,123 +221,40 @@ def build_index(
     man = Manifest(out_dir)
     metrics: dict = {}
 
-    def timed(stage, fn):
-        t0 = time.time()
-        done = man.done(stage)
-        if resume and done:
-            metrics[stage] = {"skipped": True}
-            return done
-        kw = fn() or {}
+    def record(stage, t0, **kw):
         rec = man.add(stage, "done", t0, **kw)
         metrics[stage] = {"sec": round(rec["finished_ts"] - t0, 3), **kw}
-        return rec
+
+    def skipped(stage) -> bool:
+        if resume and man.done(stage):
+            metrics[stage] = {"skipped": True}
+            return True
+        return False
+
+    def timed(stage, fn):
+        t0 = time.time()
+        if not skipped(stage):
+            record(stage, t0, **(fn() or {}))
 
     stats_path = os.path.join(out_dir, "doc_stats")
     pairs_path = os.path.join(out_dir, "pairs")
     postings_path = os.path.join(out_dir, "postings")
+    corpus_path = os.path.join(out_dir, "corpus_stats.json")
 
-    # --- doc-id plan (driver-side; one bounded job over the key
-    #     columns). Persisted in the plan AND docs manifest records so
-    #     resumed builds reuse the exact plan; compute_id_plan is
-    #     deterministic on an unchanged corpus either way, and the
-    #     pairs observation cross-checks the row count. ---
-    #
-    #     Round 8 (session 2): the separate doc_stats pass is GONE on
-    #     the common corpus shape. extract_runs already tokenizes every
-    #     doc post-id-exchange, and conv_id/turn_idx are that exchange's
-    #     sort keys (it carries them anyway) — so the pairs pass now
-    #     emits packed per-segment doc-stats rows (part_id=-1, staged
-    #     under pairs/wave=-1; postings._doc_stats_frame) and a cheap
-    #     unpack job — overlapped with the waves on a pool thread —
-    #     writes the doc_stats table. One full-corpus scan + tokenize
-    #     (the old dl pass) removed per build (guide §1.2 step 1:
-    #     remove passes; §2.3: the id exchange sheds its second run).
-    #     N/avgdl come from an Observation on the pairs write, so they
-    #     are known before the waves exactly as before.
-    from capsbm25.docids import IdPlan, compute_id_plan
-
-    docs_rec = man.done("docs")
-    docs_future = None
-    corpus: dict | None = None
+    id_plan = _resume_id_plan(man, out_dir) if resume else None
     pool = ThreadPoolExecutor(max_workers=2)
+    futs: list = []  # deferred checksum/record threads + docs unpack
     try:
+        # --- doc-id plan: one bounded job over the key columns (it also
+        #     rejects null keys); a resumed build reuses the plan
+        #     record's copy, so N is known before the plan stage ---
         t_idplan = time.time()
-        id_plan = None
-        if resume:
-            for rec in (man.done("plan"), docs_rec):
-                if rec and rec.get("id_plan"):
-                    id_plan = IdPlan.from_json(rec["id_plan"])
-                    break
         if id_plan is None:
             id_plan = compute_id_plan(transcripts, cfg)
         metrics["id_plan"] = {"sec": round(time.time() - t_idplan, 3)}
-
-        if resume and docs_rec:
-            metrics["docs"] = {"skipped": True}
-            with open(os.path.join(out_dir, "corpus_stats.json")) as f:
-                corpus = json.load(f)
-
-        # the fused doc-stats emission packs conv_id as \x00-joined
-        # strings and turn_idx as int64 — reproducible only for these
-        # source dtypes (every engine corpus today); anything else
-        # falls back to the legacy separate dl pass
-        src_fields = {f.name: f.dataType.simpleString()
-                      for f in transcripts.schema.fields}
-        fused_stats = (
-            src_fields.get("conv_id") == "string"
-            and src_fields.get("turn_idx") in
-            ("tinyint", "smallint", "int", "bigint")
-        )
-
+        N = id_plan.n_rows
         # adaptive partitioning resolves HERE, the first point N is known
-        # (resume-safe: a fresh build reads N off the id plan's exact
-        # count, a resumed build off the persisted corpus_stats — the
-        # same number, so both resolve to the identical part count)
-        N = corpus["N"] if corpus is not None else id_plan.n_rows
         cfg = cfg.resolve_parts(N)
-
-        if not fused_stats and corpus is None:
-            # legacy dl pass (non-string conv_id / non-integral
-            # turn_idx): tokenize-count + id shuffle + write, exactly
-            # the pre-session-2 docs stage
-            t_docs = time.time()
-
-            def stage_docs_legacy() -> dict:
-                from pyspark.sql import Observation
-
-                from capsbm25.docids import make_dl_udf
-
-                narrow = transcripts.select(
-                    "conv_id", "turn_idx",
-                    make_dl_udf(cfg)(F.col("text")).alias("dl"),
-                )
-                stats = assign_doc_ids(narrow, cfg, id_plan=id_plan).select(
-                    "doc_id", "conv_id", "turn_idx", "dl"
-                )
-                obs = Observation("docs")
-                stats = stats.observe(obs, F.count(F.lit(1)).alias("n"),
-                                      F.sum("dl").alias("sum_dl"))
-                write_table(stats, stats_path)
-                m = obs.get
-                n = int(m["n"])
-                if n != id_plan.n_rows:
-                    raise RuntimeError(
-                        f"corpus changed mid-build: id plan counted "
-                        f"{id_plan.n_rows} rows, doc_stats wrote {n}"
-                    )
-                corp = {"N": n,
-                        "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
-                        "config": cfg.persist_dict()}
-                with open(os.path.join(out_dir, "corpus_stats.json"),
-                          "w") as f:
-                    json.dump(corp, f)
-                rec = man.add("docs", "done", t_docs, rows=n, **corp,
-                              id_plan=id_plan.to_json())
-                metrics["docs"] = {
-                    "sec": round(rec["finished_ts"] - t_docs, 3), "rows": n}
-                return corp
-
-            corpus = stage_docs_legacy()
 
         # --- stage: plan (samplesort splitters + hot terms; lineage) ---
         def stage_plan():
@@ -295,9 +270,6 @@ def build_index(
             sample = extract_pairs(sample_src, cfg)
             plan = plan_from_sample(
                 arrow_collect(sample.select("term", "tf")), cfg)
-            # id_plan persisted here too (it is computed before this
-            # stage): a resume whose crash predates the docs record
-            # still reuses the exact id plan
             return {"plan": plan.to_json(), "sample_fraction": frac,
                     "id_plan": id_plan.to_json()}
 
@@ -313,20 +285,17 @@ def build_index(
         #     and the corpus text is never written between scan and
         #     runs) ---
         def stage_pairs():
-            from pyspark.sql import Observation
-
             # interleave part_ids across waves (mod, not contiguous
             # blocks): normal parts carry many small terms
             # (run-count-heavy), salted hot parts carry few fat runs
             # (pair-mass-heavy) — contiguous blocks put all of one kind
             # in one wave and the wave durations skewed ~6x at 10M
             # turns; interleaving balances both axes.
-            # fused_stats: doc-stats rows ride part_id=-1 -> wave=-1,
-            # a staging dir the wave loop below never assembles
+            # doc-stats rows ride part_id=-1 -> wave=-1, a staging dir
+            # the wave loop below never assembles
             pw = extract_runs(
                 transcripts.select("conv_id", "turn_idx", "text"),
-                cfg, plan=plan, id_plan=id_plan,
-                emit_doc_stats=fused_stats,
+                cfg, plan=plan, id_plan=id_plan, emit_doc_stats=True,
             ).withColumn(
                 "wave",
                 F.when(F.col("part_id") < 0, F.lit(-1))
@@ -343,223 +312,122 @@ def build_index(
             )
             write_table(pw, pairs_path, partition_by=["wave"])
             m = obs.get
-            rec = {"rows": int(m["pairs"] or 0), "runs": int(m["runs"] or 0)}
-            if fused_stats:
-                n = int(m["n_docs"] or 0)
-                if n != id_plan.n_rows:
-                    raise RuntimeError(
-                        f"corpus changed mid-build: id plan counted "
-                        f"{id_plan.n_rows} rows, the run extraction saw {n}"
-                    )
-                corp = {"N": n,
-                        "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
-                        "config": cfg.persist_dict()}
-                with open(os.path.join(out_dir, "corpus_stats.json"),
-                          "w") as f:
-                    json.dump(corp, f)
-                rec.update(n_docs=n, sum_dl=int(m["sum_dl"] or 0))
-            return rec
+            n = int(m["n_docs"] or 0)
+            if n != N:
+                raise RuntimeError(
+                    f"corpus changed mid-build: id plan counted {N} rows, "
+                    f"the run extraction saw {n}"
+                )
+            with open(corpus_path, "w") as f:
+                json.dump({"N": n,
+                           "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
+                           "config": cfg.persist_dict()}, f)
+            return {"rows": int(m["pairs"] or 0), "runs": int(m["runs"] or 0),
+                    "n_docs": n, "sum_dl": int(m["sum_dl"] or 0)}
 
         timed("pairs", stage_pairs)
+        # written by stage_pairs before its manifest record, so a done
+        # pairs stage implies it exists (checked up front on resume)
+        with open(corpus_path) as f:
+            corpus = json.load(f)
+        avgdl = corpus["avgdl"]
 
-        if corpus is None:
-            # fused path: stage_pairs wrote corpus_stats.json before its
-            # manifest record (a completed pairs stage implies the json
-            # exists — also the resume source when docs is not yet done)
-            with open(os.path.join(out_dir, "corpus_stats.json")) as f:
-                corpus = json.load(f)
-        N, avgdl = corpus["N"], corpus["avgdl"]
+        # --- stage: docs (unpack pairs/wave=-1 into the doc_stats
+        #     table — a cheap narrow job, submitted to the pool AFTER the
+        #     waves so it back-fills the hot_merge / dictionary /
+        #     checksum tail (small jobs that leave idle slots) instead
+        #     of contending with the core-saturated wave exchanges
+        #     (measured: wave0 +0.2s at 211k, +1-2s at 1.05M when
+        #     submitted before the waves); joined before return) ---
+        stats_src = os.path.join(pairs_path, "wave=-1")
+        turn_np = _TURN_IDX_NP[turn_ddl]
+        stats_ddl = (f"doc_id long, conv_id string, "
+                     f"turn_idx {turn_ddl}, dl long")
 
-        # --- stage: docs (fused path: unpack pairs/wave=-1 into the
-        #     doc_stats table — a cheap narrow job, submitted to a pool
-        #     thread AFTER the waves so it back-fills the hot_merge /
-        #     dictionary / checksum tail (small jobs that leave idle
-        #     slots) instead of contending with the core-saturated wave
-        #     exchanges (measured: wave0 +0.2s at 211k, +1-2s at 1.05M
-        #     when submitted before the waves); joined before return
-        #     and run synchronously on the stop_after_wave exit) ---
-        stage_docs_unpack = None
-        if fused_stats and not (resume and docs_rec):
-            stats_src = os.path.join(pairs_path, "wave=-1")
-            turn_ddl = src_fields["turn_idx"]
-            turn_np = {"tinyint": "int8", "smallint": "int16",
-                       "int": "int32", "bigint": "int64"}[turn_ddl]
-            stats_ddl = (f"doc_id long, conv_id string, "
-                         f"turn_idx {turn_ddl}, dl long")
+        def stage_docs():
+            import numpy as np
+            import pandas as pd
 
-            def stage_docs_unpack():
-                import numpy as np
-                import pandas as pd
-                from pyspark.sql import Observation
+            if os.path.isdir(stats_src):
+                def unpack(it):
+                    for pdf in it:
+                        for r in pdf.itertuples(index=False):
+                            n = int(r.n)
+                            ids = np.frombuffer(r.doc_ids, np.int64)
+                            turns = np.frombuffer(r.tfs, np.int64)
+                            dls = np.frombuffer(r.dls, np.int64)
+                            convs = (r.pos.decode("utf-8").split("\x00")
+                                     if n else [])
+                            if not (len(ids) == len(turns) == len(dls)
+                                    == len(convs) == n):
+                                raise ValueError(
+                                    "packed doc-stats row is "
+                                    f"inconsistent: n={n} ids="
+                                    f"{len(ids)} convs={len(convs)}")
+                            yield pd.DataFrame({
+                                "doc_id": ids,
+                                "conv_id": convs,
+                                "turn_idx": turns.astype(turn_np),
+                                "dl": dls,
+                            })
 
-                t_docs = time.time()
-                if corpus["N"] > 0 and not os.path.isdir(stats_src):
-                    raise RuntimeError(
-                        f"pairs staging at {pairs_path} predates the "
-                        "fused doc-stats layout (no wave=-1) — rebuild "
-                        "with resume=False"
-                    )
-                if os.path.isdir(stats_src):
-                    def unpack(it):
-                        for pdf in it:
-                            for r in pdf.itertuples(index=False):
-                                n = int(r.n)
-                                ids = np.frombuffer(r.doc_ids, np.int64)
-                                turns = np.frombuffer(r.tfs, np.int64)
-                                dls = np.frombuffer(r.dls, np.int64)
-                                convs = (r.pos.decode("utf-8")
-                                         .split("\x00") if n else [])
-                                if not (len(ids) == len(turns) == len(dls)
-                                        == len(convs) == n):
-                                    raise ValueError(
-                                        "packed doc-stats row is "
-                                        f"inconsistent: n={n} ids="
-                                        f"{len(ids)} convs={len(convs)}")
-                                yield pd.DataFrame({
-                                    "doc_id": ids,
-                                    "conv_id": convs,
-                                    "turn_idx": turns.astype(turn_np),
-                                    "dl": dls,
-                                })
+                stats = spark.read.parquet(stats_src).mapInPandas(
+                    unpack, schema=stats_ddl)
+            else:  # empty corpus: no stats rows were emitted
+                stats = spark.createDataFrame([], schema=stats_ddl)
+            obs = Observation("docs")
+            stats = stats.observe(obs, F.count(F.lit(1)).alias("n"))
+            write_table(stats, stats_path)
+            n = int(obs.get["n"])
+            if n != N:
+                raise RuntimeError(
+                    f"doc_stats unpack wrote {n} rows for a {N}-row corpus")
+            return {"rows": n, **corpus}
 
-                    stats = spark.read.parquet(stats_src).mapInPandas(
-                        unpack, schema=stats_ddl)
-                else:  # empty corpus: no stats rows were emitted
-                    stats = spark.createDataFrame([], schema=stats_ddl)
-                obs = Observation("docs")
-                stats = stats.observe(obs, F.count(F.lit(1)).alias("n"))
-                write_table(stats, stats_path)
-                n = int(obs.get["n"])
-                if n != corpus["N"]:
-                    raise RuntimeError(
-                        f"doc_stats unpack wrote {n} rows for a "
-                        f"{corpus['N']}-row corpus"
-                    )
-                rec = man.add("docs", "done", t_docs, rows=n, **corpus,
-                              id_plan=id_plan.to_json())
-                metrics["docs"] = {
-                    "sec": round(rec["finished_ts"] - t_docs, 3), "rows": n}
+        # --- stages: per-wave assembly, one wave at a time; each wave's
+        #     read-back checksum (a light column-pruned scan) runs on
+        #     the pool thread and back-fills the NEXT wave's ramp-up — a
+        #     small job under a saturated one costs ~nothing, whereas
+        #     overlapping two full assemblies only adds contention on a
+        #     core-saturated box. The manifest record is appended by the
+        #     checksum thread, so a crash in that window re-runs the
+        #     wave on resume. (An all-empty corpus produces no wave dirs
+        #     — valid, zero postings.) ---
+        # (wave=-1 is the packed doc-stats staging dir)
+        waves = sorted(int(d[len("wave="):]) for d in os.listdir(pairs_path)
+                       if d.startswith("wave=") and d != "wave=-1")
+        for w in waves:
+            stage = f"wave={w}"
+            t0 = time.time()
+            if skipped(stage):
+                continue
+            wave_runs = spark.read.parquet(
+                os.path.join(pairs_path, f"wave={w}"))
+            obs = Observation(f"wave{w}")
+            wave_runs = wave_runs.observe(
+                obs, F.count(F.lit(1)).alias("runs"),
+                F.sum("n").alias("pairs"))
+            out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
+            dst = os.path.join(postings_path, f"wave={w}")
+            # partition the persisted postings BY part_id: a part_id is
+            # one contiguous term range of the samplesort plan (or one
+            # salted hot term), so every physical file covers exactly
+            # one term range and a query's In(term) predicate prunes to
+            # ~one file per wave via row-group/file stats — guaranteed
+            # pruning at any corpus scale instead of relying on how the
+            # hash exchange happened to group part_ids into tasks
+            # (layout-asserted in tests/test_plans.py)
+            write_table(out, dst, partition_by=["part_id"])
 
-        # --- stages: per-wave assembly (independent, idempotent) ---
-        # (an all-empty corpus produces no wave dirs — valid, zero
-        # postings)
-        waves = sorted(
-            w
-            for w in (
-                int(d.split("=")[1])
-                for d in (os.listdir(pairs_path)
-                          if os.path.isdir(pairs_path) else [])
-                if d.startswith("wave=")
-            )
-            if w >= 0  # wave=-1 is the packed doc-stats staging dir
-        )
-
-        def make_stage_wave(w):
-            def stage_wave():
-                from pyspark.sql import Observation
-
-                wave_runs = spark.read.parquet(
-                    os.path.join(pairs_path, f"wave={w}"))
-                obs = Observation(f"wave{w}")
-                wave_runs = wave_runs.observe(
-                    obs, F.count(F.lit(1)).alias("runs"),
-                    F.sum("n").alias("pairs")
-                )
-                out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
-                dst = os.path.join(postings_path, f"wave={w}")
-                # partition the persisted postings BY part_id: a part_id
-                # is one contiguous term range of the samplesort plan
-                # (or one salted hot term), so every physical file
-                # covers exactly one term range and a query's In(term)
-                # predicate prunes to ~one file per wave via
-                # row-group/file stats — guaranteed pruning at any
-                # corpus scale instead of relying on how the hash
-                # exchange happened to group part_ids into tasks
-                # (layout-asserted in tests/test_plans.py)
-                write_table(out, dst, partition_by=["part_id"])
+            def finish(stage=stage, dst=dst, obs=obs, t0=t0):
                 h, n = _checksum(spark.read.parquet(dst))
                 m = obs.get
-                return {"rows": n, "checksum": h,
-                        "pairs": int(m["pairs"] or 0), "runs": int(m["runs"])}
+                record(stage, t0, rows=n, checksum=h,
+                       pairs=int(m["pairs"] or 0), runs=int(m["runs"]))
 
-            return stage_wave
+            futs.append(pool.submit(finish))
 
-        # Wave concurrency (guide §2.6): waves write disjoint
-        # postings/wave=K dirs and are individually
-        # manifest-checkpointed, so they CAN run overlapped to
-        # back-fill each other's stage tails. Whether that wins depends
-        # on whether wave stages leave idle capacity: on a cluster
-        # whose executor count exceeds tasks-per-wave (or with long
-        # straggler tails) it does; on a core-saturated local[32] box
-        # each wave's 64 tasks already fill every slot and overlap only
-        # adds contention (measured +2.7s at bench scale). Default 1
-        # (sequential); deployments opt in via
-        # cfg.extra["wave_concurrency"] or CAPSBM25_WAVE_CONCURRENCY.
-        wave_conc = int(cfg.extra.get(
-            "wave_concurrency",
-            os.environ.get("CAPSBM25_WAVE_CONCURRENCY", "1")))
-        wave_futs: list = []  # deferred checksum/record threads
-        if stop_after_wave is not None:
-            # fault-injection path (kill-and-resume tests): strictly
-            # sequential so "stopped after wave w" is well-defined
-            for w in waves:
-                timed(f"wave={w}", make_stage_wave(w))
-                if w >= stop_after_wave:
-                    if stage_docs_unpack is not None:
-                        stage_docs_unpack()
-                    return BuildResult(out_dir, N, avgdl, plan, metrics)
-        elif wave_conc > 1:
-            with ThreadPoolExecutor(max_workers=wave_conc) as wpool:
-                futs = [wpool.submit(timed, f"wave={w}",
-                                     make_stage_wave(w))
-                        for w in waves]
-                for f in futs:
-                    f.result()
-        else:
-            # sequential assembly, but each wave's read-back checksum
-            # (a light column-pruned scan) runs on the pool thread and
-            # back-fills the NEXT wave's ramp-up — unlike overlapping
-            # two full assemblies, a small job under a saturated one
-            # costs ~nothing (guide §2.6). The manifest record is
-            # appended by the checksum thread, so a crash in the window
-            # re-runs that wave on resume exactly as before.
-            wave_futs = []
-            for w in waves:
-                stage = f"wave={w}"
-                t0 = time.time()
-                if resume and man.done(stage):
-                    metrics[stage] = {"skipped": True}
-                    continue
-                from pyspark.sql import Observation
-
-                wave_runs = spark.read.parquet(
-                    os.path.join(pairs_path, f"wave={w}"))
-                obs = Observation(f"wave{w}")
-                wave_runs = wave_runs.observe(
-                    obs, F.count(F.lit(1)).alias("runs"),
-                    F.sum("n").alias("pairs"))
-                out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
-                dst = os.path.join(postings_path, f"wave={w}")
-                # partitioned BY part_id — see make_stage_wave
-                write_table(out, dst, partition_by=["part_id"])
-
-                def finish(stage=stage, dst=dst, obs=obs, t0=t0):
-                    h, n = _checksum(spark.read.parquet(dst))
-                    m = obs.get
-                    kw = {"rows": n, "checksum": h,
-                          "pairs": int(m["pairs"] or 0),
-                          "runs": int(m["runs"])}
-                    rec = man.add(stage, "done", t0, **kw)
-                    metrics[stage] = {
-                        "sec": round(rec["finished_ts"] - t0, 3), **kw}
-
-                wave_futs.append(pool.submit(finish))
-
-        # the doc_stats unpack rides the hot_merge/dictionary/checksum
-        # tail (fixed-overhead-bound jobs that leave executor slots
-        # idle) — see the stage comment above
-        if stage_docs_unpack is not None:
-            docs_future = pool.submit(stage_docs_unpack)
+        futs.append(pool.submit(timed, "docs", stage_docs))
 
         # --- stage: hot-term partial merge (boundary fix-up) ---
         # The merge reads the waves' persisted files (written above,
@@ -567,26 +435,8 @@ def build_index(
         # checksum threads keep running underneath it; they are joined
         # before returning.
         t_hot = time.time()
-        if resume and man.done("hot_merge"):
-            metrics["hot_merge"] = {"skipped": True}
-        else:
-            from capsbm25.postings import POSTINGS_SCHEMA
-
+        if not skipped("hot_merge"):
             dst = os.path.join(postings_path, "wave=9999")
-
-            def write_hot(merged, empty: bool):
-                if empty:
-                    # a 0-row frame yields no part_id dirs under
-                    # partitionBy and load_postings on an all-empty
-                    # corpus would find no schema-bearing file; write
-                    # the empty file INSIDE a part_id=0 dir so the
-                    # directory depth stays consistent with the
-                    # partitioned waves
-                    write_table(merged.drop("part_id"),
-                                os.path.join(dst, "part_id=0"))
-                else:
-                    write_table(merged, dst, partition_by=["part_id"])
-
             # drop any stale wave=9999 from a CRASHED prior hot_merge
             # attempt BEFORE building the read relation: the lazy merge
             # would otherwise list those files, and write_hot's
@@ -595,38 +445,37 @@ def build_index(
             # retry). This stage's output is derived purely from the
             # wave!=9999 inputs, so a partial leftover is always safe
             # to discard.
-            stale = os.path.join(postings_path, "wave=9999")
-            if os.path.isdir(stale):
-                import shutil
-
-                shutil.rmtree(stale)
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
             # partial rows exist iff the plan salted hot terms: hot
             # terms come from the plan SAMPLE, so each one has >= 1
             # corpus pair and thus >= 1 partial posting row. Deciding
-            # off plan.hot_terms (driver-side) replaces the old
-            # isEmpty() probe job, and the read prunes to the reserved
-            # hot part range (part_id is a partition column, so normal
-            # waves' directories are never listed into the scan).
+            # off plan.hot_terms (driver-side) needs no probe job, and
+            # the read prunes to the reserved hot part range (part_id
+            # is a partition column, so normal waves' directories are
+            # never listed into the scan).
             if not plan.hot_terms or not os.path.isdir(postings_path):
-                write_hot(spark.createDataFrame([], POSTINGS_SCHEMA), True)
+                # a 0-row frame yields no part_id dirs under partitionBy
+                # and load_postings on an all-empty corpus would find no
+                # schema-bearing file; write the empty file INSIDE a
+                # part_id=0 dir so the directory depth stays consistent
+                # with the partitioned waves
+                empty = spark.createDataFrame([], POSTINGS_SCHEMA)
+                write_table(empty.drop("part_id"),
+                            os.path.join(dst, "part_id=0"))
             else:
                 partials = spark.read.parquet(postings_path).where(
                     (F.col("part_id") >= plan.n_normal) & F.col("partial"))
-                write_hot(
-                    merge_hot_partials(partials.drop("wave"), N, avgdl,
-                                       cfg),
-                    False,
-                )
+                merged = merge_hot_partials(partials.drop("wave"), N, avgdl,
+                                            cfg)
+                write_table(merged, dst, partition_by=["part_id"])
 
             def finish_hot(dst=dst, t0=t_hot):
                 h, n = _checksum(spark.read.parquet(dst))
-                kw = {"rows": n, "checksum": h}
-                rec = man.add("hot_merge", "done", t0, **kw)
-                metrics["hot_merge"] = {
-                    "sec": round(rec["finished_ts"] - t0, 3), **kw}
+                record("hot_merge", t0, rows=n, checksum=h)
 
             # checksum read-back overlaps the dictionary scan below
-            wave_futs.append(pool.submit(finish_hot))
+            futs.append(pool.submit(finish_hot))
 
         # --- stage: term dictionary (expansion-family side index) ---
         # One narrow row per (term, part_id) with df/cf — the analog of
@@ -661,15 +510,12 @@ def build_index(
         # join the deferred checksum/record threads and the overlapped
         # doc_stats unpack (error propagation: a failed read-back or
         # unpack still fails the build)
-        for f in wave_futs:
+        for f in futs:
             f.result()
-        if docs_future is not None:
-            docs_future.result()
         return BuildResult(out_dir, N, avgdl, plan, metrics)
     finally:
-        # joins the async doc_stats write on every exit path, so a
-        # stage failure never leaves a dangling Spark job behind the
-        # caller's back
+        # joins the pool threads on every exit path, so a stage failure
+        # never leaves a dangling Spark job behind the caller's back
         pool.shutdown(wait=True)
 
 

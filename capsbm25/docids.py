@@ -48,7 +48,7 @@ def _key(conv_id: pd.Series, turn_idx: pd.Series) -> np.ndarray:
 class IdPlan:
     """The persisted doc-id shuffle plan (splitters + per-part offsets)
     — lineage for the samplesort id assignment, and the contract that
-    lets SEPARATE passes (doc_stats write, fused run extraction) assign
+    lets SEPARATE passes (assign_doc_ids, fused run extraction) assign
     IDENTICAL dense ids to the same corpus: both apply the same
     splitters and the same driver prefix-sum offsets, and within-part
     order is the deterministic (conv_id, turn_idx) sort."""
@@ -119,16 +119,6 @@ def make_dl_of(cfg: BuildConfig):
     return dl_of
 
 
-def make_dl_udf(cfg: BuildConfig):
-    dl_of = make_dl_of(cfg)
-
-    @F.pandas_udf("long")
-    def dl_udf(texts: pd.Series) -> pd.Series:
-        return dl_of(texts).astype(np.int64)
-
-    return dl_udf
-
-
 def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     """Sample keys -> splitters -> per-part counts -> prefix-sum
     offsets. Two narrow jobs over (conv_id, turn_idx) only.
@@ -139,7 +129,8 @@ def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
        front (uniform without replacement), and orderBy().limit()
        compiles to TakeOrderedAndProject — per-task top-k heap + tiny
        k-row merge, NOT a global sort. An Observation on the same scan
-       yields the exact row count, so sampling + counting is ONE job.
+       yields the exact row count and the null-key counts (a null key
+       raises ValueError), so sampling + counting is ONE job.
     2. per-part counts (map-side partial agg, tiny shuffle) ->
        sequential prefix-sum on the driver (the analog of
        Suffix_Array.cpp:320-330).
@@ -165,11 +156,21 @@ def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     lim = max(int(target * 1.2), 262_144)
     sample = arrow_collect(
         df.select("conv_id", "turn_idx")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 *(F.count(F.when(F.col(c).isNull(), 1)).alias(c)
+                   for c in ("conv_id", "turn_idx")))
         .orderBy(pri, "conv_id", "turn_idx")
         .limit(lim)
     )
-    n_rows = int(obs.get["n"])
+    m = obs.get
+    # null keys have no dense rank — reject them here, before any
+    # exchange, rather than inside an executor's numpy cast
+    for c in ("conv_id", "turn_idx"):
+        if m[c]:
+            raise ValueError(
+                f"{c} has null values — every turn needs a non-null "
+                f"(conv_id, turn_idx) key; drop or fill them first")
+    n_rows = int(m["n"])
     if n_rows == 0:
         return IdPlan(np.array([], dtype=object), {}, 0)
     # \x01-separator precondition (see _SEP): a conv_id containing a

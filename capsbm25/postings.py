@@ -196,11 +196,7 @@ def _doc_stats_frame(seg: pd.DataFrame, lens: np.ndarray) -> pd.DataFrame:
     strings, n the doc count, last_doc the segment's summed dl."""
     ids = seg["doc_id"].to_numpy(dtype=np.int64)
     turns = seg["turn_idx"].to_numpy(dtype=np.int64)
-    convs = seg["conv_id"]
-    if convs.isna().any():
-        raise ValueError(
-            "null conv_id unsupported by the fused doc_stats emission")
-    joined = "\x00".join(convs.astype(str))
+    joined = "\x00".join(seg["conv_id"].astype(str))
     if joined.count("\x00") != len(seg) - 1:
         raise ValueError(
             "conv_id contains a NUL codepoint — unsupported (the doc-id "
@@ -257,7 +253,8 @@ def extract_runs(
     under part_id=-1 — per-doc dl comes from the token lists this pass
     computes anyway, and conv_id/turn_idx ride the id exchange for
     free (they are its sort keys, so the exchange already carries
-    them). This removes the build's separate full-corpus dl pass.
+    them), so the build needs no second full-corpus dl pass. Keys must
+    be non-null (compute_id_plan rejects null keys on the driver).
     """
     cfg = cfg or BuildConfig()
     if emit_doc_stats and id_plan is None:

@@ -52,7 +52,7 @@ out.write(
 from capsbm25.build import Manifest  # noqa: E402
 from capsbm25.docids import IdPlan  # noqa: E402
 
-id_plan = IdPlan.from_json(Manifest(res.out_dir).done("docs")["id_plan"])
+id_plan = IdPlan.from_json(Manifest(res.out_dir).done("plan")["id_plan"])
 out.write(
     "\n## 1. Fused id-assignment + run packing (one exchange total)\n\n"
     "Round-3 build shape: the corpus text crosses exactly ONE Exchange\n"

@@ -1,9 +1,9 @@
 """Fused doc-stats emission (round 8, session 2): the build derives
 doc_stats from the SAME Arrow pass that packs runs (pairs/wave=-1
 staging rows) instead of a second full-corpus tokenize pass. These
-tests pin the contract: content and dtypes identical to the legacy
-separate pass, zero-token docs included, wave=-1 never assembled into
-postings, and loud failure on unsupported conv_id values."""
+tests pin the contract: content and dtypes identical to the reference
+definition, zero-token docs included, wave=-1 never assembled into
+postings, and loud failure on keys outside the input contract."""
 
 import os
 
@@ -47,8 +47,8 @@ def test_doc_stats_content_and_dtypes_match_legacy(spark, tmp_path):
     got = load_doc_stats(spark, res.out_dir).toPandas().sort_values(
         "doc_id", ignore_index=True)[["doc_id", "conv_id", "turn_idx", "dl"]]
     exp = _expected_stats(pdf, cfg)
-    # dtypes: the legacy pass wrote doc_id/dl long and kept the SOURCE
-    # turn_idx type (int32 here) — the fused unpack must reproduce that
+    # dtypes: doc_id/dl are long and turn_idx keeps the SOURCE type
+    # (int32 here)
     assert str(got["doc_id"].dtype) == "int64"
     assert str(got["dl"].dtype) == "int64"
     assert str(got["turn_idx"].dtype) == "int32"
@@ -92,3 +92,43 @@ def test_nul_conv_id_raises(spark, tmp_path):
     with pytest.raises(Exception, match="NUL|unsupported"):
         build_index(spark, spark.createDataFrame(pdf),
                     str(tmp_path / "nul"), cfg)
+
+
+def _null_turn_idx(pdf):
+    pdf["turn_idx"] = pdf["turn_idx"].astype("Int32")
+    pdf.loc[3, "turn_idx"] = pd.NA
+    return pdf
+
+
+def _null_conv_id(pdf):
+    pdf["conv_id"] = pdf["conv_id"].astype(object)
+    pdf.loc[3, "conv_id"] = None
+    return pdf
+
+
+def _long_conv_id(pdf):
+    pdf["conv_id"] = pd.factorize(pdf["conv_id"])[0].astype(np.int64)
+    return pdf
+
+
+def _double_turn_idx(pdf):
+    pdf["turn_idx"] = pdf["turn_idx"].astype(np.float64)
+    return pdf
+
+
+@pytest.mark.parametrize("column,damage", [
+    ("turn_idx", _null_turn_idx),
+    ("conv_id", _null_conv_id),
+    ("conv_id", _long_conv_id),
+    ("turn_idx", _double_turn_idx),
+], ids=["null_turn_idx", "null_conv_id", "long_conv_id", "double_turn_idx"])
+def test_bad_keys_fail_at_the_boundary(spark, tmp_path, column, damage):
+    """The input contract (string conv_id, integral turn_idx, no nulls)
+    is enforced on the driver before the pairs exchange, with an error
+    naming the column — not as a cast error inside an executor."""
+    cfg = BuildConfig(num_part_ids=4, shuffle_partitions=2, num_waves=1)
+    pdf = damage(fx.gen_transcripts_pdf(8, 5))
+    out = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match=column):
+        build_index(spark, spark.createDataFrame(pdf), out, cfg)
+    assert not os.path.exists(os.path.join(out, "pairs"))

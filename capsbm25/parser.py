@@ -119,9 +119,9 @@ all ranges) with the full-match k, so each inherits
 its surface's scale path (chunked candidate masks, bounded expansion
 rewrite, dictionary pruning); ALL metadata field clauses evaluate in
 one pushed-predicate scan of the doc_fields frame (posting payloads
-never read); the combine is one groupBy over
-(query, doc) contribution rows plus the two-phase salted top-k. A
-clause kind absent from the batch costs nothing.
+never read); the combine is the engine's one fused combine + top-k
+over (query, doc) contribution rows. A clause kind absent from the
+batch costs nothing.
 """
 
 from __future__ import annotations
@@ -140,8 +140,9 @@ from capsbm25.query import (
     MAX_EXPANSIONS_DEFAULT,
     term_doc_ids,
     RESULT_SCHEMA,
+    _COMBINE_CHUNK,
     _decode_posting,
-    _salted_topk,
+    _fused_combine_topk,
     _term_df_map,
     fuzzy_topk,
     near_topk,
@@ -638,10 +639,6 @@ def _parse_simple_chunk(chunk: str, role: str, cfg: BuildConfig,
 _CONTRIB_SCHEMA = ("query_id int, doc_id long, contrib double, "
                    "mb long, cb long, xn int")
 
-# a query-string task re-compresses its per-doc accumulator at this
-# many raw (doc, contrib) pairs (same bound as the expansion combine)
-_QS_COMBINE_CHUNK = 4_000_000
-
 # MUST groups are tracked as bits of one int64 bitmask; 62 groups per
 # query is far past any real classic-parser query (Lucene's whole-query
 # default maxClauseCount is 1024); beyond it we raise loudly rather
@@ -659,9 +656,9 @@ def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
     per (query, doc) in-task with the chunk-bounded accumulator —
     contributions pre-summed, matched MUST groups pre-OR'd into the
     `mb` bitmask (rows carry each clause's driver-assigned must bit),
-    the prohibited flag pre-OR'd into `xn` — so the combine stage is
-    one plain sum/bit_or/max aggregate over distinct-doc rows instead
-    of two count_distincts over one row per (clause, posting entry)."""
+    the prohibited flag pre-OR'd into `xn` — so the combine folds
+    distinct-doc rows with one sum/bit_or/max each instead of two
+    count_distincts over one row per (clause, posting entry)."""
     qdf = pdf_frame(spark, rows)
     terms = sorted(rows["term"].unique().tolist())
     filtered = postings.where(F.col("term").isin(terms))
@@ -723,7 +720,7 @@ def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
                 ent[3].append(np.full(docs.size, 1 if is_not else 0,
                                       np.int64))
                 ent[4] += docs.size
-                if ent[4] >= _QS_COMBINE_CHUNK:
+                if ent[4] >= _COMBINE_CHUNK:
                     compress(ent)
         for qid, ent in acc.items():
             compress(ent)
@@ -738,12 +735,6 @@ def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
 
     return matched.mapInPandas(gen, schema=_CONTRIB_SCHEMA)
 
-
-# raw contribution mass (Σ df over the batch's term clause rows) above
-# which the combine+top-k tail fuses into one applyInPandas exchange —
-# the same crossover as query._FUSED_TOPK_MIN_ROWS (below it, the JVM
-# hash agg + salted windows beat the python-worker constants)
-_QS_FUSED_MIN_ROWS = 4_000_000
 
 # required-clause pushdown gate (round 8, measured on one index at two
 # scales — BENCH/r08/qs_filter_gate_exp.log): the mask's cost is
@@ -760,8 +751,8 @@ _QS_FILTER_MIN_N = 4_000_000
 
 
 def _popcount64(v: np.ndarray) -> np.ndarray:
-    """Vectorized 64-bit popcount (SWAR) — the numpy twin of the JVM
-    combine's bit_count(mb)."""
+    """Vectorized 64-bit popcount (SWAR) of the folded MUST-group
+    bitmask (mb)."""
     v = v.astype(np.uint64)
     v = v - ((v >> np.uint64(1)) & np.uint64(0x5555555555555555))
     v = (v & np.uint64(0x3333333333333333)) + (
@@ -769,86 +760,6 @@ def _popcount64(v: np.ndarray) -> np.ndarray:
     v = (v + (v >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
     return ((v * np.uint64(0x0101010101010101))
             >> np.uint64(56)).astype(np.int64)
-
-
-def _qs_fused_combine(contribs: DataFrame, meta_by_qid: dict) -> DataFrame:
-    """Fused per-doc combine + phase-1 salted top-k for the
-    query-string tail (the _fused_combine_topk idiom): one
-    applyInPandas over (query_id, doc_id % salt) groups sums each
-    doc's contributions, ORs its must/constant bitmasks and prohibited
-    flag, applies the MUST-satisfaction + MUST_NOT filters on the
-    complete per-doc state, converts constant-clause bits to score,
-    and keeps the group-local top-k by (score DESC, doc_id ASC). Every
-    global top-k doc wins its own salt bucket (salt is a pure doc_id
-    function — all partials of a doc meet), so phase 2 (_rank_page
-    over <= salt x k rows per query) returns exactly what the legacy
-    groupBy + filter + _salted_topk tail would — with ONE exchange of
-    the contribution rows instead of two, and numpy reductions instead
-    of a Tungsten sort of the full scored set. Deterministic float
-    accumulation: lexsort by (doc, contrib) + reduceat, the kernel's
-    idiom. meta_by_qid: qid -> (n_must, k, cboosts) — driver-side, in
-    the task closure (tiny), so no broadcast join is needed at all."""
-    from capsbm25.query import _TOPK_SALT, _rank_page
-
-    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(key[0])
-        n_must, k, cboosts = meta_by_qid[qid]
-
-        def empty():
-            return pd.DataFrame(
-                {"query_id": np.array([], np.int32),
-                 "doc_id": np.array([], np.int64),
-                 "score": np.array([], np.float64),
-                 "k": np.array([], np.int32)})
-
-        if k <= 0:
-            return empty()
-        d0 = pdf["doc_id"].to_numpy(np.int64)
-        c0 = pdf["contrib"].to_numpy()
-        order = np.lexsort((c0, d0))
-        d, c = d0[order], c0[order]
-        new = np.ones(d.size, dtype=bool)
-        new[1:] = d[1:] != d[:-1]
-        starts = np.flatnonzero(new)
-        uniq = d[starts]
-        score = np.add.reduceat(c, starts)
-        mb = np.bitwise_or.reduceat(
-            pdf["mb"].to_numpy(np.int64)[order], starts)
-        cb = np.bitwise_or.reduceat(
-            pdf["cb"].to_numpy(np.int64)[order], starts)
-        xn = np.maximum.reduceat(
-            pdf["xn"].to_numpy(np.int64)[order], starts)
-        keep = (xn == 0) & (_popcount64(mb) == n_must)
-        if not keep.all():
-            uniq, score, cb = uniq[keep], score[keep], cb[keep]
-        if not uniq.size:
-            return empty()
-        for i, b in enumerate(cboosts):
-            score = score + b * ((cb >> i) & 1)
-        if uniq.size > k:
-            # top-k by (score DESC, doc_id ASC): partition on score,
-            # resolve the boundary tie group by doc_id (the
-            # _fused_combine_topk idiom)
-            cut = np.partition(score, uniq.size - k)[uniq.size - k]
-            above = score > cut
-            need_ties = k - int(above.sum())
-            tie_docs = np.sort(uniq[score == cut])[:need_ties]
-            sel = above | (np.isin(uniq, tie_docs) & (score == cut))
-            uniq, score = uniq[sel], score[sel]
-        return pd.DataFrame(
-            {"query_id": np.full(uniq.size, qid, np.int32),
-             "doc_id": uniq,
-             "score": score.astype(np.float64),
-             "k": np.full(uniq.size, k, np.int32)})
-
-    local = (
-        contribs.withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(_TOPK_SALT)))
-        .groupBy("query_id", "salt")
-        .applyInPandas(combine, schema="query_id int, doc_id long, "
-                                       "score double, k int")
-    )
-    return _rank_page(local)
 
 
 _RANGEABLE_INTS = {"tinyint", "smallint", "int", "bigint"}
@@ -953,7 +864,8 @@ def query_string_topk(
     so a field clause costs one metadata read, never a postings pass."""
     cfg = cfg or BuildConfig()
     term_rows, phrase_cl, fuzzy_cl, wild_cl = [], [], [], []
-    rx_cl, range_cl, field_cl, frange_cl, meta = [], [], [], [], []
+    rx_cl, range_cl, field_cl, frange_cl = [], [], [], []
+    meta: dict[int, dict] = {}  # qid -> the combine's per-query meta
     for q in queries.itertuples(index=False):
         qid, k = int(q.query_id), int(q.k)
         clauses = parse_query_string(q.text, cfg, default_operator)
@@ -975,8 +887,7 @@ def query_string_topk(
         # IDEMPOTENT per-clause bit (cb) instead of a summed contrib,
         # so their membership frames need no global dedup — bit_or
         # absorbs cross-task duplicates; the boost per bit rides the
-        # query meta as an array and converts to score at the hits
-        # stage (a pure codegen expression, no extra shuffle)
+        # query meta as a list and converts to score in the combine
         cboosts: list[float] = []
         cbits: dict[int, int] = {}  # clause index in list -> cbit
         for ci, c in enumerate(clauses):
@@ -990,7 +901,7 @@ def query_string_topk(
                     )
                 cbits[ci] = 1 << len(cboosts)
                 cboosts.append(float(c["boost"]))
-        meta.append((qid, len(must_gids), k, cboosts))
+        meta[qid] = {"k": k, "n_must": len(must_gids), "cboosts": cboosts}
         for ci, c in enumerate(clauses):
             rec = (qid, c["gid"], c["role"], c["value"], c["boost"],
                    c["extra"], bit.get(c["gid"], 0)
@@ -1117,7 +1028,7 @@ def query_string_topk(
         # the per-term df map is hoisted out of the term thunk: the
         # SAME collect _term_contribs would run inside it also yields
         # the batch's raw contribution mass (Σ df over term clause
-        # rows), which size-routes the combine tail below — no extra
+        # rows), which sizes the combine's fan-out below — no extra
         # job, just earlier
         if shared_dfm is None:
             shared_dfm = _term_df_map(postings.where(
@@ -1293,62 +1204,28 @@ def query_string_topk(
     contribs = parts[0]
     for p in parts[1:]:
         contribs = contribs.unionByName(p)
-    # size-routed fused tail (round 8): above _QS_FUSED_MIN_ROWS of raw
-    # term-contribution mass the combined frame is tens of millions of
-    # rows, and the legacy tail below moves it across THREE exchanges
-    # (groupBy hash agg, then _salted_topk's salt window + global
-    # window). One applyInPandas does combine + filters + local top-k
-    # in a single exchange (_qs_fused_combine); the per-query meta
-    # rides the task closure, so the qmeta broadcast join disappears
-    # too. Filter/exclude batches keep the legacy tail (their joins
-    # must apply before any top-k cut).
-    if (est_mass >= _QS_FUSED_MIN_ROWS and doc_filter is None
-            and doc_exclude is None):
-        meta_by_qid = {int(m[0]): (int(m[1]), int(m[2]), list(m[3]))
-                       for m in meta}
-        return _qs_fused_combine(contribs, meta_by_qid)
-    # explicit schema: cboosts is all-empty when no constant-score
-    # clauses exist in the batch and inference can't type []
-    qmeta = F.broadcast(pdf_frame(
-        spark,
-        pd.DataFrame(meta,
-                     columns=["query_id", "n_must", "k", "cboosts"]),
-        ddl="query_id int, n_must long, k long, "
-            "cboosts array<double>"))
-    # fused combine (round 7): the producers pre-summed contributions
-    # and pre-OR'd the per-doc MUST-group bitmask and prohibited flag,
-    # so this is one plain hash aggregate — popcount(bit_or) replaces
-    # the old count_distinct-over-(clause, posting-entry) rows. A doc
-    # surviving xnot == 0 necessarily matched >= 1 positive clause
-    # (its rows exist and are not all MUST_NOT), preserving the old
-    # score-not-null condition.
-    per_doc = contribs.groupBy("query_id", "doc_id").agg(
-        F.sum("contrib").alias("score0"),
-        F.bit_or("mb").alias("mb"),
-        F.bit_or("cb").alias("cb"),
-        F.max("xn").alias("xnot"),
-    )
-    # constant-clause bits -> score: Σ over set bits of that clause's
-    # boost (whole-stage-codegen higher-order fns, nothing collected)
-    const_score = F.expr(
-        "IF(size(cboosts) = 0, 0d, aggregate("
-        "transform(cboosts, (b, i) -> IF(((cb >> i) & 1) = 1, b, 0d)),"
-        " 0d, (acc, x) -> acc + x))")
-    hits = (
-        per_doc.join(qmeta, "query_id")
-        .where((F.col("xnot") == 0)
-               & (F.bit_count("mb") == F.col("n_must")))
-        .withColumn("score", F.col("score0")
-                    + F.coalesce(const_score, F.lit(0.0)))
-    )
+    # doc_filter/doc_exclude apply before the combine, so filtered
+    # rows never cross its exchange
     if doc_filter is not None:
-        hits = hits.join(doc_filter.select("doc_id"), "doc_id",
-                         "left_semi")
+        contribs = contribs.join(doc_filter.select("doc_id"), "doc_id",
+                                 "left_semi")
     if doc_exclude is not None:
-        hits = hits.join(doc_exclude.select("doc_id"), "doc_id",
-                         "left_anti")
-    return _salted_topk(
-        hits, [F.desc("score"), F.asc("doc_id")],
-        ["query_id", "doc_id", F.col("score").cast("double"),
-         F.col("rank").cast("int")],
-    )
+        contribs = contribs.join(doc_exclude.select("doc_id"), "doc_id",
+                                 "left_anti")
+    # the producers pre-summed contributions and pre-OR'd the per-doc
+    # MUST-group bitmask (mb), constant-clause bits (cb) and prohibited
+    # flag (xn); the combine folds the partials and keeps docs that
+    # match every MUST group and no MUST_NOT clause. A doc surviving
+    # xn == 0 necessarily matched >= 1 positive clause (its rows exist
+    # and are not all MUST_NOT). Set constant-clause bits add their
+    # boosts to the score.
+    def keep(st, m):
+        return (st["xn"] == 0) & (_popcount64(st["mb"]) == m["n_must"])
+
+    def bonus(st, m):
+        out = np.zeros(st["cb"].size, np.float64)
+        for i, b in enumerate(m["cboosts"]):
+            out += b * ((st["cb"] >> i) & 1)
+        return out
+
+    return _fused_combine_topk(contribs, meta, est_mass, keep, bonus)

@@ -14,11 +14,13 @@ Execution modes, all rank-identical to the oracle (tested):
   Arrow kernel per query does decode + two-phase block-max pruning +
   exact rescoring + heap-free vectorized top-k. This is
   document-at-a-time scoring with WAND-style block skipping.
-* ``distributed``: decode kernels emit (query_id, doc_id, contrib)
-  map-side, built-in hash aggregation sums scores, a per-query window
-  takes top-k. No pruning, arbitrarily scalable (no single task ever
-  holds a whole hot posting), pure built-in shuffle machinery — the
-  mode you'd run against 10^12 turns when a query term is pathological.
+* ``distributed``: decode kernels emit per-task-summed (query_id,
+  doc_id, contrib) rows map-side; one exchange into (query, doc-salt)
+  groups, where ``_fused_combine_topk`` sums each doc and keeps the
+  group-local top-k, and a per-query window ranks the survivors.
+  Arbitrarily scalable (no single task ever holds a whole hot
+  posting) — the mode you'd run against 10^12 turns when a query term
+  is pathological.
 * ``auto`` (default): per-query Σ df routes each query to kernel or
   distributed (threshold ``max_kernel_df``) — the kernel's speed where
   safe, the distributed path's boundedness where not.
@@ -418,16 +420,18 @@ def bm25_topk(
     its WAND θ from qualifying candidates only, so deep pages prune at
     full strength. Ranks restart at 1 per page (computing the global
     rank is exactly the offset cost the cursor avoids — ES returns no
-    rank either). Cursor equality is exact float equality: kernel
-    scores are bit-stable (fixed summation order), so kernel-issued
-    cursors reproduce exactly. On the DISTRIBUTED path per-doc sums
-    come from partial aggregation whose combine order can vary run to
-    run, so a cursor landing exactly on a tie boundary may drift by a
-    last-ulp re-sum (the boundary doc reappearing or a tied doc
-    dropping) — the same caveat ES documents for search_after without
-    a tiebreaker field; issue cursors from the kernel (auto mode's
-    light side) when exact tie resume matters. NaN/absent cursor =
-    page 1. offset and a cursor are mutually exclusive per query.
+    rank either). Cursor equality is exact float equality. Both paths
+    sum in a fixed order, so a query's scores are bit-identical on
+    every run over the same index and cluster configuration: the
+    kernel adds terms in sorted-term order, and the distributed
+    combine lexsorts each doc's partial sums by value before adding
+    them, whatever order the shuffle delivers them in. A cursor
+    therefore resumes exactly on the path that issued it, ties
+    included. The two paths add in different orders, so one doc's
+    score can differ between them in the last ulp; auto mode routes a
+    query by its terms' df and bytes, never by k or cursor, so every
+    page of one query takes the same path. NaN/absent cursor = page
+    1. offset and a cursor are mutually exclusive per query.
     conjunctive=True restricts candidates to docs containing ALL query
     terms (posting-list intersection — AND semantics); scores are still
     full BM25 over the query terms.
@@ -716,157 +720,147 @@ def _run_kernel(matched, N, avgdl, cfg, prune, conjunctive,
 
 _TOPK_SALT = 32
 
+# a task's decode pass combines (doc, contrib) pairs locally and
+# re-compresses whenever this many raw pairs have accumulated — task
+# memory stays O(chunk + distinct docs in task), never O(df mass). The
+# same bound sizes the combine's salt fan-out (_fan_out).
+_COMBINE_CHUNK = 4_000_000
+
 # distributed-phrase verify: docs per (query, salt) batch group — the
 # per-doc rows of one bucket meet in one vectorized intersect instead of
 # one Python group call per candidate doc
 _VERIFY_SALT = 64
 
-
-def _window_topk(scored: DataFrame) -> DataFrame:
-    """Two-phase top-k over (query_id, doc_id, score, k, ...) rows.
-
-    A single Window.partitionBy(query_id) funnels a query's ENTIRE
-    scored set through one task — a stopword-grade query at 10^12 docs
-    means one executor sorting 10^9+ rows. Phase 1 takes a per-salt
-    local top-k (partitioned by (query_id, doc_id % _TOPK_SALT), so the
-    bulk sort spreads over _TOPK_SALT tasks per query); phase 2 ranks
-    the surviving <= _TOPK_SALT * k rows per query. Every global
-    top-k row wins its own salt bucket, and both phases use the same
-    (score desc, doc_id asc) order, so the result is identical to the
-    single-window form (covered by the distributed-vs-oracle
-    rank-identity tests).
-
-    An optional `off` column (pagination offset) widens both phases to
-    off + k rows and the final page keeps global ranks (off, off + k]
-    — ranks match the kernel path's sliced page exactly."""
-    off = F.col("off") if "off" in scored.columns else F.lit(0)
-    w_local = Window.partitionBy("query_id", "salt").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return _rank_page(
-        scored.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(_TOPK_SALT)))
-        .withColumn("r1", F.row_number().over(w_local))
-        .where(F.col("r1") <= F.col("k") + off)
-        .drop("salt", "r1")
-    )
+# per-doc state columns a producer may emit beside `contrib`, and how
+# the combine folds a doc's partials of each: matched-term counts add
+# ((term, doc) is globally unique, so partial counts never overlap),
+# clause bitmasks OR, the prohibited flag takes the max
+_STATE_REDUCE = {"nm": np.add, "nsh": np.add, "nn": np.add,
+                 "mb": np.bitwise_or, "cb": np.bitwise_or,
+                 "xn": np.maximum}
 
 
-def _rank_page(scored: DataFrame) -> DataFrame:
-    """Shared phase-2 page slice (one window over per-query
-    survivors): global (score DESC, doc_id ASC) row_number, keep ranks
-    (off, k + off], project the engine result shape. The ONE place
-    pagination/tie order is encoded for both top-k tails."""
-    off = F.col("off") if "off" in scored.columns else F.lit(0)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
+def _salted_topk(df: DataFrame, rank_cols=None, out_cols=None,
+                 salt_col: str | None = "doc_id") -> DataFrame:
+    """The one per-query top-k page over Spark windows. Input rows
+    carry query_id and k, optionally `off` (pagination offset).
+
+    Phase 1 cuts each (query_id, xxhash64(salt_col) % _TOPK_SALT)
+    bucket to k + off rows, so no task sorts one query's full match
+    set (a stopword query at 10^12 docs); phase 2 ranks the survivors
+    with the SAME order and keeps global ranks (off, k + off]. Every
+    global top-(k + off) row wins its own bucket, so the result equals
+    a single window. salt_col=None skips phase 1 for inputs already
+    bounded per query (the fused combine's output). Default order is
+    (score DESC, doc_id ASC) and the default projection the engine
+    result shape."""
+    rank_cols = rank_cols or [F.desc("score"), F.asc("doc_id")]
+    out_cols = out_cols or ["query_id", "doc_id", "score",
+                            F.col("rank").cast("int")]
+    off = F.col("off") if "off" in df.columns else F.lit(0)
+    if salt_col is not None:
+        w1 = Window.partitionBy("query_id", "_salt").orderBy(*rank_cols)
+        df = (
+            df.withColumn("_salt", F.pmod(F.xxhash64(salt_col),
+                                          F.lit(_TOPK_SALT)))
+            .withColumn("_r1", F.row_number().over(w1))
+            .where(F.col("_r1") <= F.col("k") + off)
+            .drop("_salt", "_r1")
+        )
+    w2 = Window.partitionBy("query_id").orderBy(*rank_cols)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where((F.col("rank") <= F.col("k") + off)
-               & (F.col("rank") > off))
-        .select("query_id", "doc_id", "score", F.col("rank").cast("int"))
+        df.withColumn("rank", F.row_number().over(w2))
+        .where((F.col("rank") <= F.col("k") + off) & (F.col("rank") > off))
+        .select(*out_cols)
     )
 
 
-def _fused_combine_topk(c: DataFrame, conjunctive: bool) -> DataFrame:
-    """Fused per-doc combine + phase-1 salted top-k for the
-    distributed scoring tail (no collapse, no cursor): one
-    applyInPandas over (query_id, doc_id % _TOPK_SALT) groups sums
-    each doc's partial contributions (every partial of a doc lands in
-    the same group — salt is a pure doc_id function), applies the
-    conjunctive n_matched >= n_query_terms filter on the COMPLETE
-    per-doc term count, and emits only the group-local top-(k + off)
-    by (score DESC, doc_id ASC). Any global top-(k+off) doc wins its
-    own salt bucket, so phase 2 (one window over <= _TOPK_SALT *
-    (k+off) rows per query) returns exactly what groupBy +
-    _window_topk would — with ONE exchange of the contribution rows
-    instead of two and numpy partition instead of a Tungsten sort of
-    the full scored set."""
+def _fan_out(raw_mass: int | None) -> int:
+    """Salt buckets per query for the combine: one per _COMBINE_CHUNK
+    of raw contribution mass (Σ df over the batch's (query, term)
+    pairs, known on the driver), at most _TOPK_SALT. An unknown mass
+    takes the maximum."""
+    if raw_mass is None:
+        return _TOPK_SALT
+    return min(_TOPK_SALT, max(1, -(-int(raw_mass) // _COMBINE_CHUNK)))
+
+
+def _fused_combine_topk(c: DataFrame, meta: dict, raw_mass: int | None,
+                        keep=None, bonus=None,
+                        cut: bool = True) -> DataFrame:
+    """The one combine + phase-1 top-k of every distributed scoring
+    tail (bm25, boolean, term expansion, query string).
+
+    c: per-task-combined contribution rows (query_id, doc_id, contrib,
+    plus any _STATE_REDUCE columns). One applyInPandas over (query_id,
+    doc_id % S) groups, S = _fan_out(raw_mass), folds each doc's
+    partials: salt is a pure doc_id function, so all partials of a doc
+    meet in one group. The sum is a lexsort by (doc, contrib) then a
+    left-to-right reduceat, so the same partials always sum to the same
+    float whatever order the shuffle delivers them in. Per group, in
+    order: keep(st, m) -> bool mask over the folded state dict `st`;
+    bonus(st, m) -> score added to the sum; the m["after"] = (score,
+    doc) cursor keeps docs strictly after it in (score DESC, doc_id
+    ASC) order; then the tie-exact group-local top-(k + off).
+
+    meta: qid -> dict(k, off=0, after=None, caller extras) — driver
+    side and tiny, it rides the task closure. Every global top-(k +
+    off) doc wins its own salt bucket, so the phase-2 window over <= S
+    x (k + off) rows per query returns the exact page. cut=False
+    returns every kept per-doc row unranked, before cursor and cut
+    (collapse picks group heads first)."""
+    salts = _fan_out(raw_mass)
+    state = [s for s in _STATE_REDUCE if s in c.columns]
 
     def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        k = int(pdf["k"].iloc[0])
-        off = int(pdf["off"].iloc[0])
-        kk = k + off
-        if kk <= 0:
-            # k=0 page: empty, like the legacy window's rank <= 0
-            # (and BEFORE the conjunctive mask, whose bincount length
-            # must match uniq)
-            return pd.DataFrame(
-                {"query_id": np.array([], np.int32),
-                 "doc_id": np.array([], np.int64),
-                 "score": np.array([], np.float64),
-                 "k": np.array([], np.int32),
-                 "off": np.array([], np.int32)})
-        # deterministic accumulation: lexsort the partials by
-        # (doc, contrib) and segment-sum left-to-right (reduceat — the
-        # kernel's exhaustive-branch idiom), so the same (doc, contrib)
-        # multiset always sums to the same float regardless of shuffle
-        # order (pandas sort_values here measured ~0.5s over the 10.5M
-        # 30-query set; lexsort+reduceat is the cheap form)
+        qid = int(key[0])
+        m = meta[qid]
+        k, off = m["k"], m.get("off", 0)
         d0 = pdf["doc_id"].to_numpy(np.int64)
-        c0 = pdf["contrib"].to_numpy()
+        c0 = pdf["contrib"].to_numpy(np.float64)
         order = np.lexsort((c0, d0))
-        docs, contribs = d0[order], c0[order]
+        docs = d0[order]
         new = np.ones(docs.size, dtype=bool)
         new[1:] = docs[1:] != docs[:-1]
         starts = np.flatnonzero(new)
         uniq = docs[starts]
-        score = np.add.reduceat(contribs, starts)
-        if conjunctive:
-            nm = np.add.reduceat(
-                pdf["nm"].to_numpy(np.float64)[order], starts)
-            keep = nm >= int(pdf["n_query_terms"].iloc[0])
-            uniq, score = uniq[keep], score[keep]
-        if uniq.size > kk:
+        score = np.add.reduceat(c0[order], starts)
+        st = {s: _STATE_REDUCE[s].reduceat(
+            pdf[s].to_numpy(np.int64)[order], starts) for s in state}
+        sel = (np.ones(uniq.size, dtype=bool) if keep is None
+               else keep(st, m))
+        if bonus is not None:
+            score = score + bonus(st, m)
+        after = m.get("after") if cut else None
+        if after is not None:
+            sel &= (score < after[0]) | ((score == after[0])
+                                         & (uniq > after[1]))
+        uniq, score = uniq[sel], score[sel]
+        kk = k + off
+        if cut and uniq.size > kk:
             # top-(k+off) by (score DESC, doc_id ASC): partition on
             # score, then resolve the boundary tie group by doc_id
-            cut = np.partition(score, uniq.size - kk)[uniq.size - kk]
-            above = score > cut
-            need_ties = kk - int(above.sum())
-            tie_docs = np.sort(uniq[score == cut])[:need_ties]
-            sel = above | (np.isin(uniq, tie_docs) & (score == cut))
-            uniq, score = uniq[sel], score[sel]
+            top = np.zeros(uniq.size, dtype=bool)
+            if kk > 0:
+                cv = np.partition(score, uniq.size - kk)[uniq.size - kk]
+                top = score > cv
+                ties = np.sort(uniq[score == cv])[:kk - int(top.sum())]
+                top |= np.isin(uniq, ties) & (score == cv)
+            uniq, score = uniq[top], score[top]
         return pd.DataFrame(
-            {"query_id": np.full(uniq.size, int(key[0]), np.int32),
+            {"query_id": np.full(uniq.size, qid, np.int32),
              "doc_id": uniq,
              "score": score,
              "k": np.full(uniq.size, k, np.int32),
              "off": np.full(uniq.size, off, np.int32)})
 
     local = (
-        c.withColumn("salt", F.pmod(F.col("doc_id"),
-                                    F.lit(_TOPK_SALT)))
+        c.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(salts)))
         .groupBy("query_id", "salt")
         .applyInPandas(combine, schema="query_id int, doc_id long, "
                                        "score double, k int, off int")
     )
-    return _rank_page(local)
-
-
-def _salted_topk(df: DataFrame, rank_cols, out_cols,
-                 salt_col: str = "doc_id") -> DataFrame:
-    """Generic two-phase salted per-query top-k (the one idiom behind
-    sorted_topk, the suggest family, and the query-string combine):
-    phase 1 cuts each (query_id, salt-bucket) to k rows by row_number,
-    phase 2 ranks the <= _EXPANSION_SALT * k survivors globally with
-    the SAME order, so the result is identical to a single window —
-    without any task sorting one query's full match set. Input rows
-    must carry query_id and k; the final `rank` column is the global
-    row_number. (_window_topk remains the score-shaped variant with
-    pagination-offset support.)"""
-    w1 = Window.partitionBy("query_id", "_salt").orderBy(*rank_cols)
-    w2 = Window.partitionBy("query_id").orderBy(*rank_cols)
-    return (
-        df
-        .withColumn("_salt",
-                    F.pmod(F.xxhash64(salt_col), F.lit(_EXPANSION_SALT)))
-        .withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= F.col("k"))
-        .drop("_salt", "_r1")
-        .withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= F.col("k"))
-        .select(*out_cols)
-    )
+    return _salted_topk(local, salt_col=None) if cut else local
 
 
 def _distributed_rest_map(qt: pd.DataFrame, df_map: dict, N: int,
@@ -897,26 +891,32 @@ def _distributed_rest_map(qt: pd.DataFrame, df_map: dict, N: int,
     return rest
 
 
-# a task's distributed-scoring decode combines (doc, contrib) pairs
-# locally and re-compresses whenever this many raw pairs have
-# accumulated — task memory stays O(chunk + distinct docs in task),
-# never O(df mass) (same bound as _EXPANSION_COMBINE_CHUNK)
-_DIST_COMBINE_CHUNK = 4_000_000
+def _query_meta(qt: pd.DataFrame) -> dict:
+    """qid -> the fused combine's per-query meta (k, off, nq, after)
+    from a _query_terms_pdf frame — one entry per query, driver side."""
+    meta = {}
+    has_after = "after_score" in qt.columns
+    for r in qt.drop_duplicates("query_id").itertuples(index=False):
+        after = None
+        if has_after and not pd.isna(r.after_score):
+            after = (float(r.after_score), int(r.after_doc))
+        meta[int(r.query_id)] = {"k": int(r.k), "off": int(r.off),
+                                 "nq": int(r.n_query_terms),
+                                 "after": after}
+    return meta
 
-# the fused combine+top-k tail wins once the scored set is big enough
-# that its single exchange beats the legacy tail's two (groupBy hash +
-# salt-window re-shuffle) plus the Tungsten sort; below this raw
-# contribution mass the ~1.3s python-worker constant of 30 queries x
-# 32 salt groups dominates instead (211k turns: legacy 1.6s vs fused
-# 2.9s; 10.5M turns / 9.3M raw rows: fused 5.3s vs legacy 6.7s)
-_FUSED_TOPK_MIN_ROWS = 4_000_000
+
+def _raw_mass(qt: pd.DataFrame, df_map: dict) -> int:
+    """Σ df over the batch's (query, term) pairs — the raw contribution
+    mass that sizes the combine's fan-out (_fan_out)."""
+    return int(qt["term"].map(df_map).fillna(0).sum())
 
 
 def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
                      doc_filter: DataFrame | None = None,
                      doc_exclude: DataFrame | None = None,
                      collapse: DataFrame | None = None,
-                     qt: pd.DataFrame | None = None,
+                     *, qt: pd.DataFrame,
                      prune: bool = True,
                      filt_bc=None, excl_bc=None) -> DataFrame:
     # df_map: global df per term from _term_df_map (pre-query-join —
@@ -926,7 +926,7 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
     # docs — when its sorted-id broadcast (filt_bc) exists it masks
     # INSIDE the decode kernel (same set, zero post-pass join);
     # otherwise it is semi-joined against the combined contribution
-    # rows BEFORE the aggregate (a huge filter degrades to a
+    # rows BEFORE the combine (a huge filter degrades to a
     # sort-merge semi join, never a driver collect). doc_exclude /
     # excl_bc mirror it as the liveDocs anti set.
     #
@@ -955,16 +955,15 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
     # The emission then COMBINES map-side (same idiom and chunk bound
     # as _term_expansion_topk): one row per (query, distinct doc in
     # task) with the contributions pre-summed and the matched-term
-    # count pre-counted, so the groupBy shuffle carries distinct-doc
+    # count pre-counted, so the combine exchange carries distinct-doc
     # rows without the term string, not one row per (term, doc)
     # posting entry.
-    has_cursor = (qt is not None and "after_score" in qt.columns
-                  and qt["after_score"].notna().any())
+    meta = _query_meta(qt)
+    has_cursor = any(m["after"] is not None for m in meta.values())
     do_prune = (
         prune and not conjunctive and collapse is None
         and (doc_filter is None or filt_bc is not None)
         and (doc_exclude is None or excl_bc is not None)
-        and qt is not None
         # search_after: the entry-prune θ comes from in-task k-th
         # contributions, which bound the GLOBAL top-k — not the
         # post-cursor page — so a qualifying page member could be
@@ -981,7 +980,6 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
         excl = excl_bc.value if excl_bc is not None else None
         # qid -> [doc_chunks, contrib_chunks, nmatch_chunks, n_raw]
         acc: dict = {}
-        meta: dict = {}   # qid -> (k, n_query_terms, off)
         theta: dict = {}  # qid -> running lower bound on (k+off)-th
 
         def compress(ent):
@@ -1016,11 +1014,8 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
                 if boost != 1.0:
                     sc = sc * boost  # query-time term boost (^boost)
                 qid = int(row.query_id)
-                if qid not in meta:
-                    meta[qid] = (int(row.k), int(row.n_query_terms),
-                                 int(getattr(row, "off", 0)))
                 if rest_map is not None and sc.size:
-                    kk = meta[qid][0] + meta[qid][2]
+                    kk = meta[qid]["k"] + meta[qid]["off"]
                     if 0 < kk <= sc.size:
                         th = np.partition(sc, sc.size - kk)[sc.size - kk]
                         if th > theta.get(qid, -np.inf):
@@ -1040,34 +1035,28 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
                 ent[1].append(sc)
                 ent[2].append(np.ones(docs.size, np.float64))
                 ent[3] += docs.size
-                if ent[3] >= _DIST_COMBINE_CHUNK:
+                if ent[3] >= _COMBINE_CHUNK:
                     compress(ent)
         for qid, ent in acc.items():
             compress(ent)
-            uniq, ssum, nsum = ent[0][0], ent[1][0], ent[2][0]
-            k, nq, off = meta[qid]
+            uniq = ent[0][0]
             yield pd.DataFrame(
                 {
                     "query_id": np.full(uniq.size, qid, np.int32),
                     "doc_id": uniq,
-                    "contrib": ssum,
-                    "nm": nsum.astype(np.int32),
-                    "k": np.full(uniq.size, k, np.int32),
-                    "n_query_terms": np.full(uniq.size, nq, np.int32),
-                    "off": np.full(uniq.size, off, np.int32),
+                    "contrib": ent[1][0],
+                    "nm": ent[2][0].astype(np.int32),
                 }
             )
 
     # explicit projection: Catalyst cannot prune through mapInPandas,
     # so without it block_max/cf/df ride the Arrow transfer unused
     # (block_max is an array<struct> — the widest non-payload column)
-    need = (["term", "query_id", "k", "n_query_terms",
-             "doc_ids", "tfs", "dls"]
-            + [c_ for c_ in ("boost", "off") if c_ in matched.columns])
+    need = (["term", "query_id", "doc_ids", "tfs", "dls"]
+            + (["boost"] if "boost" in matched.columns else []))
     c = matched.select(*need).mapInPandas(
         contribs,
-        schema="query_id int, doc_id long, contrib double, nm int, "
-               "k int, n_query_terms int, off int",
+        schema="query_id int, doc_id long, contrib double, nm int",
     )
     if filt_join is not None:
         c = c.join(filt_join.select("doc_id"), "doc_id", "semi")
@@ -1075,97 +1064,43 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
         # anti join = liveDocs mask; tombstone sets are small, so AQE
         # broadcasts and drops deleted rows map-side pre-shuffle
         c = c.join(excl_join.select("doc_id"), "doc_id", "anti")
-    # raw contribution mass (Σ df over the batch's (query, term)
-    # pairs) — already driver-side; sizes the exchange the two tails
-    # below would pay
-    raw_mass = (int(qt["term"].map(df_map).fillna(0).sum())
-                if qt is not None else 0)
-    if (collapse is None and not has_cursor
-            and raw_mass >= _FUSED_TOPK_MIN_ROWS):
-        # fused combine + phase-1 top-k (round 7): the legacy tail
-        # below pays TWO exchanges of the scored set — groupBy(query,
-        # doc) hash-partitions one way, then _window_topk's salt
-        # window re-shuffles the same rows — plus a Tungsten sort per
-        # salt partition. One applyInPandas over (query, doc-salt)
-        # does both: all of a doc's partial contributions land in the
-        # same group (salt is a pure doc_id function), the kernel sums
-        # per doc and keeps the group-local top-(k+off) by (score
-        # DESC, doc_id), and every global top-(k+off) row wins its own
-        # salt bucket — identical output to groupBy + _window_topk
-        # (rank-identity tests cover it). 10.5M-turn 30-query wall:
-        # 6.7s -> 5.3s; the scored set never crosses the wire twice.
-        # SIZE-ROUTED: under ~4M raw rows the JVM hash-agg + window
-        # beats the ~1.3s python-worker constant (measured 1.6s legacy
-        # vs 2.9s fused at 211k turns), so small batches keep the
-        # legacy tail. Collapse/cursor batches always do (collapse
-        # groups and cursor filters need the full scored set).
-        return _fused_combine_topk(c, conjunctive)
-    scored = c.groupBy("query_id", "doc_id").agg(
-        F.sum("contrib").alias("score"),
-        F.first("k").alias("k"),
-        # (term, doc) is globally unique (one posting row per (term,
-        # segment), segments partition docs), so summing the per-task
-        # matched-term partials equals the old count_distinct(term)
-        F.sum("nm").alias("n_matched"),
-        F.first("n_query_terms").alias("nq"),
-        F.first("off").alias("off"),
+    raw_mass = _raw_mass(qt, df_map)
+    # AND semantics: a doc must contain every distinct query term —
+    # counted on the COMPLETE per-doc state, after all partials meet
+    keep = (lambda st, m: st["nm"] >= m["nq"]) if conjunctive else None
+    if collapse is None:
+        return _fused_combine_topk(c, meta, raw_mass, keep)
+    # field collapsing over the FULL scored set: keep the best (score
+    # DESC, doc_id) doc per (query, group). Null-group docs each
+    # collapse alone (group key "\0d<doc_id>" cannot collide with a
+    # real stringified value). The window partitions on the group key
+    # — group count is ~corpus-scale, so the work spreads; no
+    # corpus-sized driver or broadcast state anywhere.
+    key = [c_ for c_ in collapse.columns if c_ != "doc_id"]
+    if len(key) != 1:
+        raise ValueError(
+            "collapse must have exactly (doc_id, <group>) columns; "
+            f"got {collapse.columns}"
+        )
+    key = key[0]
+    grp = F.coalesce(
+        F.col(key).cast("string"),
+        F.concat(F.lit("\0d"), F.col("doc_id").cast("string")),
     )
-    if conjunctive:
-        # AND semantics: doc must contain every distinct query term
-        # (segments may split one term across rows — count distinct)
-        scored = scored.where(F.col("n_matched") >= F.col("nq"))
-    if collapse is not None:
-        # field collapsing over the FULL scored set: keep the best
-        # (score DESC, doc_id) doc per (query, group). Null-group docs
-        # each collapse alone (group key "\0d<doc_id>" cannot collide
-        # with a real stringified value). The window partitions on the
-        # group key — group count is ~corpus-scale, so the work
-        # spreads; no corpus-sized driver or broadcast state anywhere.
-        key = [c for c in collapse.columns if c != "doc_id"]
-        if len(key) != 1:
-            raise ValueError(
-                "collapse must have exactly (doc_id, <group>) columns; "
-                f"got {collapse.columns}"
-            )
-        key = key[0]
-        grp = F.coalesce(
-            F.col(key).cast("string"),
-            F.concat(F.lit("\0d"), F.col("doc_id").cast("string")),
-        )
-        cw = Window.partitionBy("query_id", "_grp").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        scored = (
-            scored.join(collapse, "doc_id", "left")
-            .withColumn("_grp", grp)
-            .withColumn("_gr", F.row_number().over(cw))
-            .where(F.col("_gr") == 1)
-            .drop("_gr", "_grp", key)
-        )
-    if has_cursor:
-        # search_after: keep hits strictly after the per-query
-        # (after_score, after_doc) cursor in (score DESC, doc_id ASC)
-        # order — applied to the FINAL ranking (post-AND, post-
-        # collapse), like Lucene's searchAfter over collapsed heads.
-        # Tiny broadcast: one row per cursored query
-        cur = (qt[["query_id", "after_score", "after_doc"]]
-               .drop_duplicates("query_id"))
-        cur = cur[cur["after_score"].notna()]
-        cdf = pdf_frame(
-            matched.sparkSession,
-            pd.DataFrame(
-                {"query_id": cur["query_id"].astype("int32"),
-                 "a_s": cur["after_score"].astype("float64"),
-                 "a_d": cur["after_doc"].astype("int64")}),
-            ddl="query_id int, a_s double, a_d long")
-        scored = (
-            scored.join(F.broadcast(cdf), "query_id", "left")
-            .where(F.col("a_s").isNull()
-                   | (F.col("score") < F.col("a_s"))
-                   | ((F.col("score") == F.col("a_s"))
-                      & (F.col("doc_id") > F.col("a_d"))))
-            .drop("a_s", "a_d")
-        )
-    return _window_topk(scored)
+    cw = Window.partitionBy("query_id", "_grp").orderBy(
+        F.desc("score"), F.asc("doc_id"))
+    heads = (
+        _fused_combine_topk(c, meta, raw_mass, keep, cut=False)
+        .join(collapse, "doc_id", "left")
+        .withColumn("_grp", grp)
+        .withColumn("_gr", F.row_number().over(cw))
+        .where(F.col("_gr") == 1)
+        .select("query_id", "doc_id", F.col("score").alias("contrib"))
+    )
+    # the heads (one row per doc) go through the same tail again: the
+    # search_after cursor applies to the collapsed ranking, like
+    # Lucene's searchAfter over collapsed heads
+    return _fused_combine_topk(heads, meta, raw_mass)
 
 
 EXPLAIN_SCHEMA = ("query_id int, term string, doc_id long, tf long, "
@@ -1596,7 +1531,7 @@ def synonym_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"), F.first("k").alias("k"))
     )
-    return _window_topk(scored)
+    return _salted_topk(scored)
 
 
 def boolean_topk(
@@ -1709,6 +1644,7 @@ def boolean_topk(
         run_distributed=lambda m, dfm, qids=None:
         _run_boolean_distributed(
             m, dfm, N, avgdl, cfg, doc_filter, doc_exclude,
+            qt=qt if qids is None else qt[qt["query_id"].isin(qids)],
             filt_bc=filt_bc, excl_bc=excl_bc),
     )
 
@@ -1809,6 +1745,7 @@ def _run_boolean_kernel(matched, N, avgdl, cfg,
 def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
                              doc_filter: DataFrame | None = None,
                              doc_exclude: DataFrame | None = None,
+                             *, qt: pd.DataFrame,
                              filt_bc=None, excl_bc=None) -> DataFrame:
     # same decode-and-combine shape as _run_distributed, with the
     # clause roles folded into per-doc partial COUNTS map-side (round
@@ -1830,7 +1767,6 @@ def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
         excl = excl_bc.value if excl_bc is not None else None
         # qid -> [docs, contrib, nm, nsh, nn, raw-since-compress]
         acc: dict = {}
-        meta: dict = {}  # qid -> (k, n_must, msm)
 
         def compress(ent):
             docs = np.concatenate(ent[0])
@@ -1869,12 +1805,8 @@ def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
                         tfs, dls, float(idf_fn(N, df_map[row.term])),
                         avgdl, cfg.k1, cfg.b,
                     )
-                qid = int(row.query_id)
-                if qid not in meta:
-                    meta[qid] = (int(row.k), int(row.n_must),
-                                 int(getattr(row, "msm", 0)))
                 ent = acc.setdefault(
-                    qid, [[], [], [], [], [], 0])
+                    int(row.query_id), [[], [], [], [], [], 0])
                 one = np.ones(docs.size, np.float64)
                 zero = np.zeros(docs.size, np.float64)
                 ent[0].append(docs.astype(np.int64))
@@ -1883,12 +1815,11 @@ def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
                 ent[3].append(one if row.role == "should" else zero)
                 ent[4].append(one if row.role == "not" else zero)
                 ent[5] += docs.size
-                if ent[5] >= _DIST_COMBINE_CHUNK:
+                if ent[5] >= _COMBINE_CHUNK:
                     compress(ent)
         for qid, ent in acc.items():
             compress(ent)
             uniq = ent[0][0]
-            k, n_must, msm = meta[qid]
             yield pd.DataFrame(
                 {
                     "query_id": np.full(uniq.size, qid, np.int32),
@@ -1897,41 +1828,31 @@ def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
                     "nm": ent[2][0].astype(np.int32),
                     "nsh": ent[3][0].astype(np.int32),
                     "nn": ent[4][0].astype(np.int32),
-                    "k": np.full(uniq.size, k, np.int32),
-                    "n_must": np.full(uniq.size, n_must, np.int32),
-                    "msm": np.full(uniq.size, msm, np.int32),
                 }
             )
 
-    need = (["term", "role", "query_id", "k", "n_must",
-             "doc_ids", "tfs", "dls"]
-            + (["msm"] if "msm" in matched.columns else []))
-    c = matched.select(*need).mapInPandas(
+    c = matched.select(
+        "term", "role", "query_id", "doc_ids", "tfs", "dls"
+    ).mapInPandas(
         contribs,
         schema="query_id int, doc_id long, contrib double, nm int, "
-               "nsh int, nn int, k int, n_must int, msm int",
+               "nsh int, nn int",
     )
     if filt_join is not None:
         c = c.join(filt_join.select("doc_id"), "doc_id", "semi")
     if excl_join is not None:
         c = c.join(excl_join.select("doc_id"), "doc_id", "anti")
-    scored = (
-        c.groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
-            F.first("k").alias("k"),
-            F.sum("nm").alias("nm"),
-            F.sum("nn").alias("nn"),
-            F.sum("nsh").alias("nsh"),
-            F.first("n_must").alias("n_must"),
-            F.first("msm").alias("msm"),
-        )
+    meta = {int(r.query_id): {"k": int(r.k), "n_must": int(r.n_must),
+                              "msm": int(r.msm)}
+            for r in qt.drop_duplicates("query_id").itertuples(index=False)}
+
+    def keep(st, m):
         # a (query, doc) group only exists if >= 1 term matched, so
         # nn == 0 already implies a positive match — no npos count
-        .where((F.col("nm") == F.col("n_must")) & (F.col("nn") == 0)
-               & (F.col("nsh") >= F.col("msm")))
-    )
-    return _window_topk(scored)
+        return ((st["nm"] == m["n_must"]) & (st["nn"] == 0)
+                & (st["nsh"] >= m["msm"]))
+
+    return _fused_combine_topk(c, meta, _raw_mass(qt, df_map), keep)
 
 
 def _merge_term_rows(grp, with_pos: bool):
@@ -2591,7 +2512,7 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
     ).groupBy("query_id", "vsalt").applyInPandas(
         verify, schema="query_id int, doc_id long, score double, k int"
     )
-    return _window_topk(verified)
+    return _salted_topk(verified)
 
 
 def _iter_decoded_postings(it, with_tf: bool = False):
@@ -2752,11 +2673,6 @@ MAX_EXPANSIONS_DEFAULT = 1024
 # more to plan/codegen than a broadcast semi-join on a tiny term frame
 _ISIN_MAX_TERMS = 2048
 
-# per-query salt buckets for the two-phase top-N term selection (same
-# trick as _window_topk: phase-1 local top-N per salt spreads the bulk
-# sort; phase-2 ranks the <= salt*N survivors)
-_EXPANSION_SALT = 32
-
 
 def prefix_topk(
     spark: SparkSession,
@@ -2816,7 +2732,7 @@ def prefix_topk(
     )
     if matched is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    return _term_expansion_topk(matched, doc_filter, doc_exclude)
+    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
 
 
 def _expansion_matched(
@@ -2899,7 +2815,7 @@ def _expansion_matched(
         # the scan prune. The per-term frame then takes the salted
         # phase-1 cut (no single task ever sorts a pathological
         # pattern's full match set), and the GLOBAL top-N cut happens
-        # driver-side on the bounded collect (<= _EXPANSION_SALT x
+        # driver-side on the bounded collect (<= _TOPK_SALT x
         # max_expansions rows per query) with the same ordering — one
         # exchange and two window sorts fewer than the old
         # wt-sum/dense_rank/dense_rank cascade, same selected terms.
@@ -2914,7 +2830,7 @@ def _expansion_matched(
         g = (
             g.withColumn("_salt",
                          F.pmod(F.xxhash64("term"),
-                                F.lit(_EXPANSION_SALT)))
+                                F.lit(_TOPK_SALT)))
             .withColumn("_r1", F.row_number().over(w1))
             .where(F.col("_r1") <= int(max_expansions))
             .drop("_salt", "_r1")
@@ -2970,10 +2886,10 @@ def _expansion_matched(
 def _tag_expansion_mass(matched, pairs_pdf) -> None:
     """Record the batch's raw df mass (Σ df over (query, term) clause
     pairs — already driver-side in the collected pairs) on the matched
-    frame, so the ranked tail can size-route to the fused combine+topk
-    without an extra aggregate job. A plain python attribute: the tail
+    frame, so the ranked tail can size the combine's fan-out without
+    an extra aggregate job. A plain python attribute: the tail
     receives this exact object; consumers that restructure the frame
-    simply fall back to the legacy tail (getattr default None)."""
+    lose it and take the full fan-out (getattr default None)."""
     try:
         matched.expansion_df_mass = int(pairs_pdf["df"].sum())
     except Exception:
@@ -3004,12 +2920,6 @@ def _pruned_pair_join(spark, posts, pairs_pdf, has_part, part_ids=None):
     return pruned.join(F.broadcast(pairs), "term")
 
 
-# a task's expansion decode combines (doc, tf) pairs locally and
-# re-compresses whenever this many raw pairs have accumulated — task
-# memory stays O(chunk + distinct docs in task), never O(df mass)
-_EXPANSION_COMBINE_CHUNK = 4_000_000
-
-
 def _expansion_masks(matched, doc_filter, doc_exclude):
     """Kernel-mask routing for the expansion tails (round 7): bounded
     doc_filter/doc_exclude sets become sorted-id broadcasts applied
@@ -3027,12 +2937,13 @@ def _expansion_masks(matched, doc_filter, doc_exclude):
     return df_, de_, fb, eb, empty
 
 
-def _term_expansion_topk(matched, doc_filter, doc_exclude) -> DataFrame:
+def _term_expansion_topk(matched, queries: pd.DataFrame, doc_filter,
+                         doc_exclude) -> DataFrame:
     """Shared tail of the term-EXPANSION query family (prefix, fuzzy,
     wildcard): matched = posting rows joined to (query_id, k), docs
     ranked by the summed tf of their matching terms (deterministic,
     idf-free — an expansion set makes per-term idf unstable), ties by
-    doc_id.
+    doc_id. queries: the batch's (query_id, k) rows, driver side.
 
     Scale shape (round 6): the decode pass COMBINES map-side. An
     expansion over Zipf-head terms (e.g. wildcard `w00*` hitting the
@@ -3042,16 +2953,16 @@ def _term_expansion_topk(matched, doc_filter, doc_exclude) -> DataFrame:
     (round-5's wildcard regression). Matched terms are term-range
     ADJACENT (`w00*` spans one dictionary range), so one task's rows
     overlap heavily on docs: each task now accumulates pairs in numpy
-    and re-compresses via unique+bincount every _EXPANSION_COMBINE_CHUNK
+    and re-compresses via unique+bincount every _COMBINE_CHUNK
     raw pairs, emitting one row per (query, distinct doc in task) —
     the exploded pair frame never exists, the shuffle input is
     distinct-docs-sized, and task memory is bounded at any doc-id
     cardinality (no dense corpus-sized array, works at 10^12 docs).
-    Then filter joins -> built-in agg -> two-phase salted top-k; no
-    task ever holds more than one chunk of raw pairs. Bounded
-    doc_filter/doc_exclude sets mask INSIDE the kernel (round 7 —
-    _expansion_masks) ahead of the accumulate, so filtered pairs never
-    reach the shuffle; oversized sets keep the semi/anti joins."""
+    Then filter joins -> the fused combine + top-k; no task ever holds
+    more than one chunk of raw pairs. Bounded doc_filter/doc_exclude
+    sets mask INSIDE the kernel (round 7 — _expansion_masks) ahead of
+    the accumulate, so filtered pairs never reach the shuffle;
+    oversized sets keep the semi/anti joins."""
     doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _expansion_masks(matched, doc_filter, doc_exclude)
     if empty:
@@ -3060,7 +2971,7 @@ def _term_expansion_topk(matched, doc_filter, doc_exclude) -> DataFrame:
     def doc_rows(it):
         filt = filt_bc.value if filt_bc is not None else None
         excl = excl_bc.value if excl_bc is not None else None
-        # (query_id, k) -> [docs_chunks, tf_chunks, n_raw_since_compress]
+        # query_id -> [docs_chunks, tf_chunks, n_raw_since_compress]
         acc: dict = {}
 
         def compress(ent):
@@ -3069,9 +2980,8 @@ def _term_expansion_topk(matched, doc_filter, doc_exclude) -> DataFrame:
             uniq, inv = np.unique(docs, return_inverse=True)
             # tf sums are token counts (< 2^53): float64 bincount is
             # exact and much faster than np.add.at on int64
-            sums = np.bincount(inv, weights=tfs.astype(np.float64))
             ent[0] = [uniq]
-            ent[1] = [sums.astype(np.int64)]
+            ent[1] = [np.bincount(inv, weights=tfs.astype(np.float64))]
             # counter = raw pairs APPENDED since the last compress, not
             # the compressed size: re-using uniq.size would re-trigger
             # a full unique+bincount on every subsequent row once a
@@ -3087,55 +2997,41 @@ def _term_expansion_topk(matched, doc_filter, doc_exclude) -> DataFrame:
                 docs, tfs = docs[keep], tfs[keep]
             if not docs.size:
                 continue
-            ent = acc.setdefault((row.query_id, row.k), [[], [], 0])
+            ent = acc.setdefault(int(row.query_id), [[], [], 0])
             ent[0].append(docs)
             ent[1].append(tfs)
             ent[2] += docs.size
-            if ent[2] >= _EXPANSION_COMBINE_CHUNK:
+            if ent[2] >= _COMBINE_CHUNK:
                 compress(ent)
-        for (qid, k), ent in acc.items():
+        for qid, ent in acc.items():
             compress(ent)
-            uniq, sums = ent[0][0], ent[1][0]
+            uniq = ent[0][0]
             yield pd.DataFrame(
                 {"query_id": np.full(uniq.size, qid, np.int32),
                  "doc_id": uniq,
-                 "tf": sums,
-                 "k": np.full(uniq.size, k, np.int32)}
+                 "contrib": ent[1][0]}
             )
 
     # explicit projection: Catalyst cannot prune columns through the
     # mapInPandas black box, so without this the dls/cf payload columns
     # are read from parquet AND shipped through Arrow just to be
     # ignored (~1/3 of expansion payload bytes)
-    c = matched.select("query_id", "k", "doc_ids", "tfs").mapInPandas(
-        doc_rows, schema="query_id int, doc_id long, tf long, k int"
+    c = matched.select("query_id", "doc_ids", "tfs").mapInPandas(
+        doc_rows, schema="query_id int, doc_id long, contrib double"
     )
     if doc_filter is not None and filt_bc is None:
         c = c.join(doc_filter, "doc_id", "semi")
     if doc_exclude is not None and excl_bc is None:
         c = c.join(doc_exclude, "doc_id", "anti")
-    # size-routed fused tail (round 8, the _run_distributed idiom): a
-    # Zipf-head expansion's combined frame is distinct-docs-sized but
-    # still tens of millions of rows at 10M+ turns, and the legacy tail
-    # shuffles it TWICE (groupBy hash agg, then the salt window) plus a
-    # Tungsten sort per salt partition. One applyInPandas over
-    # (query, doc-salt) groups sums per doc and keeps the group-local
-    # top-k — identical output (tf sums are integers < 2^53, so double
-    # addition is exact in any order; same boundary-tie resolution).
-    # The raw df mass rides the matched frame from _expansion_matched
-    # (driver-side, no extra job); below the threshold the JVM tail's
-    # constants win (same crossover as the distributed path).
-    mass = getattr(matched, "expansion_df_mass", None)
-    if mass is not None and mass >= _FUSED_TOPK_MIN_ROWS:
-        c2 = c.withColumn("contrib", F.col("tf").cast("double")) \
-              .withColumn("off", F.lit(0)).drop("tf")
-        return _fused_combine_topk(c2, conjunctive=False) \
-            .orderBy("query_id", "rank")
-    scored = c.groupBy("query_id", "doc_id").agg(
-        F.sum("tf").cast("double").alias("score"),
-        F.first("k").alias("k"),
-    )
-    return _window_topk(scored).orderBy("query_id", "rank")
+    # tf sums are integers < 2^53, so the combine's double addition is
+    # exact in any order. The raw df mass rides the matched frame from
+    # _expansion_matched (driver side, no extra job); the unbounded
+    # equi-join path has none and takes the full fan-out.
+    meta = {int(r.query_id): {"k": int(r.k)}
+            for r in queries.itertuples(index=False)}
+    return _fused_combine_topk(
+        c, meta, getattr(matched, "expansion_df_mass", None)
+    ).orderBy("query_id", "rank")
 
 
 _EXPANSION_DOCS_SCHEMA = "query_id int, doc_id long"
@@ -3190,7 +3086,7 @@ def _expansion_doc_ids(matched, doc_filter=None,
             ent = acc.setdefault(int(row.query_id), [[], 0])
             ent[0].append(docs)
             ent[1] += docs.size
-            if ent[1] >= _EXPANSION_COMBINE_CHUNK:
+            if ent[1] >= _COMBINE_CHUNK:
                 compress(ent)
         for qid, ent in acc.items():
             compress(ent)
@@ -3405,7 +3301,7 @@ def fuzzy_topk(
     if docs_only:
         return _expansion_doc_ids(matched, doc_filter, doc_exclude,
                                   distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, doc_filter, doc_exclude)
+    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
 
 
 def wildcard_topk(
@@ -3485,7 +3381,7 @@ def wildcard_topk(
     if docs_only:
         return _expansion_doc_ids(matched, doc_filter, doc_exclude,
                                   distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, doc_filter, doc_exclude)
+    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
 
 
 # regex metachars allowed in regexp_topk patterns: the common
@@ -3614,7 +3510,7 @@ def regexp_topk(
     if docs_only:
         return _expansion_doc_ids(matched, doc_filter, doc_exclude,
                                   distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, doc_filter, doc_exclude)
+    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
 
 
 def term_range_topk(
@@ -3713,7 +3609,7 @@ def term_range_topk(
     if docs_only:
         return _expansion_doc_ids(matched, doc_filter, doc_exclude,
                                   distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, doc_filter, doc_exclude)
+    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
 
 
 def facet_counts(
@@ -4011,7 +3907,7 @@ def rescore_topk(
                  + F.lit(float(rescore_weight))
                  * F.coalesce("ph_s", F.lit(0.0))).alias("score"))
     )
-    return _rank_page(out).orderBy("query_id", "rank")
+    return _salted_topk(out, salt_col=None).orderBy("query_id", "rank")
 
 
 # date_trunc units shared verbatim by Spark and DuckDB, with the
@@ -4294,7 +4190,7 @@ def substring_topk(
             if doc_exclude is not None:
                 scanned = scanned.join(
                     doc_exclude.select("doc_id"), "doc_id", "anti")
-            parts.append(_window_topk(scanned))
+            parts.append(_salted_topk(scanned))
     if not parts:
         return spark.createDataFrame([], RESULT_SCHEMA)
     out = parts[0]

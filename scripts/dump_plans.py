@@ -102,12 +102,15 @@ out.write("\n```\n")
 
 out.write(
     "\n## 4. Distributed scoring mode (pathological-query fallback)\n\n"
-    "Contribution rows aggregated by built-in hash aggregation\n"
-    "(partial_sum map-side), then the TWO-PHASE salted top-k: the\n"
-    "first Window ranks per (query_id, doc_id % 32) salt bucket (the\n"
-    "bulk sort spreads over 32 tasks per query), the second ranks the\n"
-    "surviving <= 32k rows per query — nothing in this plan ever holds\n"
-    "a whole hot posting OR a whole scored set in one task.\n\n```\n"
+    "The MapInPandas decode sums each (query, doc) within its task,\n"
+    "then ONE Exchange hash-partitions the contribution rows on\n"
+    "(query_id, doc_id % S) and FlatMapGroupsInPandas (the fused\n"
+    "combine) sums each doc's partials and keeps the group-local\n"
+    "top-(k + off); a single Window ranks the <= S(k + off) survivors\n"
+    "per query. S, the salt fan-out, is one bucket per 4M rows of the\n"
+    "batch's raw contribution mass, 1..32 — 1 on this fixture.\n"
+    "Nothing in this plan ever holds a whole hot posting OR a whole\n"
+    "scored set in one task.\n\n```\n"
 )
 out.write(
     plan_of(
@@ -126,9 +129,10 @@ out.write(
     "anti-join)\n\n"
     "`bm25_topk(doc_filter=..., doc_exclude=...)` in distributed mode\n"
     "attaches both doc-set joins to the contrib rows BEFORE the score\n"
-    "aggregate (LeftSemi/LeftAnti below HashAggregate) — with AQE,\n"
-    "selective sets finalize as broadcast joins, so filtered-out rows\n"
-    "drop map-side and never enter the groupBy shuffle (asserted by\n"
+    "combine (LeftSemi/LeftAnti below FlatMapGroupsInPandas) — with\n"
+    "AQE, selective sets finalize as broadcast joins, so filtered-out\n"
+    "rows drop map-side and never enter the combine shuffle (asserted\n"
+    "for bm25 and query-string batches by\n"
     "tests/test_plans.py::test_filter_joins_precede_aggregate).\n"
     "Kernel mode instead ships each set once per executor as a sorted\n"
     "int64 broadcast array and masks decoded postings in-kernel;\n"
@@ -156,11 +160,12 @@ out.write(
     "\n## 6. Boolean query, distributed mode (per-query "
     "MUST/SHOULD/MUST_NOT)\n\n"
     "All three clauses' terms ride ONE pushdown-pruned scan and one\n"
-    "broadcast join; the hash aggregate evaluates every clause with\n"
-    "built-in conditional aggregates (count_distinct of matched MUST\n"
-    "terms == n_must, zero matched MUST_NOT rows, positive-term sum as\n"
-    "the score) — per-query exclusion with no extra scan, no task ever\n"
-    "holding a whole posting.\n\n```\n"
+    "broadcast join; the decode counts matched MUST / SHOULD /\n"
+    "MUST_NOT terms per doc in-task, and the fused combine (the same\n"
+    "FlatMapGroupsInPandas as section 4) sums the partial counts and\n"
+    "keeps docs with every MUST term, min_should_match SHOULD terms\n"
+    "and no MUST_NOT term — per-query exclusion with no extra scan, no\n"
+    "task ever holding a whole posting.\n\n```\n"
 )
 out.write(
     plan_of(
@@ -196,8 +201,9 @@ out.write(
     "(b) the scoring tail over the <= max_expansions matched terms:\n"
     "In(term) pushdown prunes the postings scan, the MapInPandas\n"
     "combine emits one row per (query, distinct doc in task) — the\n"
-    "df-mass pair explosion never materializes — and the two-phase\n"
-    "salted top-k bounds every window task:\n\n```\n"
+    "df-mass pair explosion never materializes — and the fused\n"
+    "combine sums tf per doc and keeps the group-local top-k before\n"
+    "one Window ranks the survivors:\n\n```\n"
 )
 wq = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
                    "text": ["w00*"], "k": np.array([10], dtype=np.int32)})
@@ -255,9 +261,10 @@ out.write(
     "expansion clauses resolve through their surfaces' docs_only\n"
     "membership path (their dictionary match collected eagerly above\n"
     "this plan, like section 7a); the combine is a single union ->\n"
-    "hash aggregate with conditional MUST/MUST_NOT checks -> salted\n"
-    "top-k. One clause KIND absent from a batch contributes nothing\n"
-    "to the plan.\n\n```\n"
+    "the fused combine of section 4 (per-doc MUST-group bits, MUST_NOT\n"
+    "flag and constant-clause boosts folded in the same group call) ->\n"
+    "one Window. One clause KIND absent from a batch contributes\n"
+    "nothing to the plan.\n\n```\n"
 )
 out.write(plan_of(
     query_string_topk(spark, postings, pq, res.N, res.avgdl, cfg,

@@ -43,7 +43,7 @@ def test_distributed_pruned_rank_identical(built_index, spark):
 def test_distributed_pruned_small_chunk(built_index, spark, monkeypatch):
     """Force the in-task re-compress loop (chunk=64) together with
     pruning — combine-after-prune must keep exact partial sums."""
-    monkeypatch.setattr(Q, "_DIST_COMBINE_CHUNK", 64)
+    monkeypatch.setattr(Q, "_COMBINE_CHUNK", 64)
     res, cfg = built_index["res"], built_index["cfg"]
     queries = fx.queries_pdf(42)
     want = built_index["oracle"].topk_pdf(queries)
@@ -163,7 +163,7 @@ def test_prune_actually_fires(built_index, spark, monkeypatch):
     """Not a vacuous guard: on a single-term hot query (df ~ corpus)
     the pruned path's pre-top-k frame must hold a small fraction of df
     rows, while the unpruned path holds ~df. Measured by counting the
-    frame _run_distributed hands to _window_topk."""
+    frame _run_distributed hands to the one combine + top-k tail."""
     from capsbm25.query import (_query_terms_pdf, _run_distributed,
                                 _term_df_map)
 
@@ -184,15 +184,12 @@ def test_prune_actually_fires(built_index, spark, monkeypatch):
 
     counts = []
     real = Q._fused_combine_topk
-    # force the fused tail at test scale so its input frame (= what
-    # crosses the one exchange) is countable
-    monkeypatch.setattr(Q, "_FUSED_TOPK_MIN_ROWS", 0)
 
-    def counting(c, conjunctive):
+    def counting(c, *args, **kwargs):
         # c = the per-task-combined contribution frame — exactly what
         # crosses the one exchange; pruning must shrink IT
         counts.append(c.count())
-        return real(c, conjunctive)
+        return real(c, *args, **kwargs)
 
     monkeypatch.setattr(Q, "_fused_combine_topk", counting)
     pruned = _run_distributed(
@@ -212,30 +209,34 @@ def test_prune_actually_fires(built_index, spark, monkeypatch):
 
 
 def test_fused_topk_tail_parity(built_index, spark, monkeypatch):
-    """The size-routed fused combine+top-k tail returns exactly what
-    the legacy groupBy + _window_topk tail does — disjunctive,
-    conjunctive, and offset-paged batches (scores to float tolerance:
-    both sum the same contributions, in different orders)."""
+    """The one combine + top-k tail is rank-identical to the oracle at
+    fan-out 1 (one group per query) and fan-out 32 (the top-(k+off)
+    cut runs per salt bucket, phase 2 merges) — disjunctive,
+    conjunctive, and offset-paged batches."""
     res, cfg = built_index["res"], built_index["cfg"]
+    oracle = built_index["oracle"]
     queries = fx.queries_pdf(42).head(8).reset_index(drop=True)
     paged = queries.assign(offset=np.int32(3))
-    for conj in (False, True):
-        for qdf in (queries, paged):
-            outs = {}
-            for label, thresh in (("legacy", 1 << 60), ("fused", 0)):
-                monkeypatch.setattr(Q, "_FUSED_TOPK_MIN_ROWS", thresh)
-                outs[label] = (
-                    bm25_topk(spark, built_index["postings"], qdf,
-                              res.N, res.avgdl, cfg,
-                              mode="distributed", conjunctive=conj)
-                    .toPandas()
-                    .sort_values(["query_id", "rank"],
-                                 ignore_index=True)
-                )
-            a, b = outs["legacy"], outs["fused"]
-            pd.testing.assert_frame_equal(
-                a[["query_id", "doc_id", "rank"]],
-                b[["query_id", "doc_id", "rank"]], check_dtype=False)
-            np.testing.assert_allclose(
-                a["score"].to_numpy(), b["score"].to_numpy(),
-                rtol=1e-12)
+    for fan_out in (1, 32):
+        monkeypatch.setattr(Q, "_fan_out", lambda mass, s=fan_out: s)
+        for conj in (False, True):
+            for qdf in (queries, paged):
+                got = bm25_topk(
+                    spark, built_index["postings"], qdf, res.N,
+                    res.avgdl, cfg, mode="distributed", conjunctive=conj,
+                ).toPandas()
+                off = int(qdf["offset"].iloc[0]) if "offset" in qdf else 0
+                rows = [
+                    (int(q.query_id), d, s, r)
+                    for q in qdf.itertuples(index=False)
+                    for r, (d, s) in enumerate(
+                        oracle.topk(q.text, int(q.k), conjunctive=conj,
+                                    offset=off), off + 1)
+                ]
+                want = pd.DataFrame(
+                    rows, columns=["query_id", "doc_id", "score", "rank"])
+                assert len(want) > 0
+                _identical(got, want)
+                key = ["query_id", "rank"]
+                assert (got.sort_values(key)[key].values.tolist()
+                        == want.sort_values(key)[key].values.tolist())

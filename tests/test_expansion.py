@@ -672,38 +672,36 @@ def test_expansion_docs_only_respects_filters(built_index, spark):
 
 def test_expansion_fused_tail_rank_identical(built_index, spark,
                                              monkeypatch):
-    """Round-8 fused tail: forcing _FUSED_TOPK_MIN_ROWS=0 routes the
-    expansion ranked tail through _fused_combine_topk; wildcard and
-    fuzzy results must be identical to the legacy groupBy +
-    _window_topk tail (tf sums are integers, so double addition is
-    exact in any order)."""
-    import numpy as np
-    import pandas as pd
-
+    """The expansion ranked tail runs through the one combine + top-k
+    tail; wildcard and fuzzy results are rank-identical to the naive
+    expansion oracle at fan-out 1 and fan-out 32 (tf sums are
+    integers, so double addition is exact in any order)."""
     import capsbm25.query as Q
 
-    res, cfg = built_index["res"], built_index["cfg"]
+    cfg, oracle = built_index["cfg"], built_index["oracle"]
+    pats = ["w00*", "w0?01", "w*"]
     queries = pd.DataFrame(
         {"query_id": np.arange(3, dtype=np.int32),
-         "text": ["w00*", "w0?01", "w*"],
+         "text": pats,
          "k": np.array([10, 10, 10], dtype=np.int32)})
+    probes = ["w0001", "w0100"]
     fq = pd.DataFrame(
         {"query_id": np.arange(2, dtype=np.int32),
-         "text": ["w0001", "w0100"],
+         "text": probes,
          "k": np.array([10, 10], dtype=np.int32)})
-    legacy_w = wildcard_topk(
-        spark, built_index["postings"], queries, cfg).toPandas()
-    legacy_f = fuzzy_topk(
-        spark, built_index["postings"], fq, cfg, max_edits=1).toPandas()
-    monkeypatch.setattr(Q, "_FUSED_TOPK_MIN_ROWS", 0)
-    fused_w = wildcard_topk(
-        spark, built_index["postings"], queries, cfg).toPandas()
-    fused_f = fuzzy_topk(
-        spark, built_index["postings"], fq, cfg, max_edits=1).toPandas()
-    for legacy, fused in ((legacy_w, fused_w), (legacy_f, fused_f)):
-        legacy = legacy.sort_values(["query_id", "rank"],
-                                    ignore_index=True)
-        fused = fused.sort_values(["query_id", "rank"],
-                                  ignore_index=True)
-        assert len(legacy) > 0
-        pd.testing.assert_frame_equal(fused, legacy)
+    for fan_out in (1, 32):
+        monkeypatch.setattr(Q, "_fan_out", lambda mass, s=fan_out: s)
+        got_w = wildcard_topk(spark, built_index["postings"], queries,
+                              cfg, max_expansions=None).toPandas()
+        got_f = fuzzy_topk(spark, built_index["postings"], fq, cfg,
+                           max_edits=1, max_expansions=None).toPandas()
+        for qid, pat in enumerate(pats):
+            want = _expansion_want(
+                oracle, lambda t, p=pat: fnmatch.fnmatchcase(t, p), 10)
+            assert want
+            _check_one(got_w, qid, want)
+        for qid, p in enumerate(probes):
+            want = _expansion_want(
+                oracle, lambda t, p=p: _lev(t, p) <= 1, 10)
+            assert want
+            _check_one(got_f, qid, want)

@@ -774,12 +774,44 @@ def test_operator_keywords_match_explicit_form(ps_index):
 
 
 def test_fused_combine_rank_identical(ps_index, monkeypatch):
-    """Round-8 fused tail: forcing _QS_FUSED_MIN_ROWS=0 routes the
-    combine through _qs_fused_combine (one exchange + numpy combine);
-    results must be identical to the legacy groupBy + _salted_topk
-    tail on a batch exercising must/should/not, wildcard, range and
-    boost clauses."""
-    import capsbm25.parser as P
+    """The query-string combine runs through the one combine + top-k
+    tail; a batch exercising must/should/not, wildcard, range and
+    boost clauses is rank-identical to a naive oracle recomputation at
+    fan-out 1 and fan-out 32."""
+    import capsbm25.query as Q
+
+    oracle = ps_index["oracle"]
+    vocab = sorted(oracle.postings)
+
+    def docs(pred):
+        out = set()
+        for t in vocab:
+            if pred(t):
+                out |= oracle.postings[t].keys()
+        return out
+
+    def bm25(t, boost=1.0):
+        return {d: boost * oracle.score_doc([t], d)
+                for d in oracle.postings.get(t, {})}
+
+    def want(must_sets, scored, const, excl, k=30):
+        # must_sets: doc sets every hit needs; scored: per-doc BM25
+        # maps (summed); const: (doc set, boost) constant clauses;
+        # excl: prohibited docs
+        cand = set()
+        for m in scored:
+            cand |= m.keys()
+        for ds, _ in const:
+            cand |= ds
+        for ms in must_sets:
+            cand &= ms
+        cand -= excl
+        out = []
+        for d in cand:
+            s = sum(m.get(d, 0.0) for m in scored)
+            s += sum(b for ds, b in const if d in ds)
+            out.append((d, s))
+        return _rank(out, k)
 
     texts = [
         "+w0000 w0001 w0002 w00*",
@@ -787,13 +819,22 @@ def test_fused_combine_rank_identical(ps_index, monkeypatch):
         "+(w0004 w0005) [w0000 TO w0002]",
         "w000?",
     ]
-    legacy = _run(ps_index, texts)
-    monkeypatch.setattr(P, "_QS_FUSED_MIN_ROWS", 0)
-    fused = _run(ps_index, texts)
-    legacy = legacy.sort_values(["query_id", "rank"], ignore_index=True)
-    fused = fused.sort_values(["query_id", "rank"], ignore_index=True)
-    assert list(fused.query_id) == list(legacy.query_id)
-    assert list(fused.doc_id) == list(legacy.doc_id)
-    assert list(fused["rank"]) == list(legacy["rank"])
-    np.testing.assert_allclose(fused.score.to_numpy(),
-                               legacy.score.to_numpy(), rtol=1e-12)
+    wants = [
+        want([set(oracle.postings["w0000"])],
+             [bm25("w0000"), bm25("w0001"), bm25("w0002")],
+             [(docs(lambda t: t.startswith("w00")), 1.0)], set()),
+        want([], [bm25("w0001"), bm25("w0002", 2.0)], [],
+             set(oracle.postings["w0003"])),
+        want([set(oracle.postings["w0004"])
+              | set(oracle.postings["w0005"])],
+             [bm25("w0004"), bm25("w0005")],
+             [(docs(lambda t: "w0000" <= t <= "w0002"), 1.0)], set()),
+        want([], [], [(docs(lambda t: len(t) == 5
+                            and t.startswith("w000")), 1.0)], set()),
+    ]
+    for fan_out in (1, 32):
+        monkeypatch.setattr(Q, "_fan_out", lambda mass, s=fan_out: s)
+        got = _run(ps_index, texts)
+        for qid, w in enumerate(wants):
+            assert w, qid
+            _check(got, qid, w)

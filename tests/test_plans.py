@@ -91,29 +91,36 @@ def test_fused_run_packing_has_exactly_one_exchange(spark):
 
 def test_filter_joins_precede_aggregate(built_index, spark):
     """doc_filter/doc_exclude in distributed mode are LeftSemi/LeftAnti
-    joins placed BEFORE the score aggregate, so (with AQE broadcasting
-    the small sets) filtered-out contrib rows never enter the groupBy
-    shuffle."""
+    joins placed BEFORE the score combine, so (with AQE broadcasting
+    the small sets) filtered-out contrib rows never enter the combine
+    shuffle — for bm25_topk and for query_string_topk."""
     from capsbm25.build import load_doc_stats
+    from capsbm25.parser import query_string_topk
 
     res, cfg = built_index["res"], built_index["cfg"]
     stats_df = load_doc_stats(spark, res.out_dir)
     fdf = stats_df.limit(40).select("doc_id")
     queries = fx.queries_pdf(42)
-    out = bm25_topk(
-        spark, built_index["postings"], queries, res.N, res.avgdl, cfg,
-        mode="distributed", doc_filter=fdf, doc_exclude=fdf.limit(3),
-    )
-    plan = _plan(out)
-    assert "LeftSemi" in plan and "LeftAnti" in plan, plan
-    # toString prints the tree root-first, children after — an operator
-    # printing LATER is DEEPER. Both joins must be deeper than the
-    # outermost score aggregate (i.e. upstream of it), so filtered rows
-    # die before the groupBy shuffle.
-    first_agg = plan.find("HashAggregate")
-    assert first_agg > 0, plan[:2000]
-    assert plan.find("LeftSemi") > first_agg, plan[:2000]
-    assert plan.find("LeftAnti") > first_agg, plan[:2000]
+    outs = {
+        "bm25": bm25_topk(
+            spark, built_index["postings"], queries, res.N, res.avgdl,
+            cfg, mode="distributed", doc_filter=fdf,
+            doc_exclude=fdf.limit(3)),
+        "query_string": query_string_topk(
+            spark, built_index["postings"], queries, res.N, res.avgdl,
+            cfg, doc_filter=fdf, doc_exclude=fdf.limit(3)),
+    }
+    for name, out in outs.items():
+        plan = _plan(out)
+        assert "LeftSemi" in plan and "LeftAnti" in plan, (name, plan)
+        # toString prints the tree root-first, children after — an
+        # operator printing LATER is DEEPER. Both joins must be deeper
+        # than the score combine (i.e. upstream of it), so filtered
+        # rows die before the combine's shuffle.
+        combine = plan.find("FlatMapGroupsInPandas")
+        assert combine > 0, (name, plan[:2000])
+        assert plan.find("LeftSemi") > combine, (name, plan[:2000])
+        assert plan.find("LeftAnti") > combine, (name, plan[:2000])
 
 
 def test_postings_rowgroup_stats_support_term_pruning(built_index, spark):

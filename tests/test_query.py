@@ -186,32 +186,69 @@ def test_filter_edges(built_index, spark):
     _assert_rank_identical(got, want_f, queries)
 
 
-def test_window_topk_ties_across_salt_buckets(spark):
-    """Two-phase salted top-k: exact score ties straddling the k
-    boundary, tied docs spread across salt buckets, must rank exactly
-    like a single global (score desc, doc_id asc) sort."""
-    from capsbm25.query import _window_topk
+def _tie_rows():
+    """Two queries over docs 0..99 scoring d // 10: exact ties
+    straddle every cut, spread across all salt buckets."""
+    return pd.DataFrame(
+        [(q, d, float(d // 10), 7) for q in (0, 1) for d in range(100)],
+        columns=["query_id", "doc_id", "score", "k"])
 
-    rows = [
-        (q, d, float(d // 10), 7) for q in (0, 1) for d in range(100)
-    ]
-    pdf = pd.DataFrame(rows, columns=["query_id", "doc_id", "score", "k"])
-    got = (
-        _window_topk(spark.createDataFrame(pdf))
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    want_rows = []
+
+def _tie_want(pdf, offs):
+    rows = []
     for q in (0, 1):
+        off = offs.get(q, 0)
         sub = pdf[pdf.query_id == q].sort_values(
             ["score", "doc_id"], ascending=[False, True]
-        ).head(7)
-        for r, (d, s) in enumerate(zip(sub.doc_id, sub.score), 1):
-            want_rows.append((q, int(d), float(s), r))
-    want = pd.DataFrame(
-        want_rows, columns=["query_id", "doc_id", "score", "rank"]
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+        ).iloc[off:off + 7]
+        for r, (d, s) in enumerate(zip(sub.doc_id, sub.score), off + 1):
+            rows.append((q, int(d), float(s), r))
+    return pd.DataFrame(rows,
+                        columns=["query_id", "doc_id", "score", "rank"])
+
+
+def test_window_topk_ties_across_salt_buckets(spark):
+    """Two-phase salted top-k (the Spark-window phase-2 helper): exact
+    score ties straddling the k boundary, tied docs spread across salt
+    buckets, must rank exactly like a single global (score desc,
+    doc_id asc) sort — with and without a pagination offset."""
+    from capsbm25.query import _salted_topk
+
+    pdf = _tie_rows()
+    for offs in ({}, {1: 3}):
+        df = spark.createDataFrame(
+            pdf.assign(off=pdf["query_id"].map(offs).fillna(0)
+                       .astype(np.int32)))
+        got = (
+            _salted_topk(df)
+            .toPandas()
+            .sort_values(["query_id", "rank"], ignore_index=True)
+        )
+        pd.testing.assert_frame_equal(got, _tie_want(pdf, offs),
+                                      check_dtype=False)
+
+
+def test_fused_combine_ties_across_salt_buckets(spark):
+    """The same tie-straddling-k case through the fused combine at
+    fan-out 32: each doc's score arrives as two partials (summed in
+    the kernel), the group-local tie-exact cut runs per salt bucket,
+    and phase 2 must return exactly the global (score desc, doc_id
+    asc) page — with and without a pagination offset."""
+    from capsbm25.query import _COMBINE_CHUNK, _fused_combine_topk
+
+    pdf = _tie_rows()
+    half = pdf.assign(contrib=pdf["score"] / 2)[
+        ["query_id", "doc_id", "contrib"]]
+    c = spark.createDataFrame(pd.concat([half, half], ignore_index=True))
+    for offs in ({}, {1: 3}):
+        meta = {q: {"k": 7, "off": offs.get(q, 0)} for q in (0, 1)}
+        got = (
+            _fused_combine_topk(c, meta, 32 * _COMBINE_CHUNK)
+            .toPandas()
+            .sort_values(["query_id", "rank"], ignore_index=True)
+        )
+        pd.testing.assert_frame_equal(got, _tie_want(pdf, offs),
+                                      check_dtype=False)
 
 
 def test_facet_counts_matches_oracle(built_index, spark):
@@ -328,69 +365,63 @@ def test_search_after_mid_tie_cursor(built_index, spark):
     """A cursor placed INSIDE a tie group resumes at the doc_id
     tiebreak: docs with score == after_score and doc_id > after_doc
     appear, earlier tied docs don't (exercises the equality arm on the
-    exhaustive, pruned, and conjunctive kernel branches)."""
+    exhaustive, pruned, and conjunctive kernel branches, and in the
+    distributed combine, where the cursor filters after the per-doc
+    sum). Each path resumes from a cursor it issued itself."""
     res, cfg = built_index["res"], built_index["cfg"]
     queries = fx.queries_pdf(42).head(4).reset_index(drop=True)
     full = queries.assign(k=np.int32(60))
-    want = bm25_topk(spark, built_index["postings"], full, res.N,
-                     res.avgdl, cfg, mode="kernel").toPandas()
-    rows = []
-    for qid, g in want.groupby("query_id"):
-        g = g.sort_values("rank")
-        # cut mid-ranking at rank 7 (arbitrary; ties or not, the
-        # remainder must equal ranks 8.. of the full ranking)
-        if len(g) <= 8:
-            continue
-        cut = g.iloc[6]
-        rows.append((int(qid), float(cut["score"]),
-                     int(cut["doc_id"]),
-                     g.iloc[7:17]["doc_id"].to_numpy()))
-    assert rows, "need at least one query with >8 hits"
-    pq = pd.DataFrame(
-        {"query_id": np.array([r[0] for r in rows], np.int32),
-         "text": [queries.set_index("query_id").loc[r[0], "text"]
-                  for r in rows],
-         "k": np.full(len(rows), 10, np.int32),
-         "after_score": [r[1] for r in rows],
-         "after_doc": [r[2] for r in rows]})
-    for conj in (False, True):
+    for mode in ("kernel", "distributed"):
+        want = bm25_topk(spark, built_index["postings"], full, res.N,
+                         res.avgdl, cfg, mode=mode).toPandas()
+        rows = []
+        for qid, g in want.groupby("query_id"):
+            g = g.sort_values("rank")
+            # cut mid-ranking at rank 7 (arbitrary; ties or not, the
+            # remainder must equal ranks 8.. of the full ranking)
+            if len(g) <= 8:
+                continue
+            cut = g.iloc[6]
+            rows.append((int(qid), float(cut["score"]),
+                         int(cut["doc_id"]),
+                         g.iloc[7:17]["doc_id"].to_numpy()))
+        assert rows, "need at least one query with >8 hits"
+        pq = pd.DataFrame(
+            {"query_id": np.array([r[0] for r in rows], np.int32),
+             "text": [queries.set_index("query_id").loc[r[0], "text"]
+                      for r in rows],
+             "k": np.full(len(rows), 10, np.int32),
+             "after_score": [r[1] for r in rows],
+             "after_doc": [r[2] for r in rows]})
         got = bm25_topk(spark, built_index["postings"], pq, res.N,
-                        res.avgdl, cfg, mode="kernel",
-                        conjunctive=conj).toPandas()
-        if conj:
-            # conjunctive ranking differs; just assert no doc at or
-            # before its cursor leaks through
-            full_c = bm25_topk(
-                spark, built_index["postings"], full, res.N,
-                res.avgdl, cfg, mode="kernel", conjunctive=True,
-            ).toPandas()
-            for r in rows:
-                qid = r[0]
-                fc = full_c[full_c["query_id"] == qid]
-                g2 = got[got["query_id"] == qid]
-                sa, da = None, None
-                # conjunctive cursor = the conjunctive ranking's own
-                # rank-3 hit when it exists
-                if len(fc) > 3:
-                    cut = fc.sort_values("rank").iloc[2]
-                    sa, da = float(cut["score"]), int(cut["doc_id"])
-                    pq2 = pq[pq["query_id"] == qid].assign(
-                        after_score=sa, after_doc=da)
-                    g2 = bm25_topk(
-                        spark, built_index["postings"], pq2, res.N,
-                        res.avgdl, cfg, mode="kernel",
-                        conjunctive=True).toPandas()
-                    wantd = fc.sort_values("rank").iloc[3:13][
-                        "doc_id"].to_numpy()
-                    np.testing.assert_array_equal(
-                        g2["doc_id"].to_numpy(), wantd)
-        else:
-            for r in rows:
-                g2 = got[got["query_id"] == r[0]]
-                np.testing.assert_array_equal(
-                    g2.sort_values("rank")["doc_id"].to_numpy(), r[3])
-                assert (g2["rank"].to_numpy()
-                        == np.arange(1, len(g2) + 1)).all()
+                        res.avgdl, cfg, mode=mode).toPandas()
+        for r in rows:
+            g2 = got[got["query_id"] == r[0]]
+            np.testing.assert_array_equal(
+                g2.sort_values("rank")["doc_id"].to_numpy(), r[3])
+            assert (g2["rank"].to_numpy()
+                    == np.arange(1, len(g2) + 1)).all()
+        # conjunctive: the cursor is the conjunctive ranking's own
+        # rank-3 hit when it exists; the page must equal its ranks 4..
+        full_c = bm25_topk(
+            spark, built_index["postings"], full, res.N,
+            res.avgdl, cfg, mode=mode, conjunctive=True,
+        ).toPandas()
+        for r in rows:
+            fc = full_c[full_c["query_id"] == r[0]].sort_values("rank")
+            if len(fc) <= 3:
+                continue
+            cut = fc.iloc[2]
+            pq2 = pq[pq["query_id"] == r[0]].assign(
+                after_score=float(cut["score"]),
+                after_doc=int(cut["doc_id"]))
+            g2 = bm25_topk(
+                spark, built_index["postings"], pq2, res.N,
+                res.avgdl, cfg, mode=mode,
+                conjunctive=True).toPandas()
+            np.testing.assert_array_equal(
+                g2.sort_values("rank")["doc_id"].to_numpy(),
+                fc.iloc[3:13]["doc_id"].to_numpy())
 
 
 def test_range_facet_counts_matches_oracle(built_index, spark):

@@ -134,14 +134,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from capsbm25.catalog import arrow_collect, pdf_frame
-from capsbm25.codec import delta_decode
 from capsbm25.config import BuildConfig
 from capsbm25.query import (
     MAX_EXPANSIONS_DEFAULT,
     term_doc_ids,
     RESULT_SCHEMA,
-    _COMBINE_CHUNK,
-    _decode_posting,
+    _bm25_scorer,
+    _check_k,
+    _doc_partials,
     _fused_combine_topk,
     _term_df_map,
     fuzzy_topk,
@@ -152,8 +152,6 @@ from capsbm25.query import (
     validate_regexp_pattern,
     wildcard_topk,
 )
-from capsbm25.scoring import idf as idf_fn
-from capsbm25.scoring import term_scores
 from capsbm25.tokenize import tokenize_py
 
 # full-match k for clause sub-calls: every surface's top-k clamps, so
@@ -634,11 +632,6 @@ def _parse_simple_chunk(chunk: str, role: str, cfg: BuildConfig,
                         "boost": boost, "extra": 0, "gid": gid_fn()})
 
 
-# fused per-doc contribution shape: contributions pre-summed, matched
-# MUST-group bits pre-OR'd (mb), prohibited flag pre-OR'd (xn)
-_CONTRIB_SCHEMA = ("query_id int, doc_id long, contrib double, "
-                   "mb long, cb long, xn int")
-
 # MUST groups are tracked as bits of one int64 bitmask; 62 groups per
 # query is far past any real classic-parser query (Lucene's whole-query
 # default maxClauseCount is 1024); beyond it we raise loudly rather
@@ -649,17 +642,15 @@ _MAX_MUST_BITS = 62
 def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
                     df_map: dict | None = None):
     """One narrow pass scoring every term clause of the batch:
-    In(term)-pruned scan, broadcast clause join, per-row decode ->
-    BM25 x boost (0 for MUST_NOT rows — only membership matters).
-
-    Emits the FUSED per-doc shape (round 7): the kernel combines
-    per (query, doc) in-task with the chunk-bounded accumulator —
-    contributions pre-summed, matched MUST groups pre-OR'd into the
-    `mb` bitmask (rows carry each clause's driver-assigned must bit),
-    the prohibited flag pre-OR'd into `xn` — so the combine folds
-    distinct-doc rows with one sum/bit_or/max each instead of two
-    count_distincts over one row per (clause, posting entry)."""
-    qdf = pdf_frame(spark, rows)
+    In(term)-pruned scan, broadcast clause join, then the engine's
+    producer (_doc_partials): BM25 x boost (0 for MUST_NOT rows — only
+    membership matters), combined per (query, doc) in-task. The
+    clause frame carries the fused state as per-row constants — the
+    clause's MUST-group bit (mb), no constant-clause bit (cb) and the
+    prohibited flag (xn) — so the combine folds distinct-doc rows with
+    one sum/bit_or/max each."""
+    qdf = pdf_frame(spark, rows.rename(columns={"mbit": "mb"}).assign(
+        cb=0, xn=(rows["role"] == "not").astype(np.int64)))
     terms = sorted(rows["term"].unique().tolist())
     filtered = postings.where(F.col("term").isin(terms))
     if "pos" in filtered.columns:
@@ -669,71 +660,10 @@ def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
     # explicit projection (Catalyst cannot prune through mapInPandas):
     # block_max/cf/df would otherwise ride the Arrow transfer unused
     matched = filtered.select("term", "doc_ids", "tfs", "dls").join(
-        F.broadcast(qdf), "term")
-    k1, b = cfg.k1, cfg.b
-
-    def gen(it):
-        # qid -> [docs, contrib, mb, xn chunks, raw-since-compress]
-        acc: dict = {}
-
-        def compress(ent):
-            docs = np.concatenate(ent[0])
-            order = np.argsort(docs, kind="stable")
-            d = docs[order]
-            new = np.ones(d.size, dtype=bool)
-            new[1:] = d[1:] != d[:-1]
-            starts = np.flatnonzero(new)
-            ent[0] = [d[starts]]
-            ent[1] = [np.add.reduceat(
-                np.concatenate(ent[1])[order], starts)]
-            ent[2] = [np.bitwise_or.reduceat(
-                np.concatenate(ent[2])[order], starts)]
-            ent[3] = [np.bitwise_or.reduceat(
-                np.concatenate(ent[3])[order], starts)]
-            ent[4] = 0  # raw appended since last compress (quadratic
-            #             re-trigger guard — see _term_expansion_topk)
-
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                is_not = row.role == "not"
-                if is_not:
-                    # membership only — skip the tf/dl varint decodes
-                    # (a MUST_NOT stopword is the largest posting in
-                    # the batch and its contribution is hardcoded 0)
-                    docs = delta_decode(row.doc_ids)
-                    if not docs.size:
-                        continue
-                    contrib = np.zeros(docs.size, np.float64)
-                else:
-                    docs, tfs, dls = _decode_posting(row)
-                    if not docs.size:
-                        continue
-                    tidf = float(idf_fn(N, df_map[row.term]))
-                    contrib = term_scores(
-                        tfs, dls, tidf, avgdl, k1, b) * float(row.boost)
-                ent = acc.setdefault(
-                    int(row.query_id), [[], [], [], [], 0])
-                ent[0].append(docs.astype(np.int64))
-                ent[1].append(contrib)
-                ent[2].append(np.full(docs.size, int(row.mbit),
-                                      np.int64))
-                ent[3].append(np.full(docs.size, 1 if is_not else 0,
-                                      np.int64))
-                ent[4] += docs.size
-                if ent[4] >= _COMBINE_CHUNK:
-                    compress(ent)
-        for qid, ent in acc.items():
-            compress(ent)
-            uniq = ent[0][0]
-            yield pd.DataFrame(
-                {"query_id": np.full(uniq.size, qid, np.int32),
-                 "doc_id": uniq,
-                 "contrib": ent[1][0],
-                 "mb": ent[2][0],
-                 "cb": np.zeros(uniq.size, np.int64),
-                 "xn": ent[3][0].astype(np.int32)})
-
-    return matched.mapInPandas(gen, schema=_CONTRIB_SCHEMA)
+        F.broadcast(qdf), "term").select(
+        "term", "query_id", "role", "boost", "doc_ids", "tfs", "dls",
+        "mb", "cb", "xn")
+    return _doc_partials(matched, _bm25_scorer(df_map, N, avgdl, cfg))
 
 
 # required-clause pushdown gate (round 8, measured on one index at two
@@ -826,7 +756,7 @@ def _subcall_contribs(spark, result: DataFrame, sid_map: pd.DataFrame,
             F.col("mbit").alias("mb"),
             F.col("cbit").alias("cb"),
             F.when(F.col("role") == "not", F.lit(1))
-             .otherwise(F.lit(0)).cast("int").alias("xn"),
+             .otherwise(F.lit(0)).cast("long").alias("xn"),
         )
     )
 
@@ -867,7 +797,7 @@ def query_string_topk(
     rx_cl, range_cl, field_cl, frange_cl = [], [], [], []
     meta: dict[int, dict] = {}  # qid -> the combine's per-query meta
     for q in queries.itertuples(index=False):
-        qid, k = int(q.query_id), int(q.k)
+        qid, k = int(q.query_id), _check_k(q.query_id, q.k)
         clauses = parse_query_string(q.text, cfg, default_operator)
         # MUST satisfaction counts boolean GROUPS, not clauses: a
         # `+(a b)` group is satisfied by ANY member, so a doc needs

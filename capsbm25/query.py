@@ -14,8 +14,9 @@ Execution modes, all rank-identical to the oracle (tested):
   Arrow kernel per query does decode + two-phase block-max pruning +
   exact rescoring + heap-free vectorized top-k. This is
   document-at-a-time scoring with WAND-style block skipping.
-* ``distributed``: decode kernels emit per-task-summed (query_id,
-  doc_id, contrib) rows map-side; one exchange into (query, doc-salt)
+* ``distributed``: ``_doc_partials``, the one map-side producer,
+  emits per-task-summed (query_id, doc_id, contrib) rows; one
+  exchange into (query, doc-salt)
   groups, where ``_fused_combine_topk`` sums each doc and keeps the
   group-local top-k, and a per-query window ranks the survivors.
   Arbitrarily scalable (no single task ever holds a whole hot
@@ -84,6 +85,16 @@ CAND_CHUNK_SPAN = 4_000_000
 _BOOST_RE = re.compile(r"^(.*?)\^(\d+(?:\.\d+)?)$")
 
 
+def _check_k(qid, k) -> int:
+    """One query's k as an int. A negative k raises naming the query:
+    the kernel's top-k slice would read it as "all but the last" and
+    the distributed tail as "none"."""
+    k = int(k)
+    if k < 0:
+        raise ValueError(f"query {qid}: k must be >= 0, got {k}")
+    return k
+
+
 def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
                      boosts: bool = False,
                      require_k: bool = True) -> pd.DataFrame:
@@ -136,7 +147,7 @@ def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
                 )
             k = 0  # surfaces documenting k as ignored (facets, counts)
         else:
-            k = int(k)
+            k = _check_k(q.query_id, k)
         if boosts:
             bmap: dict[str, float] = {}
             for chunk in text.split():
@@ -720,10 +731,10 @@ def _run_kernel(matched, N, avgdl, cfg, prune, conjunctive,
 
 _TOPK_SALT = 32
 
-# a task's decode pass combines (doc, contrib) pairs locally and
-# re-compresses whenever this many raw pairs have accumulated — task
-# memory stays O(chunk + distinct docs in task), never O(df mass). The
-# same bound sizes the combine's salt fan-out (_fan_out).
+# _doc_partials folds a task's (doc, contrib) pairs per query whenever
+# this many raw pairs have accumulated — task memory stays O(chunk +
+# distinct docs in task), never O(df mass). The same bound sizes the
+# combine's salt fan-out (_fan_out).
 _COMBINE_CHUNK = 4_000_000
 
 # distributed-phrase verify: docs per (query, salt) batch group — the
@@ -738,6 +749,135 @@ _VERIFY_SALT = 64
 _STATE_REDUCE = {"nm": np.add, "nsh": np.add, "nn": np.add,
                  "mb": np.bitwise_or, "cb": np.bitwise_or,
                  "xn": np.maximum}
+
+
+def _fold(docs: np.ndarray, order: np.ndarray, contrib, state: dict):
+    """Fold (doc, contrib, state) partials to one row per doc: `order`
+    sorts docs into runs, then one left-to-right reduceat per column —
+    contribs add, each state column folds by _STATE_REDUCE. Returns
+    (distinct docs, summed contribs or None, folded state dict)."""
+    d = docs[order]
+    new = np.ones(d.size, dtype=bool)
+    new[1:] = d[1:] != d[:-1]
+    starts = np.flatnonzero(new)
+    return (d[starts],
+            None if contrib is None
+            else np.add.reduceat(contrib[order], starts),
+            {s: _STATE_REDUCE[s].reduceat(v[order], starts)
+             for s, v in state.items()})
+
+
+def _bm25_scorer(df_map: dict, N: int, avgdl: float, cfg):
+    """_doc_partials score: BM25 of a posting row's entries with the
+    term's global df, times the row's query-time boost when the query
+    frame carries one (Lucene ^boost)."""
+    def score(row, tfs, dls):
+        return term_scores(
+            tfs, dls, float(idf_fn(N, df_map[row.term])), avgdl,
+            cfg.k1, cfg.b) * float(getattr(row, "boost", 1.0))
+    return score
+
+
+def _doc_partials(matched: DataFrame, score=None, prune=None,
+                  filt_bc=None, excl_bc=None, doc_filter=None,
+                  doc_exclude=None) -> DataFrame:
+    """The one map-side producer of every distributed posting pass.
+
+    matched: posting rows joined to the query frame and projected to
+    what the caller reads (Catalyst cannot prune through mapInPandas):
+    query_id, doc_ids, optionally tfs/dls/term/boost/role, plus any
+    _STATE_REDUCE columns as per-row constants. Per row: decode the
+    projected payloads (a `role == "not"` row decodes doc_ids only and
+    contributes 0); mask by the filt_bc/excl_bc sorted-id broadcasts;
+    contrib = score(row, tfs, dls) (score=None: membership, no contrib
+    column); then prune(), a per-task hook factory, may return a keep
+    mask from (qid, row, contrib). Pairs accumulate per query and
+    _fold every _COMBINE_CHUNK raw pairs, so a task holds O(chunk +
+    distinct docs), never O(df mass), and emits one row per (query,
+    distinct doc in task) — the exploded per-(term, doc) frame never
+    exists. A doc_filter/doc_exclude without a broadcast becomes a
+    semi/anti join on the output, ahead of any exchange."""
+    cols = matched.columns
+    state = [s for s in _STATE_REDUCE if s in cols]
+    with_tf, with_dl = "tfs" in cols, "dls" in cols
+    has_role = "role" in cols
+
+    def gen(it):
+        filt = filt_bc.value if filt_bc is not None else None
+        excl = excl_bc.value if excl_bc is not None else None
+        keep_fn = prune() if prune is not None else None
+        # qid -> [doc chunks, contrib chunks, {state: chunks}, raw
+        # pairs appended since the last fold — a folded-size counter
+        # would re-trigger full folds once distinct docs >= chunk]
+        acc: dict = {}
+
+        def fold(ent):
+            docs = np.concatenate(ent[0])
+            uniq, c, st = _fold(
+                docs, np.argsort(docs),
+                np.concatenate(ent[1]) if score is not None else None,
+                {s: np.concatenate(v) for s, v in ent[2].items()})
+            ent[:] = [[uniq], [c], {s: [v] for s, v in st.items()}, 0]
+
+        for pdf in it:
+            for row in pdf.itertuples(index=False):
+                is_not = has_role and row.role == "not"
+                docs = delta_decode(row.doc_ids).astype(np.int64)
+                tfs = (decode_varints(row.tfs).astype(np.int64)
+                       if with_tf and not is_not else None)
+                dls = (decode_varints(row.dls).astype(np.int64)
+                       if with_dl and not is_not else None)
+                for ids, member in ((filt, True), (excl, False)):
+                    if ids is not None and ids.size and docs.size:
+                        m = sorted_member_mask(ids, docs)
+                        m = m if member else ~m
+                        docs = docs[m]
+                        tfs = tfs[m] if tfs is not None else None
+                        dls = dls[m] if dls is not None else None
+                if not docs.size:
+                    continue
+                qid = int(row.query_id)
+                c = None
+                if score is not None:
+                    c = (np.zeros(docs.size, np.float64) if is_not
+                         else score(row, tfs, dls))
+                    if keep_fn is not None:
+                        m = keep_fn(qid, row, c)
+                        if m is not None:
+                            docs, c = docs[m], c[m]
+                            if not docs.size:
+                                continue
+                ent = acc.setdefault(qid, [[], [], {s: [] for s in state},
+                                           0])
+                ent[0].append(docs)
+                ent[1].append(c)
+                for s in state:
+                    ent[2][s].append(
+                        np.full(docs.size, getattr(row, s), np.int64))
+                ent[3] += docs.size
+                if ent[3] >= _COMBINE_CHUNK:
+                    fold(ent)
+        for qid, ent in acc.items():
+            fold(ent)
+            uniq = ent[0][0]
+            out = {"query_id": np.full(uniq.size, qid, np.int32),
+                   "doc_id": uniq}
+            if score is not None:
+                out["contrib"] = ent[1][0]
+            out.update((s, ent[2][s][0]) for s in state)
+            yield pd.DataFrame(out)
+
+    schema = ("query_id int, doc_id long"
+              + (", contrib double" if score is not None else "")
+              + "".join(f", {s} long" for s in state))
+    out = matched.mapInPandas(gen, schema=schema)
+    if doc_filter is not None and filt_bc is None:
+        out = out.join(doc_filter.select("doc_id"), "doc_id", "semi")
+    if doc_exclude is not None and excl_bc is None:
+        # anti join = liveDocs mask; tombstone sets are small, so AQE
+        # broadcasts and drops deleted rows map-side pre-shuffle
+        out = out.join(doc_exclude.select("doc_id"), "doc_id", "anti")
+    return out
 
 
 def _salted_topk(df: DataFrame, rank_cols=None, out_cols=None,
@@ -818,15 +958,9 @@ def _fused_combine_topk(c: DataFrame, meta: dict, raw_mass: int | None,
         k, off = m["k"], m.get("off", 0)
         d0 = pdf["doc_id"].to_numpy(np.int64)
         c0 = pdf["contrib"].to_numpy(np.float64)
-        order = np.lexsort((c0, d0))
-        docs = d0[order]
-        new = np.ones(docs.size, dtype=bool)
-        new[1:] = docs[1:] != docs[:-1]
-        starts = np.flatnonzero(new)
-        uniq = docs[starts]
-        score = np.add.reduceat(c0[order], starts)
-        st = {s: _STATE_REDUCE[s].reduceat(
-            pdf[s].to_numpy(np.int64)[order], starts) for s in state}
+        uniq, score, st = _fold(
+            d0, np.lexsort((c0, d0)), c0,
+            {s: pdf[s].to_numpy(np.int64) for s in state})
         sel = (np.ones(uniq.size, dtype=bool) if keep is None
                else keep(st, m))
         if bonus is not None:
@@ -952,12 +1086,10 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
     # k-th score θ cannot bound (conjunctive AND, collapse groups,
     # doc filters that could not be masked in-kernel).
     #
-    # The emission then COMBINES map-side (same idiom and chunk bound
-    # as _term_expansion_topk): one row per (query, distinct doc in
-    # task) with the contributions pre-summed and the matched-term
-    # count pre-counted, so the combine exchange carries distinct-doc
-    # rows without the term string, not one row per (term, doc)
-    # posting entry.
+    # The producer (_doc_partials) then combines map-side: one row per
+    # (query, distinct doc in task) with the contributions pre-summed
+    # (and, for AND, the matched-term count), so the combine exchange
+    # carries distinct-doc rows without the term string.
     meta = _query_meta(qt)
     has_cursor = any(m["after"] is not None for m in meta.values())
     do_prune = (
@@ -972,98 +1104,31 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
     )
     rest_map = (_distributed_rest_map(qt, df_map, N, cfg)
                 if do_prune else None)
-    filt_join = doc_filter if filt_bc is None else None
-    excl_join = doc_exclude if excl_bc is None else None
 
-    def contribs(it):
-        filt = filt_bc.value if filt_bc is not None else None
-        excl = excl_bc.value if excl_bc is not None else None
-        # qid -> [doc_chunks, contrib_chunks, nmatch_chunks, n_raw]
-        acc: dict = {}
+    def theta_prune():
         theta: dict = {}  # qid -> running lower bound on (k+off)-th
 
-        def compress(ent):
-            docs = np.concatenate(ent[0])
-            scs = np.concatenate(ent[1])
-            nms = np.concatenate(ent[2])
-            uniq, inv = np.unique(docs, return_inverse=True)
-            ent[0] = [uniq]
-            # float64 bincount: contrib sums exact to normal float
-            # addition; nm counts are small ints (< 2^53) so exact
-            ent[1] = [np.bincount(inv, weights=scs)]
-            ent[2] = [np.bincount(inv, weights=nms)]
-            # count raw pairs APPENDED since the last compress (a
-            # compressed-size counter would re-trigger full passes
-            # once distinct docs >= chunk — quadratic)
-            ent[3] = 0
+        def keep(qid, row, sc):
+            kk = meta[qid]["k"] + meta[qid]["off"]
+            if 0 < kk <= sc.size:
+                th = np.partition(sc, sc.size - kk)[sc.size - kk]
+                if th > theta.get(qid, -np.inf):
+                    theta[qid] = th
+            cur = theta.get(qid, -np.inf)
+            if cur == -np.inf:
+                return None
+            # unknown (qid, term) residual -> +inf (never prune on
+            # missing information)
+            return sc + rest_map.get((qid, row.term), np.inf) >= cur
+        return keep
 
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                docs, tfs, dls = _decode_posting(row)
-                if filt is not None and docs.size:
-                    keep = sorted_member_mask(filt, docs)
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                if excl is not None and excl.size and docs.size:
-                    keep = ~sorted_member_mask(excl, docs)
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                sc = term_scores(
-                    tfs, dls, float(idf_fn(N, df_map[row.term])),
-                    avgdl, cfg.k1, cfg.b,
-                )
-                boost = float(getattr(row, "boost", 1.0))
-                if boost != 1.0:
-                    sc = sc * boost  # query-time term boost (^boost)
-                qid = int(row.query_id)
-                if rest_map is not None and sc.size:
-                    kk = meta[qid]["k"] + meta[qid]["off"]
-                    if 0 < kk <= sc.size:
-                        th = np.partition(sc, sc.size - kk)[sc.size - kk]
-                        if th > theta.get(qid, -np.inf):
-                            theta[qid] = th
-                    cur = theta.get(qid, -np.inf)
-                    if cur > -np.inf:
-                        # unknown (qid, term) residual -> +inf (never
-                        # prune on missing information)
-                        rest = rest_map.get((qid, row.term), np.inf)
-                        keep = sc + rest >= cur
-                        if not keep.all():
-                            docs, sc = docs[keep], sc[keep]
-                if not docs.size:
-                    continue
-                ent = acc.setdefault(qid, [[], [], [], 0])
-                ent[0].append(docs.astype(np.int64))
-                ent[1].append(sc)
-                ent[2].append(np.ones(docs.size, np.float64))
-                ent[3] += docs.size
-                if ent[3] >= _COMBINE_CHUNK:
-                    compress(ent)
-        for qid, ent in acc.items():
-            compress(ent)
-            uniq = ent[0][0]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.full(uniq.size, qid, np.int32),
-                    "doc_id": uniq,
-                    "contrib": ent[1][0],
-                    "nm": ent[2][0].astype(np.int32),
-                }
-            )
-
-    # explicit projection: Catalyst cannot prune through mapInPandas,
-    # so without it block_max/cf/df ride the Arrow transfer unused
-    # (block_max is an array<struct> — the widest non-payload column)
-    need = (["term", "query_id", "doc_ids", "tfs", "dls"]
-            + (["boost"] if "boost" in matched.columns else []))
-    c = matched.select(*need).mapInPandas(
-        contribs,
-        schema="query_id int, doc_id long, contrib double, nm int",
-    )
-    if filt_join is not None:
-        c = c.join(filt_join.select("doc_id"), "doc_id", "semi")
-    if excl_join is not None:
-        # anti join = liveDocs mask; tombstone sets are small, so AQE
-        # broadcasts and drops deleted rows map-side pre-shuffle
-        c = c.join(excl_join.select("doc_id"), "doc_id", "anti")
+    cols = (["term", "query_id", "doc_ids", "tfs", "dls"]
+            + (["boost"] if "boost" in matched.columns else [])
+            + ([F.lit(1).alias("nm")] if conjunctive else []))
+    c = _doc_partials(
+        matched.select(*cols), _bm25_scorer(df_map, N, avgdl, cfg),
+        theta_prune if do_prune else None, filt_bc, excl_bc,
+        doc_filter, doc_exclude)
     raw_mass = _raw_mass(qt, df_map)
     # AND semantics: a doc must contain every distinct query term —
     # counted on the COMPLETE per-doc state, after all partials meet
@@ -1196,49 +1261,23 @@ def hit_count(
     query terms. Returns (query_id, n_hits) with a 0 row for every
     query in the batch — including empty/OOV queries.
 
-    Scale shape: one In(term)-pruned scan, a narrow 12-byte
-    (query, doc) pass (no scores, no positions, tf never decoded),
-    distinct-doc aggregation, then a per-query count — the same
+    Scale shape: _match_docs' narrow membership pass (one
+    In(term)-pruned scan, tf never decoded, per-task distinct docs,
+    one (query, doc) aggregate), then a per-query count — the same
     two-shuffle plan at any corpus size; nothing is collected and no
     task holds a posting list (the decode streams per row)."""
     cfg = cfg or BuildConfig()
     if not len(queries):
         return spark.createDataFrame([], "query_id int, n_hits long")
-    qt = _query_terms_pdf(queries, cfg, require_k=False)
     qids = pd.DataFrame({
         "query_id": queries["query_id"].astype(np.int32)})
     # createDataFrame's pandas inference widens int32 -> long; the
     # result contract is int query_id (matches every other surface)
     base = pdf_frame(spark, qids).select(
         F.col("query_id").cast("int"))
-    if qt.empty:
+    per_doc = _match_docs(spark, postings, queries, cfg, conjunctive)
+    if per_doc is None:
         return base.withColumn("n_hits", F.lit(0).cast("long"))
-    qdf = pdf_frame(spark, qt[["query_id", "term", "n_query_terms"]])
-    terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
-    # ReadSchema prunes to the two columns the count needs — tf/dl/pos
-    # payloads never leave the parquet scan
-    matched = filtered.select("term", "doc_ids").join(
-        F.broadcast(qdf), "term")
-
-    def doc_rows(it):
-        for row, docs, _ in _iter_decoded_postings(it):
-            yield pd.DataFrame(
-                {"query_id": np.full(docs.size, row.query_id, np.int32),
-                 "term": np.full(docs.size, row.term, dtype=object),
-                 "doc_id": docs,
-                 "nq": np.full(docs.size, row.n_query_terms, np.int32)}
-            )
-
-    pairs = matched.mapInPandas(
-        doc_rows, schema="query_id int, term string, doc_id long, nq int"
-    )
-    per_doc = pairs.groupBy("query_id", "doc_id").agg(
-        F.count_distinct("term").alias("nm"), F.first("nq").alias("nq"))
-    if conjunctive:
-        # AND: only docs matching every distinct query term count; an
-        # OOV term makes nm < nq for every doc — count drops to 0
-        per_doc = per_doc.where(F.col("nm") >= F.col("nq"))
     counts = per_doc.groupBy("query_id").agg(
         F.count("*").alias("n_hits"))
     # every query in the batch gets a row — 0 when nothing matched
@@ -1287,9 +1326,9 @@ def sorted_topk(
     page, like bm25_topk's cursor. Field values are exact (no float
     re-sum caveat — keys come from the stats frame, not scoring).
 
-    Scale shape: the match pass is hit_count's narrow pipeline — one
-    In(term)-pruned scan, 12-byte (query, doc) rows (tf/dl/pos never
-    decoded), distinct-doc aggregate; matched docs then join doc_stats
+    Scale shape: the match pass is _match_docs' narrow pipeline — one
+    In(term)-pruned scan, tf/dl/pos never decoded, per-task distinct
+    docs, one (query, doc) aggregate; matched docs then join doc_stats
     on doc_id (both sides shuffle on the same key; the field columns
     are all that's read from the stats parquet) and the per-query
     top-k is the two-phase salted window, so no task sorts a stopword
@@ -1323,37 +1362,15 @@ def sorted_topk(
     # the sort-key cursor columns (after_key* / after_doc) are this
     # surface's own — strip them before the shared term parse, whose
     # after_doc means the SCORE cursor (bm25_topk's pair)
-    qt = _query_terms_pdf(
+    per_doc = _match_docs(
+        spark, postings,
         queries[[c for c in ("query_id", "text", "k")
-                 if c in queries.columns]], cfg)
-    if qt.empty:
+                 if c in queries.columns]],
+        cfg, conjunctive, require_k=True)
+    if per_doc is None:
         return spark.createDataFrame([], schema)
-    qdf = pdf_frame(
-        spark, qt[["query_id", "term", "k", "n_query_terms"]])
-    terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
-    matched = filtered.select("term", "doc_ids").join(
-        F.broadcast(qdf), "term")
-
-    def doc_rows(it):
-        for row, docs, _ in _iter_decoded_postings(it):
-            yield pd.DataFrame(
-                {"query_id": np.full(docs.size, row.query_id, np.int32),
-                 "term": np.full(docs.size, row.term, dtype=object),
-                 "doc_id": docs,
-                 "nq": np.full(docs.size, row.n_query_terms, np.int32),
-                 "k": np.full(docs.size, row.k, np.int32)}
-            )
-
-    pairs = matched.mapInPandas(
-        doc_rows,
-        schema="query_id int, term string, doc_id long, nq int, k int",
-    )
-    per_doc = pairs.groupBy("query_id", "doc_id").agg(
-        F.count_distinct("term").alias("nm"), F.first("nq").alias("nq"),
-        F.first("k").alias("k"))
-    if conjunctive:
-        per_doc = per_doc.where(F.col("nm") >= F.col("nq"))
+    per_doc = per_doc.withColumn("k", _per_query(
+        dict(zip(queries["query_id"], queries["k"]))))
     order = [
         (F.col(k).asc_nulls_last() if a else F.col(k).desc_nulls_last())
         for k, a in zip(keys, asc)
@@ -1438,7 +1455,7 @@ def _synonym_groups_pdf(queries: pd.DataFrame, cfg: BuildConfig):
     member term), deduplicated within a group."""
     rows = []
     for q in queries.itertuples(index=False):
-        gid = 0
+        gid, k = 0, _check_k(q.query_id, q.k)
         for chunk in str(q.text).split():
             members: set[str] = set()
             for m in chunk.split("|"):
@@ -1446,7 +1463,7 @@ def _synonym_groups_pdf(queries: pd.DataFrame, cfg: BuildConfig):
             if not members:
                 continue
             for t in sorted(members):
-                rows.append((int(q.query_id), gid, t, int(q.k)))
+                rows.append((int(q.query_id), gid, t, k))
             gid += 1
     return pd.DataFrame(rows, columns=["query_id", "gid", "term", "k"])
 
@@ -1597,6 +1614,7 @@ def boolean_topk(
         return v if isinstance(v, str) else ""
 
     for q in queries.itertuples(index=False):
+        qid, k = int(q.query_id), _check_k(q.query_id, q.k)
         must = sorted(set(tokenize_py(_clause(q.must), cfg)))
         nots = set(tokenize_py(_clause(q.must_not), cfg))
         if set(must) & nots:
@@ -1612,7 +1630,6 @@ def boolean_topk(
             raise ValueError("min_should_match must be >= 0")
         if msm > len(should):
             continue  # cannot be satisfied — provably empty (Lucene)
-        qid, k = int(q.query_id), int(q.k)
         for t in must:
             rows.append((qid, t, k, len(must), "must", msm))
         for t in should:
@@ -1747,101 +1764,23 @@ def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
                              doc_exclude: DataFrame | None = None,
                              *, qt: pd.DataFrame,
                              filt_bc=None, excl_bc=None) -> DataFrame:
-    # same decode-and-combine shape as _run_distributed, with the
-    # clause roles folded into per-doc partial COUNTS map-side (round
-    # 7): each task emits one row per (query, distinct doc) carrying
-    # the summed positive contribution plus how many MUST / SHOULD /
-    # MUST_NOT terms matched in-task — (term, doc) is globally unique
-    # and a term has exactly one role per query, so summing partials
-    # equals the old per-(term, doc)-row count_distinct aggregate while
-    # the shuffle drops both string columns and the df-mass row count.
-    # No θ pruning here: MUST / min_should_match restrict the result
-    # to a sub-population whose k-th score a single-term floor cannot
-    # bound. doc_filter/doc_exclude mask INSIDE the kernel when their
-    # sorted-id broadcasts exist (same set as the joins they replace).
-    filt_join = doc_filter if filt_bc is None else None
-    excl_join = doc_exclude if excl_bc is None else None
-
-    def contribs(it):
-        filt = filt_bc.value if filt_bc is not None else None
-        excl = excl_bc.value if excl_bc is not None else None
-        # qid -> [docs, contrib, nm, nsh, nn, raw-since-compress]
-        acc: dict = {}
-
-        def compress(ent):
-            docs = np.concatenate(ent[0])
-            uniq, inv = np.unique(docs, return_inverse=True)
-            ent[0] = [uniq]
-            for i in range(1, 5):
-                ent[i] = [np.bincount(inv, weights=np.concatenate(ent[i]))]
-            ent[5] = 0
-
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                is_not = row.role == "not"
-                if is_not:
-                    # membership only — skip the tf/dl varint decodes
-                    # (MUST_NOT stopwords are the largest postings)
-                    docs = delta_decode(row.doc_ids).astype(np.int64)
-                    tfs = dls = None
-                else:
-                    docs, tfs, dls = _decode_posting(row)
-                if filt is not None and docs.size:
-                    keep = sorted_member_mask(filt, docs)
-                    docs = docs[keep]
-                    if not is_not:
-                        tfs, dls = tfs[keep], dls[keep]
-                if excl is not None and excl.size and docs.size:
-                    keep = ~sorted_member_mask(excl, docs)
-                    docs = docs[keep]
-                    if not is_not:
-                        tfs, dls = tfs[keep], dls[keep]
-                if not docs.size:
-                    continue
-                if is_not:
-                    sc = np.zeros(docs.size, dtype=np.float64)
-                else:
-                    sc = term_scores(
-                        tfs, dls, float(idf_fn(N, df_map[row.term])),
-                        avgdl, cfg.k1, cfg.b,
-                    )
-                ent = acc.setdefault(
-                    int(row.query_id), [[], [], [], [], [], 0])
-                one = np.ones(docs.size, np.float64)
-                zero = np.zeros(docs.size, np.float64)
-                ent[0].append(docs.astype(np.int64))
-                ent[1].append(sc)
-                ent[2].append(one if row.role == "must" else zero)
-                ent[3].append(one if row.role == "should" else zero)
-                ent[4].append(one if row.role == "not" else zero)
-                ent[5] += docs.size
-                if ent[5] >= _COMBINE_CHUNK:
-                    compress(ent)
-        for qid, ent in acc.items():
-            compress(ent)
-            uniq = ent[0][0]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.full(uniq.size, qid, np.int32),
-                    "doc_id": uniq,
-                    "contrib": ent[1][0],
-                    "nm": ent[2][0].astype(np.int32),
-                    "nsh": ent[3][0].astype(np.int32),
-                    "nn": ent[4][0].astype(np.int32),
-                }
-            )
-
-    c = matched.select(
-        "term", "role", "query_id", "doc_ids", "tfs", "dls"
-    ).mapInPandas(
-        contribs,
-        schema="query_id int, doc_id long, contrib double, nm int, "
-               "nsh int, nn int",
-    )
-    if filt_join is not None:
-        c = c.join(filt_join.select("doc_id"), "doc_id", "semi")
-    if excl_join is not None:
-        c = c.join(excl_join.select("doc_id"), "doc_id", "anti")
+    # the bm25 producer with the clause roles folded into per-doc
+    # partial COUNTS: each task emits one row per (query, distinct doc)
+    # carrying the summed positive contribution plus how many MUST /
+    # SHOULD / MUST_NOT terms matched in-task — (term, doc) is globally
+    # unique and a term has exactly one role per query, so the summed
+    # partials are exact counts. No θ pruning here: MUST /
+    # min_should_match restrict the result to a sub-population whose
+    # k-th score a single-term floor cannot bound.
+    role = F.col("role")
+    c = _doc_partials(
+        matched.select(
+            "term", "role", "query_id", "doc_ids", "tfs", "dls",
+            *[(role == r).cast("long").alias(s)
+              for r, s in (("must", "nm"), ("should", "nsh"),
+                           ("not", "nn"))]),
+        _bm25_scorer(df_map, N, avgdl, cfg), None, filt_bc, excl_bc,
+        doc_filter, doc_exclude)
     meta = {int(r.query_id): {"k": int(r.k), "n_must": int(r.n_must),
                               "msm": int(r.msm)}
             for r in qt.drop_duplicates("query_id").itertuples(index=False)}
@@ -1927,12 +1866,13 @@ def phrase_topk(
     cfg = cfg or BuildConfig()
     rows = []
     for q in queries.itertuples(index=False):
+        k = _check_k(q.query_id, q.k)
         phrase = tokenize_py(q.text, cfg)
         # the phrase travels as array<string>, NOT a joined string: a
         # separator would collide with chargram tokens, which can
         # contain ANY character (substring_topk patterns are raw text)
         for t in sorted(set(phrase)):
-            rows.append((int(q.query_id), t, int(q.k), list(phrase)))
+            rows.append((int(q.query_id), t, k, list(phrase)))
     qt = pd.DataFrame(rows, columns=["query_id", "term", "k", "phrase"])
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
@@ -2515,19 +2455,6 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
     return _salted_topk(verified)
 
 
-def _iter_decoded_postings(it, with_tf: bool = False):
-    """Shared decode loop for the narrow mapInPandas passes: yields
-    (row, doc_ids:int64, tfs:int64|None) per posting row — keeps the
-    delta/varint decode in one place across term_doc_ids, prefix_topk
-    and facet_counts."""
-    for pdf in it:
-        for row in pdf.itertuples(index=False):
-            docs = delta_decode(row.doc_ids).astype(np.int64)
-            tfs = (decode_varints(row.tfs).astype(np.int64)
-                   if with_tf else None)
-            yield row, docs, tfs
-
-
 def more_like_this(
     spark: SparkSession,
     postings: DataFrame,
@@ -2647,13 +2574,9 @@ def term_doc_ids(postings: DataFrame, terms: list[str]) -> DataFrame:
     bm25_topk(..., doc_exclude=term_doc_ids(postings, ["spam"]))
     is Lucene's MUST_NOT clause (candidates drop, scoring stats stay
     global). Pushdown-pruned scan, narrow decode, distinct."""
-    f = postings.where(F.col("term").isin(list(terms))).select("doc_ids")
-
-    def rows(it):
-        for _, docs, _ in _iter_decoded_postings(it):
-            yield pd.DataFrame({"doc_id": docs})
-
-    return f.mapInPandas(rows, schema="doc_id long").distinct()
+    f = postings.where(F.col("term").isin(list(terms))).select(
+        F.lit(0).alias("query_id"), "doc_ids")
+    return _doc_partials(f).select("doc_id").distinct()
 
 
 # unbounded (max_expansions=None) expansions collect matched pairs to
@@ -2710,6 +2633,7 @@ def prefix_topk(
             "a chargram is not meaningful — use substring_topk"
         )
     qpdf = queries.copy()
+    qpdf["k"] = [_check_k(q, k) for q, k in zip(qpdf["query_id"], qpdf["k"])]
     qpdf["prefix"] = [str(t or "").lower() for t in qpdf["text"]]
     qpdf = qpdf[qpdf["prefix"] != ""][["query_id", "prefix", "k"]]
     if qpdf.empty:
@@ -2945,84 +2869,27 @@ def _term_expansion_topk(matched, queries: pd.DataFrame, doc_filter,
     idf-free — an expansion set makes per-term idf unstable), ties by
     doc_id. queries: the batch's (query_id, k) rows, driver side.
 
-    Scale shape (round 6): the decode pass COMBINES map-side. An
-    expansion over Zipf-head terms (e.g. wildcard `w00*` hitting the
-    top-100 ranks) decodes a df-MASS of (doc, tf) pairs — tens of
-    entries per doc when the matched terms co-occur; materializing one
-    Arrow row per pair made the downstream shuffle agg the whole cost
-    (round-5's wildcard regression). Matched terms are term-range
-    ADJACENT (`w00*` spans one dictionary range), so one task's rows
-    overlap heavily on docs: each task now accumulates pairs in numpy
-    and re-compresses via unique+bincount every _COMBINE_CHUNK
-    raw pairs, emitting one row per (query, distinct doc in task) —
-    the exploded pair frame never exists, the shuffle input is
-    distinct-docs-sized, and task memory is bounded at any doc-id
-    cardinality (no dense corpus-sized array, works at 10^12 docs).
-    Then filter joins -> the fused combine + top-k; no task ever holds
-    more than one chunk of raw pairs. Bounded doc_filter/doc_exclude
-    sets mask INSIDE the kernel (round 7 — _expansion_masks) ahead of
-    the accumulate, so filtered pairs never reach the shuffle;
-    oversized sets keep the semi/anti joins."""
+    Scale shape: an expansion over Zipf-head terms (e.g. wildcard
+    `w00*` hitting the top-100 ranks) decodes a df-MASS of (doc, tf)
+    pairs, tens of entries per doc when the matched terms co-occur;
+    matched terms are term-range ADJACENT, so one task's rows overlap
+    heavily on docs. _doc_partials sums tf per (query, distinct doc in
+    task) under its chunk bound, so the exploded pair frame never
+    exists and the shuffle input is distinct-docs-sized; then the
+    fused combine + top-k. Bounded doc_filter/doc_exclude sets mask
+    INSIDE the producer (_expansion_masks), oversized ones keep the
+    semi/anti joins."""
     doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _expansion_masks(matched, doc_filter, doc_exclude)
     if empty:
         return matched.sparkSession.createDataFrame([], RESULT_SCHEMA)
-
-    def doc_rows(it):
-        filt = filt_bc.value if filt_bc is not None else None
-        excl = excl_bc.value if excl_bc is not None else None
-        # query_id -> [docs_chunks, tf_chunks, n_raw_since_compress]
-        acc: dict = {}
-
-        def compress(ent):
-            docs = np.concatenate(ent[0])
-            tfs = np.concatenate(ent[1])
-            uniq, inv = np.unique(docs, return_inverse=True)
-            # tf sums are token counts (< 2^53): float64 bincount is
-            # exact and much faster than np.add.at on int64
-            ent[0] = [uniq]
-            ent[1] = [np.bincount(inv, weights=tfs.astype(np.float64))]
-            # counter = raw pairs APPENDED since the last compress, not
-            # the compressed size: re-using uniq.size would re-trigger
-            # a full unique+bincount on every subsequent row once a
-            # task accumulates >= chunk DISTINCT docs (quadratic)
-            ent[2] = 0
-
-        for row, docs, tfs in _iter_decoded_postings(it, with_tf=True):
-            if filt is not None and docs.size:
-                keep = sorted_member_mask(filt, docs)
-                docs, tfs = docs[keep], tfs[keep]
-            if excl is not None and excl.size and docs.size:
-                keep = ~sorted_member_mask(excl, docs)
-                docs, tfs = docs[keep], tfs[keep]
-            if not docs.size:
-                continue
-            ent = acc.setdefault(int(row.query_id), [[], [], 0])
-            ent[0].append(docs)
-            ent[1].append(tfs)
-            ent[2] += docs.size
-            if ent[2] >= _COMBINE_CHUNK:
-                compress(ent)
-        for qid, ent in acc.items():
-            compress(ent)
-            uniq = ent[0][0]
-            yield pd.DataFrame(
-                {"query_id": np.full(uniq.size, qid, np.int32),
-                 "doc_id": uniq,
-                 "contrib": ent[1][0]}
-            )
-
-    # explicit projection: Catalyst cannot prune columns through the
-    # mapInPandas black box, so without this the dls/cf payload columns
-    # are read from parquet AND shipped through Arrow just to be
-    # ignored (~1/3 of expansion payload bytes)
-    c = matched.select("query_id", "doc_ids", "tfs").mapInPandas(
-        doc_rows, schema="query_id int, doc_id long, contrib double"
-    )
-    if doc_filter is not None and filt_bc is None:
-        c = c.join(doc_filter, "doc_id", "semi")
-    if doc_exclude is not None and excl_bc is None:
-        c = c.join(doc_exclude, "doc_id", "anti")
+    # explicit projection: without it the dls/cf payload columns are
+    # read from parquet AND shipped through Arrow just to be ignored
+    # (~1/3 of expansion payload bytes)
+    c = _doc_partials(
+        matched.select("query_id", "doc_ids", "tfs"),
+        lambda row, tfs, dls: tfs.astype(np.float64), None,
+        filt_bc, excl_bc, doc_filter, doc_exclude)
     # tf sums are integers < 2^53, so the combine's double addition is
     # exact in any order. The raw df mass rides the matched frame from
     # _expansion_matched (driver side, no extra job); the unbounded
@@ -3046,61 +2913,19 @@ def _expansion_doc_ids(matched, doc_filter=None,
     wildcard/fuzzy clauses; Lucene's multi-term default) actually
     needs: the summed-tf aggregation and the per-query top-k windows
     of _term_expansion_topk are pure waste when every matching doc
-    scores flat. doc_filter/doc_exclude apply the same semi/anti
-    joins as the ranked path — membership must respect liveDocs and
-    filters identically (a constant-score consumer composing the set
-    into MUST clauses would otherwise resurrect excluded docs).
-
-    Round 7: the decode loop DEDUPES per (query, task) with the
-    chunk-bounded accumulator idiom (adjacent expanded terms overlap
-    heavily on docs, so the raw per-(term, doc) frame was several
-    times the distinct membership — the dropDuplicates shuffle paid
-    for every duplicate), and when the filter/exclude sets arrive as
-    sorted-id broadcasts (filt_bc / excl_bc) they mask INSIDE the
-    kernel, replacing the post-emission joins entirely."""
+    scores flat. doc_filter/doc_exclude mask exactly as on the ranked
+    path — membership must respect liveDocs and filters identically (a
+    constant-score consumer composing the set into MUST clauses would
+    otherwise resurrect excluded docs). _doc_partials dedups per
+    (query, task): adjacent expanded terms overlap heavily on docs, so
+    the raw per-(term, doc) frame is several times the membership."""
     doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _expansion_masks(matched, doc_filter, doc_exclude)
     if empty:
         return matched.sparkSession.createDataFrame(
             [], _EXPANSION_DOCS_SCHEMA)
-
-    def gen(it):
-        filt = filt_bc.value if filt_bc is not None else None
-        excl = excl_bc.value if excl_bc is not None else None
-        acc: dict = {}  # qid -> [doc chunks, raw-since-compress]
-
-        def compress(ent):
-            ent[0] = [np.unique(np.concatenate(ent[0]))]
-            # count raw ids APPENDED since the last compress (a
-            # compressed-size counter re-triggers full passes once
-            # distinct docs >= chunk — quadratic)
-            ent[1] = 0
-
-        for row, docs, _ in _iter_decoded_postings(it):
-            if filt is not None and docs.size:
-                docs = docs[sorted_member_mask(filt, docs)]
-            if excl is not None and excl.size and docs.size:
-                docs = docs[~sorted_member_mask(excl, docs)]
-            if not docs.size:
-                continue
-            ent = acc.setdefault(int(row.query_id), [[], 0])
-            ent[0].append(docs)
-            ent[1] += docs.size
-            if ent[1] >= _COMBINE_CHUNK:
-                compress(ent)
-        for qid, ent in acc.items():
-            compress(ent)
-            uniq = ent[0][0]
-            yield pd.DataFrame(
-                {"query_id": np.full(uniq.size, qid, np.int32),
-                 "doc_id": uniq})
-
-    out = matched.select("query_id", "doc_ids").mapInPandas(
-        gen, schema=_EXPANSION_DOCS_SCHEMA)
-    if doc_filter is not None and filt_bc is None:
-        out = out.join(doc_filter, "doc_id", "semi")
-    if doc_exclude is not None and excl_bc is None:
-        out = out.join(doc_exclude, "doc_id", "anti")
+    out = _doc_partials(matched.select("query_id", "doc_ids"), None,
+                        None, filt_bc, excl_bc, doc_filter, doc_exclude)
     if not distinct:
         # "raw" membership: per-task distinct only — an IDEMPOTENT
         # consumer (the query-string parser's bit_or combine) absorbs
@@ -3251,7 +3076,7 @@ def fuzzy_topk(
         # prefix_len > len(qterm) must not silently empty the query
         rows.append((int(q.query_id), toks[0],
                      toks[0][:prefix_len] if prefix_len > 0 else "",
-                     int(q.k)))
+                     _check_k(q.query_id, q.k)))
     qpdf = pd.DataFrame(rows, columns=["query_id", "qterm", "pfx", "k"])
     empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
     if qpdf.empty:
@@ -3352,7 +3177,8 @@ def wildcard_topk(
                 f"{q.text!r}"
             )
         rows.append((int(q.query_id), pat,
-                     pat.replace("*", "%").replace("?", "_"), int(q.k)))
+                     pat.replace("*", "%").replace("?", "_"),
+                     _check_k(q.query_id, q.k)))
     qpdf = pd.DataFrame(rows, columns=["query_id", "pat", "like_pat", "k"])
     empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
     if qpdf.empty:
@@ -3465,7 +3291,8 @@ def regexp_topk(
     rows = []
     for q in queries.itertuples(index=False):
         pat = validate_regexp_pattern(q.text)
-        rows.append((int(q.query_id), pat, f"^(?:{pat})$", int(q.k)))
+        rows.append((int(q.query_id), pat, f"^(?:{pat})$",
+                     _check_k(q.query_id, q.k)))
     qpdf = pd.DataFrame(rows, columns=["query_id", "pat", "rx", "k"])
     empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
     if qpdf.empty:
@@ -3561,7 +3388,8 @@ def term_range_topk(
             raise ValueError("term range needs at least one bound")
         inc_lo = bool(getattr(q, "include_lower", True))
         inc_hi = bool(getattr(q, "include_upper", True))
-        rows.append((int(q.query_id), lo, hi, inc_lo, inc_hi, int(q.k)))
+        rows.append((int(q.query_id), lo, hi, inc_lo, inc_hi,
+                     _check_k(q.query_id, q.k)))
     qpdf = pd.DataFrame(
         rows,
         columns=["query_id", "lo", "hi", "inc_lo", "inc_hi", "k"])
@@ -3656,44 +3484,43 @@ def facet_counts(
     )
 
 
+def _per_query(values: dict):
+    """A driver-side per-query int (k, term count) as a literal map
+    lookup on query_id: no frame to broadcast, no extra job."""
+    return F.element_at(F.create_map(*[
+        F.lit(int(x)) for kv in values.items() for x in kv]),
+        F.col("query_id"))
+
+
 def _match_docs(spark, postings, queries: pd.DataFrame, cfg,
-                conjunctive: bool) -> DataFrame | None:
-    """Narrow membership pass shared by the faceting family: the
-    distinct (query_id, doc_id) pairs where the doc contains ANY of
-    the query's terms (every term when conjunctive). 16-byte
-    (query, term, doc) rows — no scores, no positions — aggregated to
-    distinct docs. None when the whole batch tokenizes to no terms
-    (callers own their empty-result schema)."""
-    qt = _query_terms_pdf(queries, cfg, require_k=False)
+                conjunctive: bool,
+                require_k: bool = False) -> DataFrame | None:
+    """Narrow membership pass shared by hit_count, sorted_topk and the
+    faceting family: the distinct (query_id, doc_id) pairs where the
+    doc contains ANY of the query's terms (every term when
+    conjunctive). The scan reads only (term, doc_ids); _doc_partials
+    emits per-task distinct (query, doc, nm) rows and one JVM sum(nm)
+    per (query, doc) folds them, compared with each query's term count
+    from the driver — no term string crosses the exchange. None when
+    the whole batch tokenizes to no terms (callers own their
+    empty-result schema)."""
+    qt = _query_terms_pdf(queries, cfg, require_k=require_k)
     if qt.empty:
         return None
-    qdf = pdf_frame(
-        spark, qt[["query_id", "term", "n_query_terms"]])
+    qdf = pdf_frame(spark, qt[["query_id", "term"]])
     terms = sorted(qt["term"].unique().tolist())
     # select BEFORE the join so ReadSchema prunes to (term, doc_ids) —
-    # tf/dl/pos/block_max are never read for a membership count (and
-    # Catalyst cannot prune through mapInPandas)
-    filtered = postings.where(F.col("term").isin(terms))
-    matched = filtered.select("term", "doc_ids").join(
-        F.broadcast(qdf), "term")
-
-    def doc_rows(it):
-        for row, docs, _ in _iter_decoded_postings(it):
-            yield pd.DataFrame(
-                {"query_id": np.full(docs.size, row.query_id, np.int32),
-                 "term": np.full(docs.size, row.term, dtype=object),
-                 "doc_id": docs,
-                 "nq": np.full(docs.size, row.n_query_terms, np.int32)}
-            )
-
-    pairs = matched.mapInPandas(
-        doc_rows, schema="query_id int, term string, doc_id long, nq int"
-    )
-    docs = pairs.groupBy("query_id", "doc_id").agg(
-        F.count_distinct("term").alias("nm"), F.first("nq").alias("nq")
-    )
+    # tf/dl/pos are never read for membership
+    matched = postings.where(F.col("term").isin(terms)).select(
+        "term", "doc_ids").join(F.broadcast(qdf), "term")
+    docs = _doc_partials(
+        matched.select("query_id", "doc_ids", F.lit(1).alias("nm"))
+    ).groupBy("query_id", "doc_id").agg(F.sum("nm").alias("nm"))
     if conjunctive:
-        docs = docs.where(F.col("nm") >= F.col("nq"))
+        # AND: a doc must match every distinct query term; an OOV term
+        # makes nm < nq for every doc of its query
+        docs = docs.where(F.col("nm") >= _per_query(
+            dict(zip(qt["query_id"], qt["n_query_terms"]))))
     return docs.select("query_id", "doc_id")
 
 
@@ -4182,7 +4009,7 @@ def substring_topk(
                 F.lit(int(q.query_id)).cast("int").alias("query_id"),
                 "doc_id",
                 F.col("n_occ").cast("double").alias("score"),
-                F.lit(int(q.k)).cast("int").alias("k"),
+                F.lit(_check_k(q.query_id, q.k)).cast("int").alias("k"),
             )
             if doc_filter is not None:
                 scanned = scanned.join(

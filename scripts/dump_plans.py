@@ -1,13 +1,17 @@
 """Generate docs/PLANS.md: the formatted physical plans of the engine's
 key paths, with commentary on why each plan is the one a Spark expert
-would want (pushdown, broadcast, single exchange, codegen spans)."""
+would want (pushdown, broadcast, single exchange, codegen spans).
+
+Run from anywhere: python scripts/dump_plans.py [out.md] (default: the
+checkout's docs/PLANS.md)."""
 
 import io
 import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F
@@ -102,8 +106,11 @@ out.write("\n```\n")
 
 out.write(
     "\n## 4. Distributed scoring mode (pathological-query fallback)\n\n"
-    "The MapInPandas decode sums each (query, doc) within its task,\n"
-    "then ONE Exchange hash-partitions the contribution rows on\n"
+    "The MapInPandas is `_doc_partials`, the one map-side producer:\n"
+    "it decodes, masks and scores each posting row and folds each\n"
+    "(query, doc) within its task (every 4M raw pairs, by the same\n"
+    "`_fold` the combine uses), then ONE Exchange hash-partitions the\n"
+    "distinct-doc contribution rows on\n"
     "(query_id, doc_id % S) and FlatMapGroupsInPandas (the fused\n"
     "combine) sums each doc's partials and keeps the group-local\n"
     "top-(k + off); a single Window ranks the <= S(k + off) survivors\n"
@@ -160,8 +167,10 @@ out.write(
     "\n## 6. Boolean query, distributed mode (per-query "
     "MUST/SHOULD/MUST_NOT)\n\n"
     "All three clauses' terms ride ONE pushdown-pruned scan and one\n"
-    "broadcast join; the decode counts matched MUST / SHOULD /\n"
-    "MUST_NOT terms per doc in-task, and the fused combine (the same\n"
+    "broadcast join; the Project below MapInPandas turns each row's\n"
+    "role into per-row count constants (nm / nsh / nn), the producer\n"
+    "of section 4 sums them per doc in-task (MUST_NOT rows decode\n"
+    "doc_ids only), and the fused combine (the same\n"
     "FlatMapGroupsInPandas as section 4) sums the partial counts and\n"
     "keeps docs with every MUST term, min_should_match SHOULD terms\n"
     "and no MUST_NOT term — per-query exclusion with no extra scan, no\n"
@@ -200,7 +209,8 @@ out.write(
     "```\n\n"
     "(b) the scoring tail over the <= max_expansions matched terms:\n"
     "In(term) pushdown prunes the postings scan, the MapInPandas\n"
-    "combine emits one row per (query, distinct doc in task) — the\n"
+    "producer of section 4 sums tf per (query, distinct doc in task) —\n"
+    "the\n"
     "df-mass pair explosion never materializes — and the fused\n"
     "combine sums tf per doc and keeps the group-local top-k before\n"
     "one Window ranks the survivors:\n\n```\n"
@@ -241,7 +251,11 @@ out.write(
     "The match pass is the narrow membership pipeline — note\n"
     "ReadSchema on the postings scan carries ONLY (term, doc_ids):\n"
     "tf/dl/pos columns are never read for a sort-by-attribute query.\n"
-    "Matched docs shuffle once to join doc_stats on doc_id, and the\n"
+    "The producer of section 4 emits per-task distinct (query, doc)\n"
+    "rows and one HashAggregate per (query, doc) folds them (with a\n"
+    "summed matched-term count under AND) — no term string and no\n"
+    "count(distinct) in any Exchange. Matched docs then join\n"
+    "doc_stats on doc_id, and the\n"
     "per-query top-k is the shared two-phase salted window.\n\n```\n"
 )
 out.write(plan_of(
@@ -257,7 +271,10 @@ pq = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
                    "k": np.array([10], dtype=np.int32)})
 out.write(
     "\n## 10. Query-string parser (one string -> clause composition)\n\n"
-    "Term clauses of the whole batch share ONE In(term)-pruned scan;\n"
+    "Term clauses of the whole batch share ONE In(term)-pruned scan\n"
+    "and the producer of section 4 (MUST-group bit, constant-clause\n"
+    "bit and MUST_NOT flag ride the clause frame as per-row\n"
+    "constants);\n"
     "expansion clauses resolve through their surfaces' docs_only\n"
     "membership path (their dictionary match collected eagerly above\n"
     "this plan, like section 7a); the combine is a single union ->\n"
@@ -271,8 +288,9 @@ out.write(plan_of(
                       dictionary=load_dictionary(spark, res.out_dir))))
 out.write("\n```\n")
 
-os.makedirs("/root/repo/docs", exist_ok=True)
-with open("/root/repo/docs/PLANS.md", "w") as f:
+dest = (sys.argv[1] if len(sys.argv) > 1
+        else os.path.join(ROOT, "docs", "PLANS.md"))
+with open(dest, "w") as f:
     f.write(out.getvalue())
-print("wrote docs/PLANS.md", len(out.getvalue()), "bytes")
+print("wrote", dest, len(out.getvalue()), "bytes")
 spark.stop()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 import capsbm25.query as Q
 from capsbm25 import fixtures as fx
 from capsbm25.query import bm25_topk, boolean_topk
+from capsbm25.tokenize import tokenize_py
 
 
 def _identical(got: pd.DataFrame, want: pd.DataFrame):
@@ -40,18 +41,208 @@ def test_distributed_pruned_rank_identical(built_index, spark):
         _identical(got, want)
 
 
-def test_distributed_pruned_small_chunk(built_index, spark, monkeypatch):
-    """Force the in-task re-compress loop (chunk=64) together with
-    pruning — combine-after-prune must keep exact partial sums."""
-    monkeypatch.setattr(Q, "_COMBINE_CHUNK", 64)
-    res, cfg = built_index["res"], built_index["cfg"]
+def _members(oracle, text, conj=False):
+    """Docs containing any (conj: every) distinct term of text."""
+    sets = [set(oracle.postings.get(t, {}))
+            for t in sorted(set(tokenize_py(text)))]
+    if not sets:
+        return set()
+    return set.intersection(*sets) if conj else set().union(*sets)
+
+
+def _ranked(rows):
+    """[(query_id, doc_id, score)] -> the engine's ranked frame."""
+    want = pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
+    want = want.sort_values(["query_id", "score", "doc_id"],
+                            ascending=[True, False, True])
+    want["rank"] = want.groupby("query_id").cumcount() + 1
+    return want
+
+
+def _small_chunk_bm25(ix, spark):
+    res, cfg = ix["res"], ix["cfg"]
     queries = fx.queries_pdf(42)
-    want = built_index["oracle"].topk_pdf(queries)
     got = bm25_topk(
-        spark, built_index["postings"], queries, res.N, res.avgdl, cfg,
+        spark, ix["postings"], queries, res.N, res.avgdl, cfg,
         mode="distributed", prune=True,
     ).toPandas()
+    _identical(got, ix["oracle"].topk_pdf(queries))
+
+
+def _small_chunk_boolean(ix, spark):
+    res, cfg, oracle = ix["res"], ix["cfg"], ix["oracle"]
+    qb = pd.DataFrame(
+        [(int(q.query_id), q.text.split()[0],
+          " ".join(q.text.split()[1:] + ["w0001", "w0002"]), "w0003",
+          int(q.k), 1)
+         for q in fx.queries_pdf(42).itertuples(index=False)],
+        columns=["query_id", "must", "should", "must_not", "k",
+                 "min_should_match"],
+    )
+    got = boolean_topk(
+        spark, ix["postings"], qb, res.N, res.avgdl, cfg,
+        mode="distributed",
+    ).toPandas()
+    want = _ranked([
+        (int(q.query_id), d, s)
+        for q in qb.itertuples(index=False)
+        for d, s in oracle.boolean_topk(
+            q.must, q.should, q.must_not, int(q.k),
+            min_should_match=int(q.min_should_match))])
+    assert len(want) > 0
     _identical(got, want)
+
+
+def _small_chunk_query_string(ix, spark):
+    from capsbm25.parser import query_string_topk
+
+    res, cfg, oracle = ix["res"], ix["cfg"], ix["oracle"]
+    texts = ["+w0000 w0001 w0002 w00*", "w0001 -w0003 w01*",
+             f"{fx.HOT_TERM} w0002^2"]
+    queries = pd.DataFrame({"query_id": np.arange(3, dtype=np.int32),
+                            "text": texts,
+                            "k": np.full(3, 40, dtype=np.int32)})
+    got = query_string_topk(
+        spark, ix["postings"], queries, res.N, res.avgdl, cfg).toPandas()
+
+    def bm25(t, boost=1.0):
+        return {d: boost * oracle.score_doc([t], d)
+                for d in oracle.postings.get(t, {})}
+
+    def wild(prefix):
+        return {d for t in oracle.postings if t.startswith(prefix)
+                for d in oracle.postings[t]}
+
+    # (must doc sets, scored term maps, constant (docs, boost), excluded)
+    specs = [
+        ([set(oracle.postings["w0000"])],
+         [bm25("w0000"), bm25("w0001"), bm25("w0002")],
+         [(wild("w00"), 1.0)], set()),
+        ([], [bm25("w0001")], [(wild("w01"), 1.0)],
+         set(oracle.postings["w0003"])),
+        ([], [bm25(fx.HOT_TERM), bm25("w0002", 2.0)], [], set()),
+    ]
+    rows = []
+    for qid, (musts, scored, const, excl) in enumerate(specs):
+        cand = set().union(*(m.keys() for m in scored),
+                           *(ds for ds, _ in const))
+        for ms in musts:
+            cand &= ms
+        ranked = sorted(
+            ((d, sum(m.get(d, 0.0) for m in scored)
+              + sum(b for ds, b in const if d in ds))
+             for d in cand - excl), key=lambda x: (-x[1], x[0]))[:40]
+        rows += [(qid, d, s) for d, s in ranked]
+    _identical(got, _ranked(rows))
+
+
+def _small_chunk_wildcard(ix, spark):
+    from capsbm25.query import wildcard_topk
+
+    oracle = ix["oracle"]
+    pats = ["w00*", "w01*", "w1*"]
+    queries = pd.DataFrame({"query_id": np.arange(3, dtype=np.int32),
+                            "text": pats,
+                            "k": np.full(3, 25, dtype=np.int32)})
+    got = wildcard_topk(spark, ix["postings"], queries, ix["cfg"],
+                        max_expansions=None).toPandas()
+    rows = []
+    for qid, p in enumerate(pats):
+        tf: dict = {}
+        for t in oracle.postings:
+            if t.startswith(p[:-1]):
+                for d, n in oracle.postings[t].items():
+                    tf[d] = tf.get(d, 0) + n
+        rows += [(qid, d, float(s)) for d, s in sorted(
+            tf.items(), key=lambda x: (-x[1], x[0]))[:25]]
+    _identical(got, _ranked(rows))
+
+
+def _small_chunk_docs_only(ix, spark):
+    from capsbm25.query import wildcard_topk
+
+    oracle = ix["oracle"]
+    pats = ["w00*", "w1*"]
+    queries = pd.DataFrame({"query_id": np.arange(2, dtype=np.int32),
+                            "text": pats,
+                            "k": np.full(2, 1, dtype=np.int32)})
+    for docs_only in (True, "raw"):
+        got = wildcard_topk(spark, ix["postings"], queries, ix["cfg"],
+                            max_expansions=None,
+                            docs_only=docs_only).toPandas()
+        for qid, p in enumerate(pats):
+            want = {d for t in oracle.postings if t.startswith(p[:-1])
+                    for d in oracle.postings[t]}
+            g = got[got.query_id == qid]
+            assert set(g.doc_id) == want and want, (docs_only, p)
+            if docs_only is True:
+                assert len(g) == len(want), p
+
+
+def _small_chunk_hit_count(ix, spark):
+    from capsbm25.query import hit_count
+
+    oracle, queries = ix["oracle"], fx.queries_pdf(42)
+    for conj in (False, True):
+        got = hit_count(spark, ix["postings"], queries, ix["cfg"],
+                        conjunctive=conj).toPandas()
+        n = dict(zip(got.query_id, got.n_hits))
+        for q in queries.itertuples(index=False):
+            assert n[q.query_id] == oracle.hit_count(q.text, conj), (
+                conj, q.text)
+
+
+def _small_chunk_sorted(ix, spark):
+    from capsbm25.build import load_doc_stats
+    from capsbm25.query import sorted_topk
+
+    oracle, queries = ix["oracle"], fx.queries_pdf(42)
+    stats = load_doc_stats(spark, ix["res"].out_dir)
+    got = sorted_topk(spark, ix["postings"], queries, stats, "dl",
+                      ix["cfg"]).toPandas()
+    for q in queries.itertuples(index=False):
+        want = sorted(_members(oracle, q.text),
+                      key=lambda d: (-oracle.dl[d], d))[:int(q.k)]
+        g = got[got.query_id == q.query_id].sort_values("rank")
+        assert list(g.doc_id) == want, q.text
+
+
+def _small_chunk_facets(ix, spark):
+    from collections import Counter
+
+    from capsbm25.build import load_doc_stats
+    from capsbm25.query import facet_counts
+
+    oracle, queries = ix["oracle"], fx.queries_pdf(42)
+    doc_map = load_doc_stats(spark, ix["res"].out_dir)
+    conv = oracle.doc_meta["conv_id"]
+    for conj in (False, True):
+        got = facet_counts(spark, ix["postings"], queries, doc_map,
+                           "conv_id", ix["cfg"],
+                           conjunctive=conj).toPandas()
+        for q in queries.itertuples(index=False):
+            want = Counter(conv[d] for d in _members(oracle, q.text, conj))
+            g = got[got.query_id == q.query_id]
+            assert dict(zip(g.conv_id, g.n_docs)) == dict(want), (
+                conj, q.text)
+
+
+@pytest.mark.parametrize(
+    "check",
+    [_small_chunk_bm25, _small_chunk_boolean, _small_chunk_query_string,
+     _small_chunk_wildcard, _small_chunk_docs_only,
+     _small_chunk_hit_count, _small_chunk_sorted, _small_chunk_facets],
+    ids=lambda f: f.__name__.removeprefix("_small_chunk_"))
+def test_distributed_pruned_small_chunk(built_index, spark, monkeypatch,
+                                        check):
+    """Force the producer's in-task re-fold loop (chunk=64) on every
+    consumer of _doc_partials — bm25 together with θ pruning, boolean
+    MUST_NOT + min_should_match, query-string term and wildcard
+    clauses, ranked and membership wildcard, hit_count (OR and AND),
+    sorted_topk and facet_counts — against the oracle: folding partial
+    folds must keep exact sums, counts and memberships."""
+    monkeypatch.setattr(Q, "_COMBINE_CHUNK", 64)
+    check(built_index, spark)
 
 
 def test_distributed_pruned_boosts_and_offset(built_index, spark):

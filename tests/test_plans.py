@@ -215,3 +215,50 @@ def test_synonym_scoring_stays_in_codegen(built_index, spark):
     # query side + group-idf side both broadcast; In(term) pushed
     assert flat.count("BroadcastExchange") >= 2, flat
     assert "In(term" in flat, flat
+
+
+def _shuffle_columns(df) -> list[list[str]]:
+    """The output column names of every shuffle Exchange in df's
+    physical plan (descending into the adaptive plan's current tree)."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if node.nodeName() == "Exchange":
+            attrs = node.output()
+            out.append([attrs.apply(i).name() for i in range(attrs.size())])
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_membership_exchanges_carry_no_term(built_index, spark):
+    """hit_count, sorted_topk and facet_counts fold membership from the
+    producer's per-task (query, doc, nm) rows with one sum per (query,
+    doc): no shuffle carries the term string and no count(distinct)
+    aggregate remains, plain or conjunctive."""
+    from capsbm25.build import load_doc_stats
+    from capsbm25.query import facet_counts, hit_count, sorted_topk
+
+    cfg = built_index["cfg"]
+    postings = built_index["postings"]
+    stats = load_doc_stats(spark, built_index["res"].out_dir)
+    queries = fx.queries_pdf(42)
+    for conj in (False, True):
+        outs = {
+            "hit_count": hit_count(spark, postings, queries, cfg,
+                                   conjunctive=conj),
+            "sorted_topk": sorted_topk(spark, postings, queries, stats,
+                                       "dl", cfg, conjunctive=conj),
+            "facet_counts": facet_counts(spark, postings, queries, stats,
+                                         "conv_id", cfg,
+                                         conjunctive=conj),
+        }
+        for name, df in outs.items():
+            shuffles = _shuffle_columns(df)
+            assert shuffles, (name, conj)
+            assert all("term" not in cols for cols in shuffles), (
+                name, conj, shuffles)
+            assert "count(distinct" not in _plan(df), (name, conj)

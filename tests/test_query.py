@@ -5,6 +5,7 @@ modes (pruned kernel == unpruned kernel == distributed agg == oracle)."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from capsbm25 import fixtures as fx
@@ -1434,3 +1435,58 @@ def test_sorted_topk_missing_stats_sort_last(built_index, spark):
     tail = got.tail(2)
     assert set(tail.doc_id) == drop_ids  # NULL keys sort last
     assert tail.sort_key.isna().all()
+
+
+def _neg_k_calls():
+    """(id, call(ix, spark, k)) for the surfaces that read a per-query
+    k, each on a one-query batch (query_id 7) with the given k."""
+    from capsbm25.parser import query_string_topk
+    from capsbm25.query import (boolean_topk, fuzzy_topk, prefix_topk,
+                                synonym_topk, wildcard_topk)
+
+    def q(text, k):
+        return pd.DataFrame({"query_id": np.array([7], dtype=np.int32),
+                             "text": [text],
+                             "k": np.array([k], dtype=np.int32)})
+
+    def bm25(mode):
+        return lambda ix, s, k: bm25_topk(
+            s, ix["postings"], q(fx.HOT_TERM, k), ix["res"].N,
+            ix["res"].avgdl, ix["cfg"], mode=mode)
+
+    def boolean(ix, s, k):
+        qb = pd.DataFrame({"query_id": [7], "must": [fx.HOT_TERM],
+                           "should": [""], "must_not": [""], "k": [k]})
+        return boolean_topk(s, ix["postings"], qb, ix["res"].N,
+                            ix["res"].avgdl, ix["cfg"], mode="kernel")
+
+    return [
+        ("bm25_kernel", bm25("kernel")),
+        ("bm25_distributed", bm25("distributed")),
+        ("boolean", boolean),
+        ("query_string", lambda ix, s, k: query_string_topk(
+            s, ix["postings"], q(f"+{fx.HOT_TERM} w00*", k),
+            ix["res"].N, ix["res"].avgdl, ix["cfg"])),
+        ("synonym", lambda ix, s, k: synonym_topk(
+            s, ix["postings"], q(f"{fx.HOT_TERM}|w0001", k),
+            ix["res"].N, ix["res"].avgdl, ix["cfg"])),
+        ("wildcard", lambda ix, s, k: wildcard_topk(
+            s, ix["postings"], q("w00*", k), ix["cfg"])),
+        ("prefix", lambda ix, s, k: prefix_topk(
+            s, ix["postings"], q("w00", k), ix["cfg"])),
+        ("fuzzy", lambda ix, s, k: fuzzy_topk(
+            s, ix["postings"], q("w0001", k), ix["cfg"])),
+    ]
+
+
+@pytest.mark.parametrize(
+    "call", [pytest.param(c, id=n) for n, c in _neg_k_calls()])
+def test_negative_k_rejected_at_boundary(built_index, spark, call):
+    """k < 0 raises a ValueError naming the query before any job runs,
+    on both bm25 paths and the other surfaces reading a per-query k.
+    Before, the kernel's [:k] slice returned all but the last hit and
+    the distributed tail returned none."""
+    with pytest.raises(ValueError, match="query 7: k must be >= 0"):
+        call(built_index, spark, -1).collect()
+    # k = 0 stays a valid empty page
+    assert call(built_index, spark, 0).count() == 0

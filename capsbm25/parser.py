@@ -143,6 +143,7 @@ from capsbm25.query import (
     _check_k,
     _doc_partials,
     _fused_combine_topk,
+    _reject_paging,
     _term_df_map,
     fuzzy_topk,
     near_topk,
@@ -793,6 +794,7 @@ def query_string_topk(
     ONE scan of this frame (equality predicates pushed to its source),
     so a field clause costs one metadata read, never a postings pass."""
     cfg = cfg or BuildConfig()
+    _reject_paging(queries, "query_string_topk")
     term_rows, phrase_cl, fuzzy_cl, wild_cl = [], [], [], []
     rx_cl, range_cl, field_cl, frange_cl = [], [], [], []
     meta: dict[int, dict] = {}  # qid -> the combine's per-query meta

@@ -7,13 +7,18 @@ retrieval: the stored order metadata (block-max upper bounds) lets the
 scorer skip whole blocks that provably cannot reach the top-k, exactly
 as the memoized LCP bounds let the reference skip character compares.
 
+Term queries (``bm25_topk``, ``boolean_topk``) compile to one frame of
+role-tagged (query, term) rows — must / should / not, plus n_must and
+msm (min_should_match) — run by ``_term_query`` and the runners below.
+
 Execution modes, all rank-identical to the oracle (tested):
 
 * ``kernel``: broadcast-join the (tiny) query-term table
   against postings, then ``groupBy(query_id).applyInPandas`` — one
   Arrow kernel per query does decode + two-phase block-max pruning +
   exact rescoring + heap-free vectorized top-k. This is
-  document-at-a-time scoring with WAND-style block skipping.
+  document-at-a-time scoring with WAND-style block skipping; a query
+  with MUST, msm or MUST_NOT constraints scores its match set exactly.
 * ``distributed``: ``_doc_partials``, the one map-side producer,
   emits per-task-summed (query_id, doc_id, contrib) rows; one
   exchange into (query, doc-salt)
@@ -85,29 +90,56 @@ CAND_CHUNK_SPAN = 4_000_000
 _BOOST_RE = re.compile(r"^(.*?)\^(\d+(?:\.\d+)?)$")
 
 
-def _check_k(qid, k) -> int:
-    """One query's k as an int. A negative k raises naming the query:
-    the kernel's top-k slice would read it as "all but the last" and
-    the distributed tail as "none"."""
-    k = int(k)
-    if k < 0:
-        raise ValueError(f"query {qid}: k must be >= 0, got {k}")
-    return k
+def _check_k(qid, k, name: str = "k") -> int:
+    """One query's k (or min_should_match) as an int >= 0. A missing,
+    fractional or negative value raises naming the query: int() would
+    truncate 1.5 and the top-k slice read -1 as "all but the last"."""
+    try:
+        n = int(k)
+        integral = n == k
+    except (TypeError, ValueError):  # None, NaN, non-numeric
+        integral = False
+    if not integral:
+        raise ValueError(f"query {qid}: {name} must be an integer, "
+                         f"got {k!r}")
+    if n < 0:
+        raise ValueError(f"query {qid}: {name} must be >= 0, got {n}")
+    return n
+
+
+def _reject_paging(queries: pd.DataFrame, surface: str) -> None:
+    """Surfaces without pagination raise on an offset / search_after
+    queries column instead of silently returning page 1."""
+    for c in ("offset", "after_score", "after_doc"):
+        if c in queries.columns:
+            raise ValueError(
+                f"{surface} does not support the {c!r} queries column; "
+                "page with bm25_topk")
 
 
 def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
                      boosts: bool = False,
-                     require_k: bool = True) -> pd.DataFrame:
-    """One row per (query, distinct term). With boosts=True, a chunk
-    `term^2.5` (Lucene query-parser boost syntax) assigns that term a
-    per-query boost; unboosted terms get 1.0, and when a term appears
-    several times the max boost wins (terms are deduplicated — matching
-    the engine's existing set-of-terms semantics — so occurrences can't
-    stack). An `offset` queries column (pagination) rides along when
+                     require_k: bool = True,
+                     conjunctive: bool = False) -> pd.DataFrame:
+    """bm25_topk's term-query frame (boolean_topk emits the same): one
+    row per (query, distinct term) with query_id, term, k, role, n_must
+    and msm. Terms are "should" (n_must = msm = 0), or with
+    conjunctive=True "must" (n_must = the query's term count).
+
+    With boosts=True, a chunk `term^2.5` (Lucene query-parser boost
+    syntax) assigns that term a per-query boost; unboosted terms get
+    1.0, and when a term appears several times the max boost wins
+    (terms are deduplicated — matching the engine's existing
+    set-of-terms semantics — so occurrences can't stack). An `offset`
+    queries column (pagination) rides along when
     present regardless of boosts, as does an (after_score, after_doc)
     cursor pair (search_after pagination) — a query may use offset OR
     a cursor, not both, and a cursor requires both halves."""
+    if require_k and "k" not in queries.columns:
+        # top-k surfaces: a missing k must not silently return zero rows
+        raise ValueError("queries must carry an integer k column")
     rows = []
+    role = "must" if conjunctive else "should"
     has_off = "offset" in queries.columns
     has_after = ("after_score" in queries.columns
                  or "after_doc" in queries.columns)
@@ -138,13 +170,7 @@ def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
         # (str(NaN) would tokenize to a real searchable term)
         text = q.text if isinstance(q.text, str) else ""
         k = getattr(q, "k", None)
-        if k is None or pd.isna(k):
-            if require_k:
-                # top-k surfaces: a missing k must not silently return
-                # zero rows
-                raise ValueError(
-                    "queries must carry an integer k column"
-                )
+        if not require_k and (k is None or pd.isna(k)):
             k = 0  # surfaces documenting k as ignored (facets, counts)
         else:
             k = _check_k(q.query_id, k)
@@ -160,13 +186,14 @@ def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
         else:
             terms = sorted(set(tokenize_py(text, cfg)))
             bmap = {t: 1.0 for t in terms}
+        n_must = len(terms) if conjunctive else 0
         for t in terms:
-            rows.append((int(q.query_id), t, k, len(terms),
+            rows.append((int(q.query_id), t, k, role, n_must, 0,
                          float(bmap[t]), off,
                          np.nan if a_s is None else a_s,
                          np.nan if a_d is None else float(a_d)))
     pdf = pd.DataFrame(
-        rows, columns=["query_id", "term", "k", "n_query_terms",
+        rows, columns=["query_id", "term", "k", "role", "n_must", "msm",
                        "boost", "off", "after_score", "after_doc"]
     )
     if not has_after:
@@ -217,10 +244,12 @@ def _topk(docs: np.ndarray, scores: np.ndarray, k: int):
 
 def _score_query_kernel(pdf: pd.DataFrame, N: int, avgdl: float,
                         cfg: BuildConfig, prune: bool,
-                        conjunctive: bool = False,
                         filt: np.ndarray | None = None,
                         excl: np.ndarray | None = None) -> pd.DataFrame:
-    """Score one query's matched postings. pdf: one row per term.
+    """Score one query's matched postings. pdf: its term-query frame
+    rows joined to postings, one per (term, index segment). A query
+    with MUST, msm or MUST_NOT rows scores its constrained match set
+    exactly; any other runs WAND (exhaustive for short lists).
 
     filt: optional SORTED array of allowed doc_ids (Lucene-filter
     semantics) — candidates are restricted to it BEFORE top-k, but
@@ -252,20 +281,23 @@ def _score_query_kernel(pdf: pd.DataFrame, N: int, avgdl: float,
             return d, s
         keep = (s < a_s) | ((s == a_s) & (d > a_d))
         return d[keep], s[keep]
+
+    n_must, msm = int(pdf["n_must"].iloc[0]), int(pdf["msm"].iloc[0])
     pdf = pdf.sort_values("term")  # fixed summation order -> bit-stable
-    terms = []
+    terms = []  # the scoring (must / should) terms
+    nots = []   # MUST_NOT doc-id arrays
     for term, grp in pdf.groupby("term", sort=True):
+        role = grp["role"].iloc[0]
+        if role == "not":
+            # membership only — skip the tf/dl varint decodes
+            # (MUST_NOT stopwords are the largest postings)
+            nots.extend(delta_decode(b) for b in grp["doc_ids"])
+            continue
         # multiple rows per term = index segments (incremental builds);
         # merge them and recompute bounds — stored block maxima were
         # computed with segment-local df/avgdl and are not safe bounds
         # for the merged corpus
-        parts = [_decode_posting(r) for r in grp.itertuples(index=False)]
-        docs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        if len(parts) > 1:
-            order = np.argsort(docs, kind="stable")
-            docs, tfs, dls = docs[order], tfs[order], dls[order]
+        docs, tfs, dls, _, _ = _merge_term_rows(grp, with_pos=False)
         # df is summed BEFORE the filter mask: filters restrict
         # candidates, never scoring stats
         df_total = int(grp["df"].sum())
@@ -281,73 +313,61 @@ def _score_query_kernel(pdf: pd.DataFrame, N: int, avgdl: float,
             else 1.0
         if boost != 1.0:
             # query-time term boost (Lucene ^boost): scales this term's
-            # contribution; uppers below derive from the boosted scores,
-            # so WAND bounds stay exact
+            # contribution; WAND's block uppers derive from the boosted
+            # scores, so its bounds stay exact
             sc = sc * boost
-        # ALWAYS recompute block uppers from the exact scores just
-        # materialized (O(n) reduceat — free next to the decode).
-        # Stored block_max was computed with BUILD-time N/avgdl; after
-        # incremental segments the query-time global N is larger (bigger
-        # idf), so a stored upper can undercut true scores even for a
-        # single-row term and WAND would silently drop top-k docs.
-        # Recomputed uppers are exact for the query-time parameters by
-        # construction; stored block_max remains for coarse DataFrame-
-        # level pre-pruning where approximate bounds are re-checked here.
-        if sc.size:
-            B = cfg.block_size
-            nb = -(-sc.size // B)
-            uppers = np.maximum.reduceat(sc, np.arange(nb) * B)
-        else:
-            uppers = np.array([0.0])
-        terms.append({"docs": docs, "scores": sc, "uppers": uppers})
+        terms.append({"docs": docs, "scores": sc, "role": role})
+
+    def probe(docs: np.ndarray, cand: np.ndarray):
+        # (positions, hit mask) of cand in one non-empty sorted list
+        pos = np.minimum(np.searchsorted(docs, cand), docs.size - 1)
+        return pos, docs[pos] == cand
 
     def exact_scores(cand: np.ndarray) -> np.ndarray:
         total = np.zeros(cand.size, dtype=np.float64)
         for t in terms:  # already in sorted-term order
             if t["docs"].size == 0:  # term fully removed by doc filter
                 continue
-            pos = np.searchsorted(t["docs"], cand)
-            pos = np.minimum(pos, t["docs"].size - 1)
-            hit = t["docs"][pos] == cand
+            pos, hit = probe(t["docs"], cand)
             total[hit] += t["scores"][pos[hit]]
         return total
 
     if not terms:
         return _empty_result()
 
-    n_terms_in_query = int(pdf["n_query_terms"].iloc[0])
-
-    if conjunctive:
-        # posting-list intersection (AND semantics): docs containing ALL
-        # query terms — sorted-array intersect, the graft analog of the
-        # reference's match-range search (upper_bound pairs,
-        # /root/reference/src/Suffix_Array.cpp:252-297). A query term
-        # missing from the index (no posting row) => empty result.
-        if len(terms) < n_terms_in_query:
+    if n_must or msm or nots:
+        # role-constrained match set — the graft of the reference's
+        # match-range search (upper_bound pairs,
+        # Suffix_Array.cpp:252-297) as sorted-array set algebra:
+        # intersect the MUST lists (with none, take the union of the
+        # scoring terms), keep docs matching >= msm distinct SHOULD
+        # terms, subtract the MUST_NOT docs. A MUST term without a
+        # posting row (out of vocabulary) empties the query.
+        must = [t["docs"] for t in terms if t["role"] == "must"]
+        if len(must) < n_must:
             return _empty_result()
-        cand = terms[0]["docs"]
-        for t in terms[1:]:
-            cand = np.intersect1d(cand, t["docs"], assume_unique=True)
-            if cand.size == 0:
-                break
-        if cand.size == 0:
-            return _empty_result()
-        top_d, top_s = _topk(*after_filter(cand, exact_scores(cand)),
-                             kk)
-        return _result_pdf(qid, top_d[off:], top_s[off:], start=off)
-
-    n_total = sum(t["docs"].size for t in terms)
-    if not prune or n_total <= 4 * kk or len(terms) == 1:
-        # exhaustive: concat contributions, segment-sum per doc
+        if n_must:
+            cand = must[0]
+            for d in must[1:]:
+                cand = np.intersect1d(cand, d, assume_unique=True)
+        else:
+            cand = np.unique(np.concatenate([t["docs"] for t in terms]))
+        if msm:
+            cnt = np.zeros(cand.size, dtype=np.int32)
+            for t in terms:
+                if t["role"] == "should" and t["docs"].size:
+                    cnt[probe(t["docs"], cand)[1]] += 1
+            cand = cand[cnt >= msm]
+        if nots:
+            cand = np.setdiff1d(cand, np.concatenate(nots))
+        sc = exact_scores(cand)
+    elif (not prune or len(terms) == 1
+          or sum(t["docs"].size for t in terms) <= 4 * kk):
+        # exhaustive: fold every contribution per doc, in term order
         all_docs = np.concatenate([t["docs"] for t in terms])
-        all_sc = np.concatenate([t["scores"] for t in terms])
-        order = np.argsort(all_docs, kind="stable")
-        d, s = all_docs[order], all_sc[order]
-        new = np.ones(d.size, dtype=bool)
-        new[1:] = d[1:] != d[:-1]
-        starts = np.flatnonzero(new)
-        sums = np.add.reduceat(s, starts)
-        top_d, top_s = _topk(*after_filter(d[starts], sums), kk)
+        cand, sc, _ = _fold(
+            all_docs, np.argsort(all_docs, kind="stable"),
+            np.concatenate([t["scores"] for t in terms]), {})
     else:
         # phase 1: seed θ from the most selective terms' full lists
         by_df = sorted(range(len(terms)), key=lambda i: terms[i]["docs"].size)
@@ -368,22 +388,29 @@ def _score_query_kernel(pdf: pd.DataFrame, N: int, avgdl: float,
             theta = np.partition(s0q, s0q.size - kk)[s0q.size - kk]
         else:
             theta = -np.inf
-        # phase 2: block-max survivors
-        umax = np.array([t["uppers"].max() for t in terms])
+        # phase 2: block-max survivors. Block uppers are ALWAYS
+        # recomputed from the exact scores (O(n) reduceat — free next
+        # to the decode): an upper computed with BUILD-time N/avgdl can
+        # undercut true scores once incremental segments grow the
+        # query-time N (bigger idf), and WAND would silently drop
+        # top-k docs. Recomputed uppers are exact by construction.
+        B = cfg.block_size
+        uppers = [np.maximum.reduceat(t["scores"],
+                                      np.arange(0, t["scores"].size, B))
+                  if t["scores"].size else np.zeros(1) for t in terms]
+        umax = np.array([u.max() for u in uppers])
         rest = umax.sum() - umax
         keep_docs = [cand0]
-        B = cfg.block_size
         for i, t in enumerate(terms):
-            ok = t["uppers"] + rest[i] >= theta
+            ok = uppers[i] + rest[i] >= theta
             if ok.all():
                 keep_docs.append(t["docs"])
                 continue
             for b in np.flatnonzero(ok):
                 keep_docs.append(t["docs"][b * B : (b + 1) * B])
         cand = np.unique(np.concatenate(keep_docs))
-        top_d, top_s = _topk(*after_filter(cand, exact_scores(cand)),
-                             kk)
-
+        sc = exact_scores(cand)
+    top_d, top_s = _topk(*after_filter(cand, sc), kk)
     return _result_pdf(qid, top_d[off:], top_s[off:], start=off)
 
 
@@ -444,7 +471,8 @@ def bm25_topk(
     page of one query takes the same path. NaN/absent cursor = page
     1. offset and a cursor are mutually exclusive per query.
     conjunctive=True restricts candidates to docs containing ALL query
-    terms (posting-list intersection — AND semantics); scores are still
+    terms (posting-list intersection — AND semantics: every term is a
+    MUST term, exactly boolean_topk's all-MUST query); scores are still
     full BM25 over the query terms.
     mode="auto" (default) runs each query through the WAND kernel unless
     Σ df over its terms exceeds max_kernel_df OR Σ encoded payload bytes
@@ -489,10 +517,22 @@ def bm25_topk(
     cfg = cfg or BuildConfig()
     if collapse is not None:
         mode = "distributed"
-    qt = _query_terms_pdf(queries, cfg, boosts=boosts)
+    qt = _query_terms_pdf(queries, cfg, boosts=boosts,
+                          conjunctive=conjunctive)
+    return _term_query(
+        spark, postings, qt, N, avgdl, cfg, mode, max_kernel_df,
+        max_kernel_bytes, doc_filter, doc_exclude, max_kernel_filter,
+        prune=prune, collapse=collapse)
+
+
+def _term_query(spark, postings, qt, N, avgdl, cfg, mode, max_kernel_df,
+                max_kernel_bytes, doc_filter, doc_exclude, max_kernel_filter,
+                prune=True, collapse=None) -> DataFrame:
+    """bm25_topk's and boolean_topk's one execution tail: doc-set
+    routing, one In(term)-pruned scan broadcast-joined to the term-query
+    frame, _dispatch_modes onto _run_kernel / _run_distributed."""
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-
     mode, doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
                        max_kernel_filter)
@@ -515,9 +555,9 @@ def bm25_topk(
     return _dispatch_modes(
         mode, matched, qt, filtered, max_kernel_df, max_kernel_bytes,
         run_kernel=lambda m: _run_kernel(
-            m, N, avgdl, cfg, prune, conjunctive, filt_bc, excl_bc),
+            m, N, avgdl, cfg, prune, filt_bc, excl_bc),
         run_distributed=lambda m, dfm, qids=None: _run_distributed(
-            m, dfm, N, avgdl, cfg, conjunctive, doc_filter, doc_exclude,
+            m, dfm, N, avgdl, cfg, doc_filter, doc_exclude,
             collapse=collapse,
             qt=qt if qids is None else
             qt[qt["query_id"].isin(qids)].reset_index(drop=True),
@@ -705,23 +745,22 @@ def _term_stats_map(filtered: DataFrame) -> tuple[dict, dict]:
             {r["term"]: int(r["nbytes"]) for r in rows})
 
 
-def _run_kernel(matched, N, avgdl, cfg, prune, conjunctive,
+def _run_kernel(matched, N, avgdl, cfg, prune,
                 filt_bc=None, excl_bc=None) -> DataFrame:
     # filt_bc/excl_bc: optional pyspark Broadcasts of sorted int64
     # doc-id arrays (one copy per executor, not per task — can be MBs)
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         filt = filt_bc.value if filt_bc is not None else None
         excl = excl_bc.value if excl_bc is not None else None
-        return _score_query_kernel(pdf, N, avgdl, cfg, prune, conjunctive,
-                                   filt, excl)
+        return _score_query_kernel(pdf, N, avgdl, cfg, prune, filt, excl)
 
     # explicit projection (Catalyst cannot prune through applyInPandas):
     # stored block_max is NEVER read by the kernel — uppers are always
     # recomputed from the exact scores (see _score_query_kernel) — and
     # cf is unused, so both would ride the Arrow transfer for nothing
     # (block_max is an array<struct>, the widest non-payload column)
-    need = (["query_id", "term", "df", "doc_ids", "tfs", "dls",
-             "k", "n_query_terms"]
+    need = (["query_id", "term", "role", "df", "doc_ids", "tfs", "dls",
+             "k", "n_must", "msm"]
             + [c for c in ("boost", "off", "after_score", "after_doc")
                if c in matched.columns])
     return matched.select(*need).groupBy("query_id").applyInPandas(
@@ -1026,17 +1065,19 @@ def _distributed_rest_map(qt: pd.DataFrame, df_map: dict, N: int,
 
 
 def _query_meta(qt: pd.DataFrame) -> dict:
-    """qid -> the fused combine's per-query meta (k, off, nq, after)
-    from a _query_terms_pdf frame — one entry per query, driver side."""
+    """qid -> the fused combine's per-query meta (k, off, n_must, msm,
+    after) from a term-query frame — one entry per query, driver
+    side."""
     meta = {}
     has_after = "after_score" in qt.columns
     for r in qt.drop_duplicates("query_id").itertuples(index=False):
         after = None
         if has_after and not pd.isna(r.after_score):
             after = (float(r.after_score), int(r.after_doc))
-        meta[int(r.query_id)] = {"k": int(r.k), "off": int(r.off),
-                                 "nq": int(r.n_query_terms),
-                                 "after": after}
+        meta[int(r.query_id)] = {"k": int(r.k),
+                                 "off": int(getattr(r, "off", 0)),
+                                 "n_must": int(r.n_must),
+                                 "msm": int(r.msm), "after": after}
     return meta
 
 
@@ -1046,7 +1087,7 @@ def _raw_mass(qt: pd.DataFrame, df_map: dict) -> int:
     return int(qt["term"].map(df_map).fillna(0).sum())
 
 
-def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
+def _run_distributed(matched, df_map, N, avgdl, cfg,
                      doc_filter: DataFrame | None = None,
                      doc_exclude: DataFrame | None = None,
                      collapse: DataFrame | None = None,
@@ -1083,17 +1124,26 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
     # A single-term stopword query (the canonical distributed routing:
     # Σdf > max_kernel_df) emits ~k rows per task instead of df rows.
     # Pruning stays OFF when the result set is a sub-population whose
-    # k-th score θ cannot bound (conjunctive AND, collapse groups,
-    # doc filters that could not be masked in-kernel).
+    # k-th score θ cannot bound (role constraints — MUST, msm,
+    # MUST_NOT — collapse groups, doc filters that could not be masked
+    # in-kernel).
     #
     # The producer (_doc_partials) then combines map-side: one row per
     # (query, distinct doc in task) with the contributions pre-summed
-    # (and, for AND, the matched-term count), so the combine exchange
-    # carries distinct-doc rows without the term string.
+    # plus the in-task MUST / SHOULD / MUST_NOT match counts the batch's
+    # roles need (exact: (term, doc) is globally unique), so the combine
+    # exchange carries distinct-doc rows without the term string.
     meta = _query_meta(qt)
+    role = F.col("role")
+    state = [(role == r).cast("long").alias(s)
+             for r, s, needed in (
+                 ("must", "nm", (qt["role"] == "must").any()),
+                 ("should", "nsh", (qt["msm"] > 0).any()),
+                 ("not", "nn", (qt["role"] == "not").any()))
+             if needed]
     has_cursor = any(m["after"] is not None for m in meta.values())
     do_prune = (
-        prune and not conjunctive and collapse is None
+        prune and not state and collapse is None
         and (doc_filter is None or filt_bc is not None)
         and (doc_exclude is None or excl_bc is not None)
         # search_after: the entry-prune θ comes from in-task k-th
@@ -1122,17 +1172,23 @@ def _run_distributed(matched, df_map, N, avgdl, cfg, conjunctive,
             return sc + rest_map.get((qid, row.term), np.inf) >= cur
         return keep
 
-    cols = (["term", "query_id", "doc_ids", "tfs", "dls"]
-            + (["boost"] if "boost" in matched.columns else [])
-            + ([F.lit(1).alias("nm")] if conjunctive else []))
+    cols = (["term", "role", "query_id", "doc_ids", "tfs", "dls"]
+            + (["boost"] if "boost" in matched.columns else []) + state)
     c = _doc_partials(
         matched.select(*cols), _bm25_scorer(df_map, N, avgdl, cfg),
         theta_prune if do_prune else None, filt_bc, excl_bc,
         doc_filter, doc_exclude)
     raw_mass = _raw_mass(qt, df_map)
-    # AND semantics: a doc must contain every distinct query term —
-    # counted on the COMPLETE per-doc state, after all partials meet
-    keep = (lambda st, m: st["nm"] >= m["nq"]) if conjunctive else None
+
+    def role_rule(st, m):
+        # on the COMPLETE per-doc state: every MUST term, >= msm SHOULD
+        # terms, no MUST_NOT term (an unemitted count is 0). A doc row
+        # exists only if a term matched, so nn == 0 means a positive one
+        return ((st.get("nm", 0) == m["n_must"])
+                & (st.get("nsh", 0) >= m["msm"])
+                & (st.get("nn", 0) == 0))
+
+    keep = role_rule if state else None
     if collapse is None:
         return _fused_combine_topk(c, meta, raw_mass, keep)
     # field collapsing over the FULL scored set: keep the best (score
@@ -1587,13 +1643,14 @@ def boolean_topk(
     empty (OOV SHOULD terms can never match, so they only make the
     requirement harder — same as Lucene).
 
-    Execution mirrors bm25_topk: the MUST_NOT terms' postings travel to
-    the same kernel group / narrow pass as the positive terms (one
-    pushdown-pruned scan + broadcast join for the whole batch), so the
-    per-query exclusion costs no extra scan; "auto" routes per query on
-    Σ df and Σ encoded bytes over ALL its terms (NOT terms occupy task
-    memory too). doc_filter / doc_exclude still apply batch-globally on
-    top (Lucene filter + liveDocs).
+    Execution is bm25_topk's: the clauses compile to its term-query
+    frame (must / should / not rows) and run on its kernel and
+    distributed runners, so MUST_NOT postings ride the same pruned scan
+    and a pure-SHOULD batch prunes like a disjunctive bm25 query; "auto"
+    routes per query on Σ df and Σ bytes over ALL its terms (NOT terms
+    occupy task memory too). doc_filter / doc_exclude apply
+    batch-globally on top (Lucene filter + liveDocs). An offset or
+    search_after column raises: this surface does not page.
 
     Returns (query_id, doc_id, score, rank) — rank ties by doc_id.
     """
@@ -1606,6 +1663,7 @@ def boolean_topk(
             f"boolean_topk queries missing columns {sorted(missing)}; "
             "pass empty strings for unused clauses"
         )
+    _reject_paging(queries, "boolean_topk")
     rows = []
     def _clause(v):
         # "empty/None = no clause" includes pandas NaN (the normal
@@ -1625,173 +1683,19 @@ def boolean_topk(
         if not must and not should:
             continue  # no positive clause
         msm = getattr(q, "min_should_match", 0)
-        msm = 0 if msm is None or pd.isna(msm) else int(msm)
-        if msm < 0:
-            raise ValueError("min_should_match must be >= 0")
+        msm = (0 if msm is None or pd.isna(msm)
+               else _check_k(qid, msm, "min_should_match"))
         if msm > len(should):
             continue  # cannot be satisfied — provably empty (Lucene)
-        for t in must:
-            rows.append((qid, t, k, len(must), "must", msm))
-        for t in should:
-            rows.append((qid, t, k, len(must), "should", msm))
-        for t in sorted(nots):
-            rows.append((qid, t, k, len(must), "not", msm))
+        for role, ts in (("must", must), ("should", should),
+                         ("not", sorted(nots))):
+            rows.extend((qid, t, k, role, len(must), msm) for t in ts)
     qt = pd.DataFrame(
-        rows, columns=["query_id", "term", "k", "n_must", "role", "msm"]
+        rows, columns=["query_id", "term", "k", "role", "n_must", "msm"]
     )
-    if qt.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
-    mode, doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
-        _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
-                       max_kernel_filter)
-    if empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qdf = pdf_frame(spark, qt)
-    terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
-    if "pos" in filtered.columns:
-        filtered = filtered.drop("pos")
-    matched = filtered.join(F.broadcast(qdf), "term")
-
-    return _dispatch_modes(
-        mode, matched, qt, filtered, max_kernel_df, max_kernel_bytes,
-        run_kernel=lambda m: _run_boolean_kernel(
-            m, N, avgdl, cfg, filt_bc, excl_bc),
-        run_distributed=lambda m, dfm, qids=None:
-        _run_boolean_distributed(
-            m, dfm, N, avgdl, cfg, doc_filter, doc_exclude,
-            qt=qt if qids is None else qt[qt["query_id"].isin(qids)],
-            filt_bc=filt_bc, excl_bc=excl_bc),
-    )
-
-
-def _run_boolean_kernel(matched, N, avgdl, cfg,
-                        filt_bc=None, excl_bc=None) -> DataFrame:
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        k = int(pdf["k"].iloc[0])
-        qid = int(pdf["query_id"].iloc[0])
-        n_must = int(pdf["n_must"].iloc[0])
-        msm = int(pdf["msm"].iloc[0]) if "msm" in pdf.columns else 0
-        pdf = pdf.sort_values("term")
-        pos_terms = []   # scoring terms, sorted order (bit-stable sums)
-        must_docs = []
-        should_docs = []
-        not_docs = []
-        for term, grp in pdf.groupby("term", sort=True):
-            role = grp["role"].iloc[0]
-            if role == "not":
-                # membership only — skip the tf/dl varint decodes
-                # (MUST_NOT stopwords are the largest postings)
-                not_docs.append(np.concatenate(
-                    [delta_decode(b) for b in grp["doc_ids"]]))
-                continue
-            parts = [_decode_posting(r) for r in grp.itertuples(index=False)]
-            docs = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            if len(parts) > 1:
-                order = np.argsort(docs, kind="stable")
-                docs, tfs, dls = docs[order], tfs[order], dls[order]
-            df_total = int(grp["df"].sum())
-            sc = term_scores(tfs, dls, float(idf_fn(N, df_total)),
-                             avgdl, cfg.k1, cfg.b)
-            pos_terms.append({"docs": docs, "scores": sc})
-            if role == "must":
-                must_docs.append(docs)
-            else:
-                should_docs.append(docs)
-        if len(must_docs) < n_must:
-            return _empty_result()  # an OOV MUST term empties the query
-        if n_must:
-            cand = must_docs[0]
-            for d in must_docs[1:]:
-                cand = np.intersect1d(cand, d, assume_unique=True)
-                if cand.size == 0:
-                    return _empty_result()
-        else:
-            if not pos_terms:
-                return _empty_result()
-            cand = np.unique(np.concatenate(
-                [t["docs"] for t in pos_terms]))
-        if msm:
-            # minimumNumberShouldMatch: count distinct matched SHOULD
-            # terms per candidate (arrays are doc-sorted — one
-            # searchsorted membership probe per term)
-            cnt = np.zeros(cand.size, dtype=np.int32)
-            for docs in should_docs:
-                if docs.size == 0:
-                    continue
-                ix = np.searchsorted(docs, cand)
-                ix = np.minimum(ix, docs.size - 1)
-                cnt[docs[ix] == cand] += 1
-            cand = cand[cnt >= msm]
-            if cand.size == 0:
-                return _empty_result()
-        if not_docs:
-            cand = np.setdiff1d(
-                cand, np.unique(np.concatenate(not_docs)),
-                assume_unique=False)
-        if filt_bc is not None:
-            cand = np.intersect1d(cand, filt_bc.value, assume_unique=True)
-        if excl_bc is not None:
-            cand = np.setdiff1d(cand, excl_bc.value, assume_unique=True)
-        if cand.size == 0:
-            return _empty_result()
-        total = np.zeros(cand.size, dtype=np.float64)
-        for t in pos_terms:  # sorted-term order
-            if t["docs"].size == 0:
-                continue
-            ix = np.searchsorted(t["docs"], cand)
-            ix = np.minimum(ix, t["docs"].size - 1)
-            hit = t["docs"][ix] == cand
-            total[hit] += t["scores"][ix[hit]]
-        top_d, top_s = _topk(cand, total, k)
-        return _result_pdf(qid, top_d, top_s)
-
-    # explicit projection: block_max/cf would ride Arrow unused (the
-    # kernel recomputes nothing from them; see _run_kernel's note)
-    need = (["query_id", "term", "role", "df", "doc_ids", "tfs", "dls",
-             "k", "n_must"]
-            + (["msm"] if "msm" in matched.columns else []))
-    return matched.select(*need).groupBy("query_id").applyInPandas(
-        kernel, schema=RESULT_SCHEMA
-    )
-
-
-def _run_boolean_distributed(matched, df_map, N, avgdl, cfg,
-                             doc_filter: DataFrame | None = None,
-                             doc_exclude: DataFrame | None = None,
-                             *, qt: pd.DataFrame,
-                             filt_bc=None, excl_bc=None) -> DataFrame:
-    # the bm25 producer with the clause roles folded into per-doc
-    # partial COUNTS: each task emits one row per (query, distinct doc)
-    # carrying the summed positive contribution plus how many MUST /
-    # SHOULD / MUST_NOT terms matched in-task — (term, doc) is globally
-    # unique and a term has exactly one role per query, so the summed
-    # partials are exact counts. No θ pruning here: MUST /
-    # min_should_match restrict the result to a sub-population whose
-    # k-th score a single-term floor cannot bound.
-    role = F.col("role")
-    c = _doc_partials(
-        matched.select(
-            "term", "role", "query_id", "doc_ids", "tfs", "dls",
-            *[(role == r).cast("long").alias(s)
-              for r, s in (("must", "nm"), ("should", "nsh"),
-                           ("not", "nn"))]),
-        _bm25_scorer(df_map, N, avgdl, cfg), None, filt_bc, excl_bc,
-        doc_filter, doc_exclude)
-    meta = {int(r.query_id): {"k": int(r.k), "n_must": int(r.n_must),
-                              "msm": int(r.msm)}
-            for r in qt.drop_duplicates("query_id").itertuples(index=False)}
-
-    def keep(st, m):
-        # a (query, doc) group only exists if >= 1 term matched, so
-        # nn == 0 already implies a positive match — no npos count
-        return ((st["nm"] == m["n_must"]) & (st["nn"] == 0)
-                & (st["nsh"] >= m["msm"]))
-
-    return _fused_combine_topk(c, meta, _raw_mass(qt, df_map), keep)
+    return _term_query(
+        spark, postings, qt, N, avgdl, cfg, mode, max_kernel_df,
+        max_kernel_bytes, doc_filter, doc_exclude, max_kernel_filter)
 
 
 def _merge_term_rows(grp, with_pos: bool):
@@ -3504,7 +3408,8 @@ def _match_docs(spark, postings, queries: pd.DataFrame, cfg,
     from the driver — no term string crosses the exchange. None when
     the whole batch tokenizes to no terms (callers own their
     empty-result schema)."""
-    qt = _query_terms_pdf(queries, cfg, require_k=require_k)
+    qt = _query_terms_pdf(queries, cfg, require_k=require_k,
+                          conjunctive=conjunctive)
     if qt.empty:
         return None
     qdf = pdf_frame(spark, qt[["query_id", "term"]])
@@ -3518,9 +3423,9 @@ def _match_docs(spark, postings, queries: pd.DataFrame, cfg,
     ).groupBy("query_id", "doc_id").agg(F.sum("nm").alias("nm"))
     if conjunctive:
         # AND: a doc must match every distinct query term; an OOV term
-        # makes nm < nq for every doc of its query
+        # makes nm < n_must for every doc of its query
         docs = docs.where(F.col("nm") >= _per_query(
-            dict(zip(qt["query_id"], qt["n_query_terms"]))))
+            dict(zip(qt["query_id"], qt["n_must"]))))
     return docs.select("query_id", "doc_id")
 
 

@@ -93,8 +93,10 @@ out.write(
     "\n## 3. Query path (pushdown + broadcast + per-query kernel)\n\n"
     "PushedFilters carries In(term, ...) into the parquet scan (row\n"
     "groups without query terms are never read), the tiny query-term\n"
-    "table arrives via BroadcastExchange/BroadcastHashJoin, and the\n"
-    "block-max WAND kernel runs per query group. Round 4: the postings\n"
+    "table (the role-tagged term-query frame bm25_topk shares with\n"
+    "boolean_topk: role, n_must, msm) arrives via\n"
+    "BroadcastExchange/BroadcastHashJoin, and the block-max WAND\n"
+    "kernel runs per query group. Round 4: the postings\n"
     "are written partitionBy(part_id) — one file per contiguous term\n"
     "range of the samplesort plan — so the In(term) stats prune to ~one\n"
     "row group per wave at any corpus scale (note part_id arriving as a\n"
@@ -166,15 +168,20 @@ bq = pd.DataFrame(
 out.write(
     "\n## 6. Boolean query, distributed mode (per-query "
     "MUST/SHOULD/MUST_NOT)\n\n"
-    "All three clauses' terms ride ONE pushdown-pruned scan and one\n"
-    "broadcast join; the Project below MapInPandas turns each row's\n"
-    "role into per-row count constants (nm / nsh / nn), the producer\n"
-    "of section 4 sums them per doc in-task (MUST_NOT rows decode\n"
-    "doc_ids only), and the fused combine (the same\n"
-    "FlatMapGroupsInPandas as section 4) sums the partial counts and\n"
-    "keeps docs with every MUST term, min_should_match SHOULD terms\n"
-    "and no MUST_NOT term — per-query exclusion with no extra scan, no\n"
-    "task ever holding a whole posting.\n\n```\n"
+    "boolean_topk compiles its clauses to bm25_topk's role-tagged\n"
+    "term-query frame (one row per (query, term): role must / should /\n"
+    "not, n_must, msm) and runs bm25's own distributed runner, so this\n"
+    "plan is section 4's with a role-count projection. All three\n"
+    "clauses' terms ride ONE pushdown-pruned scan and one broadcast\n"
+    "join; the Project below MapInPandas turns each row's role into\n"
+    "per-row count constants — only the ones the batch needs: nm for\n"
+    "MUST and nn for MUST_NOT here, nsh only when a query sets\n"
+    "min_should_match. The producer sums them per doc in-task\n"
+    "(MUST_NOT rows decode doc_ids only), and the fused combine (the\n"
+    "same FlatMapGroupsInPandas) folds the partial counts and keeps\n"
+    "docs with `nm == n_must & nsh >= msm & nn == 0`. Because the\n"
+    "batch carries role counts, the θ entry prune is off; a\n"
+    "pure-SHOULD batch emits none and prunes like section 4.\n\n```\n"
 )
 out.write(
     plan_of(

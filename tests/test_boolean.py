@@ -7,7 +7,9 @@ import pandas as pd
 import pytest
 
 from capsbm25 import fixtures as fx
-from capsbm25.query import boolean_topk
+from capsbm25 import query as Q
+from capsbm25.parser import query_string_topk
+from capsbm25.query import bm25_topk, boolean_topk
 
 
 def _qpdf(rows):
@@ -187,3 +189,83 @@ def test_min_should_match_rejects_negative(built_index, spark):
     with pytest.raises(ValueError, match="min_should_match"):
         boolean_topk(spark, built_index["postings"], q, res.N,
                      res.avgdl, cfg)
+    # a fractional count raises too instead of truncating 1.5 to 1
+    q["min_should_match"] = 1.5
+    with pytest.raises(ValueError, match="min_should_match"):
+        boolean_topk(spark, built_index["postings"], q, res.N,
+                     res.avgdl, cfg)
+
+
+@pytest.mark.parametrize("col,val", [("offset", 5), ("after_score", 1.0),
+                                     ("after_doc", 3)])
+def test_paging_columns_rejected(built_index, spark, col, val):
+    """boolean_topk and query_string_topk do not page: an offset or
+    search_after column raises naming it instead of silently returning
+    page 1 (ranks 1..k for offset=5)."""
+    res, cfg = built_index["res"], built_index["cfg"]
+    qb = _qpdf([(0, "", fx.HOT_TERM, "", 5)]).assign(**{col: val})
+    with pytest.raises(ValueError, match=col):
+        boolean_topk(spark, built_index["postings"], qb, res.N,
+                     res.avgdl, cfg, mode="kernel")
+    qs = pd.DataFrame({"query_id": [0], "text": [fx.HOT_TERM], "k": [5],
+                       col: [val]})
+    with pytest.raises(ValueError, match=col):
+        query_string_topk(spark, built_index["postings"], qs, res.N,
+                          res.avgdl, cfg)
+
+
+@pytest.mark.parametrize("mode", ["kernel", "distributed"])
+def test_bm25_is_boolean_with_one_role(built_index, spark, mode):
+    """bm25_topk and boolean_topk are one term-query engine: a
+    conjunctive bm25 query is the boolean query with every term MUST,
+    a disjunctive one the boolean query with every term SHOULD — same
+    doc ids, bit-equal scores."""
+    res, cfg = built_index["res"], built_index["cfg"]
+    queries = fx.queries_pdf(42).head(8).reset_index(drop=True)
+    for conj, clause in ((True, "must"), (False, "should")):
+        want = bm25_topk(
+            spark, built_index["postings"], queries, res.N, res.avgdl,
+            cfg, mode=mode, conjunctive=conj,
+        ).toPandas().sort_values(["query_id", "rank"])
+        bq = pd.DataFrame({"query_id": queries["query_id"],
+                           "must": "", "should": "", "must_not": "",
+                           "k": queries["k"]})
+        bq[clause] = queries["text"]
+        got = boolean_topk(
+            spark, built_index["postings"], bq, res.N, res.avgdl, cfg,
+            mode=mode,
+        ).toPandas().sort_values(["query_id", "rank"])
+        assert len(want) > 0, clause
+        assert list(got.query_id) == list(want.query_id), clause
+        assert list(got.doc_id) == list(want.doc_id), clause
+        assert np.array_equal(got.score.to_numpy(),
+                              want.score.to_numpy()), clause
+
+
+def test_pure_should_batch_prunes_distributed(built_index, spark,
+                                              monkeypatch):
+    """A boolean batch with no MUST, min_should_match or MUST_NOT is a
+    disjunctive term query: the distributed path's θ entry-prune fires
+    (the frame handed to the combine holds a small fraction of the hot
+    term's df rows) and ranks still match the oracle."""
+    res, cfg, oracle = (built_index["res"], built_index["cfg"],
+                        built_index["oracle"])
+    hot_df = oracle.df(fx.HOT_TERM)
+    assert hot_df > 100  # the fixture's hot term is corpus-wide
+    queries = _qpdf([(0, "", fx.HOT_TERM, "", 5)])
+    counts = []
+    real = Q._fused_combine_topk
+
+    def counting(c, *args, **kwargs):
+        counts.append(c.count())
+        return real(c, *args, **kwargs)
+
+    monkeypatch.setattr(Q, "_fused_combine_topk", counting)
+    got = boolean_topk(
+        spark, built_index["postings"], queries, res.N, res.avgdl, cfg,
+        mode="distributed",
+    ).toPandas().sort_values("rank")
+    want = _want(oracle, queries)
+    assert list(got.doc_id) == list(want.doc_id)
+    assert np.allclose(got.score, want.score, atol=1e-9)
+    assert counts and counts[0] < max(50, hot_df // 10), (counts, hot_df)

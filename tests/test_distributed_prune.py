@@ -384,10 +384,10 @@ def test_prune_actually_fires(built_index, spark, monkeypatch):
 
     monkeypatch.setattr(Q, "_fused_combine_topk", counting)
     pruned = _run_distributed(
-        matched, df_map, res.N, res.avgdl, cfg, conjunctive=False,
+        matched, df_map, res.N, res.avgdl, cfg,
         qt=qt, prune=True).toPandas().sort_values("rank")
     unpruned = _run_distributed(
-        matched, df_map, res.N, res.avgdl, cfg, conjunctive=False,
+        matched, df_map, res.N, res.avgdl, cfg,
         qt=qt, prune=False).toPandas().sort_values("rank")
     assert list(pruned.doc_id) == list(unpruned.doc_id)
     assert np.allclose(pruned.score, unpruned.score, atol=1e-9)

@@ -1447,7 +1447,8 @@ def _neg_k_calls():
     def q(text, k):
         return pd.DataFrame({"query_id": np.array([7], dtype=np.int32),
                              "text": [text],
-                             "k": np.array([k], dtype=np.int32)})
+                             "k": np.array([k], dtype=np.int32)
+                             if isinstance(k, int) else [k]})
 
     def bm25(mode):
         return lambda ix, s, k: bm25_topk(
@@ -1488,5 +1489,10 @@ def test_negative_k_rejected_at_boundary(built_index, spark, call):
     the distributed tail returned none."""
     with pytest.raises(ValueError, match="query 7: k must be >= 0"):
         call(built_index, spark, -1).collect()
+    # a missing k names the query too, not a bare int() cast error
+    for bad in (None, float("nan")):
+        with pytest.raises(ValueError,
+                           match="query 7: k must be an integer"):
+            call(built_index, spark, bad).collect()
     # k = 0 stays a valid empty page
     assert call(built_index, spark, 0).count() == 0

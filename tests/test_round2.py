@@ -18,12 +18,14 @@ from capsbm25.scoring import idf as idf_fn
 from capsbm25.scoring import term_scores
 
 
-def _posting_row(qid, term, docs, tfs, dls, k, nq, df=None):
+def _posting_row(qid, term, docs, tfs, dls, k, df=None):
     return {
         "query_id": qid,
         "term": term,
         "k": k,
-        "n_query_terms": nq,
+        "role": "should",
+        "n_must": 0,
+        "msm": 0,
         "df": df if df is not None else len(docs),
         "cf": int(np.sum(tfs)),
         "doc_ids": delta_encode(np.asarray(docs, dtype=np.int64)),
@@ -59,9 +61,8 @@ def test_stale_blockmax_cannot_drop_topk():
     b_dls = [100] * 50 + [1] + [100] * 49
 
     pdf = pd.DataFrame([
-        _posting_row(0, "aaa", a_docs, a_tfs, a_dls, k, 2),
-        _posting_row(0, "bbb", b_docs, b_tfs, b_dls, k, 2,
-                     df=300_000),
+        _posting_row(0, "aaa", a_docs, a_tfs, a_dls, k),
+        _posting_row(0, "bbb", b_docs, b_tfs, b_dls, k, df=300_000),
     ])
     pruned = _score_query_kernel(pdf, N, avgdl, cfg, prune=True)
     exhaustive = _score_query_kernel(pdf, N, avgdl, cfg, prune=False)

@@ -141,8 +141,10 @@ from capsbm25.query import (
     RESULT_SCHEMA,
     _bm25_scorer,
     _check_k,
+    _check_unique_ids,
     _doc_partials,
     _fused_combine_topk,
+    _in_list,
     _reject_paging,
     _term_df_map,
     fuzzy_topk,
@@ -653,7 +655,7 @@ def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
     qdf = pdf_frame(spark, rows.rename(columns={"mbit": "mb"}).assign(
         cb=0, xn=(rows["role"] == "not").astype(np.int64)))
     terms = sorted(rows["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
+    filtered = postings.where(_in_list("term", terms))
     if "pos" in filtered.columns:
         filtered = filtered.drop("pos")
     if df_map is None:
@@ -795,6 +797,7 @@ def query_string_topk(
     so a field clause costs one metadata read, never a postings pass."""
     cfg = cfg or BuildConfig()
     _reject_paging(queries, "query_string_topk")
+    _check_unique_ids(queries)
     term_rows, phrase_cl, fuzzy_cl, wild_cl = [], [], [], []
     rx_cl, range_cl, field_cl, frange_cl = [], [], [], []
     meta: dict[int, dict] = {}  # qid -> the combine's per-query meta
@@ -907,7 +910,7 @@ def query_string_topk(
             # for df, not two
             all_terms = sorted({r[3] for r in term_rows})
             shared_dfm = dfm = _term_df_map(
-                postings.where(F.col("term").isin(all_terms)))
+                postings.where(_in_list("term", all_terms)))
             chosen: set[str] = set()
             for q in exp_qids:
                 best = min(must_groups[q].values(),
@@ -964,7 +967,7 @@ def query_string_topk(
         # job, just earlier
         if shared_dfm is None:
             shared_dfm = _term_df_map(postings.where(
-                F.col("term").isin(sorted(tpdf["term"].unique()))))
+                _in_list("term", sorted(tpdf["term"].unique()))))
         est_mass = int(sum(shared_dfm.get(t, 0) for t in tpdf["term"]))
         thunks.append(lambda: [_term_contribs(
             spark, postings,

@@ -107,6 +107,34 @@ def _check_k(qid, k, name: str = "k") -> int:
     return n
 
 
+def _check_unique_ids(queries: pd.DataFrame) -> None:
+    """A batch's query_id keys its result rows, its per-query k and
+    the expansion family's class sharing, so a repeated id would
+    silently merge two queries: raise naming the first one."""
+    dup = queries["query_id"][queries["query_id"].duplicated()]
+    if len(dup):
+        raise ValueError(f"query {dup.iloc[0]}: query_id appears more "
+                         "than once in the batch")
+
+
+def _in_list(col: str, values) -> F.Column:
+    """`col IN (values)` as one SQL expression: Column.isin makes one
+    py4j lit() round trip per value (~0.4 s for 1,000 terms on a 4-vCPU
+    host), the parsed expression one call. Values are strings (quote and backslash
+    escaped) or integers; the optimizer and the parquet pushdown see the
+    same In / InSet either way."""
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, (int, np.integer)):
+            return str(int(v))
+        raise TypeError(f"_in_list takes strings or integers, got {v!r}")
+
+    if not len(values):
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(lit(v) for v in values)})")
+
+
 def _reject_paging(queries: pd.DataFrame, surface: str) -> None:
     """Surfaces without pagination raise on an offset / search_after
     queries column instead of silently returning page 1."""
@@ -138,6 +166,7 @@ def _query_terms_pdf(queries: pd.DataFrame, cfg: BuildConfig,
     if require_k and "k" not in queries.columns:
         # top-k surfaces: a missing k must not silently return zero rows
         raise ValueError("queries must carry an integer k column")
+    _check_unique_ids(queries)
     rows = []
     role = "must" if conjunctive else "should"
     has_off = "offset" in queries.columns
@@ -543,7 +572,7 @@ def _term_query(spark, postings, qt, N, avgdl, cfg, mode, max_kernel_df,
     # so row groups without query terms are skipped entirely — the
     # broadcast join alone would still scan every posting row.
     terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
+    filtered = postings.where(_in_list("term", terms))
     if "pos" in filtered.columns:
         # BM25 never reads positions; on a positional index the pos
         # payload is ~10x the rest and applyInPandas ships EVERY column,
@@ -982,12 +1011,18 @@ def _fused_combine_topk(c: DataFrame, meta: dict, raw_mass: int | None,
     doc) cursor keeps docs strictly after it in (score DESC, doc_id
     ASC) order; then the tie-exact group-local top-(k + off).
 
-    meta: qid -> dict(k, off=0, after=None, caller extras) — driver
-    side and tiny, it rides the task closure. Every global top-(k +
-    off) doc wins its own salt bucket, so the phase-2 window over <= S
-    x (k + off) rows per query returns the exact page. cut=False
-    returns every kept per-doc row unranked, before cursor and cut
-    (collapse picks group heads first)."""
+    meta: qid -> dict(k, off=0, after=None, members=None, caller
+    extras) — driver side and tiny, it rides the task closure. Every
+    global top-(k + off) doc wins its own salt bucket, so the phase-2
+    window over <= S x (k + off) rows per query returns the exact page.
+    members: [(query_id, k), ...] when the group's query_id is a CLASS
+    of queries sharing one match set (the expansion family's class
+    sharing; meta k is then the largest member k): the group's rows
+    are emitted once per member under that member's query_id and k,
+    and the phase-2 window cuts each member to its own k — a top-(k)
+    prefix of the class ranking is a prefix of the top-(max k) one.
+    cut=False returns every kept per-doc row unranked, before cursor
+    and cut (collapse picks group heads first)."""
     salts = _fan_out(raw_mass)
     state = [s for s in _STATE_REDUCE if s in c.columns]
 
@@ -1020,12 +1055,14 @@ def _fused_combine_topk(c: DataFrame, meta: dict, raw_mass: int | None,
                 ties = np.sort(uniq[score == cv])[:kk - int(top.sum())]
                 top |= np.isin(uniq, ties) & (score == cv)
             uniq, score = uniq[top], score[top]
+        qids, ks = zip(*(m.get("members") or ((qid, k),)))
+        n, reps = uniq.size, len(qids)
         return pd.DataFrame(
-            {"query_id": np.full(uniq.size, qid, np.int32),
-             "doc_id": uniq,
-             "score": score,
-             "k": np.full(uniq.size, k, np.int32),
-             "off": np.full(uniq.size, off, np.int32)})
+            {"query_id": np.repeat(np.array(qids, np.int32), n),
+             "doc_id": np.tile(uniq, reps),
+             "score": np.tile(score, reps),
+             "k": np.repeat(np.array(ks, np.int32), n),
+             "off": np.full(n * reps, off, np.int32)})
 
     local = (
         c.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(salts)))
@@ -1263,7 +1300,7 @@ def explain_scores(
     qt = pd.DataFrame(rows, columns=["query_id", "term", "want"])
     qdf = pdf_frame(spark, qt)
     terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
+    filtered = postings.where(_in_list("term", terms))
     if "pos" in filtered.columns:
         filtered = filtered.drop("pos")
     df_map = _term_df_map(filtered)
@@ -1509,6 +1546,7 @@ def _synonym_groups_pdf(queries: pd.DataFrame, cfg: BuildConfig):
     Members tokenize individually (a member tokenizing to several
     terms contributes each). Returns one row per (query, group,
     member term), deduplicated within a group."""
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         gid, k = 0, _check_k(q.query_id, q.k)
@@ -1553,7 +1591,7 @@ def synonym_topk(
         return spark.createDataFrame([], RESULT_SCHEMA)
     qdf = pdf_frame(spark, qt)
     terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
+    filtered = postings.where(_in_list("term", terms))
     if "pos" in filtered.columns:
         filtered = filtered.drop("pos")
     df_map = _term_df_map(filtered)
@@ -1664,6 +1702,7 @@ def boolean_topk(
             "pass empty strings for unused clauses"
         )
     _reject_paging(queries, "boolean_topk")
+    _check_unique_ids(queries)
     rows = []
     def _clause(v):
         # "empty/None = no clause" includes pandas NaN (the normal
@@ -1768,6 +1807,7 @@ def phrase_topk(
     masks streaming deletes for phrase/substring queries too.
     """
     cfg = cfg or BuildConfig()
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         k = _check_k(q.query_id, q.k)
@@ -1782,7 +1822,7 @@ def phrase_topk(
         return spark.createDataFrame([], RESULT_SCHEMA)
     qdf = pdf_frame(spark, qt)
     terms = sorted(qt["term"].unique().tolist())
-    filtered = postings.where(F.col("term").isin(terms))
+    filtered = postings.where(_in_list("term", terms))
     matched = filtered.join(F.broadcast(qdf), "term")
 
     mode, doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
@@ -2415,14 +2455,14 @@ def more_like_this(
         return spark.createDataFrame(
             [], "src_doc_id long, doc_id long, score double, rank int")
     md = arrow_collect(
-        doc_map.where(F.col("doc_id").isin(srcs))
+        doc_map.where(_in_list("doc_id", srcs))
         .select("doc_id", "conv_id", "turn_idx")
     )
     if md.empty:
         return spark.createDataFrame(
             [], "src_doc_id long, doc_id long, score double, rank int")
     texts = arrow_collect(
-        corpus.where(F.col("conv_id").isin(sorted(set(md["conv_id"]))))
+        corpus.where(_in_list("conv_id", sorted(set(md["conv_id"]))))
         .select("conv_id", "turn_idx", "text")
         .join(F.broadcast(arrow_frame(spark, md)),
               ["conv_id", "turn_idx"])
@@ -2437,7 +2477,7 @@ def more_like_this(
     if not all_terms:
         return spark.createDataFrame(
             [], "src_doc_id long, doc_id long, score double, rank int")
-    df_map = _term_df_map(postings.where(F.col("term").isin(all_terms)))
+    df_map = _term_df_map(postings.where(_in_list("term", all_terms)))
 
     rows, src_of = [], {}
     for qid, (src, tfs) in enumerate(sorted(tf_by_src.items())):
@@ -2478,7 +2518,7 @@ def term_doc_ids(postings: DataFrame, terms: list[str]) -> DataFrame:
     bm25_topk(..., doc_exclude=term_doc_ids(postings, ["spam"]))
     is Lucene's MUST_NOT clause (candidates drop, scoring stats stay
     global). Pushdown-pruned scan, narrow decode, distinct."""
-    f = postings.where(F.col("term").isin(list(terms))).select(
+    f = postings.where(_in_list("term", list(terms))).select(
         F.lit(0).alias("query_id"), "doc_ids")
     return _doc_partials(f).select("doc_id").distinct()
 
@@ -2536,6 +2576,7 @@ def prefix_topk(
             "prefix_topk requires a word-tokenizer index; a prefix of "
             "a chargram is not meaningful — use substring_topk"
         )
+    _check_unique_ids(queries)
     qpdf = queries.copy()
     qpdf["k"] = [_check_k(q, k) for q, k in zip(qpdf["query_id"], qpdf["k"])]
     qpdf["prefix"] = [str(t or "").lower() for t in qpdf["text"]]
@@ -2553,14 +2594,11 @@ def prefix_topk(
     cond = F.col("term").startswith(prefixes[0])
     for p in prefixes[1:]:
         cond = cond | F.col("term").startswith(p)
-    matched = _expansion_matched(
+    return _expansion_result(spark, _expansion_matched(
         spark, postings, dictionary, pdf_frame(spark, qpdf),
         F.col("term").startswith(F.col("prefix")), scan_cond=cond,
         max_expansions=max_expansions,
-    )
-    if matched is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
+    ), qpdf, doc_filter, doc_exclude)
 
 
 def _expansion_matched(
@@ -2602,13 +2640,28 @@ def _expansion_matched(
        partitioned layout) + In(term) (row-group pruning) BEFORE
        payload columns are read; above _ISIN_MAX_TERMS distinct terms
        the prune becomes a broadcast semi-join instead of a giant
-       literal list. The pruned rows equi-join the broadcast pairs.
+       literal list;
+    4. queries whose final term sets are identical (a hot pattern
+       repeated across a batch) form one CLASS (_expansion_classes):
+       the pairs are rewritten to one row per (class, term) under the
+       class id, so each posting row is joined, transferred and
+       decoded once per class, not once per query. The expansion
+       score (summed tf) has no per-query state, and fuzzy's edit
+       distance only ranked the expansions above, so every member's
+       result is its class's. The pruned rows equi-join the broadcast
+       (term, class id) pairs.
 
     max_expansions=None disables the bound (collect capped at
     MAX_EXPANSION_COLLECT; beyond it a distributed term equi-join —
-    still dictionary-driven, never a theta join over payload rows).
-    Returns the matched posting-row frame carrying query_id and k, or
-    None when nothing matched.
+    still dictionary-driven, never a theta join over payload rows —
+    with no driver pairs, so no classes).
+
+    Returns None when nothing matched, else (matched, classes, mass):
+    the matched posting-row frame carrying query_id (the class id);
+    classes, member query_id -> class id (None on the equi-join path,
+    where every query is its own class); mass, Σ df over the
+    deduplicated pairs, which sizes the combine's fan-out (None when
+    unknown).
     """
     dic = dictionary if dictionary is not None else postings
     cols = ["term"] + [c for c in ("part_id", "df", "tlen")
@@ -2682,51 +2735,54 @@ def _expansion_matched(
                 "only (Lucene top-N rewrite semantics)",
                 int(max_expansions), sorted(capped.index.tolist()),
             )
+        pairs_pdf, classes = _expansion_classes(pairs_pdf)
         part_ids = None
         if has_part:
             part_ids = sorted(
                 {int(p) for lst in pairs_pdf["_pids"] for p in lst})
-        matched = _pruned_pair_join(spark, posts, pairs_pdf, has_part,
-                                    part_ids=part_ids)
-        _tag_expansion_mass(matched, pairs_pdf)
-        return matched
+        return (_pruned_pair_join(spark, posts, pairs_pdf, has_part,
+                                  part_ids=part_ids),
+                classes, int(pairs_pdf["df"].sum()))
 
     pairs_pdf = arrow_collect(dm.select(*sel_cols).limit(
         MAX_EXPANSION_COLLECT + 1))
     if len(pairs_pdf) <= MAX_EXPANSION_COLLECT:
         if pairs_pdf.empty:
             return None
-        matched = _pruned_pair_join(spark, posts, pairs_pdf, has_part)
-        _tag_expansion_mass(matched, pairs_pdf)
-        return matched
+        pairs_pdf, classes = _expansion_classes(pairs_pdf)
+        return (_pruned_pair_join(spark, posts, pairs_pdf, has_part),
+                classes, int(pairs_pdf["df"].sum()))
     _logger.info(
         "unbounded term expansion over %d matched pairs exceeds "
         "MAX_EXPANSION_COLLECT=%d — distributed term equi-join engaged",
         len(pairs_pdf), MAX_EXPANSION_COLLECT,
     )
     return posts.join(
-        dm.select("term", "query_id", "k").dropDuplicates(
-            ["term", "query_id"]),
+        dm.select("term", "query_id").dropDuplicates(),
         "term",
-    )
+    ), None, None
 
 
-def _tag_expansion_mass(matched, pairs_pdf) -> None:
-    """Record the batch's raw df mass (Σ df over (query, term) clause
-    pairs — already driver-side in the collected pairs) on the matched
-    frame, so the ranked tail can size the combine's fan-out without
-    an extra aggregate job. A plain python attribute: the tail
-    receives this exact object; consumers that restructure the frame
-    lose it and take the full fan-out (getattr default None)."""
-    try:
-        matched.expansion_df_mass = int(pairs_pdf["df"].sum())
-    except Exception:
-        pass
+def _expansion_classes(pairs_pdf: pd.DataFrame):
+    """Group the batch's queries by their sorted resolved term tuple.
+    A class's id is its smallest member query_id, whose pair rows are
+    exactly the class's, so the rewrite keeps that member's rows (one
+    per (class, term), or per (class, term, part) on the collect
+    path). Returns (rewritten pairs, {member query_id: class id})."""
+    first: dict[tuple, int] = {}
+    classes: dict[int, int] = {}
+    # groupby iterates query ids ascending: the first query seen with
+    # a term set is the class's smallest member
+    for qid, terms in pairs_pdf.groupby("query_id")["term"]:
+        classes[int(qid)] = first.setdefault(tuple(sorted(set(terms))),
+                                             int(qid))
+    own = pairs_pdf["query_id"].map(classes) == pairs_pdf["query_id"]
+    return pairs_pdf[own], classes
 
 
 def _pruned_pair_join(spark, posts, pairs_pdf, has_part, part_ids=None):
     """Prune the postings scan to the matched terms and equi-join the
-    broadcast (term, query_id, k) pairs. In(term) literals below
+    broadcast (term, query_id) pairs. In(term) literals below
     _ISIN_MAX_TERMS (pushed to parquet row-group stats); broadcast
     semi-join above (literal lists that large cost more to plan and
     codegen than the join). In(part_id) always — part counts are small
@@ -2737,14 +2793,14 @@ def _pruned_pair_join(spark, posts, pairs_pdf, has_part, part_ids=None):
     if has_part:
         if part_ids is None:
             part_ids = sorted(int(p) for p in set(pairs_pdf["part_id"]))
-        posts = posts.where(F.col("part_id").isin(part_ids))
+        posts = posts.where(_in_list("part_id", part_ids))
     if len(terms) <= _ISIN_MAX_TERMS:
-        pruned = posts.where(F.col("term").isin(terms))
+        pruned = posts.where(_in_list("term", terms))
     else:
         tdf = pdf_frame(spark, pd.DataFrame({"term": terms}))
         pruned = posts.join(F.broadcast(tdf), "term", "semi")
     pairs = pdf_frame(
-        spark, pairs_pdf[["term", "query_id", "k"]].drop_duplicates())
+        spark, pairs_pdf[["term", "query_id"]].drop_duplicates())
     return pruned.join(F.broadcast(pairs), "term")
 
 
@@ -2765,22 +2821,44 @@ def _expansion_masks(matched, doc_filter, doc_exclude):
     return df_, de_, fb, eb, empty
 
 
-def _term_expansion_topk(matched, queries: pd.DataFrame, doc_filter,
+def _expansion_result(spark, found, queries: pd.DataFrame, doc_filter,
+                      doc_exclude, docs_only: bool | str = False):
+    """Every expansion surface's tail: found = _expansion_matched's
+    return; the ranked top-k (_term_expansion_topk) or, with
+    docs_only, the membership (_expansion_doc_ids); empty when nothing
+    matched."""
+    if found is None:
+        return spark.createDataFrame(
+            [], _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA)
+    matched, classes, mass = found
+    if docs_only:
+        return _expansion_doc_ids(matched, classes, doc_filter,
+                                  doc_exclude, distinct=docs_only != "raw")
+    return _term_expansion_topk(matched, classes, mass, queries,
+                                doc_filter, doc_exclude)
+
+
+def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
+                         queries: pd.DataFrame, doc_filter,
                          doc_exclude) -> DataFrame:
-    """Shared tail of the term-EXPANSION query family (prefix, fuzzy,
-    wildcard): matched = posting rows joined to (query_id, k), docs
-    ranked by the summed tf of their matching terms (deterministic,
-    idf-free — an expansion set makes per-term idf unstable), ties by
-    doc_id. queries: the batch's (query_id, k) rows, driver side.
+    """Shared ranked tail of the term-EXPANSION query family (prefix,
+    fuzzy, wildcard, regexp, term_range): matched = posting rows joined
+    to their class id (query_id), docs ranked by the summed tf of their
+    matching terms (deterministic, idf-free — an expansion set makes
+    per-term idf unstable), ties by doc_id. classes: member query_id ->
+    class id from _expansion_matched (None: every query is its own
+    class); queries: the batch's (query_id, k) rows, driver side.
 
     Scale shape: an expansion over Zipf-head terms (e.g. wildcard
     `w00*` hitting the top-100 ranks) decodes a df-MASS of (doc, tf)
     pairs, tens of entries per doc when the matched terms co-occur;
     matched terms are term-range ADJACENT, so one task's rows overlap
-    heavily on docs. _doc_partials sums tf per (query, distinct doc in
+    heavily on docs. _doc_partials sums tf per (class, distinct doc in
     task) under its chunk bound, so the exploded pair frame never
     exists and the shuffle input is distinct-docs-sized; then the
-    fused combine + top-k. Bounded doc_filter/doc_exclude sets mask
+    fused combine + top-k, once per class at the largest member k,
+    fanned out to each member query (its own k) inside the combine —
+    no extra join or job. Bounded doc_filter/doc_exclude sets mask
     INSIDE the producer (_expansion_masks), oversized ones keep the
     semi/anti joins."""
     doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
@@ -2795,22 +2873,23 @@ def _term_expansion_topk(matched, queries: pd.DataFrame, doc_filter,
         lambda row, tfs, dls: tfs.astype(np.float64), None,
         filt_bc, excl_bc, doc_filter, doc_exclude)
     # tf sums are integers < 2^53, so the combine's double addition is
-    # exact in any order. The raw df mass rides the matched frame from
-    # _expansion_matched (driver side, no extra job); the unbounded
-    # equi-join path has none and takes the full fan-out.
-    meta = {int(r.query_id): {"k": int(r.k)}
-            for r in queries.itertuples(index=False)}
-    return _fused_combine_topk(
-        c, meta, getattr(matched, "expansion_df_mass", None)
-    ).orderBy("query_id", "rank")
+    # exact in any order. mass (Σ df over the deduplicated pairs) sizes
+    # the fan-out; the unbounded equi-join path has none and takes the
+    # full fan-out.
+    ks = {int(r.query_id): int(r.k) for r in queries.itertuples(index=False)}
+    meta: dict = {}
+    for qid, cls in (classes or {q: q for q in ks}).items():
+        m = meta.setdefault(cls, {"k": 0, "members": []})
+        m["k"] = max(m["k"], ks[qid])
+        m["members"].append((qid, ks[qid]))
+    return _fused_combine_topk(c, meta, mass).orderBy("query_id", "rank")
 
 
 _EXPANSION_DOCS_SCHEMA = "query_id int, doc_id long"
 
 
-def _expansion_doc_ids(matched, doc_filter=None,
-                       doc_exclude=None,
-                       distinct: bool = True) -> DataFrame:
+def _expansion_doc_ids(matched, classes: dict | None, doc_filter,
+                       doc_exclude, distinct: bool = True) -> DataFrame:
     """MEMBERSHIP of an expansion match — distinct (query_id, doc_id)
     over the matched posting rows, no tf decode, no ranking. This is
     what a CONSTANT-SCORE rewrite consumer (the query-string parser's
@@ -2821,8 +2900,11 @@ def _expansion_doc_ids(matched, doc_filter=None,
     path — membership must respect liveDocs and filters identically (a
     constant-score consumer composing the set into MUST clauses would
     otherwise resurrect excluded docs). _doc_partials dedups per
-    (query, task): adjacent expanded terms overlap heavily on docs, so
-    the raw per-(term, doc) frame is several times the membership."""
+    (class, task): adjacent expanded terms overlap heavily on docs, so
+    the raw per-(term, doc) frame is several times the membership.
+    When a class has several members (classes: member query_id ->
+    class id), one broadcast join on (class -> query_id) fans the class
+    rows out to every member, after the dedup."""
     doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _expansion_masks(matched, doc_filter, doc_exclude)
     if empty:
@@ -2830,13 +2912,20 @@ def _expansion_doc_ids(matched, doc_filter=None,
             [], _EXPANSION_DOCS_SCHEMA)
     out = _doc_partials(matched.select("query_id", "doc_ids"), None,
                         None, filt_bc, excl_bc, doc_filter, doc_exclude)
-    if not distinct:
-        # "raw" membership: per-task distinct only — an IDEMPOTENT
-        # consumer (the query-string parser's bit_or combine) absorbs
-        # cross-task duplicates, so the global dedup shuffle (the
-        # largest frame in a constant-score pipeline) is pure waste
+    # "raw" membership: per-task distinct only — an IDEMPOTENT consumer
+    # (the query-string parser's bit_or combine) absorbs cross-task
+    # duplicates, so the global dedup shuffle (the largest frame in a
+    # constant-score pipeline) is pure waste
+    if distinct:
+        out = out.dropDuplicates(["query_id", "doc_id"])
+    if not classes or all(q == c for q, c in classes.items()):
         return out
-    return out.dropDuplicates(["query_id", "doc_id"])
+    fan = pdf_frame(matched.sparkSession,
+                    pd.DataFrame({"cls": list(classes.values()),
+                                  "query_id": list(classes)}),
+                    ddl="cls int, query_id int")
+    return (out.withColumnRenamed("query_id", "cls")
+            .join(F.broadcast(fan), "cls").select("query_id", "doc_id"))
 
 
 def _damerau_levenshtein(a: str, b: str) -> int:
@@ -2968,6 +3057,7 @@ def fuzzy_topk(
         )
     if not 0 <= int(max_edits) <= 2:
         raise ValueError("max_edits must be 0..2 (the Lucene bound)")
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         toks = tokenize_py(q.text or "", cfg)
@@ -3016,7 +3106,7 @@ def fuzzy_topk(
         dist_col = _dl_dist(F.col("term"), F.col("qterm"))
     else:
         dist_col = F.levenshtein(F.col("term"), F.col("qterm"), me)
-    matched = _expansion_matched(
+    return _expansion_result(spark, _expansion_matched(
         spark, postings, dictionary,
         pdf_frame(spark, qpdf.drop(columns=["pfx"])
                   if prefix_len <= 0 else qpdf),
@@ -3024,13 +3114,7 @@ def fuzzy_topk(
         max_expansions=max_expansions,
         rank_cols=[("dist", True), ("df", False), ("term", True)],
         post_cols={"dist": dist_col},
-    )
-    if matched is None:
-        return spark.createDataFrame([], empty_schema)
-    if docs_only:
-        return _expansion_doc_ids(matched, doc_filter, doc_exclude,
-                                  distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
+    ), qpdf, doc_filter, doc_exclude, docs_only)
 
 
 def wildcard_topk(
@@ -3072,6 +3156,7 @@ def wildcard_topk(
             "wildcard_topk requires a word-tokenizer index; use "
             "substring_topk on a chargram index"
         )
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         pat = str(q.text or "").lower()
@@ -3100,18 +3185,12 @@ def wildcard_topk(
             scan_cond = scan_cond | F.col("term").startswith(p_)
     # Column.like only takes a literal; the per-row pattern goes
     # through the SQL expression form (same LIKE semantics)
-    matched = _expansion_matched(
+    return _expansion_result(spark, _expansion_matched(
         spark, postings, dictionary,
         pdf_frame(spark, qpdf.drop(columns=["pat"])),
         F.expr("term LIKE like_pat"), scan_cond=scan_cond,
         max_expansions=max_expansions,
-    )
-    if matched is None:
-        return spark.createDataFrame([], empty_schema)
-    if docs_only:
-        return _expansion_doc_ids(matched, doc_filter, doc_exclude,
-                                  distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
+    ), qpdf, doc_filter, doc_exclude, docs_only)
 
 
 # regex metachars allowed in regexp_topk patterns: the common
@@ -3192,6 +3271,7 @@ def regexp_topk(
             "regexp_topk requires a word-tokenizer index; use "
             "substring_topk on a chargram index"
         )
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         pat = validate_regexp_pattern(q.text)
@@ -3230,18 +3310,12 @@ def regexp_topk(
         scan_cond = F.col("term").startswith(lead[0])
         for p_ in lead[1:]:
             scan_cond = scan_cond | F.col("term").startswith(p_)
-    matched = _expansion_matched(
+    return _expansion_result(spark, _expansion_matched(
         spark, postings, dictionary,
         pdf_frame(spark, qpdf.drop(columns=["pat"])),
         F.expr("term RLIKE rx"), scan_cond=scan_cond,
         max_expansions=max_expansions,
-    )
-    if matched is None:
-        return spark.createDataFrame([], empty_schema)
-    if docs_only:
-        return _expansion_doc_ids(matched, doc_filter, doc_exclude,
-                                  distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
+    ), qpdf, doc_filter, doc_exclude, docs_only)
 
 
 def term_range_topk(
@@ -3284,6 +3358,7 @@ def term_range_topk(
     def _bound(v):
         return v.lower() if isinstance(v, str) and v else None
 
+    _check_unique_ids(queries)
     rows = []
     for q in queries.itertuples(index=False):
         lo = _bound(getattr(q, "lo", None))
@@ -3331,17 +3406,11 @@ def term_range_topk(
         ddl="query_id long, lo string, hi string, inc_lo boolean, "
             "inc_hi boolean, k long",
     )
-    matched = _expansion_matched(
+    return _expansion_result(spark, _expansion_matched(
         spark, postings, dictionary, qdf,
         join_cond, scan_cond=scan_cond,
         max_expansions=max_expansions,
-    )
-    if matched is None:
-        return spark.createDataFrame([], empty_schema)
-    if docs_only:
-        return _expansion_doc_ids(matched, doc_filter, doc_exclude,
-                                  distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, qpdf, doc_filter, doc_exclude)
+    ), qpdf, doc_filter, doc_exclude, docs_only)
 
 
 def facet_counts(
@@ -3416,7 +3485,7 @@ def _match_docs(spark, postings, queries: pd.DataFrame, cfg,
     terms = sorted(qt["term"].unique().tolist())
     # select BEFORE the join so ReadSchema prunes to (term, doc_ids) —
     # tf/dl/pos are never read for membership
-    matched = postings.where(F.col("term").isin(terms)).select(
+    matched = postings.where(_in_list("term", terms)).select(
         "term", "doc_ids").join(F.broadcast(qdf), "term")
     docs = _doc_partials(
         matched.select("query_id", "doc_ids", F.lit(1).alias("nm"))
@@ -3878,6 +3947,7 @@ def substring_topk(
             "(cfg.tokenizer='chargram'); this index was built with "
             f"tokenizer={cfg.tokenizer!r}"
         )
+    _check_unique_ids(queries)
     n = cfg.chargram_n
     short_mask = queries["text"].map(
         lambda t: len((t or "").lower()) < n

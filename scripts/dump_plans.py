@@ -214,16 +214,21 @@ out.write(plan_of(
                   & _fuzzy_scan_cond([5], 2))))
 out.write(
     "```\n\n"
-    "(b) the scoring tail over the <= max_expansions matched terms:\n"
-    "In(term) pushdown prunes the postings scan, the MapInPandas\n"
-    "producer of section 4 sums tf per (query, distinct doc in task) —\n"
-    "the\n"
-    "df-mass pair explosion never materializes — and the fused\n"
-    "combine sums tf per doc and keeps the group-local top-k before\n"
-    "one Window ranks the survivors:\n\n```\n"
+    "(b) the scoring tail over the <= max_expansions matched terms of\n"
+    "a batch of three `w00*` copies (k 5, 10, 10). Queries with the\n"
+    "same resolved term set form one class, so the broadcast pairs\n"
+    "carry one row per (class, term) and each posting row is joined,\n"
+    "transferred and decoded once. In(term) pushdown prunes the\n"
+    "postings scan, the MapInPandas producer of section 4 sums tf per\n"
+    "(class, distinct doc in task) — the df-mass pair explosion never\n"
+    "materializes — and the fused combine sums tf per doc, keeps the\n"
+    "group-local top-(largest member k) and emits it once per member\n"
+    "query with that member's k; one Window ranks each member's\n"
+    "survivors. No join fans the class out:\n\n```\n"
 )
-wq = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
-                   "text": ["w00*"], "k": np.array([10], dtype=np.int32)})
+wq = pd.DataFrame({"query_id": np.arange(3, dtype=np.int32),
+                   "text": ["w00*"] * 3,
+                   "k": np.array([5, 10, 10], dtype=np.int32)})
 out.write(plan_of(wildcard_topk(spark, postings, wq, cfg)))
 out.write("\n```\n")
 
@@ -273,9 +278,9 @@ out.write("\n```\n")
 # ---- 10. query-string parser (composition) ----
 from capsbm25.parser import query_string_topk  # noqa: E402
 
-pq = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
-                   "text": ["+w0001 w0002 w00* hotterm~1"],
-                   "k": np.array([10], dtype=np.int32)})
+pq = pd.DataFrame({"query_id": np.arange(2, dtype=np.int32),
+                   "text": ["+w0001 w0002 w00* hotterm~1", "w0003 w00*"],
+                   "k": np.array([10, 10], dtype=np.int32)})
 out.write(
     "\n## 10. Query-string parser (one string -> clause composition)\n\n"
     "Term clauses of the whole batch share ONE In(term)-pruned scan\n"
@@ -284,7 +289,10 @@ out.write(
     "constants);\n"
     "expansion clauses resolve through their surfaces' docs_only\n"
     "membership path (their dictionary match collected eagerly above\n"
-    "this plan, like section 7a); the combine is a single union ->\n"
+    "this plan, like section 7a). Both queries carry `w00*`, so the\n"
+    "wildcard sub-call decodes it once as one class and one broadcast\n"
+    "join on (class -> query_id) fans the membership out to both\n"
+    "clauses; the combine is a single union ->\n"
     "the fused combine of section 4 (per-doc MUST-group bits, MUST_NOT\n"
     "flag and constant-clause boosts folded in the same group call) ->\n"
     "one Window. One clause KIND absent from a batch contributes\n"

@@ -4,6 +4,7 @@ against naive expansion oracles, same summed-tf ranking contract as
 prefix_topk."""
 
 import fnmatch
+import re
 
 import numpy as np
 import pandas as pd
@@ -143,6 +144,11 @@ def test_wildcard_prefix_pattern_prunes_scan(built_index, spark):
     # round 5: the predicate runs on the term DICTIONARY; the postings
     # scan is pruned by the pushed In(term) of the matched expansion
     assert "In(term" in plan.replace("\n", " "), plan[:1500]
+    # the SQL-built In list (_in_list) still reaches the parquet scan
+    pushed = [seg.split("ReadSchema")[0] for seg in
+              plan.replace("\n", " ").split("PushedFilters: ")[1:]]
+    assert any("In(term" in p_ or "InSet(term" in p_ for p_ in pushed), \
+        plan[:1500]
 
 
 def test_wildcard_rejects_bad_pattern(built_index, spark):
@@ -705,3 +711,182 @@ def test_expansion_fused_tail_rank_identical(built_index, spark,
                 oracle, lambda t, p=p: _lev(t, p) <= 1, 10)
             assert want
             _check_one(got_f, qid, want)
+
+
+# ------------------------------------------------- class sharing
+
+# per surface: the batch rows (query_id, spec, k) and the term predicate
+# of a spec. Duplicate specs with different k (one k=0) share a class; a
+# sub-pattern and a no-match spec ride along. prefix, regexp and
+# term_range take the unbounded collect path, wildcard and fuzzy the
+# bounded one.
+_CLASS_CASES = {
+    "wildcard": ([(5, "w0*", 3), (2, "w0*", 10), (9, "w0*", 0),
+                  (7, "w00*", 25), (4, "zzq*", 5)],
+                 lambda p: lambda t: fnmatch.fnmatchcase(t, p)),
+    "prefix": ([(5, "w0", 3), (2, "w0", 10), (9, "w0", 0),
+                (7, "w00", 25), (4, "zzq", 5)],
+               lambda p: lambda t: t.startswith(p)),
+    "fuzzy": ([(5, "w0001", 3), (2, "w0001", 10), (9, "w0001", 0),
+               (7, "w0010", 25), (4, "qqqqqqqq", 5)],
+              lambda p: lambda t: _lev(t, p) <= 1),
+    "regexp": ([(5, "w0.*", 3), (2, "w0.*", 10), (9, "w0.*", 0),
+                (7, "w00.*", 25), (4, "zzq.*", 5)],
+               lambda p: lambda t: re.fullmatch(p, t) is not None),
+    "term_range": ([(5, ("w0000", "w0999"), 3), (2, ("w0000", "w0999"), 10),
+                    (9, ("w0000", "w0999"), 0), (7, ("w0100", "w0199"), 25),
+                    (4, ("zzzz0", "zzzz9"), 5)],
+                   lambda b: lambda t: b[0] <= t <= b[1]),
+}
+
+
+def _class_batch(surface, rows):
+    qids = np.array([r[0] for r in rows], dtype=np.int32)
+    ks = np.array([r[2] for r in rows], dtype=np.int32)
+    if surface == "term_range":
+        return pd.DataFrame({"query_id": qids,
+                             "lo": [r[1][0] for r in rows],
+                             "hi": [r[1][1] for r in rows], "k": ks})
+    return pd.DataFrame({"query_id": qids,
+                         "text": [r[1] for r in rows], "k": ks})
+
+
+def _class_call(surface, ix, spark, queries, **kw):
+    from capsbm25.query import prefix_topk, regexp_topk, term_range_topk
+
+    fn, extra = {
+        "wildcard": (wildcard_topk, {}),
+        "prefix": (prefix_topk, {"max_expansions": None}),
+        "fuzzy": (fuzzy_topk, {"max_edits": 1}),
+        "regexp": (regexp_topk, {"max_expansions": None}),
+        "term_range": (term_range_topk, {"max_expansions": None}),
+    }[surface]
+    return fn(spark, ix["postings"], queries, ix["cfg"], **extra,
+              **kw).toPandas()
+
+
+def _ranked(got, qid):
+    g = got[got.query_id == qid].sort_values("rank")
+    return list(zip(g.doc_id, g.score, g["rank"]))
+
+
+@pytest.mark.parametrize("surface", sorted(_CLASS_CASES))
+def test_class_sharing_equals_single_queries(built_index, spark, surface):
+    """Queries with identical resolved term sets share one decode,
+    fold and combine; each still gets its own k. The batch equals the
+    union of one-query calls with bit-equal scores, and the naive
+    expansion oracle."""
+    rows, pred = _CLASS_CASES[surface]
+    oracle = built_index["oracle"]
+    got = _class_call(surface, built_index, spark,
+                      _class_batch(surface, rows))
+    for row in rows:
+        qid, spec, k = row
+        one = _class_call(surface, built_index, spark,
+                          _class_batch(surface, [row]))
+        assert _ranked(got, qid) == _ranked(one, qid), qid
+        _check_one(got, qid, _expansion_want(oracle, pred(spec), k))
+
+
+@pytest.mark.parametrize("surface", sorted(_CLASS_CASES))
+def test_class_sharing_filters_and_membership(built_index, spark,
+                                              surface):
+    """Class sharing under doc_filter / doc_exclude on the ranked tail,
+    and on the membership fan-out (docs_only=True and "raw")."""
+    rows, pred = _CLASS_CASES[surface]
+    oracle = built_index["oracle"]
+    queries = _class_batch(surface, rows)
+    ids = np.array(sorted({d for post in oracle.postings.values()
+                           for d in post}), dtype=np.int64)
+    filt, excl = ids[ids % 3 != 0], ids[ids % 2 == 0]
+
+    def docs(spec, keep=lambda d: True):
+        fn = pred(spec)
+        return {d for t in oracle.postings if fn(t)
+                for d in oracle.postings[t] if keep(d)}
+
+    for kw, keep in (({"doc_filter": filt}, lambda d: d % 3 != 0),
+                     ({"doc_exclude": excl}, lambda d: d % 2 != 0)):
+        got = _class_call(surface, built_index, spark, queries, **kw)
+        for qid, spec, k in rows:
+            want = [(d, s) for d, s in _expansion_want(
+                oracle, pred(spec), 10 ** 6) if keep(d)][:k]
+            _check_one(got, qid, want)
+    if surface == "prefix":  # prefix_topk has no membership mode
+        return
+    for docs_only in (True, "raw"):
+        got = _class_call(surface, built_index, spark, queries,
+                          docs_only=docs_only, doc_exclude=excl)
+        for qid, spec, _ in rows:
+            g = got[got.query_id == qid]
+            assert set(g.doc_id) == docs(spec, lambda d: d % 2 != 0), qid
+            if docs_only is True:
+                assert len(g) == g.doc_id.nunique(), qid
+
+
+def test_class_sharing_decodes_once(built_index, spark, monkeypatch):
+    """A 30-copy batch of one hot pattern hands the producer as many
+    matched posting rows as a 1-copy batch: every row is joined,
+    transferred and decoded once per class, not once per query."""
+    import capsbm25.query as Q
+
+    counts = []
+    real = Q._doc_partials
+
+    def counting(matched, *args, **kwargs):
+        counts.append(matched.count())
+        return real(matched, *args, **kwargs)
+
+    monkeypatch.setattr(Q, "_doc_partials", counting)
+    results = []
+    for n in (1, 30):
+        q = pd.DataFrame({"query_id": np.arange(n, dtype=np.int32),
+                          "text": ["w0*"] * n,
+                          "k": np.full(n, 10, dtype=np.int32)})
+        results.append(wildcard_topk(spark, built_index["postings"], q,
+                                     built_index["cfg"]).toPandas())
+    assert counts[0] == counts[1] > 0
+    first = _ranked(results[0], 0)
+    assert len(first) == 10
+    for qid in range(30):
+        assert _ranked(results[1], qid) == first, qid
+
+
+def test_class_sharing_query_string(built_index, spark):
+    """Query-string expansion clauses reach the expansion surfaces
+    through docs_only="raw": three queries carrying the same `w0*`
+    clause share one class and each still matches its oracle."""
+    from capsbm25.parser import query_string_topk
+
+    res, cfg, oracle = (built_index["res"], built_index["cfg"],
+                        built_index["oracle"])
+    texts = ["w0* w0001", "+w0002 w0*^2", "w0*", "w00*"]
+    q = pd.DataFrame({"query_id": np.arange(4, dtype=np.int32),
+                      "text": texts,
+                      "k": np.full(4, 30, dtype=np.int32)})
+    got = query_string_topk(spark, built_index["postings"], q, res.N,
+                            res.avgdl, cfg).toPandas()
+
+    def docs(prefix):
+        return {d for t in oracle.postings if t.startswith(prefix)
+                for d in oracle.postings[t]}
+
+    def bm25(t):
+        return {d: oracle.score_doc([t], d) for d in oracle.postings[t]}
+
+    def rank(scores, k=30):
+        return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+    w0, w00 = docs("w0"), docs("w00")
+    s0 = {d: 1.0 for d in w0}
+    for d, s in bm25("w0001").items():
+        s0[d] = s0.get(d, 0.0) + s
+    s1 = {d: s + (2.0 if d in w0 else 0.0)
+          for d, s in bm25("w0002").items()}
+    wants = [rank(s0), rank(s1), rank({d: 1.0 for d in w0}),
+             rank({d: 1.0 for d in w00})]
+    for qid, want in enumerate(wants):
+        assert want, qid
+        g = got[got.query_id == qid].sort_values("rank")
+        assert list(g.doc_id) == [d for d, _ in want], qid
+        assert np.allclose(g.score, [s for _, s in want]), qid

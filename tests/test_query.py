@@ -1496,3 +1496,89 @@ def test_negative_k_rejected_at_boundary(built_index, spark, call):
             call(built_index, spark, bad).collect()
     # k = 0 stays a valid empty page
     assert call(built_index, spark, 0).count() == 0
+
+
+def _dup_id_calls():
+    """(id, call(ix, spark)) for the batch surfaces that read a
+    per-query k, each on a two-row batch repeating query_id 1."""
+    from capsbm25.build import load_doc_stats
+    from capsbm25.parser import query_string_topk
+    from capsbm25.query import (boolean_topk, fuzzy_topk, phrase_topk,
+                                prefix_topk, regexp_topk, sorted_topk,
+                                synonym_topk, term_range_topk,
+                                wildcard_topk)
+
+    def q(a, b):
+        return pd.DataFrame({"query_id": np.array([1, 1], dtype=np.int32),
+                             "text": [a, b],
+                             "k": np.array([3, 5], dtype=np.int32)})
+
+    def terms(fn, a=f"{fx.HOT_TERM} rare1047tok", b="rare1053tok",
+              **kw):
+        return lambda ix, s: fn(s, ix["postings"], q(a, b), ix["res"].N,
+                                ix["res"].avgdl, ix["cfg"], **kw)
+
+    def expansion(fn, a, b, **kw):
+        return lambda ix, s: fn(s, ix["postings"], q(a, b), ix["cfg"],
+                                **kw)
+
+    def boolean(ix, s):
+        qb = pd.DataFrame({"query_id": [1, 1], "must": [fx.HOT_TERM, ""],
+                           "should": ["", "w0001"], "must_not": ["", ""],
+                           "k": [3, 5]})
+        return boolean_topk(s, ix["postings"], qb, ix["res"].N,
+                            ix["res"].avgdl, ix["cfg"])
+
+    def term_range(ix, s):
+        qr = pd.DataFrame({"query_id": [1, 1], "lo": ["w0000", "w0100"],
+                           "hi": ["w0099", "w0199"], "k": [3, 5]})
+        return term_range_topk(s, ix["postings"], qr, ix["cfg"])
+
+    def sorted_(ix, s):
+        return sorted_topk(s, ix["postings"], q("w0001", "w0002"),
+                           load_doc_stats(s, ix["res"].out_dir), "dl",
+                           ix["cfg"])
+
+    return [
+        ("bm25_kernel", terms(bm25_topk, mode="kernel")),
+        ("bm25_distributed", terms(bm25_topk, mode="distributed")),
+        ("boolean", boolean),
+        ("query_string", terms(query_string_topk, "w00*", "w0001")),
+        ("synonym", terms(synonym_topk, "w0001|w0002", "w0003")),
+        ("phrase", terms(phrase_topk, "w0001 w0002", "w0003")),
+        ("sorted", sorted_),
+        ("wildcard", expansion(wildcard_topk, "w0*", "w00*")),
+        ("prefix", expansion(prefix_topk, "w0", "w00")),
+        ("fuzzy", expansion(fuzzy_topk, "w0001", "w0002")),
+        ("regexp", expansion(regexp_topk, "w0.*", "w00.*")),
+        ("term_range", term_range),
+    ]
+
+
+@pytest.mark.parametrize(
+    "call", [pytest.param(c, id=n) for n, c in _dup_id_calls()])
+def test_duplicate_query_id_rejected(built_index, spark, call):
+    """A query_id repeated within one batch raises a ValueError naming
+    it before any job runs. Before, bm25 merged both texts under the
+    first k, boolean returned no rows and the expansion family merged
+    both patterns under the last k."""
+    with pytest.raises(ValueError,
+                       match="query 1: query_id appears more than once"):
+        call(built_index, spark).collect()
+
+
+def test_in_list_escapes_quotes_and_backslashes(spark):
+    """_in_list builds one SQL IN expression; quotes and backslashes in
+    values must round-trip as literal characters."""
+    from capsbm25.query import _in_list
+
+    vals = ["it's", "back\\slash", "both\\'", "\\", "'", "50%", "a_b",
+            "plain"]
+    df = spark.createDataFrame(pd.DataFrame(
+        {"term": vals + ["its", "backslash", "50", "ab"],
+         "n": np.arange(len(vals) + 4, dtype=np.int64)}))
+    got = [r.term for r in df.where(_in_list("term", vals)).collect()]
+    assert sorted(got) == sorted(vals)
+    got = [r.n for r in df.where(_in_list("n", [0, np.int64(9)])).collect()]
+    assert sorted(got) == [0, 9]
+    assert df.where(_in_list("term", [])).count() == 0

@@ -110,23 +110,26 @@ group; a bare MUST clause is its own singleton group), no MUST_NOT
 clause, and at least one positive clause. Ties break doc_id ASC.
 Returns the engine-wide (query_id, doc_id, score, rank) result shape.
 
-Scale shape: one In(term)-pruned narrow pass scores ALL term clauses
-of the batch (decode streams per posting row; nothing collected);
-phrase / NEAR / fuzzy / wildcard / regexp / range clauses batch into
-their existing surfaces (one call per kind — per distinct window for
-proximity, per distinct max_edits for fuzzy, one batched call for
-all ranges) with the full-match k, so each inherits
-its surface's scale path (chunked candidate masks, bounded expansion
-rewrite, dictionary pruning); ALL metadata field clauses evaluate in
-one pushed-predicate scan of the doc_fields frame (posting payloads
-never read); the combine is the engine's one fused combine + top-k
-over (query, doc) contribution rows. A clause kind absent from the
-batch costs nothing.
+Scale shape: one term pass serves ALL term and expansion clauses of
+the batch. Every fuzzy / wildcard / regexp / range clause resolves in
+ONE dictionary pass (bounded max_expansions rewrite per clause,
+dictionary pruning); clauses whose resolved term sets are equal share
+a class, and each class's (class, term) pairs join the term clauses in
+one In(term)-pruned scan and one producer (decode streams per posting
+row; a class decodes once, whatever number of clauses share it).
+Phrase / NEAR clauses batch into their surfaces (one call per distinct
+window) with the full-match k, so they inherit its scale path (chunked
+candidate masks); ALL metadata field clauses evaluate in one
+pushed-predicate scan of the doc_fields frame (posting payloads never
+read); the combine is the engine's one fused combine + top-k over
+(query, doc) contribution rows. A clause kind absent from the batch
+costs nothing.
 """
 
 from __future__ import annotations
 
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -137,23 +140,25 @@ from capsbm25.catalog import arrow_collect, pdf_frame
 from capsbm25.config import BuildConfig
 from capsbm25.query import (
     MAX_EXPANSIONS_DEFAULT,
-    term_doc_ids,
     RESULT_SCHEMA,
     _bm25_scorer,
     _check_k,
     _check_unique_ids,
     _doc_partials,
+    _expansion_matched,
     _fused_combine_topk,
+    _fuzzy_match,
     _in_list,
+    _range_match,
+    _regexp_match,
     _reject_paging,
     _term_df_map,
-    fuzzy_topk,
+    _term_prune,
+    _wildcard_match,
     near_topk,
     phrase_topk,
-    regexp_topk,
-    term_range_topk,
+    term_doc_ids,
     validate_regexp_pattern,
-    wildcard_topk,
 )
 from capsbm25.tokenize import tokenize_py
 
@@ -641,32 +646,148 @@ def _parse_simple_chunk(chunk: str, role: str, cfg: BuildConfig,
 # than mis-count
 _MAX_MUST_BITS = 62
 
+# the multi-term clause kinds, resolved together by _resolve_expansions
+_EXPANSION_KINDS = ("fuzzy", "wildcard", "regexp", "range")
 
-def _term_contribs(spark, postings, rows: pd.DataFrame, N, avgdl, cfg,
-                    df_map: dict | None = None):
-    """One narrow pass scoring every term clause of the batch:
-    In(term)-pruned scan, broadcast clause join, then the engine's
-    producer (_doc_partials): BM25 x boost (0 for MUST_NOT rows — only
-    membership matters), combined per (query, doc) in-task. The
-    clause frame carries the fused state as per-row constants — the
-    clause's MUST-group bit (mb), no constant-clause bit (cb) and the
-    prohibited flag (xn) — so the combine folds distinct-doc rows with
-    one sum/bit_or/max each."""
-    qdf = pdf_frame(spark, rows.rename(columns={"mbit": "mb"}).assign(
-        cb=0, xn=(rows["role"] == "not").astype(np.int64)))
-    terms = sorted(rows["term"].unique().tolist())
-    filtered = postings.where(_in_list("term", terms))
-    if "pos" in filtered.columns:
-        filtered = filtered.drop("pos")
-    if df_map is None:
-        df_map = _term_df_map(filtered)
+# synthetic expansion-clause ids start above the int32 query-id range:
+# they key the class rows of the term pass, which must never collide
+# with a query's own term rows
+_CLAUSE_ID0 = 1 << 31
+
+# the one expansion clause frame: every kind's match columns, null on
+# the other kinds' rows
+_EXPANSION_DDL = ("query_id long, kind string, qterm string, me int, "
+                  "like_pat string, rx string, lo string, hi string, "
+                  "inc_lo boolean, inc_hi boolean")
+
+
+def _resolve_expansions(spark, postings, exp: pd.DataFrame, dictionary,
+                        max_expansions):
+    """Resolve every fuzzy / wildcard / regexp / range clause of the
+    batch with ONE _expansion_matched call (one dictionary pass).
+    exp: one row per clause, keyed by its synthetic clause id (sid).
+    The join condition is the OR of the per-kind predicates, each
+    guarded by `kind`; the scan condition the OR of the per-kind
+    pushable ones (none when any kind has none); the distance is the
+    banded levenshtein on fuzzy rows and 0 on every other, so the
+    ranking (dist ASC, df DESC, term ASC) is each kind's own. Returns
+    _expansion_matched's result."""
+    frame = {c.split()[0]: pd.Series(None, index=exp.index, dtype=object)
+             for c in _EXPANSION_DDL.split(", ")}
+    frame["query_id"], frame["kind"] = exp["sid"], exp["kind"]
+    join, scans, dist = None, [], F.lit(0)
+    for kind, grp in exp.groupby("kind"):
+        v, x = list(grp["value"]), list(grp["extra"])
+        cols, on, scan, d = {
+            "fuzzy": lambda: _fuzzy_match(v, x),
+            "wildcard": lambda: _wildcard_match(v),
+            "regexp": lambda: _regexp_match(v),
+            "range": lambda: _range_match(
+                [b[0] for b in v], [b[1] for b in v],
+                [i[0] for i in x], [i[1] for i in x]),
+        }[kind]()
+        for c, vals in cols.items():
+            frame[c].loc[grp.index] = vals
+        on = (F.col("kind") == kind) & on
+        join = on if join is None else join | on
+        scans.append(scan)
+        if d is not None:
+            dist = F.when(F.col("kind") == kind, d).otherwise(dist)
+    scan = None
+    if all(s is not None for s in scans):
+        scan = scans[0]
+        for s in scans[1:]:
+            scan = scan | s
+    return _expansion_matched(
+        spark, postings, dictionary,
+        pdf_frame(spark, pd.DataFrame(frame), ddl=_EXPANSION_DDL),
+        join, scan_cond=scan, max_expansions=max_expansions,
+        rank_cols=[("dist", True), ("df", False), ("term", True)],
+        post_cols={"dist": dist})
+
+
+_CLAUSE_FRAME_DDL = ("term string, query_id long, role string, "
+                     "boost double, mb long, cb long, xn long")
+
+
+def _term_contribs(spark, postings, terms: pd.DataFrame,
+                   exp: pd.DataFrame, other_gids: set, N, avgdl, cfg,
+                   dictionary, max_expansions):
+    """The batch's one term pass: every term clause (terms) and every
+    expansion clause (exp) share one df map, one In(term)-pruned scan,
+    one broadcast clause join and one _doc_partials. A term row scores
+    BM25 x boost (0 for MUST_NOT — membership only). The clause frame
+    carries the fused state as per-row constants — MUST-group bit
+    (mb), constant-clause bit (cb) and prohibited flag (xn) — so the
+    combine folds distinct-doc rows with one sum/bit_or/max each.
+
+    The expansion clauses resolve in one dictionary pass
+    (_resolve_expansions). Each class's (term, class key) pairs join
+    the clause frame as rows (role "class") that decode doc_ids only
+    and are masked by the required-clause pushdown;
+    _doc_partials emits them once per member clause, whose cb bit
+    carries the constant score. On the unbounded expansion path the
+    pairs are a distributed frame, and the clause frame joins the
+    unpruned scan with it. other_gids: the (query, group) pairs
+    holding a non-term clause. Returns (contribution frame, or None
+    when nothing can match; the raw contribution mass, Σ df over the
+    term clauses plus each class's Σ df once — None when unknown)."""
+    # one df map over every term clause of the batch: BM25 idf, the
+    # combine's raw contribution mass and the pushdown gate
+    dfm = _term_df_map(postings.where(_in_list(
+        "term", sorted(set(terms["value"]))))) if len(terms) else {}
+    mass = int(sum(dfm.get(t, 0) for t in terms["value"]))
+    found = None
+    if len(exp):
+        exp = exp.assign(
+            sid=_CLAUSE_ID0 + np.arange(len(exp), dtype=np.int64))
+        found = _resolve_expansions(spark, postings, exp, dictionary,
+                                    max_expansions)
+    if found is None and not len(terms):
+        return None, mass
+    qdf = terms[["orig_qid", "role", "value", "boost", "mbit"]].rename(
+        columns={"orig_qid": "query_id", "value": "term", "mbit": "mb"}
+    ).assign(cb=0, xn=(terms["role"] == "not").astype(np.int64))
+    exp_rows = member_bc = None
+    members: dict = {}
+    if found is not None:
+        exp_rows, classes, exp_mass = found
+        mass = None if exp_mass is None else mass + exp_mass
+        if classes is None:  # equi-join path: each clause its own class
+            classes = {int(s): int(s) for s in exp["sid"]}
+        for r in exp.itertuples(index=False):
+            if int(r.sid) in classes:  # else the clause matched no term
+                members.setdefault(classes[int(r.sid)], []).append((
+                    int(r.orig_qid), {"mb": int(r.mbit), "cb": int(r.cbit),
+                                      "xn": int(r.role == "not")}))
+        member_bc = _required_clause_mask(
+            spark, postings, terms, other_gids, set(exp["orig_qid"]), dfm,
+            N)
+        if not isinstance(exp_rows, DataFrame):
+            cls = exp_rows[["term", "query_id"]].assign(
+                role="class", boost=0.0, mb=0, cb=0, xn=0)
+            qdf = pd.concat([qdf, cls]) if len(qdf) else cls
+    cdf = pdf_frame(spark, qdf[[c.split()[0] for c in
+                                _CLAUSE_FRAME_DDL.split(", ")]],
+                    ddl=_CLAUSE_FRAME_DDL)
+    posts = postings.drop("pos") if "pos" in postings.columns else postings
+    if isinstance(exp_rows, DataFrame):
+        matched = posts.join(cdf.unionByName(exp_rows.select(
+            "term", F.col("query_id").cast("long"),
+            F.lit("class").alias("role"),
+            F.lit(0.0).alias("boost"),
+            *(F.lit(0).cast("long").alias(s) for s in ("mb", "cb", "xn")))),
+            "term")
+    else:
+        matched = _term_prune(spark, posts, sorted(set(qdf["term"]))).join(
+            F.broadcast(cdf), "term")
     # explicit projection (Catalyst cannot prune through mapInPandas):
-    # block_max/cf/df would otherwise ride the Arrow transfer unused
-    matched = filtered.select("term", "doc_ids", "tfs", "dls").join(
-        F.broadcast(qdf), "term").select(
-        "term", "query_id", "role", "boost", "doc_ids", "tfs", "dls",
-        "mb", "cb", "xn")
-    return _doc_partials(matched, _bm25_scorer(df_map, N, avgdl, cfg))
+    # cf/df would otherwise ride the Arrow transfer unused
+    return _doc_partials(
+        matched.select("term", "query_id", "role", "boost", "doc_ids",
+                       "tfs", "dls", "mb", "cb", "xn"),
+        _bm25_scorer(dfm, N, avgdl, cfg), members=members,
+        member_bc=member_bc), mass
 
 
 # required-clause pushdown gate (round 8, measured on one index at two
@@ -728,12 +849,123 @@ def _convert_bound(fname: str, bound: str | None, dtype: str):
     )
 
 
-def _subcall_contribs(spark, result: DataFrame, sid_map: pd.DataFrame,
-                      constant: bool) -> DataFrame:
+def _required_clause_mask(spark, postings, terms: pd.DataFrame,
+                          other_gids: set, exp_qids: set, dfm: dict,
+                          N: int):
+    """Required-clause pushdown (Lucene's "required clauses drive the
+    iteration"): a hit matches each of its query's MUST groups, so when
+    every expansion-carrying query has a MUST group of plain terms, the
+    union of one chosen (smallest-Σdf) such group's docs per query is
+    a SUPERSET of every hit of every class member — it masks the class
+    rows in the producer, shrinking expansion membership from
+    match-mass to candidate-mass. A MUST group with an expansion /
+    phrase / field member (other_gids) is satisfied by ANY member, so
+    it is ineligible. Returns a Broadcast of the sorted ids (one
+    bounded collect) when the gate passes, else None; correctness
+    never depends on it."""
+    must_groups: dict[int, dict[int, list[str]]] = {}
+    for r in terms.itertuples(index=False):
+        if (r.role == "must" and r.orig_qid in exp_qids
+                and (r.orig_qid, r.gid) not in other_gids):
+            must_groups.setdefault(r.orig_qid, {}).setdefault(
+                r.gid, []).append(r.value)
+    if not all(q in must_groups for q in exp_qids):
+        return None
+    chosen: set[str] = set()
+    for q in exp_qids:
+        chosen.update(min(must_groups[q].values(),
+                          key=lambda ts: sum(dfm.get(t, 0) for t in ts)))
+    est = sum(dfm.get(t, 0) for t in chosen)
+    # selectivity gate — see the constants' comment above: the bounded
+    # mask always wins at large corpora, and only at strong
+    # selectivity below them
+    if not (0 < est <= 4_000_000 and (est <= N // _QS_FILTER_N_DIV
+                                      or N >= _QS_FILTER_MIN_N)):
+        return None
+    return spark.sparkContext.broadcast(np.unique(arrow_collect(
+        term_doc_ids(postings, sorted(chosen)))["doc_id"].to_numpy(
+        np.int64)))
+
+
+def _phrase_contribs(spark, postings, pdf: pd.DataFrame, N, avgdl, cfg,
+                     sid_cols: list[str]) -> list[DataFrame]:
+    """Phrase clauses as sub-calls: slop=0 -> exact phrase_topk;
+    slop>0 -> ordered near_topk with window = len(phrase)+slop, one
+    call per distinct window, synthetic sequential ids, the full-match
+    k."""
+    pdf = pdf.assign(sid=np.arange(len(pdf), dtype=np.int32))
+    window = np.array([0 if e == 0 else len(v.split()) + int(e)
+                       for v, e in zip(pdf["value"], pdf["extra"])])
+    out = []
+    for w, grp in pdf.groupby(window):
+        sub = pd.DataFrame({"query_id": grp["sid"].to_numpy(np.int32),
+                            "text": grp["value"].tolist(),
+                            "k": np.full(len(grp), _ALL_MATCHES_K,
+                                         np.int32)})
+        res = (phrase_topk(spark, postings, sub, N, avgdl, cfg) if w == 0
+               else near_topk(spark, postings, sub, N, avgdl, cfg,
+                              window=int(w), ordered=True))
+        out.append(_subcall_contribs(
+            spark, res.select("query_id", "doc_id", "score"),
+            grp[sid_cols]))
+    return out
+
+
+def _field_contribs(spark, doc_fields: DataFrame, pdf: pd.DataFrame,
+                    sid_cols: list[str]) -> DataFrame:
+    """ONE scan of the metadata frame evaluates EVERY field clause of
+    the batch — equality AND range: the coarse OR of the predicates
+    pushes to the metadata source's scan, and each surviving row
+    explodes into the clause ids it satisfies. Range bounds convert to
+    the column's OWN Spark type first (numerics compare numerically —
+    Lucene Point-range semantics). Rows are already distinct per
+    (clause, doc) — doc_fields is one row per doc — and the idempotent
+    cb bit absorbs anything anyway."""
+    pdf = pdf.assign(sid=np.arange(len(pdf), dtype=np.int32))
+    dtypes = dict(doc_fields.dtypes)
+    preds = []
+    for r in pdf.itertuples(index=False):
+        col = F.col(r.value[0])
+        if len(r.value) == 2:  # equality clause
+            # the literal converts to the column's OWN type exactly
+            # like range bounds: a native comparison pushes to the
+            # parquet scan, and an int column matched as a string
+            # would diverge from the same value in a range clause
+            # (cast("string") also breaks on doubles: "100" != "100.0")
+            b = _convert_bound(r.value[0], r.value[1], dtypes[r.value[0]])
+            preds.append((int(r.sid), col == F.lit(b)))
+            continue
+        fname, lo, hi = r.value
+        inc_lo, inc_hi = r.extra
+        dt = dtypes[fname]
+        p = None
+        if lo is not None:
+            b = _convert_bound(fname, lo, dt)
+            p = col >= F.lit(b) if inc_lo else col > F.lit(b)
+        if hi is not None:
+            b = _convert_bound(fname, hi, dt)
+            c2 = col <= F.lit(b) if inc_hi else col < F.lit(b)
+            p = c2 if p is None else (p & c2)
+        preds.append((int(r.sid), p))
+    coarse = preds[0][1]
+    for _, p in preds[1:]:
+        coarse = coarse | p
+    sid_arr = F.array(*[F.when(p, F.lit(s)).cast("int") for s, p in preds])
+    res = (
+        doc_fields.where(coarse)
+        .select(F.col("doc_id").cast("long").alias("doc_id"),
+                F.explode(sid_arr).alias("query_id"))
+        .where(F.col("query_id").isNotNull())
+    )
+    return _subcall_contribs(spark, res, pdf[sid_cols])
+
+
+def _subcall_contribs(spark, result: DataFrame,
+                      sid_map: pd.DataFrame) -> DataFrame:
     """Map a clause sub-call's rows back to the parent FUSED shape
-    (query_id, doc_id, contrib, mb, xn): score x boost for scoring
-    clauses (phrase — result carries a score), flat boost for
-    constant-score ones (expansion — docs_only membership); mb = the
+    (query_id, doc_id, contrib, mb, cb, xn): score x boost when the
+    result carries a score (phrase), else 0 — a field clause is
+    membership only and scores through its idempotent cb bit; mb = the
     clause's must bit (0 unless role=must), xn = 1 for MUST_NOT. The
     sub-call results are already distinct per (sid, doc), so no
     further in-task combine is needed."""
@@ -742,14 +974,10 @@ def _subcall_contribs(spark, result: DataFrame, sid_map: pd.DataFrame,
         "role", F.col("mbit").cast("long").alias("mbit"),
         F.col("cbit").cast("long").alias("cbit"),
         F.col("boost").cast("double")))
-    # constant clauses score through the idempotent cb bit (their
-    # membership frames may carry cross-task duplicates — see
-    # _expansion_doc_ids distinct=False); scoring clauses (phrase)
-    # are already distinct per (sid, doc) and sum their contrib
-    contrib = (F.lit(0.0) if constant
-               else F.when(F.col("role") != "not",
-                           F.col("score") * F.col("boost"))
-                     .otherwise(F.lit(0.0)))
+    contrib = (F.when(F.col("role") != "not",
+                      F.col("score") * F.col("boost"))
+               .otherwise(F.lit(0.0)) if "score" in result.columns
+               else F.lit(0.0))
     return (
         result.withColumnRenamed("query_id", "sid")
         .join(mdf, "sid")
@@ -786,7 +1014,12 @@ def query_string_topk(
     (Lucene filter + liveDocs: candidates restricted, scoring stats
     stay corpus-global). Phrase clauses need a positional index;
     expansion clauses accept the persisted `dictionary` and the
-    bounded `max_expansions` rewrite like their dedicated surfaces.
+    bounded `max_expansions` rewrite (per clause) like their dedicated
+    surfaces.
+
+    Term and expansion clauses run as ONE term pass (_term_contribs,
+    fed by the one dictionary pass of _resolve_expansions): one df
+    map, one In(term) postings scan, one producer and one combine.
 
     doc_fields: per-doc metadata frame (doc_id + one column per
     queryable field), e.g. load_doc_stats(spark, out) for
@@ -798,8 +1031,7 @@ def query_string_topk(
     cfg = cfg or BuildConfig()
     _reject_paging(queries, "query_string_topk")
     _check_unique_ids(queries)
-    term_rows, phrase_cl, fuzzy_cl, wild_cl = [], [], [], []
-    rx_cl, range_cl, field_cl, frange_cl = [], [], [], []
+    term_rows, phrase_cl, exp_cl, field_cl = [], [], [], []
     meta: dict[int, dict] = {}  # qid -> the combine's per-query meta
     for q in queries.itertuples(index=False):
         qid, k = int(q.query_id), _check_k(q.query_id, q.k)
@@ -818,16 +1050,15 @@ def query_string_topk(
                 "— split the query)"
             )
         bit = {g: 1 << i for i, g in enumerate(must_gids)}
-        # constant-score (expansion) clauses score through an
+        # constant-score (expansion and field) clauses score through an
         # IDEMPOTENT per-clause bit (cb) instead of a summed contrib,
-        # so their membership frames need no global dedup — bit_or
-        # absorbs cross-task duplicates; the boost per bit rides the
+        # so a doc reaching the combine through several rows of one
+        # clause counts its boost once; the boost per bit rides the
         # query meta as a list and converts to score in the combine
         cboosts: list[float] = []
         cbits: dict[int, int] = {}  # clause index in list -> cbit
         for ci, c in enumerate(clauses):
-            if (c["kind"] in ("fuzzy", "wildcard", "regexp", "range",
-                              "field", "field_range")
+            if (c["kind"] not in ("term", "phrase")
                     and c["role"] != "not"):
                 if len(cboosts) >= _MAX_MUST_BITS:
                     raise ValueError(
@@ -838,19 +1069,17 @@ def query_string_topk(
                 cboosts.append(float(c["boost"]))
         meta[qid] = {"k": k, "n_must": len(must_gids), "cboosts": cboosts}
         for ci, c in enumerate(clauses):
-            rec = (qid, c["gid"], c["role"], c["value"], c["boost"],
-                   c["extra"], bit.get(c["gid"], 0)
+            rec = (qid, c["gid"], c["role"], c["kind"], c["value"],
+                   c["boost"], c["extra"], bit.get(c["gid"], 0)
                    if c["role"] == "must" else 0, cbits.get(ci, 0))
-            {"term": term_rows, "phrase": phrase_cl, "fuzzy": fuzzy_cl,
-             "wildcard": wild_cl, "regexp": rx_cl, "range": range_cl,
-             "field": field_cl,
-             "field_range": frange_cl}[c["kind"]].append(rec)
-    if not (term_rows or phrase_cl or fuzzy_cl or wild_cl or rx_cl
-            or range_cl or field_cl or frange_cl):
+            (term_rows if c["kind"] == "term"
+             else phrase_cl if c["kind"] == "phrase"
+             else exp_cl if c["kind"] in _EXPANSION_KINDS
+             else field_cl).append(rec)
+    if not (term_rows or phrase_cl or exp_cl or field_cl):
         return spark.createDataFrame([], RESULT_SCHEMA)
-    if field_cl or frange_cl:
-        fnames = ({r[3][0] for r in field_cl}
-                  | {r[3][0] for r in frange_cl})
+    if field_cl:
+        fnames = {r[4][0] for r in field_cl}
         if doc_fields is None:
             raise ValueError(
                 "the batch contains metadata field clauses "
@@ -867,275 +1096,32 @@ def query_string_topk(
                 f"{sorted(valid)} (use text: for the indexed field)"
             )
 
-    cols = ["orig_qid", "gid", "role", "value", "boost", "extra",
+    cols = ["orig_qid", "gid", "role", "kind", "value", "boost", "extra",
             "mbit", "cbit"]
-
-    # Round 7 — required-clause pushdown into the expansion clauses
-    # (Lucene's "required clauses drive the iteration"): every FINAL
-    # hit of a query must match each of its MUST groups, so when every
-    # expansion-carrying query has at least one MUST group of plain
-    # terms, the union of one chosen (smallest-Σdf) must group's doc
-    # sets per query is a SUPERSET of every possible hit — shipped as
-    # a doc_filter into the fuzzy/wildcard sub-calls, where it becomes
-    # an in-kernel broadcast mask (_expansion_masks), so the expansion
-    # membership frame shrinks from match-mass to candidate-mass.
-    # Bounded: built only when the chosen groups' Σdf <= 4M (the
-    # kernel-filter cap); correctness never depends on it (a doc
-    # outside the union fails its must group at the combine anyway)
-    # — PROVIDED the group is pure-term: a MUST group that also
-    # carries an expansion/phrase/field member is satisfied by ANY
-    # member, so its term-docs union is NOT a hit superset (a doc
-    # matching only the non-term member is a legitimate hit) and such
-    # groups are ineligible for the pushdown.
-    exp_filter = None
-    shared_dfm: dict | None = None
-    if fuzzy_cl or wild_cl or rx_cl or range_cl:
-        exp_qids = ({r[0] for r in fuzzy_cl} | {r[0] for r in wild_cl}
-                    | {r[0] for r in rx_cl} | {r[0] for r in range_cl})
-        non_term_gids = {(r[0], r[1])
-                         for lst in (phrase_cl, fuzzy_cl, wild_cl,
-                                     rx_cl, range_cl, field_cl,
-                                     frange_cl)
-                         for r in lst}
-        must_groups: dict[int, dict[int, list[str]]] = {}
-        for (qid, gid, role, value, _b, _e, _m, _c) in term_rows:
-            if (role == "must" and qid in exp_qids
-                    and (qid, gid) not in non_term_gids):
-                must_groups.setdefault(qid, {}).setdefault(
-                    gid, []).append(value)
-        if exp_qids and all(q in must_groups for q in exp_qids):
-            # one df aggregate over ALL batch terms: the same map
-            # feeds _term_contribs below (the gate's must terms are a
-            # subset), so the batch pays one In(term) scan+groupBy
-            # for df, not two
-            all_terms = sorted({r[3] for r in term_rows})
-            shared_dfm = dfm = _term_df_map(
-                postings.where(_in_list("term", all_terms)))
-            chosen: set[str] = set()
-            for q in exp_qids:
-                best = min(must_groups[q].values(),
-                           key=lambda ts: sum(dfm.get(t, 0) for t in ts))
-                chosen.update(best)
-            est = sum(dfm.get(t, 0) for t in chosen)
-            # selectivity gate — see the constants' comment above: the
-            # bounded mask always wins at large corpora, and only at
-            # strong selectivity below them
-            if 0 < est <= 4_000_000 and (
-                    est <= N // _QS_FILTER_N_DIV
-                    or N >= _QS_FILTER_MIN_N):
-                # collect the id union ONCE (Arrow-batched) and pass
-                # the ARRAY down: the lazy plan would re-run its scan
-                # + bounded collect inside EVERY expansion sub-call's
-                # _prep_doc_sets (up to three concurrent identical
-                # jobs), and a LocalRelation round-trip would pay a
-                # driver->JVM serialize per sub-call — an ndarray
-                # doc_filter broadcasts straight from the driver.
-                # ASYNC (round 8): the decode + collect is seconds at
-                # 10M+ turns and only the EXPANSION thunks consume it
-                # — building it on a thread lets the term-contribs
-                # cascade start immediately; the expansion thunks
-                # resolve it lazily (_prep_doc_sets), AFTER their
-                # own eager dictionary match — both overlap the build
-                def _build_exp_filter(chosen=frozenset(chosen)):
-                    ids = np.unique(arrow_collect(
-                        term_doc_ids(postings, sorted(chosen))
-                    )["doc_id"].to_numpy(np.int64))
-                    return ids if ids.size else None
-
-                from concurrent.futures import ThreadPoolExecutor
-
-                _filter_pool = ThreadPoolExecutor(max_workers=1)
-                exp_filter = _filter_pool.submit(_build_exp_filter)
-                _filter_pool.shutdown(wait=False)
-
-    # each thunk builds one clause-kind's contribution frame(s); they
-    # run on a small thread pool (round 7) because every sub-surface
-    # call contains DRIVER-blocking steps (df/stats collects, the
-    # eager expansion-dictionary match) that otherwise serialize four
-    # independent job cascades — Spark job submission is thread-safe,
-    # and the frames are unioned in a FIXED order below so the plan
-    # (and the float summation shape) stays deterministic
-    thunks: list = []
-    est_mass = 0
-    if term_rows:
-        tpdf = pd.DataFrame(term_rows, columns=cols).rename(
-            columns={"orig_qid": "query_id", "value": "term"})
-        # the per-term df map is hoisted out of the term thunk: the
-        # SAME collect _term_contribs would run inside it also yields
-        # the batch's raw contribution mass (Σ df over term clause
-        # rows), which sizes the combine's fan-out below — no extra
-        # job, just earlier
-        if shared_dfm is None:
-            shared_dfm = _term_df_map(postings.where(
-                _in_list("term", sorted(tpdf["term"].unique()))))
-        est_mass = int(sum(shared_dfm.get(t, 0) for t in tpdf["term"]))
-        thunks.append(lambda: [_term_contribs(
-            spark, postings,
-            tpdf[["query_id", "role", "term", "boost", "mbit"]],
-            N, avgdl, cfg, df_map=shared_dfm)])
-
-    def run_group(cl, key_fn, call):
-        """Batch one clause kind through its surface, one call per
-        distinct key (window / max_edits), synthetic sequential ids."""
-        pdf = pd.DataFrame(cl, columns=cols)
-        pdf["sid"] = np.arange(len(pdf), dtype=np.int32)
-        out = []
-        for key, grp in pdf.groupby(pdf.apply(key_fn, axis=1)):
-            sub = pd.DataFrame(
-                {"query_id": grp["sid"].to_numpy(np.int32),
-                 "text": grp["value"].tolist(),
-                 "k": np.full(len(grp), _ALL_MATCHES_K, np.int32)})
-            res, constant = call(key, sub)
-            res = res.select("query_id", "doc_id") if constant \
-                else res.select("query_id", "doc_id", "score")
-            out.append(_subcall_contribs(
-                spark, res,
-                grp[["sid", "orig_qid", "role", "boost", "mbit",
-                     "cbit"]],
-                constant))
-        return out
-
-    if phrase_cl:
-        # slop=0 -> exact phrase; slop>0 -> ordered NEAR with window =
-        # len(phrase)+slop (grouped by window so each distinct slack
-        # is one call)
-        def phrase_key(r):
-            return 0 if r["extra"] == 0 \
-                else len(r["value"].split()) + int(r["extra"])
-
-        def phrase_call(key, sub):
-            if key == 0:
-                return phrase_topk(spark, postings, sub, N, avgdl, cfg,
-                                   ), False
-            return near_topk(spark, postings, sub, N, avgdl, cfg,
-                             window=int(key), ordered=True), False
-
-        thunks.append(
-            lambda: run_group(phrase_cl, phrase_key, phrase_call))
-    if fuzzy_cl:
-        # docs_only: constant-score clauses need MEMBERSHIP, not the
-        # summed-tf ranking — skips the expansion aggregate and both
-        # top-k windows per sub-call
-        thunks.append(lambda: run_group(
-            fuzzy_cl, lambda r: int(r["extra"]),
-            lambda key, sub: (fuzzy_topk(
-                spark, postings, sub, cfg, max_edits=int(key),
-                dictionary=dictionary, max_expansions=max_expansions,
-                docs_only="raw", doc_filter=exp_filter,
-            ), True)))
-    if wild_cl:
-        thunks.append(lambda: run_group(
-            wild_cl, lambda r: 0,
-            lambda key, sub: (wildcard_topk(
-                spark, postings, sub, cfg, dictionary=dictionary,
-                max_expansions=max_expansions, docs_only="raw",
-                doc_filter=exp_filter,
-            ), True)))
-    if rx_cl:
-        thunks.append(lambda: run_group(
-            rx_cl, lambda r: 0,
-            lambda key, sub: (regexp_topk(
-                spark, postings, sub, cfg, dictionary=dictionary,
-                max_expansions=max_expansions, docs_only="raw",
-                doc_filter=exp_filter,
-            ), True)))
-    if range_cl:
-        # ONE call batches every range clause: term_range_topk takes
-        # per-query bounds + inclusivity columns, so no per-key split
-        # is needed (constant-score membership like fuzzy/wildcard)
-        def run_ranges():
-            pdf = pd.DataFrame(range_cl, columns=cols)
-            pdf["sid"] = np.arange(len(pdf), dtype=np.int32)
-            sub = pd.DataFrame(
-                {"query_id": pdf["sid"].to_numpy(np.int32),
-                 "lo": [v[0] for v in pdf["value"]],
-                 "hi": [v[1] for v in pdf["value"]],
-                 "include_lower": [e[0] for e in pdf["extra"]],
-                 "include_upper": [e[1] for e in pdf["extra"]],
-                 "k": np.full(len(pdf), _ALL_MATCHES_K, np.int32)})
-            res = term_range_topk(
-                spark, postings, sub, cfg, dictionary=dictionary,
-                max_expansions=max_expansions, docs_only="raw",
-                doc_filter=exp_filter,
-            ).select("query_id", "doc_id")
-            return [_subcall_contribs(
-                spark, res,
-                pdf[["sid", "orig_qid", "role", "boost", "mbit",
-                     "cbit"]],
-                True)]
-
-        thunks.append(run_ranges)
-    if field_cl or frange_cl:
-        # ONE scan of the metadata frame evaluates EVERY field clause
-        # of the batch — equality AND range: the coarse OR of the
-        # predicates pushes to the metadata source's scan, and each
-        # surviving row explodes into the clause ids it satisfies.
-        # Range bounds convert to the column's OWN Spark type first
-        # (numerics compare numerically — Lucene Point-range
-        # semantics). Rows are already distinct per (clause, doc) —
-        # doc_fields is one row per doc — and the idempotent cb bit
-        # absorbs anything anyway.
-        def run_fields():
-            pdf = pd.DataFrame(field_cl + frange_cl, columns=cols)
-            pdf["sid"] = np.arange(len(pdf), dtype=np.int32)
-            dtypes = dict(doc_fields.dtypes)
-            preds = []
-            for r in pdf.itertuples(index=False):
-                col = F.col(r.value[0])
-                if len(r.value) == 2:  # equality clause
-                    # the literal converts to the column's OWN type
-                    # exactly like range bounds: a native comparison
-                    # pushes to the parquet scan, and an int column
-                    # matched as a string would diverge from the same
-                    # value in a range clause (cast("string") also
-                    # breaks on doubles: "100" != "100.0")
-                    b = _convert_bound(r.value[0], r.value[1],
-                                       dtypes[r.value[0]])
-                    preds.append((int(r.sid), col == F.lit(b)))
-                    continue
-                fname, lo, hi = r.value
-                inc_lo, inc_hi = r.extra
-                dt = dtypes[fname]
-                p = None
-                if lo is not None:
-                    b = _convert_bound(fname, lo, dt)
-                    p = col >= F.lit(b) if inc_lo else col > F.lit(b)
-                if hi is not None:
-                    b = _convert_bound(fname, hi, dt)
-                    c2 = col <= F.lit(b) if inc_hi else col < F.lit(b)
-                    p = c2 if p is None else (p & c2)
-                preds.append((int(r.sid), p))
-            coarse = preds[0][1]
-            for _, p in preds[1:]:
-                coarse = coarse | p
-            sid_arr = F.array(*[
-                F.when(p, F.lit(s)).cast("int") for s, p in preds])
-            res = (
-                doc_fields.where(coarse)
-                .select(F.col("doc_id").cast("long").alias("doc_id"),
-                        F.explode(sid_arr).alias("query_id"))
-                .where(F.col("query_id").isNotNull())
-            )
-            return [_subcall_contribs(
-                spark, res,
-                pdf[["sid", "orig_qid", "role", "boost", "mbit",
-                     "cbit"]],
-                True)]
-
-        thunks.append(run_fields)
-
-    if len(thunks) == 1:
-        part_lists = [thunks[0]()]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-            futures = [ex.submit(t) for t in thunks]
-            # result order == thunk order (term, phrase, fuzzy,
-            # wildcard, regexp, range, field) regardless of
-            # completion order
-            part_lists = [f.result() for f in futures]
-    parts: list[DataFrame] = [p for lst in part_lists for p in lst]
+    sid_cols = ["sid", "orig_qid", "role", "boost", "mbit", "cbit"]
+    # the phrase sub-calls' eager steps (their df / stats collects) run
+    # on a thread while this one runs the term pass's own (the
+    # dictionary match, the df map, the mask): on one 400-conversation
+    # index at local[2] (4 vCPU), an interleaved A/B of a phrase +
+    # expansion batch took 1.70 s median with the overlap against
+    # 2.07 s without (faster in 18 of 20 pairs)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        phrase = pool.submit(
+            _phrase_contribs, spark, postings,
+            pd.DataFrame(phrase_cl, columns=cols), N, avgdl, cfg,
+            sid_cols) if phrase_cl else None
+        term, est_mass = _term_contribs(
+            spark, postings, pd.DataFrame(term_rows, columns=cols),
+            pd.DataFrame(exp_cl, columns=cols),
+            {(r[0], r[1]) for r in phrase_cl + exp_cl + field_cl},
+            N, avgdl, cfg, dictionary, max_expansions)
+        parts = ([term] if term is not None else []) + (
+            phrase.result() if phrase is not None else [])
+    if field_cl:
+        parts.append(_field_contribs(spark, doc_fields, pd.DataFrame(
+            field_cl, columns=cols), sid_cols))
+    if not parts:  # every expansion clause resolved to nothing
+        return spark.createDataFrame([], RESULT_SCHEMA)
     contribs = parts[0]
     for p in parts[1:]:
         contribs = contribs.unionByName(p)

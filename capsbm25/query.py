@@ -656,10 +656,9 @@ def _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
     """Shared doc_filter/doc_exclude routing for the query entry points.
 
     Each set is a single-column (doc_id) DataFrame OR a driver-side
-    numpy id array (round 7): a caller that already holds the ids —
-    the query-string expansion pushdown collects its must-term union
-    once — passes the array straight through, so no LocalRelation is
-    built and no re-collect job runs per sub-call.
+    numpy id array (round 7): a caller that already holds the ids
+    passes the array straight through, so no LocalRelation is built
+    and no re-collect job runs.
 
     Returns (mode, doc_filter, doc_exclude, filt_bc, excl_bc, empty):
     the possibly-demoted mode, single-column DataFrames for the
@@ -671,8 +670,6 @@ def _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
     max_kernel_filter + 1 rows per set; oversized sets demote auto
     mode to distributed and make explicit kernel mode raise
     (collecting an unbounded id set on the driver is never silent)."""
-    from concurrent.futures import Future
-
     cols: list = [None, None]
     bcs: list = [None, None]
     empty = False
@@ -681,26 +678,7 @@ def _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
     for i, (name, df, join_kind) in enumerate(sets):
         if df is None:
             continue
-        if isinstance(df, Future):
-            # an id set still being BUILT on another driver thread
-            # (the query-string must-union pushdown): a normalization
-            # pass keeps the future lazy so the caller's own eager
-            # steps (the expansion dictionary match) overlap the
-            # build; any pass that actually consumes the set resolves
-            # it here
-            if mode == "distributed" and max_kernel_filter <= 0:
-                cols[i] = df
-                continue
-            df = df.result()
-            if df is None:
-                continue
         if isinstance(df, np.ndarray):
-            if mode == "distributed" and max_kernel_filter <= 0:
-                # normalization pass of an expansion entry point (its
-                # real routing is _expansion_masks' later auto
-                # re-entry): keep the array as-is
-                cols[i] = df
-                continue
             ids = np.unique(np.asarray(df, dtype=np.int64))
             if ids.size > max_kernel_filter or mode == "distributed":
                 if mode == "kernel":
@@ -848,7 +826,8 @@ def _bm25_scorer(df_map: dict, N: int, avgdl: float, cfg):
 
 def _doc_partials(matched: DataFrame, score=None, prune=None,
                   filt_bc=None, excl_bc=None, doc_filter=None,
-                  doc_exclude=None) -> DataFrame:
+                  doc_exclude=None, members=None,
+                  member_bc=None) -> DataFrame:
     """The one map-side producer of every distributed posting pass.
 
     matched: posting rows joined to the query frame and projected to
@@ -864,15 +843,23 @@ def _doc_partials(matched: DataFrame, score=None, prune=None,
     distinct docs), never O(df mass), and emits one row per (query,
     distinct doc in task) — the exploded per-(term, doc) frame never
     exists. A doc_filter/doc_exclude without a broadcast becomes a
-    semi/anti join on the output, ahead of any exchange."""
+    semi/anti join on the output, ahead of any exchange.
+
+    members: {class key: [(query_id, {state column: value}), ...]}
+    (the producer-side twin of _fused_combine_topk's members): a row
+    keyed by a class decodes doc_ids only, contributes 0, is masked by
+    member_bc too, and the class's per-task docs are emitted once per
+    member under that member's query_id and state."""
     cols = matched.columns
     state = [s for s in _STATE_REDUCE if s in cols]
     with_tf, with_dl = "tfs" in cols, "dls" in cols
     has_role = "role" in cols
+    members = members or {}
 
     def gen(it):
         filt = filt_bc.value if filt_bc is not None else None
         excl = excl_bc.value if excl_bc is not None else None
+        mem = member_bc.value if member_bc is not None else None
         keep_fn = prune() if prune is not None else None
         # qid -> [doc chunks, contrib chunks, {state: chunks}, raw
         # pairs appended since the last fold — a folded-size counter
@@ -889,13 +876,16 @@ def _doc_partials(matched: DataFrame, score=None, prune=None,
 
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                is_not = has_role and row.role == "not"
+                qid = int(row.query_id)
+                cls = qid in members
+                bare = cls or (has_role and row.role == "not")
                 docs = delta_decode(row.doc_ids).astype(np.int64)
                 tfs = (decode_varints(row.tfs).astype(np.int64)
-                       if with_tf and not is_not else None)
+                       if with_tf and not bare else None)
                 dls = (decode_varints(row.dls).astype(np.int64)
-                       if with_dl and not is_not else None)
-                for ids, member in ((filt, True), (excl, False)):
+                       if with_dl and not bare else None)
+                for ids, member in ((filt, True), (excl, False),
+                                    (mem if cls else None, True)):
                     if ids is not None and ids.size and docs.size:
                         m = sorted_member_mask(ids, docs)
                         m = m if member else ~m
@@ -904,10 +894,9 @@ def _doc_partials(matched: DataFrame, score=None, prune=None,
                         dls = dls[m] if dls is not None else None
                 if not docs.size:
                     continue
-                qid = int(row.query_id)
                 c = None
                 if score is not None:
-                    c = (np.zeros(docs.size, np.float64) if is_not
+                    c = (np.zeros(docs.size, np.float64) if bare
                          else score(row, tfs, dls))
                     if keep_fn is not None:
                         m = keep_fn(qid, row, c)
@@ -928,12 +917,15 @@ def _doc_partials(matched: DataFrame, score=None, prune=None,
         for qid, ent in acc.items():
             fold(ent)
             uniq = ent[0][0]
-            out = {"query_id": np.full(uniq.size, qid, np.int32),
-                   "doc_id": uniq}
-            if score is not None:
-                out["contrib"] = ent[1][0]
-            out.update((s, ent[2][s][0]) for s in state)
-            yield pd.DataFrame(out)
+            for q, st in members.get(qid, ((qid, None),)):
+                out = {"query_id": np.full(uniq.size, q, np.int32),
+                       "doc_id": uniq}
+                if score is not None:
+                    out["contrib"] = ent[1][0]
+                out.update((s, ent[2][s][0] if st is None
+                            else np.full(uniq.size, st[s], np.int64))
+                           for s in state)
+                yield pd.DataFrame(out)
 
     schema = ("query_id int, doc_id long"
               + (", contrib double" if score is not None else "")
@@ -2581,24 +2573,12 @@ def prefix_topk(
     qpdf["k"] = [_check_k(q, k) for q, k in zip(qpdf["query_id"], qpdf["k"])]
     qpdf["prefix"] = [str(t or "").lower() for t in qpdf["text"]]
     qpdf = qpdf[qpdf["prefix"] != ""][["query_id", "prefix", "k"]]
-    if qpdf.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    prefixes = sorted(set(qpdf["prefix"]))
-
-    mode, doc_filter, doc_exclude, _, _, empty = _prep_doc_sets(
-        spark, "distributed", doc_filter, doc_exclude, 0
-    )
-    if empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
-    cond = F.col("term").startswith(prefixes[0])
-    for p in prefixes[1:]:
-        cond = cond | F.col("term").startswith(p)
-    return _expansion_result(spark, _expansion_matched(
-        spark, postings, dictionary, pdf_frame(spark, qpdf),
-        F.col("term").startswith(F.col("prefix")), scan_cond=cond,
-        max_expansions=max_expansions,
-    ), qpdf, doc_filter, doc_exclude)
+    return _expansion_query(
+        spark, postings, qpdf,
+        lambda: ({"prefix": list(qpdf["prefix"])},
+                 F.col("term").startswith(F.col("prefix")),
+                 _starts_any(qpdf["prefix"]), None),
+        doc_filter, doc_exclude, dictionary, max_expansions)
 
 
 def _expansion_matched(
@@ -2634,32 +2614,30 @@ def _expansion_matched(
        the terms that match the most documents; deterministic). The
        selection is two-phase salted so no single task ever sorts the
        full match set of a pathological pattern;
-    3. the bounded (term, part_id, query_id, k) pairs collect to the
-       driver — at most max_expansions x n_queries rows — and prune
-       the postings scan via pushed In(part_id) (FILE pruning on the
-       partitioned layout) + In(term) (row-group pruning) BEFORE
-       payload columns are read; above _ISIN_MAX_TERMS distinct terms
-       the prune becomes a broadcast semi-join instead of a giant
-       literal list;
+    3. the bounded (query_id, term, df, part ids) pairs collect to the
+       driver — at most max_expansions x n_queries rows;
     4. queries whose final term sets are identical (a hot pattern
        repeated across a batch) form one CLASS (_expansion_classes):
        the pairs are rewritten to one row per (class, term) under the
-       class id, so each posting row is joined, transferred and
-       decoded once per class, not once per query. The expansion
-       score (summed tf) has no per-query state, and fuzzy's edit
-       distance only ranked the expansions above, so every member's
-       result is its class's. The pruned rows equi-join the broadcast
-       (term, class id) pairs.
+       class id, so each posting row is fetched and decoded once per
+       class. The expansion score (summed tf) has no per-query state,
+       and fuzzy's edit distance only ranked the expansions above, so
+       every member's result is its class's.
+
+    The caller fetches the posting rows (_pair_postings, or the query
+    string's one term pass). qdf may mix clause kinds under a
+    `kind`-guarded OR of the per-kind predicates (_resolve_expansions).
 
     max_expansions=None disables the bound (collect capped at
     MAX_EXPANSION_COLLECT; beyond it a distributed term equi-join —
     still dictionary-driven, never a theta join over payload rows —
     with no driver pairs, so no classes).
 
-    Returns None when nothing matched, else (matched, classes, mass):
-    the matched posting-row frame carrying query_id (the class id);
-    classes, member query_id -> class id (None on the equi-join path,
-    where every query is its own class); mass, Σ df over the
+    Returns None when nothing matched, else (pairs, classes, mass):
+    pairs, the driver frame of (class id as query_id, term, df, part
+    ids) rows, or on the equi-join path a distributed (term, query_id)
+    frame; classes, member query_id -> class id (None on the equi-join
+    path, where every query is its own class); mass, Σ df over the
     deduplicated pairs, which sizes the combine's fan-out (None when
     unknown).
     """
@@ -2680,9 +2658,6 @@ def _expansion_matched(
         dm = dm.withColumn(name, col)
         dm = dm.where(F.col(name).isNotNull())
     has_part = "part_id" in cols
-    posts = postings.drop("pos") if "pos" in postings.columns else postings
-    sel_cols = ["term", "query_id", "k", "df"] + (
-        ["part_id"] if has_part else []) + list(post_cols or ())
 
     if max_expansions is not None:
         rank_spec = rank_cols or [("df", False), ("term", True)]
@@ -2705,7 +2680,7 @@ def _expansion_matched(
             aggs.append(F.collect_set("part_id").alias("_pids"))
         for name in (post_cols or {}):
             aggs.append(F.min(name).alias(name))
-        g = dm.groupBy("query_id", "term", "k").agg(*aggs)
+        g = dm.groupBy("query_id", "term").agg(*aggs)
         order = [F.asc(n) if a else F.desc(n) for n, a in rank_spec]
         w1 = Window.partitionBy("query_id", "_salt").orderBy(*order)
         g = (
@@ -2735,32 +2710,23 @@ def _expansion_matched(
                 "only (Lucene top-N rewrite semantics)",
                 int(max_expansions), sorted(capped.index.tolist()),
             )
-        pairs_pdf, classes = _expansion_classes(pairs_pdf)
-        part_ids = None
-        if has_part:
-            part_ids = sorted(
-                {int(p) for lst in pairs_pdf["_pids"] for p in lst})
-        return (_pruned_pair_join(spark, posts, pairs_pdf, has_part,
-                                  part_ids=part_ids),
-                classes, int(pairs_pdf["df"].sum()))
-
-    pairs_pdf = arrow_collect(dm.select(*sel_cols).limit(
-        MAX_EXPANSION_COLLECT + 1))
-    if len(pairs_pdf) <= MAX_EXPANSION_COLLECT:
+    else:
+        pairs_pdf = arrow_collect(
+            dm.select("term", "query_id", "df",
+                      *(["part_id"] if has_part else []))
+            .limit(MAX_EXPANSION_COLLECT + 1))
+        if len(pairs_pdf) > MAX_EXPANSION_COLLECT:
+            _logger.info(
+                "unbounded term expansion over %d matched pairs exceeds "
+                "MAX_EXPANSION_COLLECT=%d — distributed term equi-join "
+                "engaged", len(pairs_pdf), MAX_EXPANSION_COLLECT,
+            )
+            return (dm.select("term", "query_id").dropDuplicates(),
+                    None, None)
         if pairs_pdf.empty:
             return None
-        pairs_pdf, classes = _expansion_classes(pairs_pdf)
-        return (_pruned_pair_join(spark, posts, pairs_pdf, has_part),
-                classes, int(pairs_pdf["df"].sum()))
-    _logger.info(
-        "unbounded term expansion over %d matched pairs exceeds "
-        "MAX_EXPANSION_COLLECT=%d — distributed term equi-join engaged",
-        len(pairs_pdf), MAX_EXPANSION_COLLECT,
-    )
-    return posts.join(
-        dm.select("term", "query_id").dropDuplicates(),
-        "term",
-    ), None, None
+    pairs_pdf, classes = _expansion_classes(pairs_pdf)
+    return pairs_pdf, classes, int(pairs_pdf["df"].sum())
 
 
 def _expansion_classes(pairs_pdf: pd.DataFrame):
@@ -2780,67 +2746,82 @@ def _expansion_classes(pairs_pdf: pd.DataFrame):
     return pairs_pdf[own], classes
 
 
-def _pruned_pair_join(spark, posts, pairs_pdf, has_part, part_ids=None):
-    """Prune the postings scan to the matched terms and equi-join the
-    broadcast (term, query_id) pairs. In(term) literals below
-    _ISIN_MAX_TERMS (pushed to parquet row-group stats); broadcast
+def _term_prune(spark, posts: DataFrame, terms: list[str]) -> DataFrame:
+    """posts restricted to `terms`: In(term) literals below
+    _ISIN_MAX_TERMS (pushed to parquet row-group stats), a broadcast
     semi-join above (literal lists that large cost more to plan and
-    codegen than the join). In(part_id) always — part counts are small
-    and it prunes FILES on the partitioned layout. part_ids: the id
-    set when the caller aggregated them off the per-row frame (the
-    bounded phase); None derives them from pairs_pdf["part_id"]."""
-    terms = sorted(set(pairs_pdf["term"]))
-    if has_part:
-        if part_ids is None:
-            part_ids = sorted(int(p) for p in set(pairs_pdf["part_id"]))
-        posts = posts.where(_in_list("part_id", part_ids))
+    codegen than the join)."""
     if len(terms) <= _ISIN_MAX_TERMS:
-        pruned = posts.where(_in_list("term", terms))
-    else:
-        tdf = pdf_frame(spark, pd.DataFrame({"term": terms}))
-        pruned = posts.join(F.broadcast(tdf), "term", "semi")
-    pairs = pdf_frame(
-        spark, pairs_pdf[["term", "query_id"]].drop_duplicates())
-    return pruned.join(F.broadcast(pairs), "term")
+        return posts.where(_in_list("term", terms))
+    tdf = pdf_frame(spark, pd.DataFrame({"term": terms}))
+    return posts.join(F.broadcast(tdf), "term", "semi")
 
 
-def _expansion_masks(matched, doc_filter, doc_exclude):
-    """Kernel-mask routing for the expansion tails (round 7): bounded
-    doc_filter/doc_exclude sets become sorted-id broadcasts applied
-    INSIDE the decode kernels (before the per-task dedup/combine), so
-    the post-emission semi/anti joins disappear; oversized sets keep
-    the join path (same auto rules as _prep_doc_sets — nothing
-    unbounded is ever collected). Returns (doc_filter, doc_exclude,
-    filt_bc, excl_bc, empty); empty=True means a provably-empty
-    allowlist (the caller returns zero rows)."""
-    if doc_filter is None and doc_exclude is None:
-        return None, None, None, None, False
-    _, df_, de_, fb, eb, empty = _prep_doc_sets(
-        matched.sparkSession, "auto", doc_filter, doc_exclude,
-        4_000_000)
-    return df_, de_, fb, eb, empty
+def _pair_postings(spark, postings: DataFrame, pairs) -> DataFrame:
+    """The posting rows of _expansion_matched's pairs, joined to their
+    class id (query_id). Driver pairs prune the scan first: In(part_id)
+    always — part counts are small and it prunes FILES on the
+    partitioned layout — then _term_prune, then the broadcast (term,
+    query_id) equi-join. A distributed pair frame (the unbounded
+    equi-join path) joins the unpruned scan."""
+    posts = postings.drop("pos") if "pos" in postings.columns else postings
+    if isinstance(pairs, DataFrame):
+        return posts.join(pairs, "term")
+    if "_pids" in pairs.columns:  # the bounded path's per-term sets
+        posts = posts.where(_in_list("part_id", sorted(
+            {int(p) for lst in pairs["_pids"] for p in lst})))
+    elif "part_id" in pairs.columns:
+        posts = posts.where(_in_list("part_id", sorted(
+            {int(p) for p in pairs["part_id"]})))
+    return _term_prune(spark, posts, sorted(set(pairs["term"]))).join(
+        F.broadcast(pdf_frame(
+            spark, pairs[["term", "query_id"]].drop_duplicates())),
+        "term")
 
 
-def _expansion_result(spark, found, queries: pd.DataFrame, doc_filter,
-                      doc_exclude, docs_only: bool | str = False):
-    """Every expansion surface's tail: found = _expansion_matched's
-    return; the ranked top-k (_term_expansion_topk) or, with
-    docs_only, the membership (_expansion_doc_ids); empty when nothing
-    matched."""
-    if found is None:
-        return spark.createDataFrame(
-            [], _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA)
-    matched, classes, mass = found
+def _expansion_query(spark, postings, qpdf: pd.DataFrame, match,
+                     doc_filter, doc_exclude, dictionary, max_expansions,
+                     docs_only: bool = False, ddl: str | None = None):
+    """Every expansion surface after its own parsing. qpdf: the batch's
+    driver rows (query_id, k); match() builds the kind's predicates for
+    a non-empty batch (clause columns, join condition, scan condition,
+    distance column or None — a distance ranks the expansions before
+    df). Resolves the batch (_expansion_matched) and returns the ranked
+    top-k (_term_expansion_topk) or, with docs_only, the membership
+    (_expansion_doc_ids); empty when nothing matched."""
+    schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
+    if qpdf.empty:
+        return spark.createDataFrame([], schema)
+    cols, join_cond, scan_cond, dist = match()
+    found = _expansion_matched(
+        spark, postings, dictionary,
+        pdf_frame(spark, qpdf[["query_id"]].assign(**cols), ddl=ddl),
+        join_cond, scan_cond=scan_cond, max_expansions=max_expansions,
+        rank_cols=None if dist is None else [
+            ("dist", True), ("df", False), ("term", True)],
+        post_cols=None if dist is None else {"dist": dist})
+    filt_bc = excl_bc = None
+    empty = found is None
+    if not empty and (doc_filter is not None or doc_exclude is not None):
+        # bounded sets become sorted-id broadcasts masked INSIDE the
+        # producer, before its per-task fold; oversized ones keep the
+        # semi/anti joins (nothing unbounded is ever collected)
+        _, doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
+            _prep_doc_sets(spark, "auto", doc_filter, doc_exclude,
+                           4_000_000)
+    if empty:
+        return spark.createDataFrame([], schema)
+    pairs, classes, mass = found
+    matched = _pair_postings(spark, postings, pairs)
+    masks = (filt_bc, excl_bc, doc_filter, doc_exclude)
     if docs_only:
-        return _expansion_doc_ids(matched, classes, doc_filter,
-                                  doc_exclude, distinct=docs_only != "raw")
-    return _term_expansion_topk(matched, classes, mass, queries,
-                                doc_filter, doc_exclude)
+        return _expansion_doc_ids(matched, classes, *masks)
+    return _term_expansion_topk(matched, classes, mass, qpdf, *masks)
 
 
 def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
-                         queries: pd.DataFrame, doc_filter,
-                         doc_exclude) -> DataFrame:
+                         queries: pd.DataFrame, filt_bc, excl_bc,
+                         doc_filter, doc_exclude) -> DataFrame:
     """Shared ranked tail of the term-EXPANSION query family (prefix,
     fuzzy, wildcard, regexp, term_range): matched = posting rows joined
     to their class id (query_id), docs ranked by the summed tf of their
@@ -2858,13 +2839,8 @@ def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
     exists and the shuffle input is distinct-docs-sized; then the
     fused combine + top-k, once per class at the largest member k,
     fanned out to each member query (its own k) inside the combine —
-    no extra join or job. Bounded doc_filter/doc_exclude sets mask
-    INSIDE the producer (_expansion_masks), oversized ones keep the
-    semi/anti joins."""
-    doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
-        _expansion_masks(matched, doc_filter, doc_exclude)
-    if empty:
-        return matched.sparkSession.createDataFrame([], RESULT_SCHEMA)
+    no extra join or job. filt_bc/excl_bc/doc_filter/doc_exclude: the
+    masks _expansion_query routed (_doc_partials' arguments)."""
     # explicit projection: without it the dls/cf payload columns are
     # read from parquet AND shipped through Arrow just to be ignored
     # (~1/3 of expansion payload bytes)
@@ -2888,36 +2864,26 @@ def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
 _EXPANSION_DOCS_SCHEMA = "query_id int, doc_id long"
 
 
-def _expansion_doc_ids(matched, classes: dict | None, doc_filter,
-                       doc_exclude, distinct: bool = True) -> DataFrame:
+def _expansion_doc_ids(matched, classes: dict | None, filt_bc, excl_bc,
+                       doc_filter, doc_exclude) -> DataFrame:
     """MEMBERSHIP of an expansion match — distinct (query_id, doc_id)
-    over the matched posting rows, no tf decode, no ranking. This is
-    what a CONSTANT-SCORE rewrite consumer (the query-string parser's
-    wildcard/fuzzy clauses; Lucene's multi-term default) actually
-    needs: the summed-tf aggregation and the per-query top-k windows
-    of _term_expansion_topk are pure waste when every matching doc
-    scores flat. doc_filter/doc_exclude mask exactly as on the ranked
-    path — membership must respect liveDocs and filters identically (a
-    constant-score consumer composing the set into MUST clauses would
-    otherwise resurrect excluded docs). _doc_partials dedups per
-    (class, task): adjacent expanded terms overlap heavily on docs, so
-    the raw per-(term, doc) frame is several times the membership.
+    over the matched posting rows, no tf decode, no ranking: the
+    docs_only=True tail of the expansion surfaces, for CONSTANT-SCORE
+    consumers (Lucene's multi-term default), where the summed-tf
+    aggregation and the per-query top-k windows of
+    _term_expansion_topk are pure waste. doc_filter/doc_exclude mask
+    exactly as on the ranked path — membership must respect liveDocs
+    and filters identically (a constant-score consumer composing the
+    set into MUST clauses would otherwise resurrect excluded docs).
+    _doc_partials dedups per (class, task): adjacent expanded terms
+    overlap heavily on docs, so the raw per-(term, doc) frame is
+    several times the membership.
     When a class has several members (classes: member query_id ->
     class id), one broadcast join on (class -> query_id) fans the class
     rows out to every member, after the dedup."""
-    doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
-        _expansion_masks(matched, doc_filter, doc_exclude)
-    if empty:
-        return matched.sparkSession.createDataFrame(
-            [], _EXPANSION_DOCS_SCHEMA)
     out = _doc_partials(matched.select("query_id", "doc_ids"), None,
-                        None, filt_bc, excl_bc, doc_filter, doc_exclude)
-    # "raw" membership: per-task distinct only — an IDEMPOTENT consumer
-    # (the query-string parser's bit_or combine) absorbs cross-task
-    # duplicates, so the global dedup shuffle (the largest frame in a
-    # constant-score pipeline) is pure waste
-    if distinct:
-        out = out.dropDuplicates(["query_id", "doc_id"])
+                        None, filt_bc, excl_bc, doc_filter,
+                        doc_exclude).dropDuplicates(["query_id", "doc_id"])
     if not classes or all(q == c for q, c in classes.items()):
         return out
     fan = pdf_frame(matched.sparkSession,
@@ -2972,22 +2938,116 @@ def _damerau_levenshtein(a: str, b: str) -> int:
     return d[la + 1][lb + 1]
 
 
-def _fuzzy_scan_cond(qlens, max_edits: int, prefixes=None):
+def _fuzzy_scan_cond(qlens, max_edits: int):
     """Dictionary-scan prefilter for fuzzy: |len(term) - len(qterm)| <=
     max_edits is necessary under classic AND Damerau distance (every
     edit op changes length by at most 1), expressed as one coarse
     range over the query batch so it stays a single pushable predicate
     pair on the persisted `tlen` column (parquet row-group min/max —
-    the FST-automaton / sorted-range analog). Exact-prefix conditions
-    (prefix_len > 0) additionally push as StringStartsWith."""
-    cond = F.col("tlen").between(
+    the FST-automaton / sorted-range analog)."""
+    return F.col("tlen").between(
         min(qlens) - int(max_edits), max(qlens) + int(max_edits))
-    if prefixes:
-        pcond = F.col("term").startswith(prefixes[0])
-        for p_ in prefixes[1:]:
-            pcond = pcond | F.col("term").startswith(p_)
-        cond = cond & pcond
+
+
+# ---- per-kind expansion predicates -------------------------------------
+# Each returns (clause columns, join condition, pushable dictionary-scan
+# condition or None, distance column or None). The clause columns are
+# {name: per-clause values} for the broadcast clause frame, which the
+# join condition reads. The expansion surfaces build one kind's frame;
+# query_string_topk builds one frame for all of its expansion clauses
+# and ORs the kind-guarded conditions (one dictionary pass).
+
+
+def _starts_any(leads):
+    """OR of pushed StringStartsWith over literal leads; None when any
+    lead is empty (that pattern may start anywhere)."""
+    leads = sorted(set(leads))
+    if not leads or not all(leads):
+        return None
+    cond = F.col("term").startswith(leads[0])
+    for p in leads[1:]:
+        cond = cond | F.col("term").startswith(p)
     return cond
+
+
+def _fuzzy_match(qterms: list[str], edits: list[int]):
+    """Fuzzy terms, each within its own classic-Levenshtein bound (the
+    clause frame's `me`): Spark's built-in banded levenshtein in its
+    threshold form, which early-exits above the bound and returns -1
+    there, is both the join test and the distance that ranks the
+    expansions; the coarse tlen window over the batch prunes the
+    scan."""
+    dist = F.expr("levenshtein(term, qterm, me)")
+    return ({"qterm": qterms, "me": edits}, dist >= 0,
+            _fuzzy_scan_cond([len(t) for t in qterms], max(edits)), dist)
+
+
+def _wildcard_match(pats: list[str]):
+    """Lowercased wildcard patterns, non-empty [a-z0-9*?]+ (anything
+    else raises — it cannot appear in a word-tokenized term): SQL LIKE
+    (`*`->`%`, `?`->`_`), a built-in codegen expression with identical
+    semantics in the DuckDB oracle; a literal lead on every pattern
+    pushes as StringStartsWith."""
+    for p in pats:
+        if not p or not re.fullmatch(r"[a-z0-9*?]+", p):
+            raise ValueError(
+                f"wildcard pattern must be non-empty [a-z0-9*?]+: {p!r}")
+    return ({"like_pat": [p.replace("*", "%").replace("?", "_")
+                          for p in pats]},
+            F.expr("term LIKE like_pat"),
+            _starts_any(re.split(r"[*?]", p)[0] for p in pats), None)
+
+
+def _regexp_lead(p: str) -> str:
+    """Longest literal prefix every match of regexp `p` must start
+    with — SOUND, possibly empty. Any '|' disables the pushdown
+    ('sort|row' offers an alternative start; scoping is not parsed, so
+    parens don't rescue it). The literal run stops at the first
+    metachar, and when that metachar is an optionalizing/repeating
+    quantifier (?, *, {) the character it governs may be absent from a
+    match — drop it from the lead ('so?rt' matches 'srt': lead 's',
+    not 'so'). '+' keeps the full run (its char is mandatory)."""
+    if "|" in p:
+        return ""
+    run = re.match(r"[a-z0-9\-]*", p).group(0)
+    if p[len(run):][:1] in ("?", "*", "{"):
+        run = run[:-1]
+    return run
+
+
+def _regexp_match(pats: list[str]):
+    """Validated regexp patterns (validate_regexp_pattern): anchored
+    Spark RLIKE `^(?:p)$`, with the literal leads (_regexp_lead) pushed
+    as StringStartsWith when every pattern has one."""
+    return ({"rx": [f"^(?:{p})$" for p in pats]}, F.expr("term RLIKE rx"),
+            _starts_any(_regexp_lead(p) for p in pats), None)
+
+
+def _range_match(los: list, his: list, inc_los: list, inc_his: list):
+    """Term ranges: lowercased bounds (None = open side) with their
+    inclusivity. The coarse [min(lo), max(hi)] envelope over the batch
+    is the pushdown (a side open anywhere drops that side): the
+    dictionary is term-sorted on disk (build.py stage_dict), so
+    row-group min/max prunes to the touched range, the closest Spark
+    analog of the reference's two binary searches. Per-clause bounds
+    then refine in the join."""
+    scan = None
+    if all(v is not None for v in los):
+        scan = F.col("term") >= min(los)
+    if all(v is not None for v in his):
+        hc = F.col("term") <= max(his)
+        scan = hc if scan is None else scan & hc
+    join = (
+        F.col("lo").isNull()
+        | F.when(F.col("inc_lo"), F.col("term") >= F.col("lo"))
+           .otherwise(F.col("term") > F.col("lo"))
+    ) & (
+        F.col("hi").isNull()
+        | F.when(F.col("inc_hi"), F.col("term") <= F.col("hi"))
+           .otherwise(F.col("term") < F.col("hi"))
+    )
+    return ({"lo": los, "hi": his, "inc_lo": inc_los, "inc_hi": inc_his},
+            join, scan, None)
 
 
 def fuzzy_topk(
@@ -3002,7 +3062,7 @@ def fuzzy_topk(
     dictionary: DataFrame | None = None,
     max_expansions: int | None = MAX_EXPANSIONS_DEFAULT,
     transpositions: bool = False,
-    docs_only: bool | str = False,
+    docs_only: bool = False,
 ) -> DataFrame:
     """Fuzzy term query (Lucene FuzzyQuery): docs containing ANY
     dictionary term within `max_edits` Levenshtein edits of the query
@@ -3072,49 +3132,35 @@ def fuzzy_topk(
                      toks[0][:prefix_len] if prefix_len > 0 else "",
                      _check_k(q.query_id, q.k)))
     qpdf = pd.DataFrame(rows, columns=["query_id", "qterm", "pfx", "k"])
-    empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
-    if qpdf.empty:
-        return spark.createDataFrame([], empty_schema)
-    _, doc_filter, doc_exclude, _, _, empty = _prep_doc_sets(
-        spark, "distributed", doc_filter, doc_exclude, 0
-    )
-    if empty:
-        return spark.createDataFrame([], empty_schema)
     me = int(max_edits)
-    scan_cond = _fuzzy_scan_cond(
-        [len(t) for t in qpdf["qterm"]], me,
-        sorted(set(qpdf["pfx"])) if prefix_len > 0 else None)
-    # banded builtin levenshtein: threshold form early-exits the DP at
-    # max_edits and returns -1 above it. transpositions prefilters with
-    # classic <= 2*max_edits (classic <= 2*DL), refined post-join.
-    join_thresh = 2 * me if transpositions else me
-    join_cond = (
-        F.levenshtein(F.col("term"), F.col("qterm"), join_thresh) >= 0
-    )
-    if prefix_len > 0:
-        join_cond = join_cond & F.col("term").startswith(F.col("pfx"))
-    if transpositions:
-        @F.pandas_udf("int")
-        def _dl_dist(term: pd.Series, qterm: pd.Series) -> pd.Series:
-            out = [
-                dist if (dist := _damerau_levenshtein(t, q)) <= me
-                else None
-                for t, q in zip(term, qterm)
-            ]
-            return pd.Series(out, dtype="Int32")
 
-        dist_col = _dl_dist(F.col("term"), F.col("qterm"))
-    else:
-        dist_col = F.levenshtein(F.col("term"), F.col("qterm"), me)
-    return _expansion_result(spark, _expansion_matched(
-        spark, postings, dictionary,
-        pdf_frame(spark, qpdf.drop(columns=["pfx"])
-                  if prefix_len <= 0 else qpdf),
-        join_cond, scan_cond=scan_cond,
-        max_expansions=max_expansions,
-        rank_cols=[("dist", True), ("df", False), ("term", True)],
-        post_cols={"dist": dist_col},
-    ), qpdf, doc_filter, doc_exclude, docs_only)
+    def match():
+        cols, join_cond, scan_cond, dist = _fuzzy_match(
+            list(qpdf["qterm"]), [me] * len(qpdf))
+        if prefix_len > 0:
+            cols["pfx"] = list(qpdf["pfx"])
+            join_cond = join_cond & F.col("term").startswith(F.col("pfx"))
+            scan_cond = scan_cond & _starts_any(qpdf["pfx"])
+        if transpositions:
+            # the classic distance prefilters at <= 2*max_edits
+            # (classic <= 2*DL), refined post-join on matched rows only
+            cols["me"] = [2 * me] * len(qpdf)
+
+            @F.pandas_udf("int")
+            def _dl_dist(term: pd.Series, qterm: pd.Series) -> pd.Series:
+                out = [
+                    dist if (dist := _damerau_levenshtein(t, q)) <= me
+                    else None
+                    for t, q in zip(term, qterm)
+                ]
+                return pd.Series(out, dtype="Int32")
+
+            dist = _dl_dist(F.col("term"), F.col("qterm"))
+        return cols, join_cond, scan_cond, dist
+
+    return _expansion_query(
+        spark, postings, qpdf, match, doc_filter, doc_exclude, dictionary,
+        max_expansions, docs_only)
 
 
 def wildcard_topk(
@@ -3126,7 +3172,7 @@ def wildcard_topk(
     doc_exclude: DataFrame | np.ndarray | None = None,
     dictionary: DataFrame | None = None,
     max_expansions: int | None = MAX_EXPANSIONS_DEFAULT,
-    docs_only: bool | str = False,
+    docs_only: bool = False,
 ) -> DataFrame:
     """Wildcard term query (Lucene WildcardQuery): `*` matches any run
     of characters, `?` exactly one; docs containing ANY matching
@@ -3157,40 +3203,14 @@ def wildcard_topk(
             "substring_topk on a chargram index"
         )
     _check_unique_ids(queries)
-    rows = []
-    for q in queries.itertuples(index=False):
-        pat = str(q.text or "").lower()
-        if not pat or not re.fullmatch(r"[a-z0-9*?]+", pat):
-            raise ValueError(
-                f"wildcard pattern must be non-empty [a-z0-9*?]+: "
-                f"{q.text!r}"
-            )
-        rows.append((int(q.query_id), pat,
-                     pat.replace("*", "%").replace("?", "_"),
-                     _check_k(q.query_id, q.k)))
-    qpdf = pd.DataFrame(rows, columns=["query_id", "pat", "like_pat", "k"])
-    empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
-    if qpdf.empty:
-        return spark.createDataFrame([], empty_schema)
-    _, doc_filter, doc_exclude, _, _, empty = _prep_doc_sets(
-        spark, "distributed", doc_filter, doc_exclude, 0
-    )
-    if empty:
-        return spark.createDataFrame([], empty_schema)
-    lead = sorted({re.split(r"[*?]", p)[0] for p in qpdf["pat"]})
-    scan_cond = None
-    if all(lead):  # every pattern has a literal prefix -> pushdown
-        scan_cond = F.col("term").startswith(lead[0])
-        for p_ in lead[1:]:
-            scan_cond = scan_cond | F.col("term").startswith(p_)
-    # Column.like only takes a literal; the per-row pattern goes
-    # through the SQL expression form (same LIKE semantics)
-    return _expansion_result(spark, _expansion_matched(
-        spark, postings, dictionary,
-        pdf_frame(spark, qpdf.drop(columns=["pat"])),
-        F.expr("term LIKE like_pat"), scan_cond=scan_cond,
-        max_expansions=max_expansions,
-    ), qpdf, doc_filter, doc_exclude, docs_only)
+    qpdf = pd.DataFrame({
+        "query_id": [int(q) for q in queries["query_id"]],
+        "pat": [str(t or "").lower() for t in queries["text"]],
+        "k": [_check_k(q, k) for q, k in zip(queries["query_id"],
+                                             queries["k"])]})
+    return _expansion_query(
+        spark, postings, qpdf, lambda: _wildcard_match(list(qpdf["pat"])),
+        doc_filter, doc_exclude, dictionary, max_expansions, docs_only)
 
 
 # regex metachars allowed in regexp_topk patterns: the common
@@ -3240,16 +3260,14 @@ def regexp_topk(
     doc_exclude: DataFrame | np.ndarray | None = None,
     dictionary: DataFrame | None = None,
     max_expansions: int | None = MAX_EXPANSIONS_DEFAULT,
-    docs_only: bool | str = False,
+    docs_only: bool = False,
 ) -> DataFrame:
     """Regexp term query (Lucene RegexpQuery): docs containing ANY
     dictionary term the pattern FULLY matches (anchored, like Lucene —
     `so.*` matches "sort" but "os.*" does not), ranked by summed tf of
     the matched terms, ties by doc_id. docs_only=True returns the
     distinct (query_id, doc_id) MEMBERSHIP instead (no scoring, no
-    top-k) — the constant-score rewrite's input; k is ignored ("raw"
-    additionally skips the global dedup, for consumers whose
-    aggregate absorbs cross-task duplicates).
+    top-k) — the constant-score rewrite's input; k is ignored.
 
     queries: pandas (query_id, text, k) — text is the regex,
     lowercased against the normalized dictionary. Patterns are
@@ -3272,50 +3290,14 @@ def regexp_topk(
             "substring_topk on a chargram index"
         )
     _check_unique_ids(queries)
-    rows = []
-    for q in queries.itertuples(index=False):
-        pat = validate_regexp_pattern(q.text)
-        rows.append((int(q.query_id), pat, f"^(?:{pat})$",
-                     _check_k(q.query_id, q.k)))
-    qpdf = pd.DataFrame(rows, columns=["query_id", "pat", "rx", "k"])
-    empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
-    if qpdf.empty:
-        return spark.createDataFrame([], empty_schema)
-    _, doc_filter, doc_exclude, _, _, empty = _prep_doc_sets(
-        spark, "distributed", doc_filter, doc_exclude, 0
-    )
-    if empty:
-        return spark.createDataFrame([], empty_schema)
-
-    def _lead(p: str) -> str:
-        """Longest literal prefix every match must start with — SOUND,
-        possibly empty. Any '|' disables the pushdown ('sort|row'
-        offers an alternative start; scoping is not parsed, so parens
-        don't rescue it). The literal run stops at the first metachar,
-        and when that metachar is an optionalizing/repeating
-        quantifier (?, *, {) the character it governs may be absent
-        from a match — drop it from the lead ('so?rt' matches 'srt':
-        lead 's', not 'so'). '+' keeps the full run (its char is
-        mandatory)."""
-        if "|" in p:
-            return ""
-        run = re.match(r"[a-z0-9\-]*", p).group(0)
-        if p[len(run):][:1] in ("?", "*", "{"):
-            run = run[:-1]
-        return run
-
-    lead = sorted({_lead(p) for p in qpdf["pat"]})
-    scan_cond = None
-    if all(lead):  # every pattern starts with a literal run -> pushdown
-        scan_cond = F.col("term").startswith(lead[0])
-        for p_ in lead[1:]:
-            scan_cond = scan_cond | F.col("term").startswith(p_)
-    return _expansion_result(spark, _expansion_matched(
-        spark, postings, dictionary,
-        pdf_frame(spark, qpdf.drop(columns=["pat"])),
-        F.expr("term RLIKE rx"), scan_cond=scan_cond,
-        max_expansions=max_expansions,
-    ), qpdf, doc_filter, doc_exclude, docs_only)
+    qpdf = pd.DataFrame({
+        "query_id": [int(q) for q in queries["query_id"]],
+        "pat": [validate_regexp_pattern(t) for t in queries["text"]],
+        "k": [_check_k(q, k) for q, k in zip(queries["query_id"],
+                                             queries["k"])]})
+    return _expansion_query(
+        spark, postings, qpdf, lambda: _regexp_match(list(qpdf["pat"])),
+        doc_filter, doc_exclude, dictionary, max_expansions, docs_only)
 
 
 def term_range_topk(
@@ -3327,7 +3309,7 @@ def term_range_topk(
     doc_exclude: DataFrame | np.ndarray | None = None,
     dictionary: DataFrame | None = None,
     max_expansions: int | None = MAX_EXPANSIONS_DEFAULT,
-    docs_only: bool | str = False,
+    docs_only: bool = False,
 ) -> DataFrame:
     """Term-range query (Lucene TermRangeQuery; the reference's sorted
     suffix-array range scan, /root/reference/src/Suffix_Array.cpp:
@@ -3335,8 +3317,7 @@ def term_range_topk(
     term in [lo, hi], ranked by summed tf, ties by doc_id.
     docs_only=True returns the distinct (query_id, doc_id) MEMBERSHIP
     instead (no scoring, no top-k) — the constant-score rewrite's
-    input; k is ignored ("raw" additionally skips the global dedup,
-    for consumers whose aggregate absorbs cross-task duplicates).
+    input; k is ignored.
 
     queries: pandas (query_id, lo, hi, k) plus optional boolean
     columns include_lower / include_upper (default True — inclusive
@@ -3372,45 +3353,15 @@ def term_range_topk(
     qpdf = pd.DataFrame(
         rows,
         columns=["query_id", "lo", "hi", "inc_lo", "inc_hi", "k"])
-    empty_schema = _EXPANSION_DOCS_SCHEMA if docs_only else RESULT_SCHEMA
-    if qpdf.empty:
-        return spark.createDataFrame([], empty_schema)
-    _, doc_filter, doc_exclude, _, _, empty = _prep_doc_sets(
-        spark, "distributed", doc_filter, doc_exclude, 0
-    )
-    if empty:
-        return spark.createDataFrame([], empty_schema)
-    # coarse pushable envelope over the batch (open bounds drop a side)
-    scan_cond = None
-    los = [v for v in qpdf["lo"] if v is not None]
-    his = [v for v in qpdf["hi"] if v is not None]
-    if len(los) == len(qpdf):
-        scan_cond = F.col("term") >= min(los)
-    if len(his) == len(qpdf):
-        hc = F.col("term") <= max(his)
-        scan_cond = hc if scan_cond is None else scan_cond & hc
-    join_cond = (
-        F.col("lo").isNull()
-        | F.when(F.col("inc_lo"), F.col("term") >= F.col("lo"))
-           .otherwise(F.col("term") > F.col("lo"))
-    ) & (
-        F.col("hi").isNull()
-        | F.when(F.col("inc_hi"), F.col("term") <= F.col("hi"))
-           .otherwise(F.col("term") < F.col("hi"))
-    )
     # explicit schema: a batch open on the same side everywhere makes
     # lo/hi an all-None column, which createDataFrame's inference
     # rejects (CANNOT_DETERMINE_TYPE)
-    qdf = pdf_frame(
-        spark, qpdf.astype({"lo": object, "hi": object}),
+    return _expansion_query(
+        spark, postings, qpdf, lambda: _range_match(
+            *(list(qpdf[c]) for c in ("lo", "hi", "inc_lo", "inc_hi"))),
+        doc_filter, doc_exclude, dictionary, max_expansions, docs_only,
         ddl="query_id long, lo string, hi string, inc_lo boolean, "
-            "inc_hi boolean, k long",
-    )
-    return _expansion_result(spark, _expansion_matched(
-        spark, postings, dictionary, qdf,
-        join_cond, scan_cond=scan_cond,
-        max_expansions=max_expansions,
-    ), qpdf, doc_filter, doc_exclude, docs_only)
+            "inc_hi boolean")
 
 
 def facet_counts(

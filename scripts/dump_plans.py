@@ -279,24 +279,27 @@ out.write("\n```\n")
 from capsbm25.parser import query_string_topk  # noqa: E402
 
 pq = pd.DataFrame({"query_id": np.arange(2, dtype=np.int32),
-                   "text": ["+w0001 w0002 w00* hotterm~1", "w0003 w00*"],
+                   "text": ["+w0001 w0002 w00* hotterm~1",
+                            "w0003 -w00* /w01.*/ [w0100 TO w0120]"],
                    "k": np.array([10, 10], dtype=np.int32)})
 out.write(
     "\n## 10. Query-string parser (one string -> clause composition)\n\n"
-    "Term clauses of the whole batch share ONE In(term)-pruned scan\n"
-    "and the producer of section 4 (MUST-group bit, constant-clause\n"
-    "bit and MUST_NOT flag ride the clause frame as per-row\n"
-    "constants);\n"
-    "expansion clauses resolve through their surfaces' docs_only\n"
-    "membership path (their dictionary match collected eagerly above\n"
-    "this plan, like section 7a). Both queries carry `w00*`, so the\n"
-    "wildcard sub-call decodes it once as one class and one broadcast\n"
-    "join on (class -> query_id) fans the membership out to both\n"
-    "clauses; the combine is a single union ->\n"
-    "the fused combine of section 4 (per-doc MUST-group bits, MUST_NOT\n"
-    "flag and constant-clause boosts folded in the same group call) ->\n"
-    "one Window. One clause KIND absent from a batch contributes\n"
-    "nothing to the plan.\n\n```\n"
+    "Term and expansion clauses of the whole batch share ONE term\n"
+    "pass. Every fuzzy / wildcard / regexp / range clause resolves in\n"
+    "one dictionary pass (one clause frame, kind-guarded OR of the\n"
+    "per-kind predicates; collected eagerly above this plan, like\n"
+    "section 7a). The resolved (class, term) pairs ride the term\n"
+    "clause frame (the LocalTableScan below) beside the term clauses:\n"
+    "ONE In(term)-pruned postings scan, one broadcast join and the\n"
+    "producer of section 4, which decodes a class row once and emits\n"
+    "its docs once per member clause (MUST-group bit, constant-clause\n"
+    "bit and MUST_NOT flag of that clause). Both queries carry `w00*`\n"
+    "(SHOULD in one, MUST_NOT in the other), so it is one class\n"
+    "decoded once. The combine is the fused combine of section 4\n"
+    "(per-doc MUST-group bits, MUST_NOT flag and constant-clause\n"
+    "boosts folded in the same group call) -> one Window. Phrase and\n"
+    "field clauses would add their own sub-plans to a union; a clause\n"
+    "KIND absent from a batch contributes nothing to the plan.\n\n```\n"
 )
 out.write(plan_of(
     query_string_topk(spark, postings, pq, res.N, res.avgdl, cfg,

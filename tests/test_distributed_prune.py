@@ -166,17 +166,14 @@ def _small_chunk_docs_only(ix, spark):
     queries = pd.DataFrame({"query_id": np.arange(2, dtype=np.int32),
                             "text": pats,
                             "k": np.full(2, 1, dtype=np.int32)})
-    for docs_only in (True, "raw"):
-        got = wildcard_topk(spark, ix["postings"], queries, ix["cfg"],
-                            max_expansions=None,
-                            docs_only=docs_only).toPandas()
-        for qid, p in enumerate(pats):
-            want = {d for t in oracle.postings if t.startswith(p[:-1])
-                    for d in oracle.postings[t]}
-            g = got[got.query_id == qid]
-            assert set(g.doc_id) == want and want, (docs_only, p)
-            if docs_only is True:
-                assert len(g) == len(want), p
+    got = wildcard_topk(spark, ix["postings"], queries, ix["cfg"],
+                        max_expansions=None, docs_only=True).toPandas()
+    for qid, p in enumerate(pats):
+        want = {d for t in oracle.postings if t.startswith(p[:-1])
+                for d in oracle.postings[t]}
+        g = got[got.query_id == qid]
+        assert set(g.doc_id) == want and want, p
+        assert len(g) == len(want), p
 
 
 def _small_chunk_hit_count(ix, spark):

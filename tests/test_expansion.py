@@ -429,8 +429,7 @@ def test_term_range_matches_naive_expansion(built_index, spark):
 
 def test_term_range_docs_only_membership(built_index, spark):
     """docs_only=True returns the distinct (query_id, doc_id)
-    membership (constant-score rewrite input); "raw" may carry
-    cross-task duplicates but the same distinct set."""
+    membership (constant-score rewrite input)."""
     from capsbm25.query import term_range_topk
 
     cfg, oracle = built_index["cfg"], built_index["oracle"]
@@ -450,9 +449,6 @@ def test_term_range_docs_only_membership(built_index, spark):
     assert set(got.columns) == {"query_id", "doc_id"}
     assert len(got) == len(want)  # distinct — no duplicate rows
     assert set(got.doc_id) == want
-    raw = term_range_topk(spark, built_index["postings"], queries, cfg,
-                          max_expansions=None, docs_only="raw").toPandas()
-    assert set(raw.doc_id) == want
 
 
 def test_term_range_requires_a_bound(built_index, spark):
@@ -792,7 +788,7 @@ def test_class_sharing_equals_single_queries(built_index, spark, surface):
 def test_class_sharing_filters_and_membership(built_index, spark,
                                               surface):
     """Class sharing under doc_filter / doc_exclude on the ranked tail,
-    and on the membership fan-out (docs_only=True and "raw")."""
+    and on the membership fan-out (docs_only=True)."""
     rows, pred = _CLASS_CASES[surface]
     oracle = built_index["oracle"]
     queries = _class_batch(surface, rows)
@@ -814,14 +810,12 @@ def test_class_sharing_filters_and_membership(built_index, spark,
             _check_one(got, qid, want)
     if surface == "prefix":  # prefix_topk has no membership mode
         return
-    for docs_only in (True, "raw"):
-        got = _class_call(surface, built_index, spark, queries,
-                          docs_only=docs_only, doc_exclude=excl)
-        for qid, spec, _ in rows:
-            g = got[got.query_id == qid]
-            assert set(g.doc_id) == docs(spec, lambda d: d % 2 != 0), qid
-            if docs_only is True:
-                assert len(g) == g.doc_id.nunique(), qid
+    got = _class_call(surface, built_index, spark, queries,
+                      docs_only=True, doc_exclude=excl)
+    for qid, spec, _ in rows:
+        g = got[got.query_id == qid]
+        assert set(g.doc_id) == docs(spec, lambda d: d % 2 != 0), qid
+        assert len(g) == g.doc_id.nunique(), qid
 
 
 def test_class_sharing_decodes_once(built_index, spark, monkeypatch):
@@ -852,20 +846,29 @@ def test_class_sharing_decodes_once(built_index, spark, monkeypatch):
         assert _ranked(results[1], qid) == first, qid
 
 
-def test_class_sharing_query_string(built_index, spark):
-    """Query-string expansion clauses reach the expansion surfaces
-    through docs_only="raw": three queries carrying the same `w0*`
-    clause share one class and each still matches its oracle."""
+def test_class_sharing_query_string(built_index, spark, monkeypatch):
+    """Query-string expansion clauses are rows of the one term pass:
+    three queries carrying the same `w0*` clause share one class and
+    each still matches its oracle. Membership is keyed per CLAUSE, not
+    per query: `w0* -w0*` in one query returns nothing, a class shared
+    as MUST, boosted SHOULD and MUST_NOT across queries composes like
+    the oracle, and a 3-query batch decodes `w0*` no more often than a
+    1-query batch."""
+    import capsbm25.parser as P
     from capsbm25.parser import query_string_topk
 
     res, cfg, oracle = (built_index["res"], built_index["cfg"],
                         built_index["oracle"])
+
+    def run(texts):
+        q = pd.DataFrame({"query_id": np.arange(len(texts), dtype=np.int32),
+                          "text": texts,
+                          "k": np.full(len(texts), 30, dtype=np.int32)})
+        return query_string_topk(spark, built_index["postings"], q, res.N,
+                                 res.avgdl, cfg).toPandas()
+
     texts = ["w0* w0001", "+w0002 w0*^2", "w0*", "w00*"]
-    q = pd.DataFrame({"query_id": np.arange(4, dtype=np.int32),
-                      "text": texts,
-                      "k": np.full(4, 30, dtype=np.int32)})
-    got = query_string_topk(spark, built_index["postings"], q, res.N,
-                            res.avgdl, cfg).toPandas()
+    got = run(texts)
 
     def docs(prefix):
         return {d for t in oracle.postings if t.startswith(prefix)
@@ -890,3 +893,34 @@ def test_class_sharing_query_string(built_index, spark):
         g = got[got.query_id == qid].sort_values("rank")
         assert list(g.doc_id) == [d for d, _ in want], qid
         assert np.allclose(g.score, [s for _, s in want]), qid
+
+    # per-clause keying: SHOULD and MUST_NOT of one class in one query
+    assert run(["w0* -w0*"]).empty
+    got = run(["+w0*", "w0*^2 w0001", "w0001 -w0*"])
+    s1 = {d: 2.0 for d in w0}
+    for d, s in bm25("w0001").items():
+        s1[d] = s1.get(d, 0.0) + s
+    wants = [rank({d: 1.0 for d in w0}), rank(s1),
+             rank({d: s for d, s in bm25("w0001").items()
+                   if d not in w0})]
+    for qid, want in enumerate(wants):
+        g = got[got.query_id == qid].sort_values("rank")
+        assert list(g.doc_id) == [d for d, _ in want], qid
+        assert np.allclose(g.score, [s for _, s in want]), qid
+    assert wants[0] and wants[1]
+
+    # one decode per class: the producer sees as many posting rows for
+    # three clauses of `w0*` across three queries as for one
+    counts = []
+    real = P._doc_partials
+
+    def counting(matched, *args, **kwargs):
+        counts.append(matched.count())
+        return real(matched, *args, **kwargs)
+
+    monkeypatch.setattr(P, "_doc_partials", counting)
+    run(["w0*"])
+    one = sum(counts)
+    counts.clear()
+    run(["w0*", "+w0*^2", "w0* -w0*"])
+    assert sum(counts) == one > 0

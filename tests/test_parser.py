@@ -838,3 +838,128 @@ def test_fused_combine_rank_identical(ps_index, monkeypatch):
         for qid, w in enumerate(wants):
             assert w, qid
             _check(got, qid, w)
+
+
+# ------------------------------------------- expansion clauses, one pass
+
+
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[-1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _const_docs(oracle, pred):
+    out = set()
+    for t in oracle.postings:
+        if pred(t):
+            out |= oracle.postings[t].keys()
+    return out
+
+
+def test_expansion_only_batch_sizes_combine_by_mass(ps_index, monkeypatch):
+    """An expansion-only batch hands the combine the class's Σ df as
+    its raw contribution mass (it used to read 0, pinning the combine
+    to fan-out 1)."""
+    import capsbm25.parser as P
+
+    oracle = ps_index["oracle"]
+    seen = []
+    real = P._fused_combine_topk
+
+    def spy(c, meta, raw_mass, *args, **kwargs):
+        seen.append(raw_mass)
+        return real(c, meta, raw_mass, *args, **kwargs)
+
+    monkeypatch.setattr(P, "_fused_combine_topk", spy)
+    _run(ps_index, ["w0*"])
+    terms = [t for t in oracle.postings if t.startswith("w0")]
+    assert 0 < len(terms) < 1024  # below max_expansions: all resolved
+    assert seen == [sum(oracle.df(t) for t in terms)]
+
+
+def test_unbounded_expansions_in_one_pass(ps_index, monkeypatch):
+    """max_expansions=None above MAX_EXPANSION_COLLECT: the dictionary
+    match stays a distributed equi-join (no driver pairs), and the
+    term pass takes its class rows from that frame."""
+    import capsbm25.query as Q
+
+    monkeypatch.setattr(Q, "MAX_EXPANSION_COLLECT", 2)
+    oracle = ps_index["oracle"]
+    wild = _const_docs(oracle, lambda t: t.startswith("w00"))
+    fuzz = _const_docs(oracle, lambda t: _lev(t, "w0003") <= 1)
+    excl = _const_docs(oracle, lambda t: t.startswith("w001"))
+    got = _run(ps_index, ["w00* w0003~1 -/w001.*/",
+                          "w0001 w0003~1"], k=oracle.N,
+               max_expansions=None)
+    assert wild - excl and fuzz - excl
+    _check(got, 0, _rank([(d, (d in wild) + (d in fuzz) + 0.0)
+                          for d in (wild | fuzz) - excl], oracle.N))
+    w1 = {d: oracle.score_doc(["w0001"], d)
+          for d in oracle.postings["w0001"]}
+    _check(got, 1, _rank([(d, w1.get(d, 0.0) + (d in fuzz))
+                          for d in set(w1) | fuzz], oracle.N))
+
+
+def test_required_clause_mask_bounds_class_rows(ps_index, monkeypatch):
+    """A selective pure-term MUST group masks the expansion class rows
+    inside the producer: every `w0*` row reaching the combine lies in
+    the rare term's doc set, and the result equals the oracle."""
+    import capsbm25.parser as P
+
+    monkeypatch.setattr(P, "_QS_FILTER_MIN_N", 0)
+    oracle = ps_index["oracle"]
+    wild = _const_docs(oracle, lambda t: t.startswith("w0"))
+    rare = min((t for t in oracle.postings if not t.startswith("w0")
+                and wild & set(oracle.postings[t])), key=oracle.df)
+    rare_docs = set(oracle.postings[rare])
+    assert wild - rare_docs  # the mask has something to cut
+    rows = []
+    real = P._fused_combine_topk
+
+    def spy(c, *args, **kwargs):
+        rows.append(c.toPandas())
+        return real(c, *args, **kwargs)
+
+    monkeypatch.setattr(P, "_fused_combine_topk", spy)
+    got = _run(ps_index, [f"+{rare} w0*"], k=oracle.N)
+    cls = rows[0][rows[0]["cb"] != 0]
+    assert len(cls) and set(cls["doc_id"]) <= rare_docs
+    _check(got, 0, _rank(
+        [(d, oracle.score_doc([rare], d) + (d in wild))
+         for d in rare_docs], oracle.N))
+
+
+def test_expansion_clauses_run_in_one_pass(ps_index, monkeypatch):
+    """Term, MUST, MUST_NOT and one clause of each expansion kind: one
+    dictionary match, one producer, one postings scan."""
+    import capsbm25.parser as P
+    import capsbm25.query as Q
+
+    calls = {"match": 0, "producer": 0}
+
+    def spy(name, real):
+        def f(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+        return f
+
+    for mod in (P, Q):
+        monkeypatch.setattr(mod, "_expansion_matched", spy(
+            "match", Q._expansion_matched), raising=False)
+        monkeypatch.setattr(mod, "_doc_partials", spy(
+            "producer", Q._doc_partials))
+    got = query_string_topk(
+        ps_index["postings"].sparkSession, ps_index["postings"],
+        _q(["+w0001 w0002 w00* w0003~1",
+            "w0003 -w0010 /w01.*/ [w0100 TO w0120]"]),
+        ps_index["res"].N, ps_index["res"].avgdl, ps_index["cfg"])
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert calls == {"match": 1, "producer": 1}
+    assert plan.count("Scan parquet") == 1, plan
+    assert not got.toPandas().empty

@@ -936,9 +936,8 @@ def test_ndarray_doc_sets(built_index, spark):
     ).toPandas()
     assert len(got) == 0
 
-    # expansion entry point (the passthrough branch: normalization pass
-    # keeps the array, _expansion_masks routes it): ndarray filter ==
-    # DataFrame filter on wildcard
+    # expansion entry point (the array becomes the producer's mask):
+    # ndarray filter == DataFrame filter on wildcard
     wq = pd.DataFrame({"query_id": np.array([0], dtype=np.int64),
                        "text": ["w00*"],
                        "k": np.array([8], dtype=np.int64)})

@@ -711,8 +711,9 @@ _CLAUSE_FRAME_DDL = ("term string, query_id long, role string, "
 
 
 def _term_contribs(spark, postings, terms: pd.DataFrame,
-                   exp: pd.DataFrame, other_gids: set, N, avgdl, cfg,
-                   dictionary, max_expansions):
+                   exp: pd.DataFrame, phrases: pd.DataFrame,
+                   other_gids: set, N, avgdl, cfg, dictionary,
+                   max_expansions):
     """The batch's one term pass: every term clause (terms) and every
     expansion clause (exp) share one df map, one In(term)-pruned scan,
     one broadcast clause join and one _doc_partials. A term row scores
@@ -728,15 +729,22 @@ def _term_contribs(spark, postings, terms: pd.DataFrame,
     _doc_partials emits them once per member clause, whose cb bit
     carries the constant score. On the unbounded expansion path the
     pairs are a distributed frame, and the clause frame joins the
-    unpruned scan with it. other_gids: the (query, group) pairs
-    holding a non-term clause. Returns (contribution frame, or None
-    when nothing can match; the raw contribution mass, Σ df over the
-    term clauses plus each class's Σ df once — None when unknown)."""
-    # one df map over every term clause of the batch: BM25 idf, the
-    # combine's raw contribution mass and the pushdown gate
-    dfm = _term_df_map(postings.where(_in_list(
-        "term", sorted(set(terms["value"]))))) if len(terms) else {}
-    mass = int(sum(dfm.get(t, 0) for t in terms["value"]))
+    unpruned scan with it. phrases: the batch's phrase / NEAR clauses,
+    scored by their own sub-calls; only their mass is counted here.
+    other_gids: the (query, group) pairs holding a non-term clause.
+    Returns (contribution frame, or None when nothing can match; the
+    raw contribution mass — Σ df over the term clauses, plus each
+    phrase clause's candidate bound (the min df over its distinct
+    tokens), plus each class's Σ df once — None when unknown)."""
+    # one df collect over every term clause and phrase token of the
+    # batch: BM25 idf, the combine's raw contribution mass and the
+    # pushdown gate
+    ptoks = [set(v.split()) for v in phrases["value"]]
+    lookup = sorted(set(terms["value"]).union(*ptoks))
+    dfm = _term_df_map(postings.where(_in_list("term", lookup))) \
+        if lookup else {}
+    mass = int(sum(dfm.get(t, 0) for t in terms["value"])
+               + sum(min(dfm.get(t, 0) for t in ts) for ts in ptoks))
     found = None
     if len(exp):
         exp = exp.assign(
@@ -892,7 +900,8 @@ def _phrase_contribs(spark, postings, pdf: pd.DataFrame, N, avgdl, cfg,
     """Phrase clauses as sub-calls: slop=0 -> exact phrase_topk;
     slop>0 -> ordered near_topk with window = len(phrase)+slop, one
     call per distinct window, synthetic sequential ids, the full-match
-    k."""
+    k. The sub-calls are the unordered forms: every match feeds the
+    combine, and no sort runs over it."""
     pdf = pdf.assign(sid=np.arange(len(pdf), dtype=np.int32))
     window = np.array([0 if e == 0 else len(v.split()) + int(e)
                        for v, e in zip(pdf["value"], pdf["extra"])])
@@ -902,9 +911,10 @@ def _phrase_contribs(spark, postings, pdf: pd.DataFrame, N, avgdl, cfg,
                             "text": grp["value"].tolist(),
                             "k": np.full(len(grp), _ALL_MATCHES_K,
                                          np.int32)})
-        res = (phrase_topk(spark, postings, sub, N, avgdl, cfg) if w == 0
-               else near_topk(spark, postings, sub, N, avgdl, cfg,
-                              window=int(w), ordered=True))
+        res = (phrase_topk.unordered(spark, postings, sub, N, avgdl, cfg)
+               if w == 0 else near_topk.unordered(
+                   spark, postings, sub, N, avgdl, cfg, window=int(w),
+                   ordered=True))
         out.append(_subcall_contribs(
             spark, res.select("query_id", "doc_id", "score"),
             grp[sid_cols]))
@@ -1113,6 +1123,7 @@ def query_string_topk(
         term, est_mass = _term_contribs(
             spark, postings, pd.DataFrame(term_rows, columns=cols),
             pd.DataFrame(exp_cl, columns=cols),
+            pd.DataFrame(phrase_cl, columns=cols),
             {(r[0], r[1]) for r in phrase_cl + exp_cl + field_cl},
             N, avgdl, cfg, dictionary, max_expansions)
         parts = ([term] if term is not None else []) + (

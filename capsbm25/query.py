@@ -43,6 +43,7 @@ never enter the top-k (ties break by doc_id among survivors only).
 
 from __future__ import annotations
 
+import functools
 import logging
 import re
 
@@ -133,6 +134,29 @@ def _in_list(col: str, values) -> F.Column:
     if not len(values):
         return F.lit(False)
     return F.expr(f"`{col}` IN ({', '.join(lit(v) for v in values)})")
+
+
+def _one_task_order(df: DataFrame, key: str = "query_id") -> DataFrame:
+    """The one ordered tail: (key, rank) order in one partition. A
+    ranked result is at most Σ k rows, so one exchange into a single
+    task and a local sort order it; a range sort would first run a
+    sampling job over its child, which on the kernel path is a second
+    full pass of the Python kernel."""
+    return df.repartition(1).sortWithinPartitions(key, "rank")
+
+
+def _ranked(key: str = "query_id"):
+    """Decorator of a public ranked surface: its result leaves through
+    _one_task_order. `surface.unordered` is the undecorated call for
+    engine-internal callers (sub-calls that take every match, inputs
+    of another surface), which never sort."""
+    def wrap(fn):
+        @functools.wraps(fn)
+        def ordered(*args, **kwargs):
+            return _one_task_order(fn(*args, **kwargs), key)
+        ordered.unordered = fn
+        return ordered
+    return wrap
 
 
 def _reject_paging(queries: pd.DataFrame, surface: str) -> None:
@@ -258,11 +282,12 @@ def _result_pdf(qid: int, top_d: np.ndarray, top_s: np.ndarray,
     )
 
 
-def _decode_posting(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _decode_posting(doc_ids: bytes, tfs: bytes,
+                    dls: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return (
-        delta_decode(row.doc_ids),
-        decode_varints(row.tfs).astype(np.int64),
-        decode_varints(row.dls).astype(np.int64),
+        delta_decode(doc_ids),
+        decode_varints(tfs).astype(np.int64),
+        decode_varints(dls).astype(np.int64),
     )
 
 
@@ -443,6 +468,7 @@ def _score_query_kernel(pdf: pd.DataFrame, N: int, avgdl: float,
     return _result_pdf(qid, top_d[off:], top_s[off:], start=off)
 
 
+@_ranked()
 def bm25_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -464,7 +490,9 @@ def bm25_topk(
     """Top-k BM25 over the index for a batch of queries.
 
     queries: pandas (query_id, text, k). Returns a DataFrame
-    (query_id, doc_id, score, rank), rank 1-based, ties by doc_id.
+    (query_id, doc_id, score, rank), rank 1-based, ties by doc_id,
+    ordered by (query_id, rank): its <= Σ k rows are sorted in one
+    task.
 
     boosts=True parses Lucene query-parser term boosts in text: a
     chunk `term^2.5` multiplies that term's score contribution by 2.5
@@ -607,10 +635,10 @@ def _dispatch_modes(mode, matched, qt, filtered, max_kernel_df,
     must hold and Σ encoded payload bytes bounds its memory (positions
     skew bytes/df ~10x), so auto routes heavy queries to the
     distributed (shuffle-aggregated) path per query. ONE narrow
-    per-TERM aggregate (rows = #query terms, pushdown-pruned scan)
-    serves both the routing sums (computed driver-side from qt) and
-    the distributed path's global df — no per-query scan, no second
-    df scan.
+    per-term stats collect (_term_stats_map: one job over the
+    pushdown-pruned scan) serves both the routing sums (computed
+    driver-side from qt) and the distributed path's global df — no
+    per-query scan, no second df scan.
 
     run_kernel(matched_subset) and run_distributed(matched_subset,
     df_map, qids) close over each surface's own runner arguments;
@@ -618,6 +646,9 @@ def _dispatch_modes(mode, matched, qt, filtered, max_kernel_df,
     runner deriving per-batch signals from qt (cursor presence, raw
     contribution mass) sees only ITS queries — a kernel-routed
     query's cursor must not disable pruning for the heavy subset.
+
+    Returns the runners' rows UNORDERED: a public surface orders once
+    at its return (_ranked), and an engine-internal caller never sorts.
     """
     if mode == "auto":
         df_map, bytes_map = _term_stats_map(filtered)
@@ -633,21 +664,18 @@ def _dispatch_modes(mode, matched, qt, filtered, max_kernel_df,
             mode = "kernel"
         elif len(heavy) == stats.shape[0]:
             # every query is heavy — don't schedule an empty kernel side
-            return run_distributed(matched, df_map, None).orderBy(
-                "query_id", "rank")
+            return run_distributed(matched, df_map, None)
         else:
             light = run_kernel(
                 matched.where(~F.col("query_id").isin(heavy)))
             dist = run_distributed(
                 matched.where(F.col("query_id").isin(heavy)), df_map,
                 heavy)
-            return light.unionByName(dist).orderBy("query_id", "rank")
+            return light.unionByName(dist)
     if mode == "kernel":
-        return run_kernel(matched).orderBy("query_id", "rank")
+        return run_kernel(matched)
     if mode == "distributed":
-        return run_distributed(
-            matched, _term_df_map(filtered), None).orderBy(
-            "query_id", "rank")
+        return run_distributed(matched, _term_df_map(filtered), None)
     raise ValueError(mode)
 
 
@@ -728,28 +756,31 @@ def _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
 
 
 def _term_df_map(filtered: DataFrame) -> dict:
-    """Global df per query term — aggregated over the PRE-query-join
-    postings (a post-join aggregate would inflate df q-fold for terms
-    shared by q queries). One tiny driver row per distinct query term."""
-    rows = filtered.groupBy("term").agg(F.sum("df").alias("d")).collect()
-    return {r["term"]: int(r["d"]) for r in rows}
+    """Global df per query term. filtered: the PRE-query-join posting
+    rows of the query terms (a post-join sum would inflate df q-fold
+    for terms shared by q queries), one row per term per index
+    segment. One narrow Arrow collect of (term, df), summed on the
+    driver: one job, no exchange."""
+    sums = arrow_collect(filtered.select("term", "df")).groupby("term")
+    return {t: int(v) for t, v in sums["df"].sum().items()}
 
 
 def _term_stats_map(filtered: DataFrame) -> tuple[dict, dict]:
-    """(df_map, bytes_map) per query term, one aggregate. bytes = the
-    ENCODED payload the kernel task would have to hold — df alone
-    under-estimates task memory ~10x once positions are indexed (payload
-    per df entry is tf-dependent), so auto-routing bounds both."""
+    """(df_map, bytes_map) per query term from one narrow Arrow collect
+    of (term, df, payload bytes) over filtered (as in _term_df_map),
+    summed on the driver: one job. bytes = the ENCODED payload the
+    kernel task would have to hold — df alone under-estimates task
+    memory ~10x once positions are indexed (payload per df entry is
+    tf-dependent), so auto-routing bounds both."""
     size = (F.octet_length("doc_ids") + F.octet_length("tfs")
             + F.octet_length("dls"))
     if "pos" in filtered.columns:
         size = size + F.coalesce(F.octet_length("pos"), F.lit(0))
-    rows = filtered.groupBy("term").agg(
-        F.sum("df").alias("d"),
-        F.sum(size).cast("long").alias("nbytes"),
-    ).collect()
-    return ({r["term"]: int(r["d"]) for r in rows},
-            {r["term"]: int(r["nbytes"]) for r in rows})
+    sums = arrow_collect(filtered.select(
+        "term", "df", size.cast("long").alias("nbytes"),
+    )).groupby("term")[["df", "nbytes"]].sum()
+    return ({t: int(v) for t, v in sums["df"].items()},
+            {t: int(v) for t, v in sums["nbytes"].items()})
 
 
 def _run_kernel(matched, N, avgdl, cfg, prune,
@@ -1301,7 +1332,7 @@ def explain_scores(
     def explain(it):
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                docs, tfs, dls = _decode_posting(row)
+                docs, tfs, dls = _decode_posting(row.doc_ids, row.tfs, row.dls)
                 want = np.asarray(row.want, dtype=np.int64)
                 keep = sorted_member_mask(want, docs)
                 docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
@@ -1602,7 +1633,7 @@ def synonym_topk(
     def tf_rows(it):
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                docs, tfs, dls = _decode_posting(row)
+                docs, tfs, dls = _decode_posting(row.doc_ids, row.tfs, row.dls)
                 yield pd.DataFrame(
                     {"query_id": np.full(docs.size, row.query_id,
                                          np.int32),
@@ -1637,6 +1668,7 @@ def synonym_topk(
     return _salted_topk(scored)
 
 
+@_ranked()
 def boolean_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -1682,7 +1714,9 @@ def boolean_topk(
     batch-globally on top (Lucene filter + liveDocs). An offset or
     search_after column raises: this surface does not page.
 
-    Returns (query_id, doc_id, score, rank) — rank ties by doc_id.
+    Returns (query_id, doc_id, score, rank) — rank ties by doc_id —
+    ordered by (query_id, rank): its <= Σ k rows are sorted in one
+    task.
     """
     cfg = cfg or BuildConfig()
     missing = {"must", "should", "must_not", "k"} - set(queries.columns)
@@ -1733,7 +1767,10 @@ def _merge_term_rows(grp, with_pos: bool):
     """Decode and doc-merge one term's posting rows (index segments).
     Returns (docs, tfs, dls, pos_flat, pair_bounds); pos fields None
     unless with_pos."""
-    parts = [_decode_posting(r) for r in grp.itertuples(index=False)]
+    # the payload columns read directly: itertuples would build a
+    # namedtuple class and slice every column of grp on each call
+    parts = [_decode_posting(*r) for r in
+             zip(grp["doc_ids"], grp["tfs"], grp["dls"])]
     docs = np.concatenate([p[0] for p in parts])
     tfs = np.concatenate([p[1] for p in parts])
     dls = np.concatenate([p[2] for p in parts])
@@ -1742,8 +1779,8 @@ def _merge_term_rows(grp, with_pos: bool):
         from capsbm25.codec import decode_pair_positions
 
         pos = np.concatenate([
-            decode_pair_positions(r.pos, p[1])
-            for r, p in zip(grp.itertuples(index=False), parts)
+            decode_pair_positions(b, p[1])
+            for b, p in zip(grp["pos"], parts)
         ])
     if len(parts) > 1:
         order = np.argsort(docs, kind="stable")
@@ -1756,6 +1793,7 @@ def _merge_term_rows(grp, with_pos: bool):
     return docs, tfs, dls, pos, bounds
 
 
+@_ranked()
 def phrase_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -1781,7 +1819,8 @@ def phrase_topk(
     built with cfg.index_positions=True (raises otherwise).
 
     queries: pandas (query_id, text, k); the text IS the phrase.
-    Returns (query_id, doc_id, score, rank).
+    Returns (query_id, doc_id, score, rank), ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     Modes mirror bm25_topk: "kernel" concentrates a query's matched
     postings in one task; "distributed" shuffles (doc, term, positions)
@@ -1834,6 +1873,7 @@ def phrase_topk(
     )
 
 
+@_ranked()
 def near_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -1862,9 +1902,11 @@ def near_topk(
     successor chains over composite keys); unordered runs a two-pointer
     minimal-window pass per candidate doc inside the batch kernels.
 
-    Same positional-index requirement, execution modes, routing and
-    doc_filter/doc_exclude semantics as phrase_topk; phrase_topk(text)
-    == near_topk(text, window=len(tokens), ordered=True) on
+    Same positional-index requirement, execution modes, routing,
+    doc_filter/doc_exclude semantics and result as phrase_topk
+    ((query_id, doc_id, score, rank), ordered by (query_id, rank): its
+    <= Σ k rows are sorted in one task); phrase_topk(text) ==
+    near_topk(text, window=len(tokens), ordered=True) on
     duplicate-free phrases (tested).
     """
     cfg = cfg or BuildConfig()
@@ -1879,7 +1921,7 @@ def near_topk(
                     "ordered NEAR requires distinct query terms; "
                     f"duplicates in {t.text!r}"
                 )
-    return phrase_topk(
+    return phrase_topk.unordered(
         spark, postings, queries, N, avgdl, cfg, mode=mode,
         max_kernel_df=max_kernel_df, max_kernel_bytes=max_kernel_bytes,
         doc_filter=doc_filter, doc_exclude=doc_exclude,
@@ -2134,7 +2176,7 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
                         "phrase_topk requires an index built with "
                         "index_positions=True (pos payload is empty)"
                     )
-                docs, tfs, dls = _decode_posting(row)
+                docs, tfs, dls = _decode_posting(row.doc_ids, row.tfs, row.dls)
                 if count_scores:
                     # ranking comes from the verify pass's exact match
                     # counts; idf over chargrams is meaningless (and N
@@ -2303,7 +2345,7 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
                     cand = np.asarray(row.cand_docs, dtype=np.int64)
                 else:
                     cand = None
-                docs, tfs, _ = _decode_posting(row)
+                docs, tfs, _ = _decode_posting(row.doc_ids, row.tfs, row.dls)
                 pos = decode_pair_positions(row.pos, tfs)
                 if cand is not None:
                     keep = sorted_member_mask(cand, docs)
@@ -2391,6 +2433,7 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
     return _salted_topk(verified)
 
 
+@_ranked("src_doc_id")
 def more_like_this(
     spark: SparkSession,
     postings: DataFrame,
@@ -2416,9 +2459,10 @@ def more_like_this(
 
     corpus/doc_map as in kwic_snippets — source texts are fetched with
     pushed isin filters (one bounded driver fetch of len(src_doc_ids)
-    rows), term dfs with a pushdown-pruned postings aggregate over the
-    sources' distinct terms only. Returns (src_doc_id, doc_id, score,
-    rank).
+    rows), term dfs with one narrow pushdown-pruned postings collect
+    over the sources' distinct terms only. Returns (src_doc_id, doc_id,
+    score, rank), ordered by (src_doc_id, rank): its
+    <= len(src_doc_ids) x k rows are sorted in one task.
 
     doc_filter / doc_exclude forward to the inner bm25_topk with the
     usual Lucene filter + liveDocs semantics — in particular
@@ -2487,8 +2531,9 @@ def more_like_this(
     queries["query_id"] = queries["query_id"].astype(np.int32)
     queries["k"] = queries["k"].astype(np.int32)
 
-    got = bm25_topk(spark, postings, queries, N, avgdl, cfg, mode=mode,
-                    doc_filter=doc_filter, doc_exclude=doc_exclude)
+    got = bm25_topk.unordered(
+        spark, postings, queries, N, avgdl, cfg, mode=mode,
+        doc_filter=doc_filter, doc_exclude=doc_exclude)
     src_df = F.broadcast(pdf_frame(
         spark, pd.DataFrame({"query_id": pd.Series(list(src_of), dtype=np.int32),
                       "src_doc_id": pd.Series([src_of[q] for q in src_of],
@@ -2500,7 +2545,6 @@ def more_like_this(
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= F.lit(k))
         .select("src_doc_id", "doc_id", "score", "rank")
-        .orderBy("src_doc_id", "rank")
     )
 
 
@@ -2548,6 +2592,8 @@ def prefix_topk(
     pattern, ranked by the summed tf of matching terms (deterministic,
     idf-free — a prefix's expansion set makes per-term idf unstable),
     ties by doc_id.
+    The ranked result (query_id, doc_id, score, rank) is ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     queries: pandas (query_id, text, k) — text IS the prefix, matched
     against the index's normalized terms. Word tokenizers only
@@ -2839,7 +2885,8 @@ def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
     exists and the shuffle input is distinct-docs-sized; then the
     fused combine + top-k, once per class at the largest member k,
     fanned out to each member query (its own k) inside the combine —
-    no extra join or job. filt_bc/excl_bc/doc_filter/doc_exclude: the
+    no extra join or job — and the one ordered tail
+    (_one_task_order). filt_bc/excl_bc/doc_filter/doc_exclude: the
     masks _expansion_query routed (_doc_partials' arguments)."""
     # explicit projection: without it the dls/cf payload columns are
     # read from parquet AND shipped through Arrow just to be ignored
@@ -2858,7 +2905,7 @@ def _term_expansion_topk(matched, classes: dict | None, mass: int | None,
         m = meta.setdefault(cls, {"k": 0, "members": []})
         m["k"] = max(m["k"], ks[qid])
         m["members"].append((qid, ks[qid]))
-    return _fused_combine_topk(c, meta, mass).orderBy("query_id", "rank")
+    return _one_task_order(_fused_combine_topk(c, meta, mass))
 
 
 _EXPANSION_DOCS_SCHEMA = "query_id int, doc_id long"
@@ -3071,6 +3118,8 @@ def fuzzy_topk(
     returns the distinct (query_id, doc_id) MEMBERSHIP instead (no
     scoring, no top-k) — the constant-score rewrite's input; k is
     ignored.
+    The ranked result (query_id, doc_id, score, rank) is ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     queries: pandas (query_id, text, k) — text must tokenize to ONE
     term (FuzzyQuery is single-term, like Lucene). max_edits is capped
@@ -3180,6 +3229,8 @@ def wildcard_topk(
     docs_only=True returns the distinct (query_id, doc_id) MEMBERSHIP
     instead (no scoring, no top-k) — the constant-score rewrite's
     input; k is ignored.
+    The ranked result (query_id, doc_id, score, rank) is ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     queries: pandas (query_id, text, k) — text is the raw pattern,
     lowercased against the normalized dictionary; characters outside
@@ -3268,6 +3319,8 @@ def regexp_topk(
     the matched terms, ties by doc_id. docs_only=True returns the
     distinct (query_id, doc_id) MEMBERSHIP instead (no scoring, no
     top-k) — the constant-score rewrite's input; k is ignored.
+    The ranked result (query_id, doc_id, score, rank) is ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     queries: pandas (query_id, text, k) — text is the regex,
     lowercased against the normalized dictionary. Patterns are
@@ -3318,6 +3371,8 @@ def term_range_topk(
     docs_only=True returns the distinct (query_id, doc_id) MEMBERSHIP
     instead (no scoring, no top-k) — the constant-score rewrite's
     input; k is ignored.
+    The ranked result (query_id, doc_id, score, rank) is ordered by
+    (query_id, rank): its <= Σ k rows are sorted in one task.
 
     queries: pandas (query_id, lo, hi, k) plus optional boolean
     columns include_lower / include_upper (default True — inclusive
@@ -3584,6 +3639,7 @@ def stats_facet(
     )
 
 
+@_ranked()
 def rescore_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -3608,7 +3664,9 @@ def rescore_topk(
     BM25 window pass, `phrase` the positional re-score (the index must
     carry positions). Returns (query_id, doc_id, score, rank), rank
     over the re-scored window only (hits below the window keep their
-    original order in ES too — they are simply not returned here).
+    original order in ES too — they are simply not returned here),
+    ordered by (query_id, rank): its <= Σ k rows are sorted in one
+    task.
 
     Scale shape: the window frame is query-batch-sized by construction
     (n_queries x window_size rows — ES caps window_size at
@@ -3626,7 +3684,8 @@ def rescore_topk(
     base = queries.assign(k=np.int32(window_size))[
         ["query_id", "text", "k"]]
     win_pdf = arrow_collect(
-        bm25_topk(spark, postings, base, N, avgdl, cfg, mode=mode))
+        bm25_topk.unordered(spark, postings, base, N, avgdl, cfg,
+                            mode=mode))
     if win_pdf.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     ids = np.unique(win_pdf["doc_id"].to_numpy(np.int64))
@@ -3639,8 +3698,8 @@ def rescore_topk(
     pq = queries.assign(text=queries["phrase"],
                         k=np.int32(max(window_size, ids.size)))[
         ["query_id", "text", "k"]]
-    ph = phrase_topk(spark, postings, pq, N, avgdl, cfg,
-                     doc_filter=ids, mode=mode)
+    ph = phrase_topk.unordered(spark, postings, pq, N, avgdl, cfg,
+                               doc_filter=ids, mode=mode)
     wdf = arrow_frame(
         spark, win_pdf[["query_id", "doc_id", "score"]]
         .rename(columns={"score": "base_s"}))
@@ -3659,7 +3718,7 @@ def rescore_topk(
                  + F.lit(float(rescore_weight))
                  * F.coalesce("ph_s", F.lit(0.0))).alias("score"))
     )
-    return _salted_topk(out, salt_col=None).orderBy("query_id", "rank")
+    return _salted_topk(out, salt_col=None)
 
 
 # date_trunc units shared verbatim by Spark and DuckDB, with the
@@ -3849,6 +3908,7 @@ def date_histogram(
     )
 
 
+@_ranked()
 def substring_topk(
     spark: SparkSession,
     postings: DataFrame,
@@ -3882,7 +3942,9 @@ def substring_topk(
     queries: pandas (query_id, text, k); text is the RAW pattern
     (matched case-insensitively against lower(text); may contain
     spaces/punctuation). Returns (query_id, doc_id, score, rank) where
-    score = the exact (overlap-counting) number of match positions.
+    score = the exact (overlap-counting) number of match positions,
+    ordered by (query_id, rank): its <= Σ k rows are sorted in one
+    task.
 
     Patterns SHORTER than chargram_n cannot be covered by grams — the
     reference's ``upper_bound`` answers any pattern length uniformly,
@@ -3917,7 +3979,7 @@ def substring_topk(
     long_q = queries[~short_mask]
     if not long_q.empty:
         # N/avgdl are BM25 inputs only; count_scores never touches them
-        parts.append(phrase_topk(
+        parts.append(phrase_topk.unordered(
             spark, postings, long_q, N=1, avgdl=1.0, cfg=cfg, mode=mode,
             max_kernel_df=max_kernel_df, max_kernel_bytes=max_kernel_bytes,
             count_scores=True, doc_filter=doc_filter,
@@ -3949,4 +4011,4 @@ def substring_topk(
     out = parts[0]
     for p_ in parts[1:]:
         out = out.unionByName(p_)
-    return out.orderBy("query_id", "rank")
+    return out

@@ -101,7 +101,15 @@ out.write(
     "range of the samplesort plan — so the In(term) stats prune to ~one\n"
     "row group per wave at any corpus scale (note part_id arriving as a\n"
     "partition column, out of ReadSchema; coverage asserted from the\n"
-    "parquet footers in tests/test_plans.py).\n\n```\n"
+    "parquet footers in tests/test_plans.py).\n\n"
+    "The top of the plan is the one ordered tail every public ranked\n"
+    "surface ends with: Exchange SinglePartition, then a local\n"
+    "Sort [query_id, rank] (global=false) over the result's <= Σ k\n"
+    "rows. No rangepartitioning Exchange: a range sort samples its\n"
+    "child first, and that sampling job would run the Python kernel a\n"
+    "second time. The auto-routing stats (Σ df, Σ payload bytes per\n"
+    "query) come from one narrow Arrow collect over the same pruned\n"
+    "scan before this plan runs: one job.\n\n```\n"
 )
 out.write(plan_of(bm25_topk(spark, postings, queries, res.N, res.avgdl, cfg)))
 out.write("\n```\n")
@@ -119,7 +127,8 @@ out.write(
     "per query. S, the salt fan-out, is one bucket per 4M rows of the\n"
     "batch's raw contribution mass, 1..32 — 1 on this fixture.\n"
     "Nothing in this plan ever holds a whole hot posting OR a whole\n"
-    "scored set in one task.\n\n```\n"
+    "scored set in one task; only the ordered tail of section 3 above\n"
+    "the Window gathers the <= Σ k ranked rows into one.\n\n```\n"
 )
 out.write(
     plan_of(
@@ -146,7 +155,8 @@ out.write(
     "Kernel mode instead ships each set once per executor as a sorted\n"
     "int64 broadcast array and masks decoded postings in-kernel;\n"
     "the driver fetch is bounded and oversized sets demote auto mode\n"
-    "to this join path. Same machinery backs phrase/substring.\n\n```\n"
+    "to this join path. Same machinery backs phrase/substring. The\n"
+    "plan ends in section 3's ordered tail.\n\n```\n"
 )
 out.write(
     plan_of(
@@ -181,7 +191,8 @@ out.write(
     "same FlatMapGroupsInPandas) folds the partial counts and keeps\n"
     "docs with `nm == n_must & nsh >= msm & nn == 0`. Because the\n"
     "batch carries role counts, the θ entry prune is off; a\n"
-    "pure-SHOULD batch emits none and prunes like section 4.\n\n```\n"
+    "pure-SHOULD batch emits none and prunes like section 4. The plan\n"
+    "ends in section 3's ordered tail.\n\n```\n"
 )
 out.write(
     plan_of(
@@ -224,7 +235,8 @@ out.write(
     "materializes — and the fused combine sums tf per doc, keeps the\n"
     "group-local top-(largest member k) and emits it once per member\n"
     "query with that member's k; one Window ranks each member's\n"
-    "survivors. No join fans the class out:\n\n```\n"
+    "survivors, and section 3's ordered tail orders the result. No\n"
+    "join fans the class out:\n\n```\n"
 )
 wq = pd.DataFrame({"query_id": np.arange(3, dtype=np.int32),
                    "text": ["w00*"] * 3,

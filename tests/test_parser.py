@@ -883,6 +883,28 @@ def test_expansion_only_batch_sizes_combine_by_mass(ps_index, monkeypatch):
     assert seen == [sum(oracle.df(t) for t in terms)]
 
 
+def test_phrase_only_batch_sizes_combine_by_mass(ps_index, monkeypatch):
+    """A phrase / NEAR-only batch hands the combine each phrase
+    clause's candidate bound, the min df over its distinct tokens (it
+    used to read 0, pinning the combine to fan-out 1)."""
+    import capsbm25.parser as P
+
+    oracle = ps_index["oracle"]
+    seen = []
+    real = P._fused_combine_topk
+
+    def spy(c, meta, raw_mass, *args, **kwargs):
+        seen.append(raw_mass)
+        return real(c, meta, raw_mass, *args, **kwargs)
+
+    monkeypatch.setattr(P, "_fused_combine_topk", spy)
+    _run(ps_index, ['"w0000 w0001"', '"w0002 w0003"~1'])
+    want = (min(oracle.df("w0000"), oracle.df("w0001"))
+            + min(oracle.df("w0002"), oracle.df("w0003")))
+    assert want > 0
+    assert seen == [want]
+
+
 def test_unbounded_expansions_in_one_pass(ps_index, monkeypatch):
     """max_expansions=None above MAX_EXPANSION_COLLECT: the dictionary
     match stays a distributed equi-join (no driver pairs), and the

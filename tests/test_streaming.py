@@ -67,6 +67,59 @@ def test_incremental_rank_identical_to_oracle(streamed, spark):
             assert np.allclose(g.score, w.score, atol=1e-9), (mode, qid)
 
 
+def _jobs_of(spark, group: str, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group from
+    the status tracker."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    # the status store is fed by the asynchronous listener bus
+    deadline = time.time() + 10
+    while True:
+        ids = tracker.getJobIdsForGroup(group)
+        done = all(tracker.getJobInfo(j) is not None
+                   and tracker.getJobInfo(j).status == "SUCCEEDED"
+                   for j in ids)
+        if (ids and done) or time.time() > deadline:
+            return out, len(ids)
+        time.sleep(0.1)
+
+
+def test_routing_stats_one_job_match_aggregate(streamed, spark):
+    """_term_stats_map / _term_df_map over a segmented snapshot (a
+    term spans one posting row per segment) equal the groupBy-sum
+    reference over the same rows, and each runs ONE Spark job."""
+    from pyspark.sql import functions as F
+
+    from capsbm25.query import _in_list, _term_df_map, _term_stats_map
+
+    postings = load_segment_postings(spark, streamed["out"])
+    terms = [fx.HOT_TERM, "w0001", "w0002", "w0003", fx.OOV_TERM]
+    filtered = postings.where(_in_list("term", terms))
+    size = (F.octet_length("doc_ids") + F.octet_length("tfs")
+            + F.octet_length("dls"))
+    if "pos" in filtered.columns:
+        size = size + F.coalesce(F.octet_length("pos"), F.lit(0))
+    ref = filtered.groupBy("term").agg(
+        F.sum("df").alias("d"), F.sum(size).alias("b"),
+        F.count("*").alias("rows")).toPandas().set_index("term")
+    assert ref["rows"].max() >= 2, ref
+    (df_map, bytes_map), n_stats = _jobs_of(
+        spark, "routing-stats", lambda: _term_stats_map(filtered))
+    df_only, n_df = _jobs_of(
+        spark, "routing-df", lambda: _term_df_map(filtered))
+    want_df = {t: int(v) for t, v in ref["d"].items()}
+    assert df_map == df_only == want_df
+    assert bytes_map == {t: int(v) for t, v in ref["b"].items()}
+    assert (n_stats, n_df) == (1, 1)
+
+
 def test_streaming_windowed_term_counts(streamed, spark, tmp_path):
     """Watermark + event-time window agg over the stream equals the
     batch equivalent (complete mode, availableNow)."""

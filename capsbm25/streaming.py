@@ -34,7 +34,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from capsbm25.catalog import arrow_collect, arrow_frame
+from capsbm25.catalog import arrow_collect
 from capsbm25.config import BuildConfig
 from capsbm25.docids import assign_doc_ids
 from capsbm25.partition import plan_from_sample
@@ -117,6 +117,7 @@ def process_batch(
     operator intervention. Merges run synchronously in the ingest
     thread (foreachBatch already serializes batches; a failed/aborted
     merge never fails the commit — the segment is durable first)."""
+    _check_merge_factor(merge_factor)
     stats = load_stream_stats(out_dir)
     # adopt the stream's persisted build config: a restart with a
     # different caller cfg (other token_pattern / index_positions) would
@@ -240,24 +241,16 @@ def process_batch(
 
 
 def _auto_compact(spark, out_dir, cfg, merge_factor: int) -> None:
-    """Merge-scheduling policy for ingest (Lucene merge-on-commit): as
-    long as some tier holds >= merge_factor live segments, run one
-    tiered compaction pass. The loop handles cascades (mf tier-0
-    merges promote a tier-1 segment that may complete ITS tier) and is
-    bounded: each pass strictly reduces segment count or aborts (a
-    concurrent commit/delete changed the segment list — the NEXT
-    batch's auto_compact retries), so it terminates."""
+    """Merge-scheduling policy for ingest (Lucene merge-on-commit): run
+    tiered passes until the planner finds no group (that pass returns
+    before any Spark job). The loop handles cascades (mf tier-0 merges
+    promote a tier-1 segment that may complete ITS tier) and is bounded:
+    each pass strictly reduces segment count or aborts (a concurrent
+    commit/delete changed the segment list — the NEXT batch's
+    auto_compact retries), so it terminates."""
     for _ in range(64):  # safety bound over any realistic tier depth
-        stats = load_stream_stats(out_dir)
-        tiers: dict[int, int] = {}
-        for s in stats["segments"]:
-            lvl = _tier_level(int(s["rows"]), merge_factor)
-            tiers[lvl] = tiers.get(lvl, 0) + 1
-        if not tiers or max(tiers.values()) < merge_factor:
-            return
-        r = compact_segments(spark, out_dir, cfg, policy="tiered",
-                             merge_factor=merge_factor)
-        if not r.get("compacted"):
+        if not compact_segments(spark, out_dir, cfg, policy="tiered",
+                                merge_factor=merge_factor)["compacted"]:
             return
 
 
@@ -276,6 +269,7 @@ def start_incremental_build(
     ingest via merge-on-commit tiered compaction (see process_batch)."""
     from capsbm25.fixtures import TRANSCRIPT_SCHEMA
 
+    _check_merge_factor(merge_factor)
     cfg = cfg or BuildConfig()
     os.makedirs(out_dir, exist_ok=True)
     stream = (
@@ -521,57 +515,66 @@ def compact_segments(
     policy: str = "full", merge_factor: int = 10,
     max_tombstone_collect: int = 1_000_000,
 ) -> dict:
-    """Segment compaction, two policies.
+    """Segment compaction: one planner, one group merge, one commit.
 
-    policy="full" (the Lucene forceMerge(1) analog): merge ALL live
-    segments into one — every term collapses back to a single posting
-    row, so the query kernel's single-row fast path applies again. Delete
-    tombstones (delete_docs) are APPLIED: tombstoned docs are
-    physically dropped from postings AND doc metadata, block maxima
-    are recomputed with the post-delete LIVE N/avgdl, and stats shrink
-    to exact live values — after compaction, queries need no
-    doc_exclude and the index is rank-identical to a fresh batch build
-    over the surviving corpus (tested). The doc-id allocator
-    (next_doc_id) stays monotone so later batches never reuse a
-    surviving doc's id. Cost: rewrites the ENTIRE index — O(total) per
-    call; on a long-lived ingest stream run policy="tiered" between
-    occasional full merges.
-
-    Tombstone application is scale-safe: up to max_tombstone_collect
-    pending delete ids, the drop set ships to the merge kernel as one
-    sorted array via a real Spark broadcast (one copy per executor).
-    Beyond the cap (a retention sweep at 10^12 docs — collecting it
-    would OOM the driver), compaction switches to a fully DISTRIBUTED
-    rebuild: live docs = segment docs ANTI-JOIN tombstones (a
-    DataFrame join, nothing driver-side), and postings are rebuilt
-    from the surviving text via the batch pipeline
-    (extract_runs -> assemble_postings) with live stats — exactly the
-    rank-identity contract, with no driver materialization (tested by
-    forcing the cap to 0).
+    The planner (_plan_merges) turns the live segment list into merge
+    groups. policy="full" (the Lucene forceMerge(1) analog) is ONE
+    group of every live segment, and a DRAIN: it applies every pending
+    delete tombstone. Every term collapses back to a single posting row
+    (the query kernel's single-row fast path applies again), tombstoned
+    docs are physically dropped from postings AND doc metadata, block
+    maxima are recomputed with the post-delete LIVE N/avgdl, and stats
+    shrink to exact live values — after it, queries need no doc_exclude
+    and the index is rank-identical to a fresh batch build over the
+    surviving corpus (tested). Cost: it rewrites the ENTIRE index; on a
+    long-lived ingest stream run policy="tiered" between occasional
+    full merges.
 
     policy="tiered" (the Lucene TieredMergePolicy / the reference's
-    bounded k-way merge tree, /root/reference/src/Suffix_Array.cpp:
-    371-428): merge only SAME-SIZE-TIER segments — each segment's tier
-    is floor(log_mf(rows)) and any tier holding >= merge_factor live
-    segments has its oldest merge_factor members merged into one.
-    Bytes rewritten per call is O(merged tiers), NOT O(index): under
-    continuous ingest each doc is rewritten O(log_mf(N)) times total
-    instead of O(ingest batches), and per-term query fan-in stays
-    O(merge_factor x log_mf(N)) instead of growing linearly with
-    batches. Pending tombstones that fall INSIDE a merged group are
-    applied with it (stats shrink by exactly those docs); the
-    remainder is consolidated into one pending file so later deletes
-    and compactions stop re-reading a growing file list. Returns the
-    per-merge row accounting so callers (and tests) can verify the
-    O(tier) rewrite bound.
+    bounded k-way merge tree, src/Suffix_Array.cpp:371-428): each
+    segment's tier is floor(log_mf(rows)), and a tier holding >=
+    merge_factor live segments has its oldest members merged
+    merge_factor at a time. Bytes rewritten per call are O(merged
+    tiers), NOT O(index): under continuous ingest each doc is rewritten
+    O(log_mf(N)) times and per-term query fan-in stays
+    O(merge_factor x log_mf(N)). A group applies the pending tombstones
+    that fall INSIDE it; the remainder is consolidated into one pending
+    file so later deletes and compactions stop re-reading a growing
+    file list. The per-merge row accounting in the result lets callers
+    (and tests) verify the O(tier) rewrite bound.
 
-    Both policies are idempotent and atomic: new segments are written
-    to private temp dirs, the canonical seg=<name> paths are claimed
-    by os.rename under the write lock after a staleness re-check, and
-    old segment dirs are left for external GC (object stores prefer
-    async delete).
+    Every group goes through _merge_group: the members' postings are
+    merged by merge_hot_partials with the group's tombstones as a
+    broadcast drop set, their docs lose the same ids, and both land in
+    a private temp dir. Several groups run concurrently. Up to
+    max_tombstone_collect pending ids the drop set is collected; beyond
+    the cap (a retention sweep at 10^12 docs would OOM the driver) a
+    drain switches to a fully DISTRIBUTED rebuild from the surviving
+    text (_rebuild_from_live_docs: live docs are a DataFrame anti-join,
+    postings come from the batch pipeline with live stats — tested by
+    forcing the cap to 0), and a tier plan leaves every tombstone
+    pending for that drain.
+
+    One commit (_commit_merges) claims the canonical seg=<name> paths by
+    os.rename under the write lock after a staleness re-check and
+    rewrites stats once, so compaction is idempotent and atomic. A
+    drain aborts if ANY segment or pending tombstone file changed while
+    it merged; a tier plan aborts only if one of its members is gone,
+    or if it applied tombstones and the pending files changed. Old
+    segment dirs and applied tombstone files are left for external GC
+    (object stores prefer async delete). The doc-id allocator
+    (next_doc_id) stays monotone, so later batches never reuse a
+    surviving doc's id.
     """
+    import shutil
+
     stats = load_stream_stats(out_dir)
+    segments = stats["segments"]
+    files = _tombstone_files(out_dir, stats)
+    groups, drain = _plan_merges(segments, policy, merge_factor, bool(files))
+    if not groups:
+        return {"compacted": False, "policy": policy,
+                "segments": len(segments), "merges": []}
     # adopt the build-time config persisted with the stream (tokenizer,
     # block size, positions flag) — a mismatched caller cfg would
     # tokenize differently / drop positions
@@ -581,169 +584,286 @@ def compact_segments(
     configure_session(spark, out_dir)
     # merged/rebuilt segments re-plan over the live corpus
     cfg = cfg.resolve_parts(int(stats.get("N", 0)))
-    if policy == "tiered":
-        return _compact_tiered(spark, out_dir, cfg, stats, merge_factor,
-                               max_tombstone_collect)
-    if policy != "full":
-        raise ValueError(f"unknown compaction policy {policy!r}")
-    return _compact_full(spark, out_dir, cfg, stats, max_tombstone_collect)
 
-
-def _compact_full(spark, out_dir, cfg, stats, max_tombstone_collect) -> dict:
-    from capsbm25.postings import merge_hot_partials
-
-    tomb_files_at_start = _tombstone_files(out_dir)
-    if len(stats["segments"]) <= 1 and not tomb_files_at_start:
-        return {"compacted": False, "segments": len(stats["segments"])}
-    drop_bc = None
-    n_del = dl_del = 0
-    rebuild = False
-    if tomb_files_at_start:
-        import numpy as np
-
-        tomb_all = spark.read.parquet(*tomb_files_at_start).dropDuplicates(
-            ["doc_id"])
-        probe = arrow_collect(
-            tomb_all.limit(max_tombstone_collect + 1))
+    tombs = probe = mass = None
+    if files:
+        tombs = spark.read.parquet(*files).select("doc_id", "dl")
+        uniq = tombs.dropDuplicates(["doc_id"])
+        probe = arrow_collect(uniq.limit(max_tombstone_collect + 1))
         if len(probe) > max_tombstone_collect:
-            rebuild = True  # mass delete: never collect to the driver
-            agg = tomb_all.agg(
-                F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
-            n_del, dl_del = int(agg["n"]), int(agg["s"] or 0)
-        else:
-            n_del = len(probe)
-            dl_del = int(probe["dl"].sum())
-            drop = np.unique(probe["doc_id"].to_numpy(np.int64))
-            # a REAL broadcast (one copy per executor), not a closure
-            # capture pickled per task
-            drop_bc = spark.sparkContext.broadcast(drop)
-    N = stats["N"] - n_del
-    avgdl = ((stats["total_dl"] - dl_del) / N) if N else 0.0
+            # a mass delete never reaches the driver: a drain rebuilds
+            # from the live docs, a tier plan leaves it all pending
+            probe = None
+            if drain:
+                agg = uniq.agg(F.count("*").alias("n"),
+                               F.sum("dl").alias("s")).collect()[0]
+                mass = (int(agg["n"]), int(agg["s"] or 0))
+            else:
+                tombs = None
 
+    # every pending tombstone names a doc of a live segment (delete_docs
+    # resolves ids against segment docs), so the drain's one group takes
+    # the probe as its drop set; a tier group resolves its own share
+    def merge(group: list[dict]) -> dict:
+        return _merge_group(spark, out_dir, cfg, stats, group,
+                            _POLICIES[policy][2], tombs,
+                            probe if drain else None, mass)
+
+    if len(groups) == 1:
+        merges, err = [merge(groups[0])], None
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        # groups are independent (disjoint members, private temp dirs):
+        # the Spark scheduler interleaves their jobs, so several eligible
+        # tiers cost ~max(group) wall instead of sum(groups); results keep
+        # the plan's order
+        with ThreadPoolExecutor(max_workers=min(len(groups), 8),
+                                thread_name_prefix="capsbm25-merge") as pool:
+            futs = [pool.submit(merge, g) for g in groups]
+        merges = [f.result() for f in futs if f.exception() is None]
+        err = next((f.exception() for f in futs
+                    if f.exception() is not None), None)
+    try:
+        if err is not None:
+            raise err
+        r = _commit_merges(out_dir, cfg, policy, drain, files, probe, merges)
+    finally:
+        # an abort or a failure anywhere after the merges must leave no
+        # stray temp dir; a committed merge's temp dir is already renamed
+        for m in merges:
+            shutil.rmtree(m.pop("tmp"), ignore_errors=True)
+            m.pop("drop")
+    if not r["compacted"]:
+        return {"policy": policy, **r}
+    return {**r, "policy": policy, "merges": merges,
+            "segments_before": len(segments),
+            "rows_rewritten": sum(m["rows_in"] for m in merges),
+            "deleted_applied": sum(m["deleted_applied"] for m in merges),
+            "path": "merge" if mass is None else "rebuild"}
+
+
+# per policy: the stats counter that names its merged segments, the name
+# prefix, and the prefix of its private temp dirs
+_POLICIES = {"full": ("compact_gen", "compacted", ".compacting"),
+             "tiered": ("tier_gen", "tiered", ".tiering")}
+
+
+def _check_merge_factor(merge_factor: int) -> None:
+    # the tier ladder floor(log_mf(rows)) needs a base >= 2: 1 or less
+    # never terminates, 0 divides by zero
+    if merge_factor < 2:
+        raise ValueError(f"merge_factor must be >= 2, got {merge_factor}")
+
+
+def _tier_level(rows: int, merge_factor: int) -> int:
+    """floor(log_mf(rows)) by exact integer division — float log puts
+    exact powers one tier low (log(1000)/log(10) = 2.999...)."""
+    _check_merge_factor(merge_factor)
+    level, n = 0, max(int(rows), 1)
+    while n >= merge_factor:
+        n //= merge_factor
+        level += 1
+    return level
+
+
+def _plan_merges(segments: list[dict], policy: str, merge_factor: int,
+                 pending: bool) -> tuple[list[list[dict]], bool]:
+    """(merge groups, is_drain) of one compaction. "full": one group of
+    every live segment, a drain (it also applies every pending
+    tombstone), planned when there are several segments or `pending`
+    tombstones. "tiered": each tier's oldest members, merge_factor at a
+    time."""
+    if policy == "full":
+        return [segments] if len(segments) > 1 or (
+            segments and pending) else [], True
+    if policy != "tiered":
+        raise ValueError(f"unknown compaction policy {policy!r}")
+    _check_merge_factor(merge_factor)
+    by_level: dict[int, list[dict]] = {}
+    for s in segments:
+        by_level.setdefault(_tier_level(s["rows"], merge_factor), []).append(s)
+    return [m[i:i + merge_factor] for _, m in sorted(by_level.items())
+            for i in range(0, len(m) - merge_factor + 1, merge_factor)], False
+
+
+def _merge_group(spark, out_dir, cfg, stats, group, tmp_prefix, tombs,
+                 drop, mass) -> dict:
+    """Merge one group of segments into a private temp dir (removed on
+    failure): the members' postings through merge_hot_partials and
+    their docs, both minus the group's tombstones. `drop` is the
+    group's (doc_id, dl) tombstone frame; None resolves it from the
+    pending `tombs` frame by a semi-join with the group's docs. `mass`
+    = (n, dl) of a drain's over-cap tombstones: the group is rebuilt
+    from its live docs instead."""
     import shutil
     import uuid
 
-    # write to a PRIVATE temp dir first: two concurrent compactors would
-    # otherwise derive the same generation from their lock-free stats
-    # snapshots and write the same canonical path — and the loser's
-    # abort would rmtree the directory the winner just published. The
-    # canonical seg=compacted-<gen> name is claimed by an os.rename
-    # under the lock, with gen derived from the stats read UNDER the
-    # lock (monotone counter persisted in stats — counting compacted
-    # segments in the live list would always yield 1 and the third
-    # compaction would overwrite the path it reads from).
-    tmp_seg_dir = os.path.join(
-        out_dir, "segments", f".compacting-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    )
+    import numpy as np
+
+    from capsbm25.postings import merge_hot_partials
+
+    paths = [os.path.join(out_dir, "segments", f"seg={s['id']}")
+             for s in group]
+    docs = spark.read.parquet(*(os.path.join(p, "docs") for p in paths))
+    if mass is not None:
+        n_del, dl_del = mass
+    else:
+        if drop is None and tombs is not None:
+            drop = arrow_collect(tombs.join(
+                docs.select("doc_id"), "doc_id", "semi")).drop_duplicates(
+                    "doc_id")
+        n_del = 0 if drop is None else len(drop)
+        dl_del = int(drop["dl"].sum()) if n_del else 0
+    # block maxima use the post-merge live global stats (the kernel
+    # recomputes exact uppers at query time anyway — tested)
+    n_live = stats["N"] - n_del
+    avgdl = (stats["total_dl"] - dl_del) / n_live if n_live > 0 else 0.0
+    # a PRIVATE temp dir: concurrent compactors derive the same
+    # generation from their lock-free snapshots, so the canonical name
+    # is only claimed by the commit's rename under the lock
+    tmp = os.path.join(out_dir, "segments",
+                       f"{tmp_prefix}-{os.getpid()}-{uuid.uuid4().hex[:8]}")
+    drop_bc = None
     try:
-        if not rebuild:
-            allp = load_segment_postings(spark, out_dir)
-            # merge_hot_partials merges ANY multi-row term (sorted by
-            # doc) — exactly the per-term stitch compaction needs;
-            # single-row terms pass through it unchanged
-            merged = merge_hot_partials(allp, N, avgdl, cfg, drop=drop_bc)
-            merged.write.mode("overwrite").parquet(
-                os.path.join(tmp_seg_dir, "postings"))
-            # doc metadata survives compaction (minus deleted docs) —
-            # without it, later delete-by-conversation calls could not
-            # resolve ids and snippet fetches could not map keys (Lucene
-            # rewrites stored fields on merge for the same reason)
-            live_docs = segment_docs(spark, out_dir)
-            if drop_bc is not None:
-                tomb = spark.read.parquet(
-                    *tomb_files_at_start).select("doc_id")
-                live_docs = live_docs.join(tomb, "doc_id", "anti")
-            live_docs.write.mode("overwrite").parquet(
-                os.path.join(tmp_seg_dir, "docs"))
+        if n_del:
+            # doc metadata survives the merge minus the deleted docs —
+            # later deletes resolve ids and snippet fetches map keys from
+            # it (Lucene rewrites stored fields on merge for the same
+            # reason)
+            docs = docs.join(tombs.select("doc_id"), "doc_id", "anti")
+        if mass is not None:
+            _rebuild_from_live_docs(spark, cfg, docs, tmp, n_live, avgdl)
         else:
-            _rebuild_from_live_docs(
-                spark, out_dir, cfg, tomb_files_at_start, tmp_seg_dir,
-                N, avgdl)
+            if n_del:
+                # a REAL broadcast (one copy per executor), not a closure
+                # capture pickled per task
+                drop_bc = spark.sparkContext.broadcast(
+                    np.unique(drop["doc_id"].to_numpy(np.int64)))
+            # merge_hot_partials merges ANY multi-row term (sorted by
+            # doc); single-row terms pass through unchanged
+            post = spark.read.parquet(
+                *(os.path.join(p, "postings") for p in paths))
+            merge_hot_partials(post, n_live, avgdl, cfg, drop=drop_bc).write \
+                .mode("overwrite").parquet(os.path.join(tmp, "postings"))
+            docs.write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
     except BaseException:
-        # a failed merge/rebuild must not leak its private temp dir —
-        # for full compaction it holds up to a whole copy of the index
-        shutil.rmtree(tmp_seg_dir, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
         raise
     finally:
         if drop_bc is not None:
-            # the writes above ran eagerly — free the executor copies
-            # now instead of waiting for GC + ContextCleaner
+            # the writes ran eagerly — free the executor copies now
             drop_bc.destroy()
+    rows_in = sum(s["rows"] for s in group)
+    return {"members": [s["id"] for s in group], "tmp": tmp,
+            "drop": drop,
+            "rows_in": rows_in, "rows_out": rows_in - n_del,
+            "dl_out": sum(s["dl"] for s in group) - dl_del,
+            "deleted_applied": n_del, "deleted_dl": dl_del}
 
-    # staleness re-check + rename + swap ATOMICALLY under the write
-    # lock: batch commits also serialize on it, so none can land between
-    # the check and the os.replace (the round-2 check-then-swap race).
-    # A batch (or another compaction) that committed while we merged
-    # still aborts us cleanly here — and we only ever delete our own
-    # private temp dir.
-    ids_at_start = [s["id"] for s in stats["segments"]]
+
+def _commit_merges(out_dir, cfg, policy, drain, files, probe,
+                   merges) -> dict:
+    """Publish a plan's merged groups: one staleness check, crash-leftover
+    guard, rename loop and stats rewrite, atomically under the write
+    lock (batch commits serialize on it too, so none lands between the
+    check and the swap)."""
+    import shutil
+    import uuid
+
+    import pandas as pd
+
+    n_applied = sum(m["deleted_applied"] for m in merges)
+    # the pending tombstones are consolidated when the plan applied any:
+    # the remainder becomes ONE pending file (a drain's is empty). It
+    # depends only on the start-snapshot files (validated below), so it
+    # is computed before the lock
+    rem = None
+    if files and drain:
+        rem = pd.DataFrame({"doc_id": [], "dl": []})
+    elif files and n_applied:
+        applied = pd.concat(m["drop"] for m in merges
+                            if m["drop"] is not None)
+        rem = probe[~probe["doc_id"].isin(applied["doc_id"])]
+    counter, name, _ = _POLICIES[policy]
+    consumed = {i for m in merges for i in m["members"]}
     with _stats_lock(out_dir):
         now = load_stream_stats(out_dir)
-        if [s["id"] for s in now["segments"]] != ids_at_start:
-            shutil.rmtree(tmp_seg_dir, ignore_errors=True)
-            return {"compacted": False, "aborted": "segments changed "
-                    "during compaction — rerun (or pause the stream)"}
-        if _tombstone_files(out_dir) != tomb_files_at_start:
-            # a delete landed while we merged: the new tombstones are
-            # NOT applied in our output — aborting keeps them pending
-            # rather than silently resurrecting the docs
-            shutil.rmtree(tmp_seg_dir, ignore_errors=True)
-            return {"compacted": False, "aborted": "tombstones changed "
-                    "during compaction — rerun"}
-        gen = int(now.get("compact_gen", 0)) + 1
-        seg_id = f"compacted-{gen}"
-        target = os.path.join(out_dir, "segments", f"seg={seg_id}")
-        # a PRIOR run that crashed between this rename and _write_stats
-        # left seg=compacted-<gen> on disk with compact_gen unbumped —
-        # the rerun derives the same gen and os.rename would fail
-        # ENOTEMPTY forever. gen > now's compact_gen proves stats never
-        # referenced the leftover, so it is safe to clear (mirrors the
-        # process_batch / _compact_tiered crash guards).
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(tmp_seg_dir, target)
-        n_live = now["N"] - n_del
-        dl_live = now["total_dl"] - dl_del
-        new_stats = {
-            "N": n_live,
-            "total_dl": dl_live,
-            # id allocation stays monotone across delete-compactions
-            "next_doc_id": now.get("next_doc_id", now["N"]),
-            "config": now.get("config", cfg.persist_dict()),
-            "compact_gen": gen,
-            "tier_gen": now.get("tier_gen", 0),
-            "segments": [{"id": seg_id, "rows": n_live,
-                          "dl": dl_live, "sec": 0.0}],
-            # UNION with the previous compaction's ids — dropping them
-            # would let a streaming replay re-ingest pre-compaction
-            # batches
-            "compacted_from": sorted(
-                set(now.get("compacted_from", []))
-                | {s["id"] for s in now["segments"]},
-                key=str,
-            ),
-        }
-        new_stats["tombstones_applied"] = sorted(
-            set(now.get("tombstones_applied", []))
-            | {os.path.basename(f) for f in tomb_files_at_start}
-        )
-        _write_stats(out_dir, new_stats)
-    return {"compacted": True, "segments_before": len(stats["segments"]),
-            "deleted_applied": n_del,
-            "path": "rebuild" if rebuild else "merge"}
+        live = {s["id"] for s in now["segments"]}
+        if not consumed <= live or (drain and live != consumed):
+            # a batch or another compaction changed the inputs
+            return {"compacted": False,
+                    "aborted": "segments changed during compaction — rerun"}
+        if (drain or rem is not None) and \
+                _tombstone_files(out_dir, now) != files:
+            # a delete landed mid-merge: our output still holds its docs
+            # and the consolidation would miscount it — aborting keeps
+            # every tombstone pending
+            return {"compacted": False, "aborted":
+                    "tombstones changed during compaction — rerun"}
+        gen = int(now.get(counter, 0))
+        first = {}  # first member id -> its merge record
+        for m in merges:
+            gen += 1
+            m["seg_id"] = f"{name}-{gen}"
+            seg = os.path.join(out_dir, "segments", f"seg={m['seg_id']}")
+            if os.path.exists(seg):
+                # leftover of a run that crashed between its renames and
+                # its stats swap: the counter was never bumped, so stats
+                # reference nothing under the repeated name — drop it or
+                # every rerun wedges on ENOTEMPTY
+                shutil.rmtree(seg)
+            os.rename(m["tmp"], seg)
+            first[m["members"][0]] = m
+        # each merged segment takes its first member's place
+        now["segments"] = [
+            {"id": m["seg_id"], "rows": m["rows_out"], "dl": m["dl_out"],
+             "sec": 0.0} if m else s
+            for s in now["segments"]
+            for m in [first.get(s["id"])] if m or s["id"] not in consumed]
+        # pin the id allocator to the PRE-shrink N (legacy stats predate
+        # next_doc_id): a shrunk N must never hand a new batch ids that
+        # surviving docs own
+        now["next_doc_id"] = now.get("next_doc_id", now["N"])
+        now["N"] -= n_applied
+        now["total_dl"] -= sum(m["deleted_dl"] for m in merges)
+        now[counter] = gen
+        now.setdefault("config", cfg.persist_dict())
+        # UNION with earlier merges' ids — dropping them would let a
+        # streaming replay re-ingest pre-compaction batches
+        now["compacted_from"] = sorted(
+            set(now.get("compacted_from", [])) | consumed, key=str)
+        if rem is not None:
+            # every start file is marked applied (files stay on disk for
+            # async GC); the remainder bounds the per-delete dedup read
+            new_pending: list[str] = []
+            if len(rem):
+                os.makedirs(_tombstone_dir(out_dir), exist_ok=True)
+                new_pending = [os.path.join(
+                    _tombstone_dir(out_dir),
+                    f"pending-{uuid.uuid4().hex[:12]}.parquet")]
+                rem.to_parquet(new_pending[0], index=False)
+            now["tombstones_applied"] = sorted(
+                set(now.get("tombstones_applied", []))
+                | {os.path.basename(f) for f in files})
+            now["deleted_n"] = len(rem)
+            now["deleted_dl"] = int(rem["dl"].sum())
+            _pending_seen_cache[out_dir] = (tuple(new_pending),
+                                            set(rem["doc_id"].tolist()))
+        _write_stats(out_dir, now)
+    return {"compacted": True, "segments_after": len(now["segments"])}
 
 
-def _rebuild_from_live_docs(spark, out_dir, cfg, tomb_files, tmp_seg_dir,
-                            N_live, avgdl_live) -> None:
+def _rebuild_from_live_docs(spark, cfg, live, tmp_seg_dir, N_live,
+                            avgdl_live) -> None:
     """Mass-delete compaction path: rebuild postings from the surviving
-    corpus with the batch pipeline — tombstones stay a DataFrame
-    anti-join end to end, nothing is ever collected to the driver."""
+    corpus `live` (the group's docs anti-joined with the tombstones)
+    with the batch pipeline — nothing is ever collected to the
+    driver."""
     from capsbm25.postings import (POSTINGS_SCHEMA, assemble_postings,
                                    extract_pairs, extract_runs,
                                    merge_hot_partials)
 
-    tomb = spark.read.parquet(*tomb_files).select("doc_id").distinct()
-    live = segment_docs(spark, out_dir).join(tomb, "doc_id", "anti")
     live.write.mode("overwrite").parquet(os.path.join(tmp_seg_dir, "docs"))
     live = spark.read.parquet(os.path.join(tmp_seg_dir, "docs"))
     if N_live <= 0:
@@ -775,276 +895,6 @@ def _rebuild_from_live_docs(spark, out_dir, cfg, tomb_files, tmp_seg_dir,
 
     shutil.rmtree(raw_dir, ignore_errors=True)
 
-
-def _tier_level(rows: int, merge_factor: int) -> int:
-    """floor(log_mf(rows)) by exact integer division — float log puts
-    exact powers one tier low (log(1000)/log(10) = 2.999...)."""
-    level, n = 0, max(int(rows), 1)
-    while n >= merge_factor:
-        n //= merge_factor
-        level += 1
-    return level
-
-
-def _compact_tiered(spark, out_dir, cfg, stats, merge_factor,
-                    max_tombstone_collect) -> dict:
-    from capsbm25.postings import POSTINGS_SCHEMA, merge_hot_partials
-
-    if merge_factor < 2:
-        raise ValueError("merge_factor must be >= 2")
-    segments = stats["segments"]
-    tomb_files_at_start = _tombstone_files(out_dir)
-
-    # plan: group each tier's oldest members, merge_factor at a time
-    by_level: dict[int, list[dict]] = {}
-    for s in segments:
-        by_level.setdefault(_tier_level(s["rows"], merge_factor), []).append(s)
-    groups: list[list[dict]] = []
-    for lvl in sorted(by_level):
-        members = by_level[lvl]
-        for i in range(len(members) // merge_factor):
-            groups.append(members[i * merge_factor:(i + 1) * merge_factor])
-    if not groups:
-        return {"compacted": False, "policy": "tiered",
-                "segments": len(segments), "merges": []}
-
-    import shutil
-    import uuid
-
-    import numpy as np
-    import pandas as pd
-
-    tomb_all = None
-    if tomb_files_at_start:
-        # cache: every merge group semi-joins against this frame and
-        # the remainder consolidation reads it once more — without the
-        # cache each of those re-reads and re-dedups EVERY pending file
-        tomb_all = spark.read.parquet(*tomb_files_at_start).dropDuplicates(
-            ["doc_id"]).cache()
-        if len(arrow_collect(
-                tomb_all.limit(max_tombstone_collect + 1))) \
-                > max_tombstone_collect:
-            # a mass delete is pending: leave ALL tombstones to the
-            # full policy's distributed rebuild (applying per-tier
-            # subsets would still need a driver-sized remainder
-            # consolidation below)
-            tomb_all.unpersist()
-            tomb_all = None
-
-    def _merge_group(g):
-        seg_paths = [os.path.join(out_dir, "segments", f"seg={s['id']}")
-                     for s in g]
-        g_post = spark.read.parquet(*(os.path.join(p, "postings")
-                                      for p in seg_paths))
-        g_docs = spark.read.parquet(*(os.path.join(p, "docs")
-                                      for p in seg_paths))
-        drop_bc = None
-        g_del = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                              "dl": pd.Series(dtype=np.int64)})
-        if tomb_all is not None:
-            # tombstones FALLING IN this group ride the merge (the
-            # Lucene merge-applies-deletes analog, tier-scoped); the
-            # membership test is a distributed semi-join — only the
-            # in-group subset is collected, and an over-cap subset
-            # (mass delete) simply stays pending for the rebuild path
-            ing = tomb_all.join(g_docs.select("doc_id"), "doc_id", "semi")
-            probe = arrow_collect(
-                ing.limit(max_tombstone_collect + 1))
-            if len(probe) <= max_tombstone_collect and len(probe):
-                g_del = probe
-                drop_bc = spark.sparkContext.broadcast(
-                    np.unique(g_del["doc_id"].to_numpy(np.int64)))
-        rows_in = sum(s["rows"] for s in g)
-        dl_in = sum(s["dl"] for s in g)
-        # block-max context: post-merge live global stats (the kernel
-        # recomputes exact uppers at query time anyway — tested)
-        n_ctx = max(stats["N"] - len(g_del), 1)
-        avg_ctx = (stats["total_dl"] - int(g_del["dl"].sum())) / n_ctx
-        merged = merge_hot_partials(g_post, n_ctx, avg_ctx, cfg,
-                                    drop=drop_bc)
-        tmp = os.path.join(
-            out_dir, "segments",
-            f".tiering-{os.getpid()}-{uuid.uuid4().hex[:8]}")
-        try:
-            merged.write.mode("overwrite").parquet(
-                os.path.join(tmp, "postings"))
-            out_docs = g_docs
-            if drop_bc is not None:
-                ids = spark.createDataFrame(g_del[["doc_id"]])
-                out_docs = g_docs.join(ids, "doc_id", "anti")
-            out_docs.write.mode("overwrite").parquet(
-                os.path.join(tmp, "docs"))
-        except BaseException:
-            # a failing group removes its OWN partial temp dir before
-            # re-raising — the concurrent-merge error path below only
-            # sees finished groups' tmp paths, so without this the
-            # half-written .tiering-* dir would accumulate under
-            # segments/ across failures (round-5 advice; disk-only,
-            # hidden dirs are never referenced by stats)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        finally:
-            if drop_bc is not None:
-                # both writes ran eagerly — free the executor copies
-                drop_bc.destroy()
-        return ({
-            "members": [s["id"] for s in g],
-            "tmp": tmp,
-            "rows_in": rows_in,
-            "rows_out": rows_in - len(g_del),
-            "dl_out": dl_in - int(g_del["dl"].sum()),
-            "deleted_applied": len(g_del),
-            "deleted_dl": int(g_del["dl"].sum()),
-        }, g_del if len(g_del) else None)
-
-    # merge groups are INDEPENDENT (disjoint member segments, private
-    # temp dirs) — submit them concurrently and let the Spark scheduler
-    # interleave their jobs, so a long ingest history with several
-    # eligible tiers pays ~max(group) wall instead of sum(groups).
-    # Results keep the deterministic `groups` order regardless of
-    # completion order (stats accounting below folds them in order).
-    if len(groups) == 1:
-        results = [_merge_group(groups[0])]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(len(groups), 8),
-            thread_name_prefix="capsbm25-tiered-merge",
-        ) as pool:
-            futs = [pool.submit(_merge_group, g) for g in groups]
-            results, err = [], None
-            for f in futs:
-                try:
-                    results.append(f.result())
-                except BaseException as e:  # noqa: BLE001 — cleanup+reraise
-                    err = err or e
-            if err is not None:
-                # drop the temp dirs of the groups that DID finish —
-                # a failed tiered pass must leave no stray segments
-                for m, _ in results:
-                    shutil.rmtree(m["tmp"], ignore_errors=True)
-                raise err
-    merges = [r[0] for r in results]
-    # the consolidated pending REMAINDER is computed BEFORE the lock —
-    # it depends only on the start-snapshot tombstone files (validated
-    # unchanged under the lock) and the applied set, and running Spark
-    # jobs inside the critical section both stretches the lock hold and
-    # widens the crash window between the renames and the stats swap.
-    # Any failure from here until commit must drop the finished groups'
-    # temp dirs (the 'no stray segments' invariant) — _auto_compact
-    # swallows and retries, so a persistent failure would otherwise
-    # accumulate tier-sized .tiering-* dirs indefinitely.
-    try:
-        applied_frames = [r[1] for r in results if r[1] is not None]
-        applied = (pd.concat(applied_frames, ignore_index=True)
-                   if applied_frames else None)
-        rem = None
-        if applied is not None:
-            rem = arrow_collect(
-                tomb_all
-                .join(arrow_frame(spark, applied[["doc_id"]]),
-                      "doc_id", "anti")
-            )
-    except BaseException:
-        for m in merges:
-            shutil.rmtree(m["tmp"], ignore_errors=True)
-        raise
-    finally:
-        if tomb_all is not None:
-            tomb_all.unpersist()
-
-    def _abort(reason: str) -> dict:
-        for m in merges:
-            shutil.rmtree(m["tmp"], ignore_errors=True)
-        return {"compacted": False, "policy": "tiered", "aborted": reason}
-
-    with _stats_lock(out_dir):
-        now = load_stream_stats(out_dir)
-        live_ids = {s["id"] for s in now["segments"]}
-        if any(s["id"] not in live_ids for g in groups for s in g):
-            # a concurrent compaction consumed one of our inputs
-            return _abort("segments changed during tiered compaction — "
-                          "rerun")
-        if applied is not None and \
-                _tombstone_files(out_dir) != tomb_files_at_start:
-            # a delete landed mid-merge and we are about to consolidate
-            # the pending set — aborting keeps every tombstone pending
-            # instead of silently resurrecting the new ones. (With no
-            # tombstones applied we commit regardless: new pending
-            # files are untouched by a pure tier merge.)
-            return _abort("tombstones changed during tiered compaction "
-                          "— rerun")
-        gen = int(now.get("tier_gen", 0))
-        first_member = {}  # first member id -> its merge record
-        consumed: set = set()
-        for m in merges:
-            gen += 1
-            m["seg_id"] = f"tiered-{gen}"
-            seg = os.path.join(out_dir, "segments", f"seg={m['seg_id']}")
-            if os.path.exists(seg):
-                # leftover from a run that crashed between its renames
-                # and its stats swap (tier_gen was never bumped, so the
-                # name repeats and stats reference nothing under it) —
-                # drop it or every rerun wedges on ENOTEMPTY
-                shutil.rmtree(seg)
-            os.rename(m["tmp"], seg)
-            first_member[m["members"][0]] = m
-            consumed.update(m["members"])
-        new_segments = []
-        for s in now["segments"]:
-            if s["id"] in first_member:
-                m = first_member[s["id"]]
-                new_segments.append({"id": m["seg_id"],
-                                     "rows": m["rows_out"],
-                                     "dl": m["dl_out"], "sec": 0.0})
-            elif s["id"] not in consumed:
-                new_segments.append(s)
-        n_applied = sum(m["deleted_applied"] for m in merges)
-        dl_applied = sum(m["deleted_dl"] for m in merges)
-        now["segments"] = new_segments
-        # pin the id allocator to the PRE-shrink N on legacy stats that
-        # predate next_doc_id (mirrors _compact_full): shrinking N with
-        # no allocator record would let the next batch reuse doc-id
-        # ranges that surviving docs still own
-        now["next_doc_id"] = now.get("next_doc_id", now["N"])
-        now["N"] -= n_applied
-        now["total_dl"] -= dl_applied
-        now["tier_gen"] = gen
-        now["compacted_from"] = sorted(
-            set(now.get("compacted_from", [])) | consumed, key=str)
-        if applied is not None:
-            # consolidate the pending tombstones: everything applied in
-            # a merged tier drops out; the remainder (rem, computed
-            # pre-lock) becomes ONE pending file (bounds the per-delete
-            # dedup read) and every start file is marked applied (files
-            # stay on disk for async GC)
-            td = _tombstone_dir(out_dir)
-            os.makedirs(td, exist_ok=True)
-            new_pending: list[str] = []
-            if len(rem):
-                fn = os.path.join(td,
-                                  f"pending-{uuid.uuid4().hex[:12]}.parquet")
-                rem.to_parquet(fn, index=False)
-                new_pending = [fn]
-            now["tombstones_applied"] = sorted(
-                set(now.get("tombstones_applied", []))
-                | {os.path.basename(f) for f in tomb_files_at_start}
-            )
-            now["deleted_n"] = len(rem)
-            now["deleted_dl"] = int(rem["dl"].sum()) if len(rem) else 0
-            _pending_seen_cache[out_dir] = (
-                tuple(sorted(new_pending)),
-                set(rem["doc_id"].tolist()) if len(rem) else set(),
-            )
-        _write_stats(out_dir, now)
-    for m in merges:
-        m.pop("tmp", None)
-    return {"compacted": True, "policy": "tiered",
-            "merges": merges,
-            "rows_rewritten": sum(m["rows_in"] for m in merges),
-            "segments_after": len(new_segments),
-            "deleted_applied": sum(m["deleted_applied"] for m in merges)}
 
 
 def stream_corpus_stats(out_dir: str) -> tuple[int, float]:

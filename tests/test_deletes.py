@@ -209,6 +209,27 @@ def test_compaction_aborts_on_mid_merge_delete(streamed_del, spark,
     assert r2["compacted"] and r2["deleted_applied"] == fired["r"]["deleted"]
 
 
+@pytest.mark.parametrize("deletes,max_jobs", [(False, 5), (True, 10)],
+                         ids=["clean", "tombstones"])
+def test_full_compaction_job_count(streamed_del, spark, deletes, max_jobs):
+    """A full compaction runs no more Spark jobs than the separate
+    full-merge path it replaced (5 clean, 10 with tombstones pending on
+    this fixture): the drain takes the tombstone probe as its drop set
+    and needs no job for its empty remainder."""
+    import uuid
+
+    from test_streaming import _jobs_of
+
+    out = _fresh(streamed_del)
+    if deletes:
+        assert delete_docs(spark, out, streamed_del["victims"])["deleted"]
+    r, jobs = _jobs_of(
+        spark, f"compact-{uuid.uuid4().hex}",
+        lambda: compact_segments(spark, out, streamed_del["cfg"]))
+    assert r["compacted"], r
+    assert 0 < jobs <= max_jobs, jobs
+
+
 def test_positional_delete_compact_phrase(spark, tmp_path):
     """Deletes drop positional payload coherently: after delete +
     compact on a positional index, phrase results == oracle over the

@@ -303,12 +303,16 @@ def test_tier_level_exact_powers():
     assert sm._tier_level(242, 3) == 4
 
 
+@pytest.mark.parametrize("policy,name", [("full", "compacted"),
+                                         ("tiered", "tiered")],
+                         ids=["full", "tiered"])
 def test_tiered_rerun_after_crash_between_rename_and_stats(spark, tmp_path,
-                                                           monkeypatch):
-    """A tiered compaction that dies AFTER renaming its merged segment
-    but BEFORE the stats swap must leave stats untouched, and a rerun
-    must succeed (the leftover seg=tiered-<gen> dir is unreferenced
-    garbage and gets replaced, not ENOTEMPTY-wedged)."""
+                                                           monkeypatch,
+                                                           policy, name):
+    """A compaction that dies AFTER renaming its merged segment but
+    BEFORE the stats swap must leave stats untouched, and a rerun must
+    succeed (the leftover seg=<name>-<gen> dir is unreferenced garbage
+    and gets replaced, not ENOTEMPTY-wedged) — under both policies."""
     out = str(tmp_path / "idx")
     cfg = BuildConfig(num_part_ids=16, shuffle_partitions=4)
     pdf = fx.gen_transcripts_pdf(60, 21)
@@ -321,7 +325,7 @@ def test_tiered_rerun_after_crash_between_rename_and_stats(spark, tmp_path,
 
     def crashing_write(out_dir, stats_):
         if state["boom"] and any(
-                str(s["id"]).startswith("tiered-")
+                str(s["id"]).startswith(f"{name}-")
                 for s in stats_.get("segments", [])):
             state["boom"] = False
             raise RuntimeError("crash between rename and stats swap")
@@ -329,19 +333,93 @@ def test_tiered_rerun_after_crash_between_rename_and_stats(spark, tmp_path,
 
     monkeypatch.setattr(sm, "_write_stats", crashing_write)
     with pytest.raises(RuntimeError, match="crash between rename"):
-        sm.compact_segments(spark, out, cfg, policy="tiered",
+        sm.compact_segments(spark, out, cfg, policy=policy,
                             merge_factor=3)
     stats = sm.load_stream_stats(out)
     assert [s["id"] for s in stats["segments"]] == [0, 1, 2]  # untouched
-    assert os.path.isdir(os.path.join(out, "segments", "seg=tiered-1"))
+    assert os.path.isdir(os.path.join(out, "segments", f"seg={name}-1"))
 
-    r = sm.compact_segments(spark, out, cfg, policy="tiered",
+    r = sm.compact_segments(spark, out, cfg, policy=policy,
                             merge_factor=3)
     assert r["compacted"], r
     stats = sm.load_stream_stats(out)
-    assert [s["id"] for s in stats["segments"]] == ["tiered-1"]
+    assert [s["id"] for s in stats["segments"]] == [f"{name}-1"]
     assert stats["N"] == len(pdf)
     _assert_rank_identical_by_key(spark, out, cfg, pdf)
+
+
+def test_drain_equals_one_group_tier_merge(spark, tmp_path):
+    """A full compaction is the tier merge of one group that holds every
+    live segment and every pending tombstone: on three same-tier
+    segments (merge_factor=3) with deletes pending in two of them, both
+    policies write the same postings rows and live docs, reach the same
+    corpus stats and leave no tombstone pending. (Block maxima are
+    derived at query time from these payloads and N/avgdl.)"""
+    import shutil
+
+    cfg = BuildConfig(num_part_ids=16, shuffle_partitions=4)
+    pdf = fx.gen_transcripts_pdf(60, 21)
+    chunks = _chunks(pdf, 3)
+    base = str(tmp_path / "base")
+    for i in range(3):
+        _ingest(spark, base, cfg, chunks[i], i)
+    victims = (sorted(chunks[0]["conv_id"].unique())[:2]
+               + sorted(chunks[2]["conv_id"].unique())[:2])
+    assert sm.delete_docs(spark, base, victims)["deleted"] > 0
+
+    got = {}
+    for policy in ("full", "tiered"):
+        out = str(tmp_path / policy)
+        shutil.copytree(base, out)
+        r = sm.compact_segments(spark, out, cfg, policy=policy,
+                                merge_factor=3)
+        assert r["compacted"] and len(r["merges"]) == 1, r
+        assert sm.load_tombstones(spark, out) is None
+        stats = sm.load_stream_stats(out)
+        postings = (sm.load_segment_postings(spark, out).toPandas()
+                    .sort_values("term").reset_index(drop=True))
+        docs = (sm.segment_docs(spark, out).toPandas()
+                .sort_values("doc_id").reset_index(drop=True))
+        got[policy] = (postings, docs, {k: stats.get(k, 0) for k in
+                                        ("N", "total_dl", "deleted_n")})
+    (pf, df, sf), (pt, dt, st) = got["full"], got["tiered"]
+    assert list(pf.columns) == list(pt.columns)
+    assert {"term", "doc_ids", "tfs", "dls", "df", "cf"} <= set(pf.columns)
+    pd.testing.assert_frame_equal(pf, pt)
+    pd.testing.assert_frame_equal(df, dt)
+    surviving = pdf[~pdf["conv_id"].isin(victims)]
+    assert sf == st == {"N": len(surviving),
+                        "total_dl": int(dt["dl"].sum()), "deleted_n": 0}
+
+
+@pytest.mark.parametrize("mf", [0, 1, -1])
+def test_merge_factor_below_two_rejected_before_any_job(spark, tmp_path,
+                                                        monkeypatch, mf):
+    """merge_factor < 2 has no tier ladder (1 never terminated the tier
+    loop, 0 divided by zero inside the best-effort merge-on-commit and
+    silently disabled it): the public entry points raise before any
+    Spark job, leaving no segment and unchanged stats."""
+    out = str(tmp_path / "idx")
+    cfg = BuildConfig(num_part_ids=16, shuffle_partitions=4)
+    chunks = _chunks(fx.gen_transcripts_pdf(20, 5), 2)
+    _ingest(spark, out, cfg, chunks[0], 0)
+    before = sm.load_stream_stats(out)
+
+    def reached(*a, **k):
+        raise AssertionError("merge-on-commit ran")
+
+    monkeypatch.setattr(sm, "_auto_compact", reached)
+    with pytest.raises(ValueError, match="merge_factor"):
+        sm.process_batch(spark, spark.createDataFrame(chunks[1]), 1, out,
+                         cfg, merge_factor=mf)
+    assert sorted(os.listdir(os.path.join(out, "segments"))) == ["seg=0"]
+    assert sm.load_stream_stats(out) == before
+    with pytest.raises(ValueError, match="merge_factor"):
+        sm.start_incremental_build(spark, str(tmp_path / "in"),
+                                   str(tmp_path / "idx2"), cfg,
+                                   merge_factor=mf)
+    with pytest.raises(ValueError, match="merge_factor"):
+        sm._tier_level(5, mf)
 
 
 def test_auto_compact_long_ingest_bounds_segments(spark, tmp_path,

@@ -407,7 +407,7 @@ def build_index(
             wave_runs = wave_runs.observe(
                 obs, F.count(F.lit(1)).alias("runs"),
                 F.sum("n").alias("pairs"))
-            out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
+            out = assemble_postings(wave_runs, plan, cfg)
             dst = os.path.join(postings_path, f"wave={w}")
             # partition the persisted postings BY part_id: a part_id is
             # one contiguous term range of the samplesort plan (or one
@@ -466,8 +466,7 @@ def build_index(
             else:
                 partials = spark.read.parquet(postings_path).where(
                     (F.col("part_id") >= plan.n_normal) & F.col("partial"))
-                merged = merge_hot_partials(partials.drop("wave"), N, avgdl,
-                                            cfg)
+                merged = merge_hot_partials(partials.drop("wave"), cfg)
                 write_table(merged, dst, partition_by=["part_id"])
 
             def finish_hot(dst=dst, t0=t_hot):

@@ -27,8 +27,9 @@ Pipeline stage mapping to the reference (SURVEY.md §2/§3):
                          (batch varint decode + segmented cumsum)
                          folding each term's runs into one posting row.
   merge_hot_partials   ~ compute_partition_boundary_lcp (:431-447):
-                         stitch cross-partition metadata — here, merge
-                         the salted partial postings of hot terms.
+                         the same merge walk after a hash exchange on
+                         term — stitches the salted partials of hot
+                         terms, and merges whole segments in compaction.
 
 Posting row schema (FIXTURES.md §3, plus dls so queries never join a
 10^12-row doc_stats table — doc lengths travel with the posting):
@@ -47,8 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from capsbm25.codec import (decode_pair_positions, decode_varints,
-                            delta_decode, encode_varints_grouped,
-                            permute_pair_payload, sorted_member_mask)
+                            encode_varints_grouped, permute_pair_payload,
+                            sorted_member_mask)
 from capsbm25.config import BuildConfig
 from capsbm25.partition import PartitionPlan
 
@@ -443,7 +444,7 @@ def with_part_id(pairs: DataFrame, plan: PartitionPlan) -> DataFrame:
     return pairs.mapInPandas(kernel, schema=PAIRS_SCHEMA + ", part_id int")
 
 
-def _posting_rows(flushes, N, avgdl, cfg, hot_terms):
+def _posting_rows(flushes, hot_terms):
     """Turn a list of (term, docs, tfs, dls, part_id[, pos]) into
     posting rows. pos (optional 6th element): flat in-doc token
     positions in pair order (sizes = tfs), delta+varint-encoded with an
@@ -452,9 +453,7 @@ def _posting_rows(flushes, N, avgdl, cfg, hot_terms):
     All varint encodes happen in ONE vectorized pass over the
     concatenated flush window (grouped encode) — per-term numpy-call
     overhead would otherwise dominate waves whose terms are small (the
-    normal-part wave at 10M+ turns). N/avgdl are retained in the
-    signature for interface stability (they sized the dropped stored
-    block_max — see POSTINGS_SCHEMA)."""
+    normal-part wave at 10M+ turns)."""
     n = len(flushes)
     if n == 0:
         return pd.DataFrame([], columns=POSTINGS_COLS)
@@ -463,7 +462,6 @@ def _posting_rows(flushes, N, avgdl, cfg, hot_terms):
     dls_l = [np.asarray(f[3], dtype=np.int64) for f in flushes]
     sizes = np.array([d.size for d in docs_l], dtype=np.int64)
     t_starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-    t_ends = t_starts + sizes
     D = np.concatenate(docs_l)
     T = np.concatenate(tfs_l)
     L = np.concatenate(dls_l)
@@ -533,15 +531,127 @@ def _posting_rows(flushes, N, avgdl, cfg, hot_terms):
     return pd.DataFrame(out, columns=POSTINGS_COLS)
 
 
+def _merge_walk(
+    frame: DataFrame,
+    keys: tuple[str, ...],
+    count_col: str,
+    with_pos: bool,
+    hot_terms=frozenset(),
+    drop=None,
+) -> DataFrame:
+    """The one posting merge: fold each contiguous `keys` group of an
+    already shuffled and sortWithinPartitions'd frame of delta+varint
+    rows (RUNS or POSTINGS schema; `count_col` holds each row's doc
+    count) into one posting row.
+
+    Each Arrow batch is decoded ONCE per column — rows are
+    self-delimiting, so one varint pass plus a segmented cumsum rebuilds
+    absolute doc_ids for the whole batch instead of 3 numpy decode calls
+    per row. A group may straddle batches (it is carried), and finished
+    groups flush to _posting_rows every 4,096 terms. The emitted part_id
+    is the group's first row's, which is its minimum when the sort keys
+    put part_id right after `keys`.
+
+    drop: sorted doc ids to remove (see merge_hot_partials); a group
+    whose docs are all dropped emits no row."""
+    from pyspark.broadcast import Broadcast
+
+    def kernel(it):
+        drop_ids = drop.value if isinstance(drop, Broadcast) else drop
+        cur: tuple | None = None
+        cur_pid = 0
+        chunks: tuple[list, ...] = ([], [], [], [])
+        flushes = []
+
+        def close():
+            d = np.concatenate(chunks[0])
+            t = np.concatenate(chunks[1])
+            dl = np.concatenate(chunks[2])
+            p = np.concatenate(chunks[3]) if with_pos else None
+            if drop_ids is not None and drop_ids.size:
+                keep = ~sorted_member_mask(drop_ids, d)
+                if with_pos:
+                    p = p[np.repeat(keep, t)]
+                d, t, dl = d[keep], t[keep], dl[keep]
+                if not d.size:
+                    return
+            # Rows are individually strictly increasing, but their RANGES
+            # can interleave: the docs stage hash-partitions part_id, so
+            # each staged file holds interleaved doc-id stripes and every
+            # map task's runs span most of the doc space; so do merged
+            # segments. Merge when needed; the O(n) sortedness check
+            # keeps the common contiguous case a pure concat. (Doc sets
+            # are disjoint, so a duplicate is still caught by the
+            # encoder's gap check.)
+            if d.size > 1 and (d[1:] <= d[:-1]).any():
+                o = np.argsort(d, kind="stable")
+                if with_pos:
+                    p = permute_pair_payload(p, t, o)
+                d, t, dl = d[o], t[o], dl[o]
+            flushes.append((cur[0], d, t, dl, cur_pid)
+                           + ((p,) if with_pos else ()))
+
+        for pdf in it:
+            if not len(pdf):
+                continue
+            n_arr = pdf[count_col].to_numpy(np.int64)
+            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
+            total = int(n_arr.sum())
+            gaps = decode_varints(b"".join(pdf["doc_ids"])).astype(np.int64)
+            tfs = decode_varints(b"".join(pdf["tfs"])).astype(np.int64)
+            dls = decode_varints(b"".join(pdf["dls"])).astype(np.int64)
+            if gaps.size != total or tfs.size != total or dls.size != total:
+                raise ValueError(
+                    f"posting payload corrupt: decoded {gaps.size}/"
+                    f"{tfs.size}/{dls.size} values, expected {total}"
+                )
+            c = np.cumsum(gaps)
+            prev = np.concatenate(([0], c[starts[1:] - 1]))
+            docs = c - np.repeat(prev, n_arr)
+            row_bounds = np.append(starts, total)
+            if with_pos:
+                pos_flat = decode_pair_positions(b"".join(pdf["pos"]), tfs)
+                run_pos_bounds = np.concatenate(([0], np.cumsum(tfs)))[
+                    row_bounds]
+            key_arrs = [pdf[k].to_numpy() for k in keys]
+            pids = pdf["part_id"].to_numpy()
+            newg = np.ones(len(pdf), dtype=bool)
+            newg[1:] = np.logical_or.reduce(
+                [a[1:] != a[:-1] for a in key_arrs])
+            g_starts = np.flatnonzero(newg)
+            g_ends = np.append(g_starts[1:], len(pdf))
+            for r0, r1 in zip(g_starts, g_ends):
+                kk = tuple(a[r0] for a in key_arrs)
+                lo, hi = row_bounds[r0], row_bounds[r1]
+                if kk != cur:
+                    if cur is not None:
+                        close()
+                        chunks = ([], [], [], [])
+                        if len(flushes) >= 4096:
+                            yield _posting_rows(flushes, hot_terms)
+                            flushes = []
+                    cur, cur_pid = kk, int(pids[r0])
+                chunks[0].append(docs[lo:hi])
+                chunks[1].append(tfs[lo:hi])
+                chunks[2].append(dls[lo:hi])
+                if with_pos:
+                    chunks[3].append(
+                        pos_flat[run_pos_bounds[r0]:run_pos_bounds[r1]])
+        if cur is not None:
+            close()
+        if flushes:
+            yield _posting_rows(flushes, hot_terms)
+
+    return frame.mapInPandas(kernel, schema=POSTINGS_SCHEMA)
+
+
 def assemble_postings(
     runs: DataFrame,
     plan: PartitionPlan,
-    N: int,
-    avgdl: float,
     cfg: BuildConfig | None = None,
 ) -> DataFrame:
     """Range shuffle of packed runs + k-way merge into posting rows —
-    the merge_sub_subarrays stage (/root/reference/src/Suffix_Array.cpp:
+    the merge_sub_subarrays stage (the reference's src/Suffix_Array.cpp:
     371-428), except the runs are pre-sorted with DISJOINT doc ranges,
     so the merge is pure concatenation in first_doc order.
 
@@ -556,159 +666,34 @@ def assemble_postings(
     assumption fails loudly instead of corrupting the index.
     """
     cfg = cfg or BuildConfig()
-    hot = set(plan.hot_terms)
-    with_pos = cfg.index_positions
-
     shuffled = runs.repartition(
         cfg.shuffle_partitions, "part_id"
     ).sortWithinPartitions("term", "part_id", "first_doc")
-
-    def kernel(it):
-        cur: tuple | None = None  # (term, part_id)
-        chunks: tuple[list, ...] = ([], [], [], [])
-        flushes = []
-
-        def close():
-            d = np.concatenate(chunks[0])
-            t = np.concatenate(chunks[1])
-            dl = np.concatenate(chunks[2])
-            p = np.concatenate(chunks[3]) if with_pos else None
-            # Runs are individually strictly increasing, but their RANGES
-            # can interleave: the docs stage hash-partitions part_id, so
-            # each staged file holds interleaved doc-id stripes and every
-            # map task's runs span most of the doc space. Merge when
-            # needed; the O(n) sortedness check keeps the common
-            # contiguous case a pure concat. (Doc sets are disjoint, so
-            # a duplicate is still caught by the encoder's gap check.)
-            if d.size > 1 and (d[1:] <= d[:-1]).any():
-                o = np.argsort(d, kind="stable")
-                if with_pos:
-                    p = permute_pair_payload(p, t, o)
-                d, t, dl = d[o], t[o], dl[o]
-            if with_pos:
-                flushes.append((cur[0], d, t, dl, cur[1], p))
-            else:
-                flushes.append((cur[0], d, t, dl, cur[1]))
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            # batch decode: ONE varint pass per column for the whole
-            # Arrow batch (runs are self-delimiting), then a vectorized
-            # segmented cumsum rebuilds absolute doc_ids per run —
-            # instead of 3 numpy decode calls per run row
-            n_arr = pdf["n"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-            total = int(n_arr.sum())
-            gaps = decode_varints(b"".join(pdf["doc_ids"])).astype(np.int64)
-            tfs = decode_varints(b"".join(pdf["tfs"])).astype(np.int64)
-            dls = decode_varints(b"".join(pdf["dls"])).astype(np.int64)
-            if gaps.size != total or tfs.size != total or dls.size != total:
-                raise ValueError(
-                    f"run payload corrupt: decoded {gaps.size}/{tfs.size}/"
-                    f"{dls.size} values, expected {total}"
-                )
-            c = np.cumsum(gaps)
-            prev = np.concatenate(([0], c[starts[1:] - 1]))
-            docs = c - np.repeat(prev, n_arr)
-            if with_pos:
-                # positions: absolute value at every PAIR start; pair
-                # sizes come from the decoded tfs
-                pgaps = decode_varints(b"".join(pdf["pos"])).astype(np.int64)
-                n_pos = int(tfs.sum())
-                if pgaps.size != n_pos:
-                    raise ValueError(
-                        f"pos payload corrupt: {pgaps.size} vs {n_pos}")
-                pair_starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                pc = np.cumsum(pgaps)
-                pprev = np.concatenate(([0], pc[pair_starts[1:] - 1]))
-                pos_flat = pc - np.repeat(pprev, tfs)
-                # per-run boundaries in position space
-                run_cum = np.concatenate(([0], np.cumsum(tfs)))
-                run_pos_bounds = run_cum[np.append(starts, total)]
-            terms = pdf["term"].to_numpy(dtype=object)
-            pids = pdf["part_id"].to_numpy()
-            newg = np.ones(len(pdf), dtype=bool)
-            newg[1:] = (terms[1:] != terms[:-1]) | (pids[1:] != pids[:-1])
-            g_starts = np.flatnonzero(newg)
-            g_ends = np.append(g_starts[1:], len(pdf))
-            row_bounds = np.append(starts, total)
-            for r0, r1 in zip(g_starts, g_ends):
-                kk = (terms[r0], int(pids[r0]))
-                lo, hi = row_bounds[r0], row_bounds[r1]
-                if kk != cur:
-                    if cur is not None:
-                        close()
-                        chunks = ([], [], [], [])
-                        if len(flushes) >= 4096:
-                            yield _posting_rows(flushes, N, avgdl, cfg, hot)
-                            flushes = []
-                    cur = kk
-                chunks[0].append(docs[lo:hi])
-                chunks[1].append(tfs[lo:hi])
-                chunks[2].append(dls[lo:hi])
-                if with_pos:
-                    chunks[3].append(
-                        pos_flat[run_pos_bounds[r0]:run_pos_bounds[r1]])
-        if cur is not None:
-            close()
-        if flushes:
-            yield _posting_rows(flushes, N, avgdl, cfg, hot)
-
-    return shuffled.mapInPandas(kernel, schema=POSTINGS_SCHEMA)
+    return _merge_walk(shuffled, ("term", "part_id"), "n",
+                       cfg.index_positions, set(plan.hot_terms))
 
 
 def merge_hot_partials(
-    partials: DataFrame, N: int, avgdl: float, cfg: BuildConfig | None = None,
+    partials: DataFrame, cfg: BuildConfig | None = None,
     drop: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """Stitch salted partial postings into final rows (boundary fix-up).
-
-    Only hot terms reach this groupBy — its input is tiny (a handful of
-    rows per hot term), so the extra shuffle is negligible.
+    """Merge posting rows into one row per term (boundary fix-up): the
+    build's salted hot-term partials, and every term of the segments a
+    compaction merges. One hash exchange on term (no partition count,
+    so AQE coalesces it), a local sort on (term, part_id), then the
+    same walk as assemble_postings grouped on term: a multi-row term is
+    merged, a single-row term passes through, and the row keeps the
+    term's minimum part_id with partial=False.
 
     drop: optional SORTED int64 array of doc ids to physically remove
     while merging (compaction applying delete tombstones — the Lucene
     merge-drops-deleted-docs analog), either a plain ndarray or a
     pyspark Broadcast of one (preferred beyond trivial sizes: one copy
-    per executor instead of a pickle per task closure). N/avgdl must
-    then be the LIVE stats so recomputed block maxima bound the
-    post-delete scores. A term whose docs are all dropped vanishes
-    (no df=0 rows).
+    per executor instead of a pickle per task closure). A term whose
+    docs are all dropped vanishes (no df=0 rows).
     """
-    from pyspark.broadcast import Broadcast
-
     cfg = cfg or BuildConfig()
-
-    with_pos = cfg.index_positions
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        nonlocal drop
-        if isinstance(drop, Broadcast):
-            drop = drop.value
-        docs = np.concatenate([delta_decode(b) for b in pdf["doc_ids"]])
-        tfs = np.concatenate(
-            [decode_varints(b).astype(np.int64) for b in pdf["tfs"]]
-        )
-        dls = np.concatenate(
-            [decode_varints(b).astype(np.int64) for b in pdf["dls"]]
-        )
-        pos = (
-            decode_pair_positions(b"".join(pdf["pos"]), tfs)
-            if with_pos else None
-        )
-        if drop is not None and drop.size and docs.size:
-            keep = ~sorted_member_mask(drop, docs)
-            if pos is not None:
-                pos = pos[np.repeat(keep, tfs)]
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            if docs.size == 0:
-                return pd.DataFrame([], columns=POSTINGS_COLS)
-        order = np.argsort(docs, kind="stable")
-        part_id = int(pdf["part_id"].min())
-        flush = [key[0], docs[order], tfs[order], dls[order], part_id]
-        if pos is not None:
-            flush.append(permute_pair_payload(pos, tfs, order))
-        return _posting_rows([tuple(flush)], N, avgdl, cfg, set())
-
-    return partials.groupBy("term").applyInPandas(merge, schema=POSTINGS_SCHEMA)
+    shuffled = partials.repartition("term").sortWithinPartitions(
+        "term", "part_id")
+    return _merge_walk(shuffled, ("term",), "df", cfg.index_positions,
+                       drop=drop)

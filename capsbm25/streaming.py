@@ -173,13 +173,9 @@ def process_batch(
         plan = plan_from_sample(
             arrow_collect(sample.select("term", "tf")), cfg)
 
-        # block maxima inside a segment use segment-local stats; the
-        # query kernel recomputes bounds when merging segments (query.py)
         seg_dl = docs.agg(F.sum("dl").alias("s")).collect()[0]["s"] or 0
-        seg_avgdl = (seg_dl / n_rows) if n_rows else 0.0
         postings = assemble_postings(
-            extract_runs(docs, cfg, plan=plan), plan, n_rows, seg_avgdl, cfg
-        )
+            extract_runs(docs, cfg, plan=plan), plan, cfg)
         postings.write.mode("overwrite").parquet(
             os.path.join(tmp_seg, "postings"))
     except BaseException:
@@ -522,11 +518,10 @@ def compact_segments(
     group of every live segment, and a DRAIN: it applies every pending
     delete tombstone. Every term collapses back to a single posting row
     (the query kernel's single-row fast path applies again), tombstoned
-    docs are physically dropped from postings AND doc metadata, block
-    maxima are recomputed with the post-delete LIVE N/avgdl, and stats
-    shrink to exact live values — after it, queries need no doc_exclude
-    and the index is rank-identical to a fresh batch build over the
-    surviving corpus (tested). Cost: it rewrites the ENTIRE index; on a
+    docs are physically dropped from postings AND doc metadata, and
+    stats shrink to exact live values — after it, queries need no
+    doc_exclude and the index is rank-identical to a fresh batch build
+    over the surviving corpus (tested). Cost: it rewrites the ENTIRE index; on a
     long-lived ingest stream run policy="tiered" between occasional
     full merges.
 
@@ -551,9 +546,9 @@ def compact_segments(
     the cap (a retention sweep at 10^12 docs would OOM the driver) a
     drain switches to a fully DISTRIBUTED rebuild from the surviving
     text (_rebuild_from_live_docs: live docs are a DataFrame anti-join,
-    postings come from the batch pipeline with live stats — tested by
-    forcing the cap to 0), and a tier plan leaves every tombstone
-    pending for that drain.
+    postings come from the batch pipeline — tested by forcing the cap
+    to 0), and a tier plan leaves every tombstone pending for that
+    drain.
 
     One commit (_commit_merges) claims the canonical seg=<name> paths by
     os.rename under the write lock after a staleness re-check and
@@ -715,10 +710,7 @@ def _merge_group(spark, out_dir, cfg, stats, group, tmp_prefix, tombs,
                     "doc_id")
         n_del = 0 if drop is None else len(drop)
         dl_del = int(drop["dl"].sum()) if n_del else 0
-    # block maxima use the post-merge live global stats (the kernel
-    # recomputes exact uppers at query time anyway — tested)
     n_live = stats["N"] - n_del
-    avgdl = (stats["total_dl"] - dl_del) / n_live if n_live > 0 else 0.0
     # a PRIVATE temp dir: concurrent compactors derive the same
     # generation from their lock-free snapshots, so the canonical name
     # is only claimed by the commit's rename under the lock
@@ -733,7 +725,7 @@ def _merge_group(spark, out_dir, cfg, stats, group, tmp_prefix, tombs,
             # reason)
             docs = docs.join(tombs.select("doc_id"), "doc_id", "anti")
         if mass is not None:
-            _rebuild_from_live_docs(spark, cfg, docs, tmp, n_live, avgdl)
+            _rebuild_from_live_docs(spark, cfg, docs, tmp, n_live)
         else:
             if n_del:
                 # a REAL broadcast (one copy per executor), not a closure
@@ -744,7 +736,7 @@ def _merge_group(spark, out_dir, cfg, stats, group, tmp_prefix, tombs,
             # doc); single-row terms pass through unchanged
             post = spark.read.parquet(
                 *(os.path.join(p, "postings") for p in paths))
-            merge_hot_partials(post, n_live, avgdl, cfg, drop=drop_bc).write \
+            merge_hot_partials(post, cfg, drop=drop_bc).write \
                 .mode("overwrite").parquet(os.path.join(tmp, "postings"))
             docs.write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
     except BaseException:
@@ -854,15 +846,14 @@ def _commit_merges(out_dir, cfg, policy, drain, files, probe,
     return {"compacted": True, "segments_after": len(now["segments"])}
 
 
-def _rebuild_from_live_docs(spark, cfg, live, tmp_seg_dir, N_live,
-                            avgdl_live) -> None:
+def _rebuild_from_live_docs(spark, cfg, live, tmp_seg_dir, N_live) -> None:
     """Mass-delete compaction path: rebuild postings from the surviving
     corpus `live` (the group's docs anti-joined with the tombstones)
     with the batch pipeline — nothing is ever collected to the
-    driver."""
-    from capsbm25.postings import (POSTINGS_SCHEMA, assemble_postings,
-                                   extract_pairs, extract_runs,
-                                   merge_hot_partials)
+    driver. The assembled rows go through merge_hot_partials, which
+    stitches the salted hot partials and passes every other term
+    through, so the segment keeps one non-partial row per term."""
+    from capsbm25.postings import POSTINGS_SCHEMA, merge_hot_partials
 
     live.write.mode("overwrite").parquet(os.path.join(tmp_seg_dir, "docs"))
     live = spark.read.parquet(os.path.join(tmp_seg_dir, "docs"))
@@ -879,22 +870,9 @@ def _rebuild_from_live_docs(spark, cfg, live, tmp_seg_dir, N_live,
     # extract_runs flushes at every doc-order restart, so sort first or
     # runs degenerate to one row per pair
     src = live.select("doc_id", "text").sortWithinPartitions("doc_id")
-    raw_dir = os.path.join(tmp_seg_dir, ".postings_raw")
-    assemble_postings(extract_runs(src, cfg, plan=plan), plan, N_live,
-                      avgdl_live, cfg).write.mode("overwrite").parquet(raw_dir)
-    raw = spark.read.parquet(raw_dir)
-    # keep the single-row-per-term invariant of a full compaction:
-    # stitch the salted hot partials before publishing
-    dst = os.path.join(tmp_seg_dir, "postings")
-    raw.where(~F.col("partial")).write.mode("overwrite").parquet(dst)
-    partials = raw.where(F.col("partial"))
-    if not partials.isEmpty():
-        merge_hot_partials(partials, N_live, avgdl_live, cfg).write.mode(
-            "append").parquet(dst)
-    import shutil
-
-    shutil.rmtree(raw_dir, ignore_errors=True)
-
+    merge_hot_partials(assemble_postings(
+        extract_runs(src, cfg, plan=plan), plan, cfg), cfg).write.mode(
+            "overwrite").parquet(os.path.join(tmp_seg_dir, "postings"))
 
 
 def stream_corpus_stats(out_dir: str) -> tuple[int, float]:

@@ -82,7 +82,7 @@ out.write(
     "partitions — over RUN rows (one per term per map task), not pairs —\n"
     "then the Arrow merge kernel. No second shuffle; no groupBy.\n\n```\n"
 )
-out.write(plan_of(assemble_postings(pairs, res.plan, res.N, res.avgdl, cfg)))
+out.write(plan_of(assemble_postings(pairs, res.plan, cfg)))
 out.write("\n```\n")
 
 queries = pd.DataFrame(

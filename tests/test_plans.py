@@ -64,7 +64,7 @@ def test_build_shuffles_once_per_wave(built_index, spark):
 
     res = built_index["res"]
     pairs = spark.read.parquet(os.path.join(res.out_dir, "pairs", "wave=0"))
-    out = assemble_postings(pairs, res.plan, res.N, res.avgdl, built_index["cfg"])
+    out = assemble_postings(pairs, res.plan, built_index["cfg"])
     plan = _plan(out)
     assert plan.count("Exchange") == 1, plan
     assert "Sort" in plan, plan
@@ -262,3 +262,15 @@ def test_membership_exchanges_carry_no_term(built_index, spark):
             assert all("term" not in cols for cols in shuffles), (
                 name, conj, shuffles)
             assert "count(distinct" not in _plan(df), (name, conj)
+
+
+def test_hot_merge_is_one_term_exchange_and_a_walk(built_index):
+    """merge_hot_partials runs as one hash exchange on term, a local
+    sort and a mapInPandas walk: no per-term grouped pandas call."""
+    from capsbm25.postings import merge_hot_partials
+
+    plan = _plan(merge_hot_partials(built_index["postings"],
+                                    built_index["cfg"]))
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(term") == 1, plan
+    assert "MapInPandas" in plan, plan

@@ -114,3 +114,75 @@ def test_manifest_lineage(built_index, spark):
     # the plan itself is recorded verbatim (shuffle-plan lineage)
     plan_rec = man.done("plan")
     assert "splitters" in plan_rec["plan"]
+
+
+def _pos_payload(pairs):
+    """Positions payload: delta+varint with an absolute value at every
+    pair start (the encoding _posting_rows writes)."""
+    from capsbm25.codec import encode_varints
+
+    return encode_varints(np.concatenate(
+        [np.diff(np.asarray(p, dtype=np.int64), prepend=0) for p in pairs]))
+
+
+def test_merge_walk_matches_per_term_reference(spark):
+    """merge_hot_partials folds each term's rows in one sorted walk.
+    Against a per-term numpy reference: interleaved doc ranges given
+    out of part_id order, a term whose docs are all dropped, and a
+    single-row term, with groups straddling 2-row Arrow batches."""
+    from capsbm25.codec import (decode_pair_positions, delta_encode,
+                                encode_varints)
+    from capsbm25.config import BuildConfig
+    from capsbm25.postings import POSTINGS_SCHEMA, merge_hot_partials
+
+    rng = np.random.default_rng(5)
+    # (term, part_id, docs); every doc gets tf 1-3 positions and a dl
+    spec = [
+        ("alpha", 7, [2, 9, 15]),
+        ("gamma", 4, [5, 40]),
+        ("alpha", 3, [1, 10, 20]),
+        ("beta", 2, [32]),
+        ("alpha", 5, [4, 12]),
+        ("beta", 1, [30, 31]),
+    ]
+    drop = np.array([9, 12, 30, 31, 32], dtype=np.int64)
+    rows, ref = [], {}
+    for term, pid, docs in spec:
+        tfs = rng.integers(1, 4, len(docs))
+        dls = rng.integers(5, 50, len(docs))
+        pos = [np.sort(rng.choice(60, t, replace=False)) for t in tfs]
+        rows.append((term, len(docs), int(tfs.sum()), delta_encode(docs),
+                     encode_varints(tfs), encode_varints(dls),
+                     _pos_payload(pos), pid, True))
+        r = ref.setdefault(term, {"pid": pid, "post": {}})
+        r["pid"] = min(r["pid"], pid)
+        for d, t, dl, p in zip(docs, tfs, dls, pos):
+            if d not in drop:
+                r["post"][d] = (int(t), int(dl), p.tolist())
+    ref = {t: r for t, r in ref.items() if r["post"]}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = merge_hot_partials(
+            spark.createDataFrame(rows, POSTINGS_SCHEMA),
+            BuildConfig(index_positions=True), drop=drop).collect()
+    finally:
+        spark.conf.set(key, old)
+
+    assert sorted(r.term for r in out) == sorted(ref) == ["alpha", "gamma"]
+    for r in out:
+        want = ref[r.term]
+        docs = sorted(want["post"])
+        tfs = [want["post"][d][0] for d in docs]
+        got_docs = delta_decode(r.doc_ids)
+        got_tfs = decode_varints(r.tfs).astype(np.int64)
+        assert got_docs.tolist() == docs, r.term
+        assert got_tfs.tolist() == tfs, r.term
+        assert decode_varints(r.dls).astype(np.int64).tolist() == [
+            want["post"][d][1] for d in docs], r.term
+        assert decode_pair_positions(r.pos, got_tfs).tolist() == [
+            x for d in docs for x in want["post"][d][2]], r.term
+        assert r.df == len(docs) and r.cf == sum(tfs), r.term
+        assert r.part_id == want["pid"] and r.partial is False, r.term

@@ -268,8 +268,6 @@ def test_posting_rows_no_blockmax_interleaved_partials():
     from capsbm25.codec import decode_varints as dv
     from capsbm25.postings import POSTINGS_COLS, _posting_rows
 
-    cfg = BuildConfig(block_size=4)
-    N, avgdl = 1000, 10.0
     flushes = [
         ("aaa", np.arange(6, dtype=np.int64), np.ones(6, dtype=np.int64),
          np.full(6, 10, dtype=np.int64), 0),
@@ -278,7 +276,7 @@ def test_posting_rows_no_blockmax_interleaved_partials():
         ("zzz", np.arange(200, 203, dtype=np.int64),
          np.ones(3, dtype=np.int64), np.full(3, 10, dtype=np.int64), 2),
     ]
-    out = _posting_rows(flushes, N, avgdl, cfg, hot_terms={"mmm"})
+    out = _posting_rows(flushes, hot_terms={"mmm"})
     assert "block_max" not in POSTINGS_COLS
     assert "block_max" not in out.columns
     rows = {r["term"]: r for _, r in out.iterrows()}

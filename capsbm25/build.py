@@ -221,9 +221,24 @@ def build_index(
     man = Manifest(out_dir)
     metrics: dict = {}
 
-    def record(stage, t0, **kw):
+    def record(stage, t0, end=None, **kw):
+        # end: when the stage's own work finished, if that precedes the
+        # record (a deferred read-back check runs in between); the
+        # manifest's finished_ts stays the record time either way
         rec = man.add(stage, "done", t0, **kw)
-        metrics[stage] = {"sec": round(rec["finished_ts"] - t0, 3), **kw}
+        sec = (end or rec["finished_ts"]) - t0
+        metrics[stage] = {"sec": round(sec, 3), **kw}
+
+    def checked(stage, t0, dst, end, obs=None):
+        # the deferred read-back checksum of a stage that ended at end,
+        # timed apart from it (check_s); obs: a wave's pair/run counts
+        t_chk = time.time()
+        h, n = _checksum(spark.read.parquet(dst))
+        kw = {"check_s": round(time.time() - t_chk, 3)}
+        if obs is not None:
+            m = obs.get
+            kw.update(pairs=int(m["pairs"] or 0), runs=int(m["runs"]))
+        record(stage, t0, end, rows=n, checksum=h, **kw)
 
     def skipped(stage) -> bool:
         if resume and man.done(stage):
@@ -419,13 +434,8 @@ def build_index(
             # (layout-asserted in tests/test_plans.py)
             write_table(out, dst, partition_by=["part_id"])
 
-            def finish(stage=stage, dst=dst, obs=obs, t0=t0):
-                h, n = _checksum(spark.read.parquet(dst))
-                m = obs.get
-                record(stage, t0, rows=n, checksum=h,
-                       pairs=int(m["pairs"] or 0), runs=int(m["runs"]))
-
-            futs.append(pool.submit(finish))
+            futs.append(pool.submit(checked, stage, t0, dst, time.time(),
+                                    obs))
 
         futs.append(pool.submit(timed, "docs", stage_docs))
 
@@ -469,12 +479,10 @@ def build_index(
                 merged = merge_hot_partials(partials.drop("wave"), cfg)
                 write_table(merged, dst, partition_by=["part_id"])
 
-            def finish_hot(dst=dst, t0=t_hot):
-                h, n = _checksum(spark.read.parquet(dst))
-                record("hot_merge", t0, rows=n, checksum=h)
-
-            # checksum read-back overlaps the dictionary scan below
-            futs.append(pool.submit(finish_hot))
+            # checksum read-back overlaps the dictionary scan below;
+            # sec ends here, on this thread, at the end of merge + write
+            futs.append(pool.submit(checked, "hot_merge", t_hot, dst,
+                                    time.time()))
 
         # --- stage: term dictionary (expansion-family side index) ---
         # One narrow row per (term, part_id) with df/cf — the analog of

@@ -64,10 +64,11 @@ RESULT_SCHEMA = "query_id int, doc_id long, score double, rank int"
 
 _logger = logging.getLogger("capsbm25.query")
 
-# distributed-phrase positions pass: AND-candidate sets up to this many
-# rows are collected + broadcast so candidates mask map-side BEFORE any
-# positional row is materialized; larger sets stay distributed as
-# per-(query, term) sorted candidate arrays joined onto the posting
+# distributed-phrase positions pass: AND-candidate sets (pass 1's
+# (query_id, doc_id[, score]) rows) up to this many rows are collected
+# + broadcast so candidates mask map-side BEFORE any positional row is
+# materialized; larger sets stay distributed as per-(query, group)
+# sorted candidate arrays joined on query_id onto the query's posting
 # rows (module-level so tests can force the fallbacks)
 MAX_CAND_COLLECT = 200_000
 # ... and beyond the collect cap the candidate set stays distributed,
@@ -77,14 +78,15 @@ MAX_CAND_COLLECT = 200_000
 # per-(query, group) collect_list row holds < 2 x CAND_CHUNK_SPAN
 # int64s (~64 MB) no matter how many candidates exist OR how thinly
 # they spread across the id space, a posting row replicates at most
-# ncand/span + 1 times, and the map-side mask stays O(cand x tf) at
-# ANY candidate cardinality — no row can approach Spark's 2GB limit
-# (the pre-round-5 design degraded to an unmasked O(cf x tf) join past
-# 2x10^7 candidates; the pre-merge round-5 design replicated posting
-# payloads once per NON-EMPTY chunk, unbounded for spread-out sets).
-# Groups are runs of consecutive chunks = disjoint doc ranges, so
-# emitted rows union duplicate-free; the grouping window runs over
-# chunk-count rows (<= id_range/span), never candidate rows.
+# ncand/span + 1 times (once per group of its query), and the map-side
+# mask stays O(cand x tf) at ANY candidate cardinality — no row can
+# approach Spark's 2GB limit (the pre-round-5 design degraded to an
+# unmasked O(cf x tf) join past 2x10^7 candidates; the pre-merge
+# round-5 design replicated posting payloads once per NON-EMPTY chunk,
+# unbounded for spread-out sets). Groups are runs of consecutive
+# chunks = disjoint doc ranges, so emitted rows union duplicate-free;
+# the grouping window runs over chunk-count rows (<= id_range/span),
+# never candidate rows.
 CAND_CHUNK_SPAN = 4_000_000
 
 
@@ -1823,8 +1825,10 @@ def phrase_topk(
     (query_id, rank): its <= Σ k rows are sorted in one task.
 
     Modes mirror bm25_topk: "kernel" concentrates a query's matched
-    postings in one task; "distributed" shuffles (doc, term, positions)
-    rows and verifies per doc — no task ever holds a whole hot posting;
+    postings in one task; "distributed" finds the AND candidates on the
+    term engine's producer, shuffles (doc, token ordinal, position)
+    rows of the candidates only and verifies them in per-query batches
+    — no task ever holds a whole hot posting;
     "auto" (default) routes on Σ df > max_kernel_df or Σ payload bytes
     > max_kernel_bytes.
 
@@ -1839,22 +1843,32 @@ def phrase_topk(
     """
     cfg = cfg or BuildConfig()
     _check_unique_ids(queries)
-    rows = []
+    # one term-frame row per distinct token; tok = its ordinal in the
+    # query's sorted distinct tokens. The phrase itself stays on the
+    # driver as a list of ordinals (phrases[qid]), read by the runners'
+    # closures — no token string or phrase array rides any row
+    rows, phrases = [], {}
     for q in queries.itertuples(index=False):
         k = _check_k(q.query_id, q.k)
         phrase = tokenize_py(q.text, cfg)
-        # the phrase travels as array<string>, NOT a joined string: a
-        # separator would collide with chargram tokens, which can
-        # contain ANY character (substring_topk patterns are raw text)
-        for t in sorted(set(phrase)):
-            rows.append((int(q.query_id), t, k, list(phrase)))
-    qt = pd.DataFrame(rows, columns=["query_id", "term", "k", "phrase"])
+        distinct = sorted(set(phrase))
+        tok = {t: i for i, t in enumerate(distinct)}
+        if phrase:
+            phrases[int(q.query_id)] = [tok[t] for t in phrase]
+        rows += [(int(q.query_id), t, i, k) for i, t in enumerate(distinct)]
+    qt = pd.DataFrame(rows, columns=["query_id", "term", "tok", "k"])
     if qt.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
     qdf = pdf_frame(spark, qt)
     terms = sorted(qt["term"].unique().tolist())
     filtered = postings.where(_in_list("term", terms))
-    matched = filtered.join(F.broadcast(qdf), "term")
+    # the one positions guard: every matched posting row must carry a
+    # pos payload, checked in the scan before any shuffle or Python
+    # stage (a non-positional index raises here in every mode)
+    matched = filtered.join(F.broadcast(qdf), "term").where(F.assert_true(
+        F.coalesce(F.length("pos"), F.lit(0)) > 0,
+        "phrase_topk requires an index built with index_positions=True "
+        "(pos payload is empty)").isNull())
 
     mode, doc_filter, doc_exclude, filt_bc, excl_bc, empty = \
         _prep_doc_sets(spark, mode, doc_filter, doc_exclude,
@@ -1865,11 +1879,12 @@ def phrase_topk(
     return _dispatch_modes(
         mode, matched, qt, filtered, max_kernel_df, max_kernel_bytes,
         run_kernel=lambda m: _run_phrase_kernel(
-            m, N, avgdl, cfg, count_scores, filt_bc, excl_bc, near=near),
+            m, phrases, N, avgdl, cfg, count_scores, filt_bc, excl_bc,
+            near=near),
         run_distributed=lambda m, dfm, qids=None:
         _run_phrase_distributed(
-            m, dfm, N, avgdl, cfg, count_scores, doc_filter, doc_exclude,
-            qt, near=near),
+            m, dfm, phrases, N, avgdl, cfg, count_scores, doc_filter,
+            doc_exclude, qt, near=near, filt_bc=filt_bc, excl_bc=excl_bc),
     )
 
 
@@ -2043,28 +2058,23 @@ def _phrase_occurrences(
     return cand[hit_ranks], counts
 
 
-def _run_phrase_kernel(matched, N, avgdl, cfg,
+def _run_phrase_kernel(matched, phrases: dict, N, avgdl, cfg,
                        count_scores: bool = False,
                        filt_bc=None, excl_bc=None,
                        near: tuple | None = None) -> DataFrame:
+    # phrases: qid -> the phrase as token ordinals (phrase_topk's tok)
     if count_scores and near:
         raise ValueError("count scoring is phrase/substring-only")
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         k = int(pdf["k"].iloc[0])
         qid = int(pdf["query_id"].iloc[0])
-        phrase = list(pdf["phrase"].iloc[0])
+        phrase = phrases[qid]
         distinct = sorted(set(phrase))
-        if len(set(pdf["term"])) < len(distinct):
+        if pdf["tok"].nunique() < len(distinct):
             return _empty_result()  # a phrase token is out-of-vocab
-        term_data = {}
-        for term, grp in pdf.groupby("term", sort=True):
-            if any(len(b) == 0 for b in grp["pos"]):
-                raise ValueError(
-                    "phrase_topk requires an index built with "
-                    "index_positions=True (pos payload is empty)"
-                )
-            term_data[term] = _merge_term_rows(grp, with_pos=True)
+        term_data = {tok: _merge_term_rows(grp, with_pos=True)
+                     for tok, grp in pdf.groupby("tok", sort=True)}
         # candidates: docs containing ALL distinct tokens
         cand = term_data[distinct[0]][0]
         for t in distinct[1:]:
@@ -2112,7 +2122,7 @@ def _run_phrase_kernel(matched, N, avgdl, cfg,
         total = np.zeros(hit_arr.size, dtype=np.float64)
         for t in distinct:
             docs, tfs, dls, _, _ = term_data[t]
-            grp_df = int(pdf[pdf["term"] == t]["df"].sum())
+            grp_df = int(pdf[pdf["tok"] == t]["df"].sum())
             sc = term_scores(tfs, dls, float(idf_fn(N, grp_df)), avgdl,
                              cfg.k1, cfg.b)
             ix = np.searchsorted(docs, hit_arr)
@@ -2123,30 +2133,38 @@ def _run_phrase_kernel(matched, N, avgdl, cfg,
     # explicit projection: block_max/cf ride Arrow unused otherwise
     # (pos IS needed here — this kernel verifies positions)
     return matched.select(
-        "query_id", "term", "phrase", "df", "doc_ids", "tfs", "dls",
-        "pos", "k",
+        "query_id", "tok", "df", "doc_ids", "tfs", "dls", "pos", "k",
     ).groupBy("query_id").applyInPandas(
         kernel, schema=RESULT_SCHEMA
     )
 
 
-def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
+def _run_phrase_distributed(matched, df_map, phrases: dict, N, avgdl, cfg,
                             count_scores: bool = False,
                             doc_filter: DataFrame | None = None,
                             doc_exclude: DataFrame | None = None,
                             qt: pd.DataFrame | None = None,
-                            near: tuple | None = None) -> DataFrame:
+                            near: tuple | None = None,
+                            filt_bc=None, excl_bc=None) -> DataFrame:
     """Scale path, two passes so positions only ship for AND candidates:
 
-    1. NARROW pass — one row per (query, term, doc) with the BM25
-       contribution (16-byte payload, no positions); a built-in
-       aggregate keeps only docs containing ALL distinct phrase terms
-       and already carries their final score.
-    2. POSITIONS pass — the explode re-runs with the positional payload
-       and joins against the (small) AND-candidate set; with AQE the
-       candidate side broadcasts, so position rows for non-candidates
-       are dropped map-side and never shuffled. Verification then runs
-       in tiny (query_id, doc_id) groups.
+    1. CANDIDATE pass on the term engine's producer (_doc_partials):
+       per task, one row per (query, distinct doc) with its matched-term
+       count nm and (unless count_scores) its summed BM25 contribution;
+       one JVM sum per (query, doc) keeps the docs whose nm equals the
+       query's distinct-token count — the AND candidates, already
+       carrying their final score. This is _match_docs' fold: no term
+       string crosses the exchange.
+    2. POSITIONS pass — the posting rows decode again with the
+       positional payload, masked by the candidate set BEFORE any row
+       is built, into flat (query_id, tok, doc_id, pos) rows (tok = the
+       token's ordinal, see phrase_topk). Verification then runs in
+       (query, salt) batch groups; each query's phrase (as ordinals)
+       and k come from the driver-side dicts in the closure.
+
+    phrases: qid -> the phrase as token ordinals. doc_filter /
+    doc_exclude (or their sorted-id broadcasts filt_bc / excl_bc) mask
+    pass 1, so positions are never decoded for filtered-out docs.
 
     No task ever holds a whole posting list, and the expensive payload
     volume is O(candidates x tf), not O(Σ df x tf) — a stopword-grade
@@ -2158,73 +2176,23 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
     from capsbm25.codec import decode_pair_positions
 
     session = matched.sparkSession
-    # per-query metadata (phrase tokens, k, distinct-token count) is
-    # DRIVER-known — it joins the tiny aggregated candidate set instead
-    # of riding every narrow row: a stopword-grade term otherwise ships
-    # its phrase array<string> once per matched DOC through the
-    # exchange (the dominant narrow-pass payload)
-    qmeta = qt.drop_duplicates(subset=["query_id"])[
-        ["query_id", "k", "phrase"]].copy()
-    qmeta["n_distinct"] = [len(set(p)) for p in qmeta["phrase"]]
-    qmeta_df = F.broadcast(pdf_frame(session, qmeta))
-
-    def narrow_rows(it):
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                if row.pos_len == 0:
-                    raise ValueError(
-                        "phrase_topk requires an index built with "
-                        "index_positions=True (pos payload is empty)"
-                    )
-                docs, tfs, dls = _decode_posting(row.doc_ids, row.tfs, row.dls)
-                if count_scores:
-                    # ranking comes from the verify pass's exact match
-                    # counts; idf over chargrams is meaningless (and N
-                    # may be a dummy) — don't compute it
-                    sc = np.zeros(docs.size, dtype=np.float64)
-                else:
-                    sc = term_scores(
-                        tfs, dls, float(idf_fn(N, df_map[row.term])),
-                        avgdl, cfg.k1, cfg.b,
-                    )
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(docs.size, row.query_id, np.int32),
-                        "term": np.full(docs.size, row.term, dtype=object),
-                        "doc_id": docs.astype(np.int64),
-                        "contrib": sc,
-                    }
-                )
-
-    # the narrow pass never reads positions — ship a JVM-computed
-    # byte length instead of the pos binary itself (the WIDEST payload
-    # column on a positional index; only the validation needs it, and
-    # Catalyst cannot prune through mapInPandas). block_max/cf/df are
-    # dropped the same way.
-    n1 = matched.select(
-        "term", "query_id", "doc_ids", "tfs", "dls",
-        F.coalesce(F.length("pos"), F.lit(0)).alias("pos_len"),
-    ).mapInPandas(
-        narrow_rows,
-        schema="query_id int, term string, doc_id long, contrib double",
-    )
+    ks = {int(q): int(k) for q, k in zip(qt["query_id"], qt["k"])}
+    # count_scores ranks by the verify pass's exact match counts — idf
+    # over chargrams is meaningless (and N may be a dummy), so pass 1
+    # is membership only and decodes doc_ids alone
+    score = None if count_scores else _bm25_scorer(df_map, N, avgdl, cfg)
+    cols = ([] if count_scores else ["term", "tfs", "dls"]) + [
+        "query_id", "doc_ids", F.lit(1).alias("nm")]
+    sums = [F.sum("nm").alias("nm")] + (
+        [] if count_scores else [F.sum("contrib").alias("score")])
     and_docs = (
-        n1.groupBy("query_id", "doc_id")
-        .agg(
-            F.count_distinct("term").alias("nm"),
-            F.sum("contrib").alias("score"),
-        )
-        .join(qmeta_df, "query_id")
-        .where(F.col("nm") == F.col("n_distinct"))
-        .drop("nm", "n_distinct")
+        _doc_partials(matched.select(*cols), score, None, filt_bc,
+                      excl_bc, doc_filter, doc_exclude)
+        .groupBy("query_id", "doc_id").agg(*sums)
+        .where(F.col("nm") == _per_query(
+            {q: len(set(p)) for q, p in phrases.items()}))
+        .drop("nm")
     )
-    # filter/liveDocs masks restrict the AND-candidate set BEFORE the
-    # positions pass, so positional payload for filtered-out docs is
-    # never decoded into rows that survive the join
-    if doc_filter is not None:
-        and_docs = and_docs.join(doc_filter, "doc_id", "semi")
-    if doc_exclude is not None:
-        and_docs = and_docs.join(doc_exclude, "doc_id", "anti")
 
     # Bounded collect of the AND-candidate set (small by construction:
     # docs containing ALL phrase terms). When it fits, TWO wins over the
@@ -2233,74 +2201,43 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
     # O(cand x tf) Arrow rows instead of O(cf x tf) — measured 86s ->
     # ~2s for the 1.05M-turn corpus whose phrases hit head terms; (b)
     # the collected set becomes the broadcast join side directly, so
-    # the narrow n1 subplan is not re-executed by the join. PERSIST
-    # first: the probe, the over-cap candidate-list build, and the final
-    # join would each re-execute the narrow n1 aggregate otherwise.
+    # pass 1 is not re-executed by the join. PERSIST first: the probe,
+    # the over-cap candidate-list build, and the final join would each
+    # re-execute pass 1 otherwise.
     and_docs = and_docs.persist()
     cand_pdf = arrow_collect(and_docs.limit(MAX_CAND_COLLECT + 1))
     cand_bc = None
+    pos_src = matched.select("query_id", "tok", "doc_ids", "tfs", "pos")
     if len(cand_pdf) <= MAX_CAND_COLLECT:
         and_docs.unpersist()
         if cand_pdf.empty:
             return session.createDataFrame([], RESULT_SCHEMA)
-        cand_map = {
+        cand_bc = session.sparkContext.broadcast({
             int(qid): np.sort(g["doc_id"].to_numpy(np.int64))
             for qid, g in cand_pdf.groupby("query_id")
-        }
-        cand_bc = session.sparkContext.broadcast(cand_map)
+        })
         and_docs = F.broadcast(arrow_frame(session, cand_pdf))
-        pos_src = matched
     else:
-        # Over the collect cap the candidate set stays DISTRIBUTED and
-        # CHUNKED: candidates bucket by doc-id range (chunk = doc_id //
-        # CAND_CHUNK_SPAN — structurally <= span entries per chunk, no
-        # count/window/global sort needed), one sorted array row per
-        # (query, chunk), fanned out per term and joined onto the
-        # matched posting rows. The positions kernel masks BEFORE
-        # materializing any positional row, each joined row's chunk
-        # covers a disjoint doc range (so emitted rows union without
-        # duplicates), and shuffled positional bytes stay O(cand x tf)
-        # at ANY candidate cardinality — there is no unmasked fallback
-        # tier any more. Duplication accounting: the cand arrays ride
-        # one row per (query, term, part, chunk) — parts per hot term
-        # (<= salt buckets) x non-empty chunks, never per posting
-        # entry; conversely a posting row's payload replicates once
-        # per non-empty chunk of its query (> 1 only beyond ~4M
-        # candidates in one doc-range span). Logged below because a
-        # workload living in this tier is worth diagnosing.
-        # (The persisted and_docs outlives this call until the result
-        # DataFrame is released — Spark's ContextCleaner unpersists the
-        # cached blocks once the plan is garbage-collected; there is no
-        # earlier safe point because the final join below executes
-        # lazily.)
-        n_cand = and_docs.count()
+        # Over the collect cap the candidate set stays DISTRIBUTED,
+        # CHUNKED by doc-id range and merged into runs of consecutive
+        # chunks (bounds: see CAND_CHUNK_SPAN): one sorted cand_docs row
+        # per (query, run), joined on query_id onto the query's posting
+        # rows, so the positions kernel still masks before building any
+        # row and the disjoint runs union duplicate-free. The persisted
+        # and_docs outlives this call until the result DataFrame is
+        # released (Spark's ContextCleaner unpersists it once the plan
+        # is garbage-collected; the final join below executes lazily).
         _logger.info(
             "positions pass: distributed chunked candidate mask engaged "
-            "(%d candidate rows > MAX_CAND_COLLECT=%d, chunk span %d)",
-            n_cand, MAX_CAND_COLLECT, CAND_CHUNK_SPAN,
+            "(candidate rows > MAX_CAND_COLLECT=%d, chunk span %d)",
+            MAX_CAND_COLLECT, CAND_CHUNK_SPAN,
         )
-        qterm = F.broadcast(pdf_frame(
-            session, qt[["query_id", "term"]].drop_duplicates()))
         chunked = and_docs.select("query_id", "doc_id").withColumn(
             "cand_chunk",
             F.floor(F.col("doc_id") / F.lit(int(CAND_CHUNK_SPAN))),
         )
-        # merge ADJACENT SPARSE chunks (round-6 review): fixed
-        # doc-range chunks bound the ENTRIES per chunk (ids in a span
-        # fit the span) but not the NUMBER of non-empty chunks — at a
-        # 10^12-id space, 200k+ candidates spread thin occupy up to one
-        # chunk each, and every posting row's positional payload would
-        # replicate (and re-decode) once per non-empty chunk. A
-        # per-query running sum over the CHUNK-COUNT frame re-groups
-        # consecutive chunks to ~span candidates each. The window
-        # partitions by query over chunk rows, which are structurally
-        # <= id_range/span (250k at 10^12 ids, span 4M) — never over
-        # candidate rows. Bounds: entries per group row < 2 x span
-        # (< span carried from preceding chunks at the floor boundary
-        # + <= span from its own chunk); posting-row replication <=
-        # ncand/span + 1 at ANY candidate spread. Groups are runs of
-        # consecutive chunks, so group doc-ranges stay disjoint and
-        # the emitted rows still union duplicate-free.
+        # a per-query running sum over the chunk-count rows (never the
+        # candidate rows) starts a new run every ~span candidates
         wq = Window.partitionBy("query_id").orderBy("cand_chunk")
         groups = (
             chunked.groupBy("query_id", "cand_chunk").count()
@@ -2317,47 +2254,36 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
             chunked.join(groups, ["query_id", "cand_chunk"])
             .groupBy("query_id", "grp")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("cand_docs"))
-            .join(qterm, "query_id")
-            .select("term", "query_id", "cand_docs")
+            .drop("grp")
         )
-        pos_src = matched.join(cand_lists, ["term", "query_id"])
+        pos_src = pos_src.join(cand_lists, "query_id")
 
     def pos_rows(it):
-        # FLAT (query, term, doc, pos) long rows — one np.repeat per
-        # posting row, zero per-doc Python objects; the candidate mask
+        # FLAT (query, tok, doc, pos) rows — one np.repeat per posting
+        # row, zero per-doc Python objects; the candidate mask
         # (broadcast map under the cap, joined cand_docs column over it)
-        # applies before any row is built. The phrase string rides on
-        # the candidate side, not on these rows.
+        # applies before any row is built
         cand_map = cand_bc.value if cand_bc is not None else None
         for pdf in it:
-            has_col = "cand_docs" in pdf.columns
             for row in pdf.itertuples(index=False):
-                if len(row.pos) == 0:
-                    raise ValueError(
-                        "phrase_topk requires an index built with "
-                        "index_positions=True (pos payload is empty)"
-                    )
-                if cand_map is not None:
-                    cand = cand_map.get(int(row.query_id))
-                    if cand is None:
-                        continue
-                elif has_col:
-                    cand = np.asarray(row.cand_docs, dtype=np.int64)
-                else:
-                    cand = None
-                docs, tfs, _ = _decode_posting(row.doc_ids, row.tfs, row.dls)
+                cand = (np.asarray(row.cand_docs, dtype=np.int64)
+                        if cand_map is None
+                        else cand_map.get(int(row.query_id)))
+                if cand is None:
+                    continue
+                docs = delta_decode(row.doc_ids)
+                tfs = decode_varints(row.tfs).astype(np.int64)
                 pos = decode_pair_positions(row.pos, tfs)
-                if cand is not None:
-                    keep = sorted_member_mask(cand, docs)
-                    if not keep.all():
-                        pos = pos[np.repeat(keep, tfs)]
-                        docs, tfs = docs[keep], tfs[keep]
-                    if docs.size == 0:
-                        continue
+                keep = sorted_member_mask(cand, docs)
+                if not keep.all():
+                    pos = pos[np.repeat(keep, tfs)]
+                    docs, tfs = docs[keep], tfs[keep]
+                if docs.size == 0:
+                    continue
                 yield pd.DataFrame(
                     {
                         "query_id": np.full(pos.size, row.query_id, np.int32),
-                        "term": np.full(pos.size, row.term, dtype=object),
+                        "tok": np.full(pos.size, row.tok, np.int32),
                         "doc_id": np.repeat(docs, tfs).astype(np.int64),
                         "pos": pos.astype(np.int64),
                     }
@@ -2365,7 +2291,7 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
 
     p = pos_src.mapInPandas(
         pos_rows,
-        schema="query_id int, term string, doc_id long, pos long",
+        schema="query_id int, tok int, doc_id long, pos long",
     )
     joined = p.join(and_docs, ["query_id", "doc_id"])
 
@@ -2376,53 +2302,43 @@ def _run_phrase_distributed(matched, df_map, N, avgdl, cfg,
         # measured 134s on 1.05M-turn stopword phrases purely from
         # Python-call overhead (one applyInPandas group per candidate
         # doc); this is the same math at ~SALT groups per query.
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype=np.int32),
-             "doc_id": pd.Series(dtype=np.int64),
-             "score": pd.Series(dtype=np.float64),
-             "k": pd.Series(dtype=np.int32)}
-        )
-        if not len(pdf):
-            return empty
-        phrase = list(pdf["phrase"].iloc[0])
+        qid = int(key[0])
+        phrase = phrases[qid]
         doc_arr = pdf["doc_id"].to_numpy(np.int64)
         pos_arr = pdf["pos"].to_numpy(np.int64)
-        term_arr = pdf["term"].to_numpy(dtype=object)
+        tok_arr = pdf["tok"].to_numpy(np.int64)
         ranks, uniq_docs = pd.factorize(doc_arr, sort=True)
         M = int(pos_arr.max()) + max(
             len(phrase), int(near[0]) if near else 0) + 2
-        # np.unique sorts AND dedups — a duplicated (term, doc, pos) row
+        # np.unique sorts AND dedups — a duplicated (tok, doc, pos) row
         # (should not exist; segments keep a doc whole) would otherwise
         # break intersect1d's assume_unique contract
         streams = {
-            tok: np.unique(ranks[term_arr == tok] * M
-                           + pos_arr[term_arr == tok])
+            tok: np.unique(ranks[tok_arr == tok] * M
+                           + pos_arr[tok_arr == tok])
             for tok in dict.fromkeys(phrase)
         }
         if near is not None:
             hit_ranks = _near_hit_ranks(phrase, streams, M, *near)
-            if hit_ranks.size == 0:
-                return empty
-            counts = None
         else:
             s = streams[phrase[0]]
             for off, tok in enumerate(phrase[1:], start=1):
                 s = np.intersect1d(s, streams[tok] - off,
                                    assume_unique=True)
-                if s.size == 0:
-                    return empty
             hit_ranks, counts = np.unique(s // M, return_counts=True)
         hit_docs = np.asarray(uniq_docs)[hit_ranks]
-        # BM25 score and k ride the and_docs side, one value per doc
-        per_doc = pdf.drop_duplicates("doc_id").set_index("doc_id")
-        ix = per_doc.index.get_indexer(hit_docs)
-        scores = (counts.astype(np.float64) if count_scores
-                  else per_doc["score"].to_numpy(np.float64)[ix])
+        if count_scores:
+            scores = counts.astype(np.float64)
+        else:
+            # the BM25 score rides the and_docs side, one value per doc
+            per_doc = pdf.drop_duplicates("doc_id").set_index("doc_id")
+            scores = per_doc["score"].to_numpy(np.float64)[
+                per_doc.index.get_indexer(hit_docs)]
         return pd.DataFrame(
-            {"query_id": np.full(hit_docs.size, int(key[0]), np.int32),
+            {"query_id": np.full(hit_docs.size, qid, np.int32),
              "doc_id": hit_docs,
              "score": scores,
-             "k": per_doc["k"].to_numpy(np.int32)[ix]}
+             "k": np.full(hit_docs.size, ks[qid], np.int32)}
         )
 
     verified = joined.withColumn(

@@ -318,6 +318,64 @@ out.write(plan_of(
                       dictionary=load_dictionary(spark, res.out_dir))))
 out.write("\n```\n")
 
+# ---- 11. distributed phrase (candidate pass + positions pass) ----
+import capsbm25.query as qm  # noqa: E402
+
+pcfg = BuildConfig(num_part_ids=32, shuffle_partitions=8, num_waves=2,
+                   index_positions=True)
+pres = build_index(spark, tdf, os.path.join(tmp, "pos_idx"), pcfg)
+phq = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
+                    "text": ["w0001 w0002"],
+                    "k": np.array([10], dtype=np.int32)})
+# pass 1 runs eagerly inside the call (the bounded candidate collect):
+# record the plans of the frames it collects
+collected, real_collect = [], qm.arrow_collect
+
+
+def recording_collect(df, *a, **kw):
+    collected.append(plan_of(df))
+    return real_collect(df, *a, **kw)
+
+
+qm.arrow_collect = recording_collect
+phrase_df = qm.phrase_topk(spark, load_postings(spark, pres.out_dir), phq,
+                           pres.N, pres.avgdl, pcfg, mode="distributed")
+qm.arrow_collect = real_collect
+out.write(
+    "\n## 11. Distributed phrase (candidate pass + positions pass)\n\n"
+    "`phrase_topk(mode=\"distributed\")` on a positional index of the\n"
+    "same corpus, one two-token phrase. The Filter over the postings\n"
+    "scan is the one positions guard: a row with an empty pos payload\n"
+    "raises (naming index_positions) in the scan, before any shuffle\n"
+    "or Python stage, in every mode. Two passes:\n\n"
+    "(a) the candidate pass, collected inside the call (bounded by\n"
+    "MAX_CAND_COLLECT, from a persisted frame). It is the term engine's\n"
+    "producer of section 4 with a constant nm = 1 per row: per task one\n"
+    "(query, distinct doc) row with the summed nm and BM25 contribution,\n"
+    "then one HashAggregate per (query, doc) and the\n"
+    "`nm == distinct-token count` filter (the per-query count is a\n"
+    "literal map on query_id) — section 9's fold. The Exchange carries\n"
+    "(query_id, doc_id, sums): no term string, no count(distinct):\n\n```\n"
+)
+out.write(collected[-1])
+out.write(
+    "```\n\n"
+    "(b) the positions pass and verify. The collected candidates are a\n"
+    "broadcast sorted-id map that masks each posting row inside the\n"
+    "MapInPandas before any row is built, which then emits flat\n"
+    "(query_id, tok, doc_id, pos) rows — tok is the token's ordinal in\n"
+    "the query's sorted distinct tokens. The rows join the candidates'\n"
+    "scores (the LocalTableScan broadcast) and ONE Exchange on\n"
+    "(query_id, doc_id % 64) feeds the batch verify\n"
+    "(FlatMapGroupsInPandas), which reads each query's phrase as\n"
+    "ordinals and its k from the driver, not from any row. The shared\n"
+    "salted top-k and section 3's ordered tail follow. Over the cap,\n"
+    "the candidates stay a persisted frame and join on query_id as\n"
+    "sorted per-(query, doc-range group) arrays instead.\n\n```\n"
+)
+out.write(plan_of(phrase_df))
+out.write("\n```\n")
+
 dest = (sys.argv[1] if len(sys.argv) > 1
         else os.path.join(ROOT, "docs", "PLANS.md"))
 with open(dest, "w") as f:

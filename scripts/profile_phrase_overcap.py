@@ -1,12 +1,16 @@
 """Time the OVER-CAP distributed-phrase fallback (candidate set bigger
 than MAX_CAND_COLLECT, so the broadcast mask cannot apply) at the
 1.05M-turn positional index. Round-3 shape shipped O(cf x tf)
-positional rows through the join (153s on stopword-grade phrases);
-round 4 joins per-(query,term) sorted candidate arrays onto the posting
-rows so the positions kernel masks BEFORE materializing anything —
-O(cand x tf) at any candidate cardinality. This script forces the
-fallback by setting MAX_CAND_COLLECT=0 and times it against the kernel
-mode on the same queries.
+positional rows through the join (153s on stopword-grade phrases).
+Today the AND candidates come from the term engine's producer (one sum
+per (query, doc) against the distinct-token count), stay a persisted
+frame over the cap, and join on query_id as sorted per-(query,
+doc-range group) candidate arrays (CAND_CHUNK_SPAN) onto the query's
+posting rows, so the positions kernel masks BEFORE materializing any
+(query_id, tok, doc_id, pos) row — O(cand x tf) at any candidate
+cardinality. This script forces the fallback by setting
+MAX_CAND_COLLECT=0 (and then a small CAND_CHUNK_SPAN) and times it
+against the kernel mode and the under-cap path on the same queries.
 
 Run on a QUIET machine: this VM shows 2-4x ambient variance.
   PHRASE_DIAG_CONVS=150000 python scripts/profile_phrase_overcap.py

@@ -95,6 +95,21 @@ def test_phrase_requires_positional_index(built_index, spark):
                     cfg).collect()
 
 
+@pytest.mark.parametrize("mode", ["kernel", "distributed"])
+@pytest.mark.parametrize("text", ["w0000 w0001", "w0000 zzzznotaword"])
+def test_phrase_requires_positions_in_every_mode(built_index, spark, mode,
+                                                 text):
+    """On a non-positional index a phrase raises and names
+    index_positions in both modes, also when one of its tokens is out of
+    vocabulary (the kernel used to return 0 rows for that phrase)."""
+    res, cfg = built_index["res"], built_index["cfg"]
+    q = pd.DataFrame({"query_id": np.array([0], dtype=np.int32),
+                      "text": [text], "k": np.array([5], dtype=np.int32)})
+    with pytest.raises(Exception, match="index_positions"):
+        phrase_topk(spark, built_index["postings"], q, res.N, res.avgdl,
+                    cfg, mode=mode).collect()
+
+
 def test_positional_index_rank_identical_for_bagofwords(pos_index, spark):
     """Positions must not perturb the existing BM25 path."""
     res, cfg, oracle = pos_index["res"], pos_index["cfg"], pos_index["oracle"]
@@ -380,3 +395,65 @@ def test_rescore_topk_multiquery_window_not_crowded(pos_index, spark):
         want[["query_id", "doc_id", "rank"]], check_dtype=False)
     np.testing.assert_allclose(got["score"].to_numpy(),
                                want["score"].to_numpy(), rtol=1e-9)
+
+
+def test_phrase_array_filter_on_distributed_route(pos_index, spark):
+    """A doc_filter / doc_exclude given as an id array in auto mode
+    becomes a broadcast mask only; a phrase that auto mode routes to
+    the distributed path must still apply it (rank-identical to the
+    filtered oracle)."""
+    res, cfg, oracle = pos_index["res"], pos_index["cfg"], pos_index["oracle"]
+    texts = _phrases_from_corpus(oracle)
+    queries = pd.DataFrame(
+        {"query_id": np.arange(len(texts), dtype=np.int32),
+         "text": texts,
+         "k": np.full(len(texts), 10, dtype=np.int32)}
+    )
+    keep = np.arange(0, res.N, 2, dtype=np.int64)
+    want = oracle.phrase_topk_pdf(queries, doc_filter=set(keep.tolist()))
+    assert len(want) > 0
+    drop = np.setdiff1d(np.arange(res.N, dtype=np.int64), keep)
+    for kwargs in ({"doc_filter": keep}, {"doc_exclude": drop}):
+        got = phrase_topk(
+            spark, pos_index["postings"], queries, res.N, res.avgdl, cfg,
+            mode="auto", max_kernel_df=0, **kwargs,
+        ).toPandas()
+        assert len(got) == len(want), list(kwargs)
+        for qid in queries["query_id"]:
+            g = got[got.query_id == qid].sort_values("rank")
+            w = want[want.query_id == qid].sort_values("rank")
+            assert list(g.doc_id) == list(w.doc_id), (list(kwargs), qid)
+            assert np.allclose(g.score, w.score, atol=1e-9), qid
+
+
+# Spark jobs of one collected distributed phrase_topk call on pos_index
+# as counted with the count_distinct candidate pass (narrow per-term rows
+# + qmeta join) that the term-engine pass replaced
+_PHRASE_DIST_JOBS = {"under_cap": 14, "over_cap": 22}
+
+
+@pytest.mark.parametrize("cap", ["under_cap", "over_cap"])
+def test_phrase_distributed_job_count(pos_index, spark, monkeypatch, cap):
+    """A distributed phrase call, collected, runs no more Spark jobs
+    than the count_distinct candidate pass it replaced, under the
+    candidate collect cap and over it."""
+    import uuid
+
+    import capsbm25.query as qm
+    from test_streaming import _jobs_of
+
+    if cap == "over_cap":
+        monkeypatch.setattr(qm, "MAX_CAND_COLLECT", 0)
+    res, cfg, oracle = pos_index["res"], pos_index["cfg"], pos_index["oracle"]
+    texts = _phrases_from_corpus(oracle)
+    queries = pd.DataFrame(
+        {"query_id": np.arange(len(texts), dtype=np.int32),
+         "text": texts,
+         "k": np.full(len(texts), 10, dtype=np.int32)}
+    )
+    rows, jobs = _jobs_of(
+        spark, f"phrase-{uuid.uuid4().hex}",
+        lambda: phrase_topk(spark, pos_index["postings"], queries, res.N,
+                            res.avgdl, cfg, mode="distributed").collect())
+    assert len(rows) == len(oracle.phrase_topk_pdf(queries)) > 0
+    assert 0 < jobs <= _PHRASE_DIST_JOBS[cap], jobs

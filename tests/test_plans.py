@@ -5,6 +5,7 @@ map-side pair extraction."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from capsbm25 import fixtures as fx
@@ -217,20 +218,36 @@ def test_synonym_scoring_stays_in_codegen(built_index, spark):
     assert "In(term" in flat, flat
 
 
-def _shuffle_columns(df) -> list[list[str]]:
-    """The output column names of every shuffle Exchange in df's
-    physical plan (descending into the adaptive plan's current tree)."""
-    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+def _plan_nodes(df):
+    """Every node of df's physical plan, without executing df:
+    descends into the adaptive plan's current tree, into query stages
+    (a cache some earlier query materialized) and into every cached
+    relation's plan (InMemoryTableScan)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
-        if node.nodeName() == "AdaptiveSparkPlan":
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
             stack.append(node.executedPlan())
             continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "InMemoryTableScan":
+            stack.append(node.relation().cachedPlan())
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _shuffle_columns(df) -> list[list[str]]:
+    """The output column names of every shuffle Exchange in df's
+    physical plan (see _plan_nodes)."""
+    out = []
+    for node in _plan_nodes(df):
         if node.nodeName() == "Exchange":
             attrs = node.output()
             out.append([attrs.apply(i).name() for i in range(attrs.size())])
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
     return out
 
 
@@ -274,3 +291,73 @@ def test_hot_merge_is_one_term_exchange_and_a_walk(built_index):
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert plan.count("Exchange hashpartitioning(term") == 1, plan
     assert "MapInPandas" in plan, plan
+
+
+@pytest.fixture(scope="module")
+def positional_indexes(spark, tmp_path_factory):
+    """A small positional word index and a small chargram index."""
+    from capsbm25.build import build_index, load_postings
+    from capsbm25.config import BuildConfig
+
+    out = {}
+    for name, n, extra in (("word", 40, {}),
+                           ("char", 30, {"tokenizer": "chargram",
+                                         "chargram_n": 3})):
+        cfg = BuildConfig(num_part_ids=16, shuffle_partitions=4,
+                          index_positions=True, **extra)
+        path = str(tmp_path_factory.mktemp(f"pos_{name}") / "t1")
+        res = build_index(spark, spark.createDataFrame(
+            fx.gen_transcripts_pdf(n, 7)), path, cfg)
+        out[name] = (cfg, res, load_postings(spark, path))
+    return out
+
+
+@pytest.mark.parametrize("cap", ["under_cap", "over_cap"])
+def test_phrase_exchanges_carry_no_term(positional_indexes, spark,
+                                        monkeypatch, cap):
+    """Distributed phrase_topk, near_topk and substring_topk find their
+    AND candidates on the term engine's producer and verify positions
+    keyed by token ordinal: no shuffle of pass 1 (run inside
+    arrow_collect on a persisted frame) or of the final plan carries the
+    term string or the phrase array, and no count(distinct) aggregate
+    remains — under the candidate collect cap and over it."""
+    import capsbm25.query as qm
+    from capsbm25.query import near_topk, phrase_topk, substring_topk
+
+    if cap == "over_cap":
+        monkeypatch.setattr(qm, "MAX_CAND_COLLECT", 0)
+    seen = []
+    real_collect = qm.arrow_collect
+
+    def shape(df):
+        return (_shuffle_columns(df), any(
+            "count(distinct" in n.toString() for n in _plan_nodes(df)))
+
+    def recording_collect(df, *a, **kw):
+        seen.append(shape(df))
+        return real_collect(df, *a, **kw)
+
+    monkeypatch.setattr(qm, "arrow_collect", recording_collect)
+    wcfg, wres, wpost = positional_indexes["word"]
+    ccfg, _, cpost = positional_indexes["char"]
+    q = pd.DataFrame({"query_id": np.array([0, 1], dtype=np.int32),
+                      "text": [fx.HOT_TERM + " w0000", "w0000 w0001"],
+                      "k": np.array([5, 5], dtype=np.int32)})
+    sq = q.assign(text=["w00", "0 w0"])
+    outs = {
+        "phrase": lambda: phrase_topk(spark, wpost, q, wres.N, wres.avgdl,
+                                      wcfg, mode="distributed"),
+        "near": lambda: near_topk(spark, wpost, q, wres.N, wres.avgdl,
+                                  wcfg, window=20, mode="distributed"),
+        "substring": lambda: substring_topk(spark, cpost, sq, ccfg,
+                                            mode="distributed"),
+    }
+    for name, call in outs.items():
+        seen.clear()
+        final = shape(call())
+        # pass 1's aggregate and the verify both shuffle (non-vacuous)
+        assert any(s for s, _ in seen) and final[0], (name, cap)
+        for shuffles, count_distinct in seen + [final]:
+            assert all("term" not in cols and "phrase" not in cols
+                       for cols in shuffles), (name, cap, shuffles)
+            assert not count_distinct, (name, cap)

@@ -116,6 +116,39 @@ def test_manifest_lineage(built_index, spark):
     assert "splitters" in plan_rec["plan"]
 
 
+def test_stage_seconds_exclude_checksum_read_back(spark, tmp_path,
+                                                  monkeypatch):
+    """The hot_merge and wave=K stage times end when the stage's own
+    merge + write ends; the deferred read-back checksum that precedes
+    their manifest record is reported apart, as check_s."""
+    import time
+
+    import capsbm25.build as bm
+    from capsbm25 import fixtures as fx
+    from capsbm25.config import BuildConfig
+
+    pause, real = 1.0, bm._checksum
+
+    def slow_checksum(df):
+        time.sleep(pause)
+        return real(df)
+
+    monkeypatch.setattr(bm, "_checksum", slow_checksum)
+    cfg = BuildConfig(num_part_ids=16, shuffle_partitions=4, num_waves=2,
+                      hot_share_threshold=0.004, max_salt_buckets=4)
+    res = bm.build_index(spark, spark.createDataFrame(
+        fx.gen_transcripts_pdf(30, 5)), str(tmp_path / "idx"), cfg)
+    recs = {r["stage"]: r for r in bm.Manifest(res.out_dir).records()}
+    stages = ["hot_merge"] + [s for s in res.metrics
+                              if s.startswith("wave=")]
+    assert len(stages) > 1
+    for s in stages:
+        m = res.metrics[s]
+        span = recs[s]["finished_ts"] - recs[s]["started_ts"]
+        assert m["check_s"] >= pause, (s, m)
+        assert m["sec"] <= span - pause + 0.01, (s, m, span)
+
+
 def _pos_payload(pairs):
     """Positions payload: delta+varint with an absolute value at every
     pair start (the encoding _posting_rows writes)."""

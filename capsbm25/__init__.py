@@ -26,6 +26,7 @@ Public API (one import path per user-facing operation):
     )
 """
 
+from capsbm25 import _zipimport_cache  # noqa: F401  (first: see its docstring)
 from capsbm25.config import BuildConfig
 from capsbm25.build import (build_index, index_stats, load_build_config,
                             load_postings)
